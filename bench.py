@@ -77,11 +77,13 @@ def main() -> None:
     # slower than pass 2 at sf0.001 with only one warm-up query, which
     # would dominate the recorded spread).  One full pass primes codegen,
     # JIT, and parquet footer caches for all 130 plans.
+    # A warm-up failure is reported (stderr) and the pass goes on; the
+    # timed passes below decide whether the query counts as failed.
     for name in names:
         try:
             queries[name](spark, sf_dir).count()
-        except Exception:
-            pass
+        except Exception as ex:  # noqa: BLE001 — report, don't die
+            print(f"bench: warm-up {name} FAILED: {ex}", file=sys.stderr)
         finally:
             release_plan_caches()
 

@@ -61,7 +61,19 @@ def rule_gate(
     effect is local: the gate predicates were never scan-pushable
     (derived columns), and nothing upstream of the gate exists for
     other predicates to push past.
+
+    Raises ``ValueError`` when ``docs`` already has a column the gate
+    adds (``n_words``, ``uniq_ratio`` or the private ``__toks``): the
+    output would carry two columns of that name.
     """
+    clash = sorted(
+        {"n_words", "uniq_ratio", "__toks"} & {c.lower() for c in docs.columns}
+    )
+    if clash:
+        raise ValueError(
+            f"rule_gate: docs already has column(s) {clash}; rename or drop"
+            " them — the gate adds n_words and uniq_ratio itself"
+        )
     toks = F.shuffle(tx._tokens(F.col(text)))
     staged = docs.select("*", toks.alias("__toks"))
     n_words_raw = F.size(F.col("__toks"))

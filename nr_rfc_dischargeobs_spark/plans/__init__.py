@@ -13,6 +13,8 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import default_cpus
+
 TABLES = (
     "region",
     "nation",
@@ -61,12 +63,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     inputs are driver-generated fixtures that never change within a
     session's lifetime; a table mutated mid-session would need a fresh
     session — the same contract as Spark's own file-index caching).
+    ``sf_dir`` is keyed after ``os.path.normpath``, so ``dir`` and
+    ``dir/`` share one entry.  The session confs below are applied on a
+    session's FIRST load only; a conf changed afterwards is not reset.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
     memo = _SCAN_MEMO.setdefault(spark, {})
-    key = (str(sf_dir), name)
+    key = (os.path.normpath(sf_dir), name)
     hit = memo.get(key)
     if hit is not None:
         return hit
@@ -84,10 +89,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if spark not in _PREPARED_SESSIONS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", str(default_cpus()))
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.enabled", "true"

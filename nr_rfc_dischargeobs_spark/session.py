@@ -20,7 +20,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """Cores for ``local[N]`` and the shuffle partition count:
+    ``SPARK_GRAFT_CPUS`` when set, else every core of this machine."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else os.cpu_count() or 1
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+    half of physical RAM (whole GiB, 1g–24g).  In ``local[]`` mode the
+    driver JVM is the whole executor fleet, so its heap must fit the box
+    with room left for the Python side and the OS page cache."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, ram // 2**31))}g"
 
 
 def get_spark(
@@ -30,14 +47,11 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # Adaptive execution: coalesce small shuffle partitions, split skewed
         # ones, demote sort-merge to broadcast when runtime stats allow.
         .config("spark.sql.adaptive.enabled", "true")
@@ -78,13 +92,10 @@ def get_spark(
         # micros, matching DuckDB's own nanos→micros truncation).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        # local[] runs driver AND all 32 executor threads in ONE JVM —
-        # Spark's 1g default heap starves 32 concurrent tasks (GC-locker
+        # local[] runs driver AND every executor thread in ONE JVM —
+        # Spark's 1g default heap starves many concurrent tasks (GC-locker
         # stalls, then OOM).  Size it like the executor fleet it stands for.
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-        )
+        .config("spark.driver.memory", default_driver_memory())
         # local[] has no dedicated driver; keep result transfers bounded.
         .config("spark.driver.maxResultSize", "2g")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import SF_CORRECT
 from nr_rfc_dischargeobs_spark.extensions import (
     dedup,
     multimodal,
@@ -754,6 +755,86 @@ def test_connected_components_transitive_chain(spark):
         for r in dedup.connected_components(edges).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def _union_find_labels(edges_rows):
+    """Pure-Python oracle: node → min id of its connected component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges_rows:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in list(parent)}
+
+
+@pytest.mark.parametrize(
+    "op", ["connected_components", "connected_components_star"]
+)
+def test_connected_components_match_union_find_on_mixed_forest(spark, op):
+    """Each CC operator against a union-find oracle, in one call, on one
+    disjoint union of the shapes that break label propagation: long
+    chains with the minimum at the far end (and in the middle), stars
+    rooted away from their minimum, cliques, pairs joined by a bridge,
+    duplicated and reversed edges, self-loop-only nodes, and ids above
+    2³².  One item per operator keeps each under the slow-tier line."""
+    rows = []
+    base = 1000
+    for hops in (1, 2, 3, 7, 20):  # chains; the minimum is the LAST node
+        ids = [base + hops - i for i in range(hops + 1)]
+        rows += list(zip(ids, ids[1:]))
+        base += 100
+    mid = [base + abs(i - 10) * 2 + (i > 10) for i in range(21)]
+    rows += list(zip(mid, mid[1:]))  # 20-hop chain, minimum in the middle
+    rows += [(505, leaf) for leaf in (501, 502, 509, 503)]  # star off-min
+    rows += [(leaf, 606) for leaf in (607, 601, 608)]  # star, reversed
+    clique = [311, 305, 308, 302, 319]
+    rows += [(a, b) for a in clique for b in clique if a < b]
+    rows += [(21, 22), (23, 24), (22, 23)]  # two pairs merged by a bridge
+    rows += [(41, 40), (41, 40), (40, 41), (42, 41), (41, 42)]  # dups
+    rows += [(7, 7), (8, 8), (8, 8), (9, 9), (9, 10)]  # self-loops
+    big = 1 << 32
+    rows += [(big + 9, big + 3), (big + 3, 1 << 40), (big + 1, big + 2)]
+    rows += [(big + 5, 77)]  # a >2³² node whose component min is small
+    want = _union_find_labels(rows)
+    # the oracle itself: 91 nodes; the 20-hop chain ends at its minimum
+    assert len(want) == 91 and want[1420] == 1400 and want[big + 5] == 77
+
+    edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
+    got = getattr(dedup, op)(edges).collect()
+    assert len(got) == len(want)
+    assert {r["node"]: r["label"] for r in got} == want
+
+
+def test_connected_components_build_job_budget(spark):
+    """Pin the round shape: building ``dedup_cc_clusters`` at sf0.01
+    (the rounds run at build time) fires ≤ 12 Spark jobs, counted from
+    the status tracker's job-id high-water mark as
+    ``tools/profile_queries.py`` does.  The previous join + aggregate +
+    ``limit(1).count()`` loop fired 42–44 (~9 per round); one window
+    exchange and one checkpoint job per round fires 12 — the pair plan's
+    AQE stages plus 2 jobs per round."""
+    from nr_rfc_dischargeobs_spark.plans import extensions as plans, load
+
+    load(spark, SF_CORRECT, "documents")  # the scan memo's schema job
+    tracker = spark.sparkContext.statusTracker()
+
+    def high_water() -> int:
+        ids = tracker.getJobIdsForGroup(None)
+        return max(ids) + 1 if ids else 0
+
+    j0 = high_water()
+    df = plans.dedup_cc_clusters(spark, SF_CORRECT)
+    jobs = high_water() - j0
+    assert jobs <= 12, jobs
+    assert df.count() == 70
 
 
 def test_connected_components_star_matches_min_label(spark):

@@ -238,3 +238,25 @@ def test_curate_rule_gate_matches_quality_scores(corpus):
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, ref.collect())
     )
+
+
+@pytest.mark.parametrize("col", ["n_words", "UNIQ_RATIO", "__toks"])
+def test_rule_gate_rejects_a_column_it_would_add(corpus, col):
+    """The gate adds n_words/uniq_ratio (and stages a private __toks);
+    an input already carrying one must fail loudly, not come back with
+    two columns of that name."""
+    from nr_rfc_dischargeobs_spark.extensions import curate
+
+    with pytest.raises(ValueError, match="already has column"):
+        curate.rule_gate(corpus.withColumn(col, F.lit(1)), min_words=3)
+
+
+def test_load_memo_shares_one_entry_per_normalized_dir(spark, sf_dir):
+    """``dir`` and ``dir/`` (and ``dir/.``) are the same input: one scan
+    plan, one memo entry."""
+    from nr_rfc_dischargeobs_spark.plans import _SCAN_MEMO, load
+
+    first = load(spark, sf_dir, "region")
+    assert load(spark, sf_dir + "/", "region") is first
+    assert load(spark, sf_dir + "/.", "region") is first
+    assert sum(k[1] == "region" for k in _SCAN_MEMO[spark]) == 1
