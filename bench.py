@@ -36,9 +36,8 @@ from nr_rfc_dischargeobs_spark.plans.extensions import (  # noqa: E402
 )
 from nr_rfc_dischargeobs_spark.session import get_spark  # noqa: E402
 
-# Headline subset: one per operator family; bench runs each to completion
-# (count() forces full execution without driver-side result transfer).
-HEADLINE = None  # None = all queries()
+# Every registered query runs to completion (count() forces full
+# execution without driver-side result transfer).
 PASSES = 3
 
 
@@ -64,12 +63,8 @@ def main() -> None:
     # semantics, and its extra range-partitioning stage (sample + sort per
     # query) would add a flat ~0.3 s/query of compare-harness overhead to
     # a throughput measurement (measured +27 s over 87 queries at sf0.1).
-    queries = (
-        entrymod._raw_queries()
-        if hasattr(entrymod, "_raw_queries")
-        else entrymod.queries()
-    )
-    names = HEADLINE or list(queries)
+    queries = entrymod._raw_queries()
+    names = list(queries)
 
     # Full UNTIMED warm-up pass: whole-stage codegen JITs per plan shape,
     # so a single warm-up query leaves every other query's first timed

@@ -78,7 +78,6 @@ def _train(
     n_merges: int,
     text: str,
     token_pattern: str,
-    cache_registry: list | None,  # kept for API compat; nothing persists
     min_count: int = 1,
 ) -> tuple[list[tuple], DataFrame, DataFrame]:
     """Shared loop: returns (merge rows, final symbolized vocabulary,
@@ -162,7 +161,6 @@ def bpe_merges(
     n_merges: int = 12,
     text: str = "text",
     token_pattern: str = "[a-z0-9]+",
-    cache_registry: list | None = None,
     min_count: int = 1,
 ) -> DataFrame:
     """The learned merge table — BPE's model artifact: (rank, left_sym,
@@ -171,15 +169,11 @@ def bpe_merges(
 
     ``min_count`` floors the vocabulary before the driver-local merge
     loop (the fleet-scale driver-memory bound — see :func:`_train`);
-    the default keeps every token and the historical output.
-
-    ``cache_registry`` is accepted for API compatibility but is a
-    no-op since the r13 driver-local trainer: nothing persists — the
-    vocabulary is collected once and the merge loop runs on the
-    driver, so there is no cached frame to keep alive through
-    evaluation."""
+    the default keeps every token and the historical output.  Nothing
+    persists: the vocabulary is collected once and the merge loop runs
+    on the driver."""
     merges, _state, _vocab_frame = _train(
-        docs, n_merges, text, token_pattern, cache_registry, min_count
+        docs, n_merges, text, token_pattern, min_count
     )
     return docs.sparkSession.createDataFrame(merges, MERGES_SCHEMA)
 
@@ -189,7 +183,6 @@ def bpe_segment_vocab(
     n_merges: int = 12,
     text: str = "text",
     token_pattern: str = "[a-z0-9]+",
-    cache_registry: list | None = None,
     min_count: int = 1,
 ) -> DataFrame:
     """Train ``n_merges`` rules and return every vocabulary token's
@@ -199,11 +192,9 @@ def bpe_segment_vocab(
 
     ``min_count`` floors the vocabulary before training AND in the
     returned frame (tokens the trainer never saw are excluded — see
-    :func:`_train`); the default keeps every token.  ``cache_registry``
-    is a no-op since the r13 driver-local trainer (see
-    :func:`bpe_merges`)."""
+    :func:`_train`); the default keeps every token."""
     _, state, _vocab_frame = _train(
-        docs, n_merges, text, token_pattern, cache_registry, min_count
+        docs, n_merges, text, token_pattern, min_count
     )
     sy = F.split(F.expr("trim(BOTH '<>' FROM syms)"), "><")
     return state.select(

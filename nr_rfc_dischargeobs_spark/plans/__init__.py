@@ -13,7 +13,7 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import default_cpus
+from ..session import SQL_CONFS, default_cpus
 
 TABLES = (
     "region",
@@ -76,27 +76,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if hit is not None:
         return hit
 
-    # Self-sufficient on ANY session (the driver passes its own); all are
-    # runtime-settable, idempotent SQL confs, applied once per session:
-    # - without nanosAsLong, scanning TIMESTAMP(NANOS) parquet throws
-    #   PARQUET_TYPE_ILLEGAL;
-    # - the engine's timestamp semantics are naive-UTC (SURVEY.md §1.2) —
-    #   a session in any other zone would render/parse timestamp literals
-    #   shifted relative to the DuckDB oracle;
-    # - perf confs mirror session.py: a foreign session's default 200
-    #   shuffle partitions cost ~170 extra empty tasks per exchange at
-    #   sf0.01-0.1, which dominates the per-query wall clock of a sweep.
+    # Self-sufficient on ANY session (the driver passes its own): the
+    # runtime-settable, idempotent ``session.SQL_CONFS``, applied once per
+    # session, plus the shuffle partitions — a foreign session's default
+    # 200 cost ~170 extra empty tasks per exchange at sf0.01-0.1, which
+    # dominates the per-query wall clock of a sweep.
     if spark not in _PREPARED_SESSIONS:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        for key, value in SQL_CONFS.items():
+            spark.conf.set(key, value)
         spark.conf.set("spark.sql.shuffle.partitions", str(default_cpus()))
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", "true"
-        )
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
-        )
         _PREPARED_SESSIONS.add(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":

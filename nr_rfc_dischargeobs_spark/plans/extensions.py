@@ -9,6 +9,7 @@ so every score column is bit-identical across engines.
 from __future__ import annotations
 
 import contextlib as _contextlib
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1745,15 +1746,10 @@ TEXT_WINNOW_PAIRS_SQL = textops.winnow_pairs_sql(
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE merge-rule induction over the corpus (10 merges): the
     tokenizer-fitting step run in-engine — corpus scanned once into the
-    persisted vocabulary aggregate, each iteration one vocabulary-scale
-    pair-count job whose single argmax row is all the driver collects.
-    Plan-build executes those jobs (the algorithm's own model state, a
-    stated exception like the PQ codebook collect)."""
-    return bpe.bpe_merges(
-        load(spark, sf_dir, "documents"),
-        n_merges=10,
-        cache_registry=_PLAN_CACHES,
-    )
+    vocabulary aggregate, which the driver collects and runs the merge
+    loop over.  Plan-build executes that job (the algorithm's own model
+    state, a stated exception like the PQ codebook collect)."""
+    return bpe.bpe_merges(load(spark, sf_dir, "documents"), n_merges=10)
 
 
 TEXT_BPE_MERGES_SQL = bpe.bpe_merges_sql(
@@ -1764,11 +1760,7 @@ TEXT_BPE_MERGES_SQL = bpe.bpe_merges_sql(
 def text_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary segmentation under the 10 learned merges — the
     fertility audit (subwords per token) that sizes a merge budget."""
-    return bpe.bpe_segment_vocab(
-        load(spark, sf_dir, "documents"),
-        n_merges=10,
-        cache_registry=_PLAN_CACHES,
-    )
+    return bpe.bpe_segment_vocab(load(spark, sf_dir, "documents"), n_merges=10)
 
 
 TEXT_BPE_SEGMENT_SQL = bpe.bpe_segment_vocab_sql(
@@ -3405,10 +3397,6 @@ def _session_store_path(sf_dir: str, kind: str) -> str:
     )
 
 
-def _base_store_path(sf_dir: str) -> str:
-    return _session_store_path(sf_dir, "store")
-
-
 @_contextlib.contextmanager
 def _build_lock(path: str):
     """Exclusive advisory lock serializing concurrent session-store
@@ -3429,30 +3417,46 @@ def _build_lock(path: str):
         os.close(fd)
 
 
-def _ensure_base_store(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once-per-fingerprint for the shared base IVFADC artifact —
-    used by BOTH the store query and the filtered-search query (same
-    geometry, same trained model; whichever runs first builds)."""
-    from ..extensions import ann_store
-
-    path = _base_store_path(sf_dir)
-    fpr = _ivfadc_store_fingerprint(sf_dir)
+def _ensure_store(
+    sf_dir: str, kind: str, variant: str, build: Callable[[str], None]
+) -> str:
+    """Build once per input fingerprint: the session store ``kind`` of
+    ``sf_dir`` is (re)written by ``build(path)`` only when its committed
+    fingerprint is missing or stale.  The re-check under
+    :func:`_build_lock` lets a racer's finished build win, and the
+    fingerprint commits only after ``build`` returns, so a crashed
+    build leaves none and the next call rebuilds."""
+    path = _session_store_path(sf_dir, kind)
+    fpr = _ivfadc_store_fingerprint(sf_dir, variant)
     if not _session_store_fresh(path, fpr):
         with _build_lock(path):
-            if _session_store_fresh(path, fpr):  # a racer built it
-                return path
-            coarse, _, corpus, coarse_rows, cb = _ivfadc_parts(
-                spark, sf_dir, iters=1
-            )
-            ann_store.save_ivfadc(
-                similarity.ivf_pq_index(
-                    corpus, coarse, cb, m=4, dim=64, residual=True,
-                    assign="local", coarse_rows=coarse_rows,
-                ),
-                path, coarse_rows, cb, m=4, dim=64,
-            )
-            _commit_store_fingerprint(path, fpr)
+            if not _session_store_fresh(path, fpr):
+                build(path)
+                _commit_store_fingerprint(path, fpr)
     return path
+
+
+def _save_base_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Train the base IVFADC pipeline and write its index to ``path``."""
+    from ..extensions import ann_store
+
+    coarse, _, corpus, coarse_rows, cb = _ivfadc_parts(spark, sf_dir, iters=1)
+    ann_store.save_ivfadc(
+        similarity.ivf_pq_index(
+            corpus, coarse, cb, m=4, dim=64, residual=True,
+            assign="local", coarse_rows=coarse_rows,
+        ),
+        path, coarse_rows, cb, m=4, dim=64,
+    )
+
+
+def _ensure_base_store(spark: SparkSession, sf_dir: str) -> str:
+    """The shared base IVFADC artifact — used by BOTH the store query
+    and the filtered-search query (same geometry, same trained model;
+    whichever runs first builds)."""
+    return _ensure_store(
+        sf_dir, "store", "base", lambda p: _save_base_index(spark, sf_dir, p)
+    )
 
 
 # shared CTE chain for the IVFADC plans: coarse assignment → residuals →
@@ -3669,24 +3673,19 @@ def sim_ivfadc_rotated(spark: SparkSession, sf_dir: str) -> DataFrame:
     is rotate-queries + load + search, the production marginal cost."""
     from ..extensions import ann_store
 
-    path = _session_store_path(sf_dir, "rot")
-    fpr = _ivfadc_store_fingerprint(sf_dir, variant="rotated-hadamard")
-    if not _session_store_fresh(path, fpr):
-        with _build_lock(path):
-            if not _session_store_fresh(path, fpr):
-                _, coarse, corpus, coarse_rows, cb = _ivfadc_rot_parts(
-                    spark, sf_dir
-                )
-                ann_store.save_ivfadc(
-                    # window assign, NOT "local": corpus q is the
-                    # unrolled rotation — see _ivfadc_rot_parts
-                    similarity.ivf_pq_index(
-                        corpus, coarse, cb, m=4, dim=64, residual=True,
-                    ),
-                    path, coarse_rows, cb, m=4, dim=64,
-                    rotation={"mode": "post_int", "components": _had64()},
-                )
-                _commit_store_fingerprint(path, fpr)
+    def build(path: str) -> None:
+        _, coarse, corpus, coarse_rows, cb = _ivfadc_rot_parts(spark, sf_dir)
+        ann_store.save_ivfadc(
+            # window assign, NOT "local": corpus q is the unrolled
+            # rotation — see _ivfadc_rot_parts
+            similarity.ivf_pq_index(
+                corpus, coarse, cb, m=4, dim=64, residual=True,
+            ),
+            path, coarse_rows, cb, m=4, dim=64,
+            rotation={"mode": "post_int", "components": _had64()},
+        )
+
+    path = _ensure_store(sf_dir, "rot", "rotated-hadamard", build)
     queries_raw = load(spark, sf_dir, "embeddings").filter(
         (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
     )
@@ -3727,24 +3726,11 @@ def _ensure_deleted_store(spark: SparkSession, sf_dir: str) -> str:
     session sees build+delete as one unit."""
     from ..extensions import ann_store
 
-    path = _session_store_path(sf_dir, "del")
-    fpr = _ivfadc_store_fingerprint(sf_dir, variant="tombstoned-mod7")
-    if not _session_store_fresh(path, fpr):
-        with _build_lock(path):
-            if not _session_store_fresh(path, fpr):
-                coarse, _, corpus, coarse_rows, cb = _ivfadc_parts(
-                    spark, sf_dir, iters=1
-                )
-                ann_store.save_ivfadc(
-                    similarity.ivf_pq_index(
-                        corpus, coarse, cb, m=4, dim=64, residual=True,
-                        assign="local", coarse_rows=coarse_rows,
-                    ),
-                    path, coarse_rows, cb, m=4, dim=64,
-                )
-                ann_store.delete_vectors(spark, path, "vec_id % 7 = 3")
-                _commit_store_fingerprint(path, fpr)
-    return path
+    def build(path: str) -> None:
+        _save_base_index(spark, sf_dir, path)
+        ann_store.delete_vectors(spark, path, "vec_id % 7 = 3")
+
+    return _ensure_store(sf_dir, "del", "tombstoned-mod7", build)
 
 
 def sim_ivfadc_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3918,29 +3904,25 @@ def _ivfadc_seg_parts(spark: SparkSession, sf_dir: str, seg: str):
 def _ensure_segment_store(spark: SparkSession, sf_dir: str, seg: str) -> str:
     from ..extensions import ann_store
 
-    path = _session_store_path(sf_dir, f"seg{seg}")
-    fpr = _ivfadc_store_fingerprint(sf_dir, variant=f"segment-{seg}")
-    if not _session_store_fresh(path, fpr):
-        with _build_lock(path):
-            if not _session_store_fresh(path, fpr):
-                coarse, corpus, coarse_rows, cb, rotation = _ivfadc_seg_parts(
-                    spark, sf_dir, seg
-                )
-                ann_store.save_ivfadc(
-                    # "local" only in the raw basis (seg a) — see
-                    # _ivfadc_seg_parts for the rotated-basis rationale
-                    similarity.ivf_pq_index(
-                        corpus, coarse, cb, m=4, dim=64, residual=True,
-                        **(
-                            {"assign": "local", "coarse_rows": coarse_rows}
-                            if rotation is None
-                            else {}
-                        ),
-                    ),
-                    path, coarse_rows, cb, m=4, dim=64, rotation=rotation,
-                )
-                _commit_store_fingerprint(path, fpr)
-    return path
+    def build(path: str) -> None:
+        coarse, corpus, coarse_rows, cb, rotation = _ivfadc_seg_parts(
+            spark, sf_dir, seg
+        )
+        ann_store.save_ivfadc(
+            # "local" only in the raw basis (seg a) — see
+            # _ivfadc_seg_parts for the rotated-basis rationale
+            similarity.ivf_pq_index(
+                corpus, coarse, cb, m=4, dim=64, residual=True,
+                **(
+                    {"assign": "local", "coarse_rows": coarse_rows}
+                    if rotation is None
+                    else {}
+                ),
+            ),
+            path, coarse_rows, cb, m=4, dim=64, rotation=rotation,
+        )
+
+    return _ensure_store(sf_dir, f"seg{seg}", f"segment-{seg}", build)
 
 
 def sim_ivfadc_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4056,39 +4038,33 @@ def _ensure_merged_store(spark: SparkSession, sf_dir: str) -> str:
     only after the merge (crash → rebuild)."""
     from ..extensions import ann_store
 
-    path = _session_store_path(sf_dir, "mrg")
-    fpr = _ivfadc_store_fingerprint(sf_dir, variant="merged-lifecycle")
-    if not _session_store_fresh(path, fpr):
-        with _build_lock(path):
-            if not _session_store_fresh(path, fpr):
-                coarse, _, corpus, coarse_rows, cb = _ivfadc_parts(
-                    spark, sf_dir, iters=1
-                )
-                even = corpus.filter(F.col("vec_id") % 2 == 0)
-                readmit = corpus.filter(F.col("vec_id") % 10 == 4)
-                overlap = corpus.filter(F.col("vec_id") % 10 == 6)
-                fresh_rows = corpus.filter(
-                    F.col("vec_id") % 2 == 1
-                ).unionByName(readmit).unionByName(overlap)
-                base_p, fresh_p = path + "_base", path + "_fresh"
-                ann_store.save_ivfadc(
-                    similarity.ivf_pq_index(
-                        even, coarse, cb, m=4, dim=64, residual=True,
-                        assign="local", coarse_rows=coarse_rows,
-                    ),
-                    base_p, coarse_rows, cb, m=4, dim=64,
-                )
-                ann_store.delete_vectors(spark, base_p, "vec_id % 10 = 4")
-                ann_store.save_ivfadc(
-                    similarity.ivf_pq_index(
-                        fresh_rows, coarse, cb, m=4, dim=64, residual=True,
-                        assign="local", coarse_rows=coarse_rows,
-                    ),
-                    fresh_p, coarse_rows, cb, m=4, dim=64,
-                )
-                ann_store.merge_segments(spark, [base_p, fresh_p], path)
-                _commit_store_fingerprint(path, fpr)
-    return path
+    def build(path: str) -> None:
+        coarse, _, corpus, coarse_rows, cb = _ivfadc_parts(spark, sf_dir, iters=1)
+        even = corpus.filter(F.col("vec_id") % 2 == 0)
+        readmit = corpus.filter(F.col("vec_id") % 10 == 4)
+        overlap = corpus.filter(F.col("vec_id") % 10 == 6)
+        fresh_rows = corpus.filter(
+            F.col("vec_id") % 2 == 1
+        ).unionByName(readmit).unionByName(overlap)
+        base_p, fresh_p = path + "_base", path + "_fresh"
+        ann_store.save_ivfadc(
+            similarity.ivf_pq_index(
+                even, coarse, cb, m=4, dim=64, residual=True,
+                assign="local", coarse_rows=coarse_rows,
+            ),
+            base_p, coarse_rows, cb, m=4, dim=64,
+        )
+        ann_store.delete_vectors(spark, base_p, "vec_id % 10 = 4")
+        ann_store.save_ivfadc(
+            similarity.ivf_pq_index(
+                fresh_rows, coarse, cb, m=4, dim=64, residual=True,
+                assign="local", coarse_rows=coarse_rows,
+            ),
+            fresh_p, coarse_rows, cb, m=4, dim=64,
+        )
+        ann_store.merge_segments(spark, [base_p, fresh_p], path)
+
+    return _ensure_store(sf_dir, "mrg", "merged-lifecycle", build)
 
 
 def sim_ivfadc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4127,29 +4103,14 @@ def _ensure_maintained_store(spark: SparkSession, sf_dir: str) -> str:
     as one fingerprinted unit."""
     from ..extensions import ann_store
 
-    path = _session_store_path(sf_dir, "mnt")
-    fpr = _ivfadc_store_fingerprint(sf_dir, variant="maintained-mod7")
-    if not _session_store_fresh(path, fpr):
-        with _build_lock(path):
-            if not _session_store_fresh(path, fpr):
-                coarse, _, corpus, coarse_rows, cb = _ivfadc_parts(
-                    spark, sf_dir, iters=1
-                )
-                ann_store.save_ivfadc(
-                    similarity.ivf_pq_index(
-                        corpus, coarse, cb, m=4, dim=64, residual=True,
-                        assign="local", coarse_rows=coarse_rows,
-                    ),
-                    path, coarse_rows, cb, m=4, dim=64,
-                )
-                ann_store.delete_vectors(spark, path, "vec_id % 7 = 3")
-                rep = ann_store.compact_deleted(spark, path)
-                if not rep["compacted"]:  # pragma: no cover - build guard
-                    raise RuntimeError(
-                        "maintenance store build: nothing purged"
-                    )
-                _commit_store_fingerprint(path, fpr)
-    return path
+    def build(path: str) -> None:
+        _save_base_index(spark, sf_dir, path)
+        ann_store.delete_vectors(spark, path, "vec_id % 7 = 3")
+        rep = ann_store.compact_deleted(spark, path)
+        if not rep["compacted"]:  # pragma: no cover - build guard
+            raise RuntimeError("maintenance store build: nothing purged")
+
+    return _ensure_store(sf_dir, "mnt", "maintained-mod7", build)
 
 
 def sim_ivfadc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:

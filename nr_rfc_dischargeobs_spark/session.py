@@ -20,6 +20,30 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Runtime SQL confs that results and per-query cost depend on.
+# ``get_spark`` sets them at session build; ``plans.load`` re-applies them
+# on its first scan of any other session (the driver passes its own).
+SQL_CONFS = {
+    # Adaptive execution: coalesce small shuffle partitions and demote
+    # sort-merge to broadcast when runtime stats allow.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # Coalesce to the 64M advisory size instead of defending initial
+    # parallelism: post-shuffle partition count tracks DATA VOLUME at
+    # every scale (tiny stages collapse to a few tasks locally; a 100 TB
+    # shuffle still yields ~byte-sized partitions).  Measured 13% off the
+    # bench total.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    # Naive-UTC timestamps: any other zone would render and parse
+    # timestamp literals shifted relative to the DuckDB oracle.
+    "spark.sql.session.timeZone": "UTC",
+    # Some upstream writers emit TIMESTAMP(NANOS) parquet (e.g. pandas);
+    # Spark has no nanos type and throws PARQUET_TYPE_ILLEGAL, so read
+    # them as long (plans/__init__.py::load truncates to micros, matching
+    # DuckDB's own nanos→micros truncation).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
 
 def default_cpus() -> int:
     """Cores for ``local[N]`` and the shuffle partition count:
@@ -52,45 +76,21 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        # Adaptive execution: coalesce small shuffle partitions, split skewed
-        # ones, demote sort-merge to broadcast when runtime stats allow.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # AQE (SQL_CONFS) also splits skewed shuffle partitions.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Coalesce to the 64M advisory size instead of defending initial
-        # parallelism: post-shuffle partition count tracks DATA VOLUME at
-        # every scale (tiny stages collapse to a few tasks locally; a
-        # 100 TB shuffle still yields ~byte-sized partitions), and skew
-        # splitting above still applies.  Measured 13% off the bench total.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
-        )
-        # r14 (guide §1.2 step 3): the janino-compile cache is keyed on
-        # generated source and holds 100 entries by default — a workload
-        # of 150+ distinct plans (this engine's query surface, or any
-        # resident multi-query driver) evicts everything between
-        # repetitions and recompiles every codegen unit on every
-        # re-execution.  Size it to the plan surface; entries are
-        # weak-referenced class+bytecode pairs, a few MB total.  Static
-        # conf, so it must be set at session build.  Scale-independent:
-        # the cache lives on the driver/executor JVMs and its right size
-        # tracks the number of distinct plans, not cores or data volume.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4000"),
-        )
+        # The janino-compile cache is keyed on generated source and holds
+        # 100 entries by default: 150+ distinct plans (this engine's query
+        # surface, or any resident multi-query driver) evict everything
+        # between repetitions and recompile every codegen unit on every
+        # re-execution.  Sized to the plan count, not cores or data
+        # volume; entries are weak-referenced, a few MB total.  Static
+        # conf, so it must be set at session build.
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         # Arrow for the pandas edges (grouped-map recurrence, export adapters).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Deterministic timestamp semantics across Spark/DuckDB/parquet.
-        .config("spark.sql.session.timeZone", "UTC")
         # Partition discovery + pruning on the hive-layout observation store.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Some upstream writers emit TIMESTAMP(NANOS) parquet (e.g. pandas
-        # ns-precision); Spark has no nanos type, so read them as long and
-        # convert at the scan edge (plans/__init__.py::load truncates to
-        # micros, matching DuckDB's own nanos→micros truncation).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # local[] runs driver AND every executor thread in ONE JVM —
         # Spark's 1g default heap starves many concurrent tasks (GC-locker
@@ -100,6 +100,6 @@ def get_spark(
         .config("spark.driver.maxResultSize", "2g")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )
-    for key, value in (extra_conf or {}).items():
+    for key, value in {**SQL_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -187,13 +187,53 @@ def test_store_topk_builds_once_per_fingerprint(spark, monkeypatch):
 
     # stale fingerprint (input/recipe changed) → rebuild path re-engages
     monkeypatch.setattr(
-        plx, "_ivfadc_store_fingerprint", lambda d: "different"
+        plx, "_ivfadc_store_fingerprint", lambda d, variant: "different"
     )
     try:
         plx.sim_ivfadc_store_topk(spark, sf).collect()
         raise AssertionError("expected the rebuild path")
     except AssertionError as ex:
         assert "save_ivfadc called" in str(ex)
+
+
+def test_ensure_store_builds_once_and_rebuilds_after_a_crash(
+    tmp_path, monkeypatch
+):
+    """The session-store build-once sequence, without Spark: the first
+    call builds and commits the fingerprint, a second call does not
+    build, and a build that raises leaves no fingerprint, so the next
+    call builds again."""
+    import tempfile
+
+    import nr_rfc_dischargeobs_spark.plans.extensions as plx
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = str(tmp_path / "sf")
+    built = []
+
+    def build(path):
+        os.makedirs(path, exist_ok=True)
+        built.append(path)
+
+    path = plx._ensure_store(sf, "store", "base", build)
+    assert built == [path] and path.startswith(str(tmp_path))
+    assert plx._session_store_fresh(
+        path, plx._ivfadc_store_fingerprint(sf, "base")
+    )
+    assert plx._ensure_store(sf, "store", "base", build) == path
+    assert built == [path]
+
+    def crash(path):
+        os.makedirs(path, exist_ok=True)
+        raise RuntimeError("killed mid-build")
+
+    with pytest.raises(RuntimeError, match="killed mid-build"):
+        plx._ensure_store(sf, "del", "tombstoned-mod7", crash)
+    crashed = plx._session_store_path(sf, "del")
+    assert os.path.isdir(crashed)
+    assert not os.path.exists(os.path.join(crashed, plx._IVFADC_FPR_FILE))
+    assert plx._ensure_store(sf, "del", "tombstoned-mod7", build) == crashed
+    assert built == [path, crashed]
 
 
 def test_rotated_artifact_round_trip_and_versioning(spark, tmp_path):

@@ -22,6 +22,36 @@ def test_queries_and_oracles_consistent():
     assert set(o) <= set(q)
 
 
+def test_registry_order_and_contents_are_pinned():
+    """The registry is the driver contract: the dict orders, the plan
+    behind each name and every DuckDB twin are pinned by sha256 of the
+    newline-joined strings.  Names are unique in the one table (a list
+    of rows, like a dict literal, would silently keep a duplicate), and
+    the driver window leads ``queries()``."""
+    import hashlib
+
+    def digest(lines):
+        return hashlib.sha256("\n".join(lines).encode()).hexdigest()
+
+    names = [name for name, _, _ in entrymod._registry()]
+    assert len(names) == len(set(names)) == 156
+    q = entrymod.queries()
+    assert list(q)[:50] == entrymod._R13_WINDOW
+    assert digest(q) == (
+        "2148c48667922a70fe92ecc7791e23a11d3d3fa00c4cd0e624278fd1a2e85840"
+    )
+    raw = entrymod._raw_queries()
+    assert digest(raw) == (
+        "6574d5bff133ff9204696b103541ceafa655946f2d8577cc88087dfb1c105972"
+    )
+    assert digest(sorted(
+        f"{name} {fn.__module__}.{fn.__qualname__}" for name, fn in raw.items()
+    )) == "f12b51f91ffa73e8d89173e0a1b26d6152abacce0ccd5a33eb726cf63cacf4c7"
+    assert digest(sorted(
+        f"{name}\n{sql}" for name, sql in entrymod.oracle_sql().items()
+    )) == "d952b4a97520f5c965fd402682ff91a74d45735c839fdecd1a9c0391bd8cc02d"
+
+
 def test_all_queries_run_at_smoke_sf(spark, sf_dir):
     for name, fn in entrymod.queries().items():
         df = fn(spark, sf_dir)

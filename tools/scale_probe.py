@@ -1881,23 +1881,18 @@ def main() -> int:
         _df.unpersist()
     # BPE induction: the synthetic corpus's vocabulary saturates near
     # 1M distinct 5-char tokens (16^5 md5 prefixes) — a web-scale vocab
-    # shape.  Work happens inside the call (one vocab-scale pair-count
-    # job per merge, argmax collected), so time the call itself.
+    # shape.  Work happens inside the call (one vocab aggregation job,
+    # then the merge loop on the driver), so time the call itself.
     from nr_rfc_dischargeobs_spark.extensions import bpe as bpe_mod
 
-    _bpe_reg: list = []
     t0 = time.time()
-    _bpe_rows = bpe_mod.bpe_merges(
-        docs, n_merges=10, cache_registry=_bpe_reg
-    ).count()
+    _bpe_rows = bpe_mod.bpe_merges(docs, n_merges=10).count()
     t["bpe_merges_1m_docs_10merges"] = {
         "sec": round(time.time() - t0, 1), "rows": _bpe_rows,
     }
     print(f"  {t['bpe_merges_1m_docs_10merges']['sec']:7.1f} s  "
           f"{_bpe_rows:>12,} rows  bpe_merges_1m_docs_10merges",
           file=sys.stderr)
-    for _df in _bpe_reg:
-        _df.unpersist()
     timed(t, "chunk_windows_64x32",
           text.chunk_windows(docs, chunk_tokens=64, stride=32))
     timed(t, "top_terms_k3", text.top_terms(docs, k=3))
