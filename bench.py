@@ -14,7 +14,9 @@ for cross-round comparison.
 
 The per-query timing map lives in ``BENCH_DETAIL.json`` next to this
 script, NOT on stdout: the driver captures a bounded tail of stdout, and
-round 1's full map overflowed it.  The Spark console progress bar is
+round 1's full map overflowed it.  That tracked file records the default
+sf0.1 run only; with ``SPARK_GRAFT_SF_DIR`` set, the same detail JSON goes
+to stderr instead.  The Spark console progress bar is
 disabled — its ``\\r[Stage N:...]`` repaints were the only other stdout
 writer and filled the driver's captured tail with spam (BENCH_r07.json).
 """
@@ -159,8 +161,12 @@ def main() -> None:
         "cache_empty_at_end": cache_empty,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    detail_path = Path(__file__).resolve().parent / "BENCH_DETAIL.json"
-    detail_path.write_text(json.dumps(detail, indent=2) + "\n")
+    detail_json = json.dumps(detail, indent=2) + "\n"
+    if "SPARK_GRAFT_SF_DIR" in os.environ:
+        sys.stderr.write(detail_json)
+    else:
+        detail_path = Path(__file__).resolve().parent / "BENCH_DETAIL.json"
+        detail_path.write_text(detail_json)
 
     out = {
         "metric": "headline_queries_total",

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import dedup as dd
 from . import text as tx
 
@@ -107,7 +108,6 @@ def curate_corpus(
     text: str = "text",
     doc_id: str = "doc_id",
     cache_shingles: bool = False,
-    cache_registry: list | None = None,
     classifier_min_score: float | None = None,
     entropy_band: tuple[float, float] | None = None,
 ) -> DataFrame:
@@ -175,9 +175,7 @@ def curate_corpus(
         # three consumers re-scan this subtree (shingles, and both ends of
         # the final anti-join); same materialize-once trade as the shingle
         # table — at fleet scale both are intermediate TABLES, not caches
-        survivors = survivors.persist()
-        if cache_registry is not None:
-            cache_registry.append(survivors)
+        survivors = pin(survivors)
 
     # near-dup: banded MinHash candidates, Jaccard-verified, drop higher id.
     # Trigram shingles + r=2 bands: unigrams over a small vocabulary give
@@ -192,7 +190,6 @@ def curate_corpus(
         text=text,
         doc_id=doc_id,
         cache_shingles=cache_shingles,
-        cache_registry=cache_registry,
     )
     kept = survivors.join(dropped, doc_id, "left_anti")
     return kept.select(doc_id, "n_words", "uniq_ratio")
@@ -207,7 +204,6 @@ def near_dup_drop_ids(
     text: str = "text",
     doc_id: str = "doc_id",
     cache_shingles: bool = False,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """The near-dup DROP LIST (one ``doc_id`` column): the higher id of
     every Jaccard-verified MinHash-LSH candidate pair.  Shared by the
@@ -221,9 +217,7 @@ def near_dup_drop_ids(
     # (at fleet scale, materialize it as a table instead)
     shingles = dd.shingle_rows(docs, text=text, doc_id=doc_id, n=shingle_n)
     if cache_shingles:
-        shingles = shingles.persist()
-        if cache_registry is not None:
-            cache_registry.append(shingles)
+        shingles = pin(shingles)
     # r13 (guide §2.4): the shingle-set sizes ride the signature groupBy
     # (``with_count``) and thread through the LSH pair join as two ints
     # (``carry``) — the separate sizes aggregation over the shingle

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 HEX = "0123456789abcdef"
 BUCKETS = 1 << 16
 
@@ -403,7 +405,6 @@ def dsir_log_ratio(
     text: str = "text",
     doc_id: str = "doc_id",
     salt: str = "lm",
-    cache_registry: list | None = None,
     target_pred: Column | None = None,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al., NeurIPS 2023 — "Data
@@ -489,11 +490,9 @@ def dsir_log_ratio(
                 F.sum(F.col("__t").cast("long")).alias("ct"),
             )
         )
-        if cache_registry is not None:
-            # one materialization feeds all four consumers (two totals +
-            # two broadcast score joins)
-            both = both.persist()
-            cache_registry.append(both)
+        # one materialization feeds all four consumers (two totals +
+        # two broadcast score joins)
+        both = pin(both)
         bt = both.filter(F.col("ct") > 0).select("bucket", "ct")
         br = both.select("bucket", "cr")
     else:
@@ -505,17 +504,12 @@ def dsir_log_ratio(
         )
         bt = bt.select(F.col("bucket"), F.col("cb").alias("ct"))
         br = br.select(F.col("bucket"), F.col("cb").alias("cr"))
-        if cache_registry is not None:
-            # each count table feeds TWO consumers (its 1-row total and
-            # the broadcast score join) — without a barrier both re-run
-            # the full corpus-scan count aggregation (audited: 5 scans /
-            # 8 exchanges → 3 scans / 4 with the persists).  The tables
-            # are ≤ n_buckets rows; the lazy persist lands in the
-            # caller's registry so release_plan_caches() frees it
-            # between queries.
-            bt = bt.persist()
-            br = br.persist()
-            cache_registry.extend([bt, br])
+        # each count table feeds TWO consumers (its 1-row total and
+        # the broadcast score join) — without a barrier both re-run the
+        # full corpus-scan count aggregation (audited: 5 scans /
+        # 8 exchanges → 3 scans / 4 with the pins).  The tables are
+        # ≤ n_buckets rows.
+        bt, br = pin(bt), pin(br)
     grid = lambda c: F.round(  # noqa: E731
         F.log2(c.cast("double")) * SCALE, 0
     ).cast("long")
@@ -590,7 +584,6 @@ def dsir_resample(
     doc_id: str = "doc_id",
     salt: str = "lm",
     gumbel_salt: str = "dsir-gumbel",
-    cache_registry: list | None = None,
     target_pred: Column | None = None,
 ) -> DataFrame:
     """The selection half of DSIR: draw ``k`` documents ∝ their
@@ -626,7 +619,6 @@ def dsir_resample(
         text=text,
         doc_id=doc_id,
         salt=salt,
-        cache_registry=cache_registry,
         target_pred=target_pred,
     ).filter(F.col("n_feats") > 0)
     u = (

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 QUANT = 100000
 
 
@@ -935,9 +937,7 @@ def semantic_dedup(
     centroids: DataFrame,
     threshold: float = 0.3,
     dim: int | None = None,
-    materialize_assignment: bool = True,
     salt: int = 1,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al., 2023,
     arXiv:2303.09540): assign every vector to its nearest coarse centroid,
@@ -949,13 +949,12 @@ def semantic_dedup(
     dial (SemDeDup uses k ≈ 10⁴–10⁵ at web scale so clusters stay
     ~10³-sized).  Plan shape: centroids broadcast, assignment is
     :func:`ivf_assign`'s scan + broadcast join + per-vector argmin
-    window, materialized ONCE (``materialize_assignment`` — it feeds
-    both sides of the pair join and the audit output; it is the IVF
-    index, a stored artifact in production), then ONE shuffle keyed by
-    ``cluster_id`` for the self-join; per-cluster pair generation is
-    node-local after that.  Skewed clusters are the known failure mode at
-    fleet scale — the k dial is the structural fix (more centroids →
-    smaller clusters), and ``salt`` is the in-plan guard: with
+    window, ``pin``ned ONCE (it feeds both sides of the pair join and
+    the audit output; it is the IVF index, a stored artifact in
+    production), then ONE shuffle keyed by ``cluster_id`` for the
+    self-join; per-cluster pair generation is node-local after that.
+    Skewed clusters are the known failure mode at fleet scale — the k
+    dial is the structural fix (more centroids → smaller clusters), and ``salt`` is the in-plan guard: with
     ``salt = S > 1`` the pair join keys on ``(cluster_id, vec_b mod S)``
     — the b-side of a hot cluster splits across S shuffle partitions
     (largest task |cluster|²/S instead of |cluster|²) while the a-side
@@ -974,12 +973,6 @@ def semantic_dedup(
     sf0.1 scale salt=4 is a wash (1.6 s either way), so the registered
     plans run salted and the library default stays salt=1.
 
-    ``cache_registry``: when given, the persisted assignment handle is
-    appended so a long-lived caller can ``unpersist()`` it after
-    consuming the result (see ``plans.extensions.release_plan_caches``);
-    without it the cache lives until session end — fine for short-lived
-    driver/bench runs.
-
     Semantics are one-hop and engine-exact: ``kept = no smaller-id
     clustermate with cosine ≥ threshold``; ``canonical_id`` is the
     smallest such clustermate (the doc a trainer keeps instead), the
@@ -996,26 +989,16 @@ def semantic_dedup(
     # BroadcastNestedLoopJoin stage, where the unrolled dot runs
     # interpreted and loses ~6× to the HOF fold (see `dot`); the dial
     # applies only to the codegen-capable within-cluster pair join below
-    assigned = ivf_assign(prepared, centroids, 1)
-    if materialize_assignment:
-        # the assignment feeds BOTH sides of the pair join AND the final
-        # audit output — three references to an un-materialized subtree
-        # would recompute the corpus-wide argmin window three times.  In
-        # production the assignment IS a stored artifact (it is the IVF
-        # index).  persist(), not localCheckpoint(): lazy (building the
-        # plan stays free — the plan audit explains registered queries
-        # without running them), recompute-safe under executor loss, and
-        # the physical plan stays visible to PLANS.md (a checkpoint
-        # collapses the whole subtree to an opaque ExistingRDD scan).
-        # Lifecycle: the cache entry lives until session end — right for
-        # the short-lived driver/bench runs this serves; a long-lived
-        # driver looping over changing corpora should pass
-        # materialize_assignment=False and manage storage at the call
-        # site (persist-and-unpersist, or write the assignment table),
-        # or hand in cache_registry and unpersist through it.
-        assigned = assigned.persist()
-        if cache_registry is not None:
-            cache_registry.append(assigned)
+    # the assignment feeds BOTH sides of the pair join AND the final
+    # audit output — three references to an un-materialized subtree
+    # would recompute the corpus-wide argmin window three times.  In
+    # production the assignment IS a stored artifact (it is the IVF
+    # index).  pin() (a persist), not localCheckpoint(): lazy (building
+    # the plan stays free — the plan audit explains registered queries
+    # without running them), recompute-safe under executor loss, and
+    # the physical plan stays visible to PLANS.md (a checkpoint
+    # collapses the whole subtree to an opaque ExistingRDD scan).
+    assigned = pin(ivf_assign(prepared, centroids, 1))
     a = assigned.filter(F.col("n") > 0).select(
         F.col("vec_id").alias("vec_a"),
         F.col("q").alias("qa"),
@@ -1941,7 +1924,7 @@ def _pq_check(
 # expressions — would be INLINED under the search's broadcast join by
 # Catalyst's projection collapse, and the fused expression tree detonates
 # janino codegen (reproduced: >15 min + driver OOM at 472 index rows vs
-# ~4 s with a barrier).  The registered plans always persist
+# ~4 s with a barrier).  The registered plans always pin
 # (plans/extensions.py sim_ivf_pq_topk / sim_ivfadc_topk); this guard makes
 # the barrier STRUCTURAL so the public API can't be composed into the
 # detonating shape by accident (the round-9 test regression).
@@ -1978,13 +1961,12 @@ def _index_barrier(index: DataFrame, caller: str) -> DataFrame:
 
     Pass-through when the index is already cached or is a plain stored
     artifact (scan/project/filter only — keeps ``list_id`` partition
-    pruning intact).  Any other shape is persisted and eagerly
-    materialized here (persist + count), with a warning naming the
+    pruning intact).  Any other shape is pinned and eagerly
+    materialized here (pin + count), with a warning naming the
     production posture: build the index ONCE, store it partitioned by
-    ``list_id``, and search the stored artifact.  The persisted blocks
-    live until the caller unpersists or the frame is garbage-collected
-    (Spark's ContextCleaner) — audit-scale for any index small enough
-    to be built in-plan."""
+    ``list_id``, and search the stored artifact.  The pinned blocks
+    live until ``release_plan_caches()`` — audit-scale for any index
+    small enough to be built in-plan."""
     if index.is_cached:
         return index
     if all(n in _SCAN_ONLY_NODES for n in _plan_node_names(index)):
@@ -1999,7 +1981,7 @@ def _index_barrier(index: DataFrame, caller: str) -> DataFrame:
         " (see plans/sqlfn.py tvf_ivf_pq_search).",
         stacklevel=3,
     )
-    index = index.persist()
+    index = pin(index)
     index.count()
     return index
 

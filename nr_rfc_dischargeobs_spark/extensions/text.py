@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 # marker stopwords per language for the n-gram/stopword-hit heuristic;
 # deliberately tiny — the operator shape (score → argmax) is the point,
 # swap in real frequency tables for production corpora.
@@ -481,7 +483,6 @@ def bm25_topk(
     k: int = 10,
     text: str = "text",
     doc_id: str = "doc_id",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """BM25 document retrieval for a literal query — Robertson/Spärck
     Jones Okapi weighting with the Lucene non-negative idf, at standard
@@ -498,11 +499,9 @@ def bm25_topk(
     scan bandwidth.  Zero joins other than the broadcast; top-k is a
     distributed TakeOrdered with a doc_id tie-break.  The tokenized
     per-doc tf frame feeds BOTH the stats aggregate and the scoring
-    pass, so it persists when a ``cache_registry`` is supplied (the
-    :func:`collocations` plan-cache discipline) — ONE corpus
-    tokenization instead of two; at 100 TB the second tokenization pass
-    is the whole bill.  Without a registry the operator stays fully
-    lazy (recompute-safe) and scans twice.
+    pass, so it is ``pin``ned (released by ``release_plan_caches``) —
+    ONE corpus tokenization instead of two; at 100 TB the second
+    tokenization pass is the whole bill.
 
     Exactness: idf₂ = log₂((2N+2)/(2df+1)) enters as a DIFFERENCE OF TWO
     integer-grid log terms (``round(log₂(int)·2²⁰)`` — the
@@ -539,9 +538,7 @@ def bm25_topk(
             for i, t in enumerate(terms)
         ],
     )
-    if cache_registry is not None:
-        base = base.persist()
-        cache_registry.append(base)
+    base = pin(base)
     stats = base.groupBy().agg(
         F.count(F.lit(1)).alias("__n_docs"),
         F.sum("dl").alias("__total"),
@@ -1458,7 +1455,6 @@ def hash_classifier_train_nb(
     salt: str = "clf",
     weight_scale: int = 10_000,
     alpha_inv: int = 100,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Train the weight table :func:`hash_classifier_trained` consumes —
     in-engine, closed-form: multinomial Naive Bayes log-odds per hashed
@@ -1505,12 +1501,6 @@ def hash_classifier_train_nb(
         F.sum(F.col("__pos").cast("long")).alias("cpos"),
         F.sum((~F.col("__pos")).cast("long")).alias("cneg"),
     )
-    if cache_registry is not None:
-        # the bucket table feeds TWO consumers (the totals fold and the
-        # weight projection); with a registry owner, persist it so the
-        # labeled-corpus explode+aggregation runs once per training
-        per = per.persist()
-        cache_registry.append(per)
     totals = per.agg(
         F.sum("cpos").alias("__np"), F.sum("cneg").alias("__nn")
     )
@@ -1538,7 +1528,6 @@ def collocations(
     min_count: int = 5,
     k: int = 30,
     text: str = "text",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Corpus collocations by pointwise mutual information — "which word
     pairs co-occur far more than chance?" (Church & Hanks 1990), the
@@ -1556,8 +1545,8 @@ def collocations(
     Scale shape: exactly TWO corpus scans — one into the pair-count
     aggregate (keyed (a,b)), one into the unigram-count aggregate
     (keyed token), both combine-friendly.  Every other input derives
-    from those two vocabulary-scale tables, which persist (handles in
-    ``cache_registry``, the plan-cache discipline): N = Σ unigram
+    from those two vocabulary-scale tables, which are ``pin``ned
+    (released by ``release_plan_caches``): N = Σ unigram
     counts, P = Σ pair counts (pairs per doc = tokens − 1, so counting
     bigram rows IS the total), both folded from the caches, never a
     third scan.  The ``min_count`` gate prunes the pair side BEFORE its
@@ -1603,15 +1592,8 @@ def collocations(
     pairs_all = bigrams.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("pair_count")
     )
-    if cache_registry is not None:
-        # the two aggregates feed multiple consumers (joins + totals):
-        # persist ONLY when the caller owns release — an unowned
-        # persist would either leak for the session or, unpersisted
-        # here before evaluation, be pure bookkeeping churn (the
-        # CacheManager entry would vanish before any action reads it)
-        unigrams = unigrams.persist()
-        pairs_all = pairs_all.persist()
-        cache_registry.extend([unigrams, pairs_all])
+    # the two aggregates feed multiple consumers (joins + totals)
+    unigrams, pairs_all = pin(unigrams), pin(pairs_all)
     totals = unigrams.agg(F.sum("c").alias("__n"))
     # P = Σ pair counts — folded from the cached pair table, not a
     # third corpus scan (pairs per doc = tokens − 1 by construction)
@@ -1847,7 +1829,6 @@ def winnow_pairs(
     max_df: int = 50,
     text: str = "text",
     doc_id: str = "doc_id",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Document pairs sharing winnowing fingerprints — the candidate
     local-clone report: (doc_a, doc_b, shared_fps), doc_a < doc_b,
@@ -1874,10 +1855,8 @@ def winnow_pairs(
     if min_shared < 1 or max_df < 1:
         raise ValueError("min_shared and max_df must be >= 1")
     # the (doc, fp) set feeds THREE consumers (df counts + both sides
-    # of the self-join): with a registry to own the release, persist it
-    # so the winnowing scan runs once (369.5 → 66.1 s at the 1M probe);
-    # without one, don't — an unowned persist either leaks for the
-    # session or is unpersisted before any action reads it.
+    # of the self-join): pin it so the winnowing scan runs once
+    # (369.5 → 66.1 s at the 1M probe).
     # r13 (guide §2.4): the per-doc fp dedup runs INSIDE the row
     # (``_fp_sets`` — array_distinct before the explode), so the
     # corpus-wide ``.distinct()`` exchange this frame used to pay is
@@ -1886,9 +1865,7 @@ def winnow_pairs(
     fps = winnow_fingerprints(
         docs, n=n, w=w, text=text, doc_id=doc_id, _fp_sets=True
     ).select(F.col(doc_id).alias("d"), "fp")
-    if cache_registry is not None:
-        fps = fps.persist()
-        cache_registry.append(fps)
+    fps = pin(fps)
     rare = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("df"))

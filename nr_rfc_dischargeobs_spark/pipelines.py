@@ -74,7 +74,6 @@ def update_hourly(
     datatype: str = "Q",
     ffill_until: Column | None = None,
     decimals: int = 3,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """EP2 hourly tier (``dischargeobs_write_xl.py:278-360``): pruned
     instantaneous read → A1 hourly mean with final-hour override → dense
@@ -92,12 +91,6 @@ def update_hourly(
     hourly = rollup.hourly_rollup_with_final_override(
         obs, "station_id", "obs_time", "value", decimals=decimals
     )
-    if cache_registry is not None:
-        # the rollup feeds TWO consumers (the station spine and the
-        # scaffold join) — with a registry owner, persist it so the
-        # pruned store read + rollup shuffle run once per invocation
-        hourly = hourly.persist()
-        cache_registry.append(hourly)
     spark = obs.sparkSession
     spine = align.key_spine(
         hourly.select("station_id").distinct(),

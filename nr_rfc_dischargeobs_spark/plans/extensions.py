@@ -27,29 +27,10 @@ from ..extensions import (
     sketches,
     text as textops,
 )
+# release_plan_caches is re-exported: bench, perfbench and the tools
+# import it from here.
+from ..session import pin, release_plan_caches  # noqa: F401
 from . import load
-
-# Plan-owned cache handles: two registered plans persist an intermediate
-# (the PQ codes table, the SemDeDup assignment) because it is re-read
-# several times within the same query.  Those persists are appended here
-# so a long-lived caller — the bench loop, the oracle sweep, a resident
-# driver — can release them between queries instead of accreting
-# CacheManager entries for the whole session.  Short-lived runs may
-# ignore this entirely (session teardown frees everything).
-_PLAN_CACHES: list[DataFrame] = []
-
-
-def release_plan_caches() -> int:
-    """Unpersist every cache a registered plan builder pinned since the
-    last call; returns how many were released.  Call AFTER consuming the
-    plan's result — the handles are lazy, so releasing early just costs
-    recomputation, never correctness."""
-    n = 0
-    while _PLAN_CACHES:
-        _PLAN_CACHES.pop().unpersist()
-        n += 1
-    return n
-
 
 # ---------------------------------------------------------------- dedup
 
@@ -616,13 +597,12 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §2.2 reuse, VERDICT task 7): the corpus side feeds BOTH
     # the approx search (assignment + probed scoring) and the exact
     # baseline (brute-force scoring) — 5 scans of the embeddings table
-    # in the un-shared plan.  Persist the prepared corpus once for the
-    # audit (released via release_plan_caches); the recall audit is the
-    # one operator whose DEFINITION evaluates the same corpus twice, so
-    # a shared materialized input is the honest spelling at any scale
+    # in the un-shared plan.  Pin the prepared corpus once for the
+    # audit; the recall audit is the one operator whose DEFINITION
+    # evaluates the same corpus twice, so a shared materialized input is
+    # the honest spelling at any scale
     # (audits run on bounded samples in production).
-    corpus = similarity.prepare(emb.filter(F.col("vec_id") >= 28)).persist()
-    _PLAN_CACHES.append(corpus)
+    corpus = pin(similarity.prepare(emb.filter(F.col("vec_id") >= 28)))
     approx = similarity.ivf_topk(queries, corpus, centroids, k=3, nprobe=2)
     exact = similarity.brute_force_topk(queries, corpus, k=3)
     return similarity.ann_recall(approx, exact)
@@ -989,7 +969,6 @@ def curate_corpus_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-LSH candidates → Jaccard-verified near-dup drop."""
     return curate.curate_corpus(
         load(spark, sf_dir, "documents"), cache_shingles=True,
-        cache_registry=_PLAN_CACHES,
     )
 
 
@@ -1655,7 +1634,6 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents"),
         min_count=5,
         k=30,
-        cache_registry=_PLAN_CACHES,
     )
 
 
@@ -1730,7 +1708,6 @@ def text_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         w=4,
         min_shared=2,
         max_df=50,
-        cache_registry=_PLAN_CACHES,
     )
 
 
@@ -1951,7 +1928,6 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed TakeOrdered."""
     return textops.bm25_topk(
         load(spark, sf_dir, "documents"), list(_BM25_TERMS), k=_BM25_K,
-        cache_registry=_PLAN_CACHES,
     )
 
 
@@ -2025,7 +2001,6 @@ def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = similarity.prepare(emb.filter(F.col("vec_id") < 8))
     return similarity.semantic_dedup(
         prep, cents, threshold=0.3, dim=64, salt=4,
-        cache_registry=_PLAN_CACHES,
     )
 
 
@@ -2361,7 +2336,6 @@ def sample_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.dsir_log_ratio(
         docs,
         docs.filter(F.col("doc_id") % 10 == 0),
-        cache_registry=_PLAN_CACHES,
         target_pred=F.col("doc_id") % 10 == 0,
     )
 
@@ -2376,7 +2350,6 @@ def sample_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         docs.filter(F.col("doc_id") % 10 == 0),
         k=25,
-        cache_registry=_PLAN_CACHES,
         target_pred=F.col("doc_id") % 10 == 0,
     )
 
@@ -2917,15 +2890,13 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = prep.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 28))
     # encode-once / search-many is PQ's production contract: the codes
     # table is a stored artifact (pq_codes → write; searches scan it).
-    # persist() reproduces that here — the cache substitution keeps the
+    # pin() reproduces that here — the cache substitution keeps the
     # optimizer from re-inlining the encode expression into every ADC
     # reference (un-materialized: 16 s analyze per action); it stays
-    # lazy and recompute-safe, and the handle lands in _PLAN_CACHES so
-    # release_plan_caches() can free it between queries
-    codes = similarity.pq_codes(
+    # lazy and recompute-safe until release_plan_caches()
+    codes = pin(similarity.pq_codes(
         prep.filter(F.col("vec_id") >= 28), cents, m=4, dim=64
-    ).persist()
-    _PLAN_CACHES.append(codes)
+    ))
     return similarity.pq_adc_topk(queries, codes, cents, k=3, m=4, dim=64)
 
 
@@ -3001,7 +2972,7 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = prep.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
     corpus = prep.filter(F.col("vec_id") >= 28)
     # the index is a STORED artifact in production (build once, search
-    # many; write it partitioned by list_id).  persist() reproduces that
+    # many; write it partitioned by list_id).  pin() reproduces that
     # split here AND is load-bearing for plan compilation: inlining the
     # assignment + staged-encode subtree under the search join
     # regenerates a method janino refuses to compile, and the failed
@@ -3024,10 +2995,7 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compilable stage.  The probe-side literal fold A/B'd within noise
     # of the window spelling here ([3.0, 3.3, 2.8] vs [3.2, 2.3, 2.1]);
     # the window probe is kept for the same compile-budget reason.
-    index = similarity.ivf_pq_index(
-        corpus, coarse, cents, m=4, dim=64
-    ).persist()
-    _PLAN_CACHES.append(index)
+    index = pin(similarity.ivf_pq_index(corpus, coarse, cents, m=4, dim=64))
     return similarity.ivf_pq_topk(
         queries, index, coarse, cents, k=3, nprobe=2, m=4, dim=64
     )
@@ -3143,8 +3111,8 @@ def sim_ivf_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse = prep.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
     queries = prep.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
     corpus = prep.filter(F.col("vec_id") >= 28)
-    # same load-bearing persist as sim_ivf_pq_topk (janino compile barrier
-    # + the stored-artifact posture); released via _PLAN_CACHES.
+    # same load-bearing pin as sim_ivf_pq_topk (janino compile barrier
+    # + the stored-artifact posture).
     # r13 A/B: assign="local" + literal-fold probe REVERTED here for the
     # same measured janino 64KB blowout as sim_ivf_pq_topk (bench pass
     # times [3.13, 2.98, 3.08] → [4.29, 3.94, 4.80] with the fold; the
@@ -3152,10 +3120,7 @@ def sim_ivf_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barrier variant (see sim_ivf_pq_topk above) also REVERTED —
     # intermittent multi-second compile storms ([15.5, 14.8, 59.8,
     # 28.1] on the bad run) dwarf the deleted exchange at this scale.
-    index = similarity.ivf_pq_index(
-        corpus, coarse, cents, m=4, dim=64
-    ).persist()
-    _PLAN_CACHES.append(index)
+    index = pin(similarity.ivf_pq_index(corpus, coarse, cents, m=4, dim=64))
     cand = similarity.ivf_pq_topk(
         queries, index, coarse, cents, k=10, nprobe=2, m=4, dim=64
     )
@@ -3269,11 +3234,10 @@ def sim_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: scan-local index build (coarse rows already collected by
     # _ivfadc_parts) — the window spelling paid a corpus-keyed exchange
     # inside the persist materialization (guide §2.4)
-    index = similarity.ivf_pq_index(
+    index = pin(similarity.ivf_pq_index(
         corpus, coarse, cb, m=4, dim=64, residual=True,
         assign="local", coarse_rows=coarse_rows,
-    ).persist()
-    _PLAN_CACHES.append(index)
+    ))
     return similarity.ivfadc_topk(
         queries, index, coarse, cb, k=3, nprobe=2, m=4, dim=64
     )
@@ -4313,7 +4277,6 @@ def curate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = similarity.semantic_dedup(
         prep, cents, threshold=0.3, dim=64, salt=4,
-        cache_registry=_PLAN_CACHES,
     )
     return out.join(
         gated, out["vec_id"] == gated["doc_id"]

@@ -12,13 +12,16 @@ the right default on a 1000-executor cluster reading 100 TB:
 - Session timezone pinned to UTC: the engine stores event-time as naive-UTC
   and converts to local (America/Vancouver) only at export edges, which keeps
   parquet/DuckDB/Spark agreeing bit-for-bit on timestamp values.
+
+It also holds ``pin`` / ``release_plan_caches``, the one registry of
+plan-owned caches.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime SQL confs that results and per-query cost depend on.
 # ``get_spark`` sets them at session build; ``plans.load`` re-applies them
@@ -103,3 +106,33 @@ def get_spark(
     for key, value in {**SQL_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+# The one cache lifecycle: an intermediate a query reads more than once is
+# ``pin``ned, and a long-lived caller (the bench loop, the oracle sweep, a
+# resident driver) calls ``release_plan_caches`` between queries so the
+# CacheManager does not accrete entries for the whole session.  Short-lived
+# runs may ignore it: session teardown frees everything.  The registry
+# lives here because every library module can import this one without a
+# cycle.
+_PINNED: list[DataFrame] = []
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df``, record the handle for ``release_plan_caches`` and
+    return the persisted frame."""
+    df = df.persist()
+    _PINNED.append(df)
+    return df
+
+
+def release_plan_caches() -> int:
+    """Unpersist every frame ``pin``ned since the last call; returns how
+    many were released.  Call AFTER consuming the plan's result — the
+    handles are lazy, so releasing early just costs recomputation, never
+    correctness."""
+    n = 0
+    while _PINNED:
+        _PINNED.pop().unpersist()
+        n += 1
+    return n

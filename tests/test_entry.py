@@ -49,7 +49,7 @@ def test_registry_order_and_contents_are_pinned():
     )) == "f12b51f91ffa73e8d89173e0a1b26d6152abacce0ccd5a33eb726cf63cacf4c7"
     assert digest(sorted(
         f"{name}\n{sql}" for name, sql in entrymod.oracle_sql().items()
-    )) == "d952b4a97520f5c965fd402682ff91a74d45735c839fdecd1a9c0391bd8cc02d"
+    )) == "a20842f50bafba97bd6d6f37b200b99d340fd90cdbc8ba504ef1fbfb2f272618"
 
 
 def test_all_queries_run_at_smoke_sf(spark, sf_dir):

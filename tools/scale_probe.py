@@ -26,7 +26,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
-from nr_rfc_dischargeobs_spark.session import get_spark  # noqa: E402
+from nr_rfc_dischargeobs_spark.session import (  # noqa: E402
+    get_spark,
+    release_plan_caches,
+)
 
 
 def force(df: DataFrame) -> int:
@@ -41,6 +44,7 @@ def timed(results: dict, name: str, df: DataFrame) -> None:
     t0 = time.time()
     try:
         n = force(df)
+        results[name] = {"sec": round(time.time() - t0, 1), "rows": n}
     except Exception as ex:  # noqa: BLE001 — a probe entry that dies
         # (disk-full spill, OOM) must not lose every other measurement:
         # record the failure and keep sweeping
@@ -51,7 +55,10 @@ def timed(results: dict, name: str, df: DataFrame) -> None:
         print(f"  FAILED  {name}: {results[name]['error'][:120]}",
               file=sys.stderr)
         return
-    results[name] = {"sec": round(time.time() - t0, 1), "rows": n}
+    finally:
+        # once the clock stops, free what the operators pinned so the
+        # entries do not accrete caches
+        release_plan_caches()
     print(f"  {results[name]['sec']:7.1f} s  {n:>12,} rows  {name}",
           file=sys.stderr)
 
@@ -1864,21 +1871,13 @@ def main() -> int:
             " cast(i as string))), 1, 5)))"
         ).alias("text"),
     )
-    _wp_reg: list = []
     timed(t, "winnow_pairs_1m_docs_5xclones",
-          text.winnow_pairs(cloned, min_shared=2, max_df=50,
-                            cache_registry=_wp_reg))
-    for _df in _wp_reg:
-        _df.unpersist()
+          text.winnow_pairs(cloned, min_shared=2, max_df=50))
     # PMI collocations: ~60M adjacent pairs fold into the pair/unigram
     # aggregates (two corpus scans, both plan-cached), min_count prunes
     # before the joins, top-30 via TakeOrdered
-    _coll_reg: list = []
     timed(t, "collocations_1m_docs_top30",
-          text.collocations(docs, min_count=5, k=30,
-                            cache_registry=_coll_reg))
-    for _df in _coll_reg:
-        _df.unpersist()
+          text.collocations(docs, min_count=5, k=30))
     # BPE induction: the synthetic corpus's vocabulary saturates near
     # 1M distinct 5-char tokens (16^5 md5 prefixes) — a web-scale vocab
     # shape.  Work happens inside the call (one vocab aggregation job,
@@ -1902,13 +1901,9 @@ def main() -> int:
     # DSIR importance weights: target model trained on every 20th doc,
     # raw model on the whole corpus — two bounded count tables broadcast
     # back, the corpus scored in one pass (same cost class as the LM)
-    _dsir_reg = []
     timed(t, "dsir_weights_1m_5pct_target",
           sampling.dsir_log_ratio(
-              docs, docs.filter(F.col("doc_id") % 20 == 0),
-              cache_registry=_dsir_reg))
-    for _df in _dsir_reg:
-        _df.unpersist()
+              docs, docs.filter(F.col("doc_id") % 20 == 0)))
     # synthetic docs are unique, so plant line structure: every doc gets
     # the same boilerplate footer line — the op must strip 1M of them
     lined = docs.withColumn(
