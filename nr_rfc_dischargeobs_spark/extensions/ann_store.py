@@ -654,8 +654,6 @@ def merge_segments(
     dest: str,
     raw_emb: DataFrame | None = None,
     allow_requantize: bool = False,
-    assign: str = "local",
-    encode: str = "native",
 ) -> dict:
     """Fold segments back into ONE store — the lifecycle CLOSER that
     :func:`search_segments` was missing: after a rebalance the swept
@@ -723,8 +721,9 @@ def merge_segments(
     later-wins resolution anti-joins each segment against the LIVE id
     sets of later segments (fresh segments are small next to the
     frozen base by construction — corpus-scale duplication belongs in
-    a rebalance); re-encode is scan-local (coarse argmin + codebook
-    lookups as literals); nothing collects corpus-scale data.
+    a rebalance); re-encode is the scan-local ``assign="local"`` build
+    (the model's size picks literal expressions or the BLAS kernels);
+    nothing collects corpus-scale data.
     STREAMED source segments (the ``batch_id=N/list_id=K/`` layout of
     :func:`~..streaming.ann.ivfadc_index_stream`, deployed with a
     model sidecar) merge transparently: the canonical column selection
@@ -813,10 +812,9 @@ def merge_segments(
                 base.centroid_rows,
                 m=base.m,
                 dim=base.dim,
-                assign=assign,
+                assign="local",
                 residual=True,
                 coarse_rows=base.coarse_rows,
-                encode=encode,
             ).select(*cols)
             report["reencoded"] += n_ids
         elif allow_requantize and ix.rotation == base.rotation:
@@ -829,10 +827,9 @@ def merge_segments(
                 base.centroid_rows,
                 m=base.m,
                 dim=base.dim,
-                assign=assign,
+                assign="local",
                 residual=True,
                 coarse_rows=base.coarse_rows,
-                encode=encode,
             ).select(*cols)
             report["requantized"] += part.count()
         else:
@@ -915,7 +912,6 @@ def rebalance_ivfadc(
     threshold: float = 4.0,
     sample_limit: int = 100_000,
     lloyd_iters: int = 3,
-    assign: str = "window",
 ) -> dict:
     """Index MAINTENANCE under corpus drift: streamed admission
     (:func:`~..streaming.ann.ivfadc_index_stream`) assigns new vectors
@@ -933,8 +929,9 @@ def rebalance_ivfadc(
        artifact untouched, ``rebalanced: False``.
     2. **Re-train** — coarse centroids re-learned on a CAPPED sample
        of the current corpus (:func:`~.similarity.
-       farthest_first_seeds` + :func:`~.similarity.kmeans_lite`, the
-       settled production recipe; ``assign="arrow"`` for n_lists ≈ √n).
+       farthest_first_seeds` + the scan-local
+       :func:`~.similarity.kmeans_lite`, the settled production recipe;
+       the list count picks the assignment kernel).
        The sample follows the ``opq_train`` bounded-sample discipline:
        a ceil'd hash-mod prefilter bounds the survivors to
        ~``sample_limit`` rows under ANY corpus size, then a
@@ -1027,7 +1024,7 @@ def rebalance_ivfadc(
             k=n_lists,
             iters=lloyd_iters,
             seeds=similarity.farthest_first_seeds(sample, n_lists),
-            assign=assign,
+            assign="local",
         )
         new_rows = sorted(
             (int(r["vec_id"]), [int(v) for v in r["q"]])
@@ -1043,7 +1040,7 @@ def rebalance_ivfadc(
             loaded.centroid_rows,
             m=loaded.m,
             dim=loaded.dim,
-            assign="local" if assign == "window" else assign,
+            assign="local",
             residual=True,
             coarse_rows=new_rows,
         )

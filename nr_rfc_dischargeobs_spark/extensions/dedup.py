@@ -645,12 +645,16 @@ def _canon_edges(df: DataFrame) -> DataFrame:
     )
 
 
+# live edges up to which a star round recomputes its large-star result
+# instead of checkpointing it (see connected_components_star)
+_LIGHT_EDGES = 100_000
+
+
 def connected_components_star(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 30,
-    light_threshold: int = 100_000,
 ) -> DataFrame:
     """EAGER at call time (counts + checkpoints per round, unlike the
     lazy sibling operators — composing this into a larger plan pays the
@@ -677,8 +681,8 @@ def connected_components_star(
     convergence is an exact distributed set-equality check (count +
     anti-join ``limit(1)``), nothing collects to the driver.
 
-    Fixed-overhead dial: while the live edge set is ≤
-    ``light_threshold`` rows, the intermediate large-star result is NOT
+    Fixed-overhead cut: while the live edge set is ≤
+    ``_LIGHT_EDGES`` rows, the intermediate large-star result is NOT
     eagerly materialized — the small-star stage recomputes its (tiny)
     subtree twice inside one job, which beats paying an extra eager
     checkpoint job per round (measured ~25% of the whole operator at
@@ -717,7 +721,7 @@ def connected_components_star(
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("x"), F.col("m").alias("y"))
         )
-        if n_edges > light_threshold:
+        if n_edges > _LIGHT_EDGES:
             # big graph: materialize once — small-star consumes e1 twice
             e1 = e1.localCheckpoint(eager=True)
         # --- small-star: canonical (a < b) is already max-oriented; every

@@ -25,6 +25,16 @@ from ..session import pin
 
 QUANT = 100000
 
+# The one size rule for literal-folded models: pq_codes, ivf_assign_local
+# and _adc_lut_cols unroll a model into integer terms (m·k·dsub for a PQ
+# codebook, n_lists·dim for a coarse quantizer).  Up to this many terms they
+# keep the unrolled tree (registered plans are ≤ 512 terms, so their plan
+# text is pinned by it); above it each switches to a spelling whose
+# expression tree does not grow with the model (a BLAS kernel, or a
+# transform over the literal codebook), with identical values.  At k=256
+# the unrolled tree exhausts janino's heap.
+_UNROLL_LIMIT = 2048
+
 
 def quantized(emb: Column, quant: int = QUANT) -> Column:
     """array<float> → array<bigint> at fixed scale (exact in both worlds)."""
@@ -524,24 +534,23 @@ def kmeans_lite(
     lose all members drop out (standard Lloyd's degeneracy; the next
     assignment simply uses fewer lists).
 
-    ``assign="arrow"`` swaps the crossJoin+window assignment for the
-    :func:`ivf_assign_arrow` BLAS kernel — identical assignments (exact
-    int64 distances, same smaller-cid tie-break; pinned in tests), but
-    the |corpus|·k candidate blow-up and the per-vector window sort are
-    replaced by a dense matmul per scan batch.  This is the dial for
+    ``assign="local"`` collects the centroids each iteration (k·dim
+    ints — a model parameter) and assigns with :func:`ivf_assign_local`:
+    no crossJoin, no per-vector window exchange, and the model's size
+    picks the kernel (literal argmin up to ``_UNROLL_LIMIT`` terms, the
+    BLAS kernel above it).  Identical assignments either way (exact int64
+    distances, same smaller-cid tie-break; pinned in tests).  Use it at
     production list counts (k ≈ √n): at k=1024 the window spelling
-    pushes a billion candidate rows per iteration through a sort; the
-    kernel streams the corpus once.  Centroids are collected to the
-    driver each iteration (k·dim ints — a model parameter; the window
-    path instead chains the uncollected centroid plan, which is the
-    better shape only at toy k).  The mean update stays native either
+    pushes a billion candidate rows per iteration through a sort.  The
+    window path chains the uncollected centroid plan, which is the
+    better shape only at toy k.  The mean update stays native either
     way.
     """
     from ..functions import exact
 
-    if assign not in ("window", "arrow", "local"):
+    if assign not in ("window", "local"):
         raise ValueError(
-            f"assign must be 'window', 'arrow' or 'local', got {assign!r}"
+            f"assign must be 'window' or 'local', got {assign!r}"
         )
     if seeds is not None:
         if len(seeds) != k:
@@ -576,20 +585,11 @@ def kmeans_lite(
             )
         )
     for _ in range(iters):
-        if assign == "arrow":
-            cent_rows = [
-                (int(r["cid"]), [int(v) for v in r["cq"]])
-                for r in cents.select("cid", "cq").collect()
-            ]
-            assigned = ivf_assign_arrow(prepared, cent_rows, 1).select(
-                "vec_id", "q", F.col("list_id").alias("cid")
-            )
-        elif assign == "local":
-            # r13: collect the k centroids (model scale) and fold them
-            # into literal argmin expressions — the corpus assignment
-            # stays in its scan, no crossJoin, no per-vector window
-            # exchange (guide §2.4).  Identical assignments: same exact
-            # int64 distances, same smaller-cid tie-break (the pinned
+        if assign == "local":
+            # r13: collect the k centroids (model scale) and assign in
+            # the scan — no crossJoin, no per-vector window exchange
+            # (guide §2.4).  Identical assignments: same exact int64
+            # distances, same smaller-cid tie-break (the pinned
             # ivf_assign ≡ ivf_assign_local identity).
             cent_rows = [
                 (int(r["cid"]), [int(v) for v in r["cq"]])
@@ -642,28 +642,26 @@ def kmeans_lite(
     )
 
 
-def ivf_assign_arrow(
+def _ivf_assign_blas(
     prepared: DataFrame,
     coarse_rows: list[tuple[int, list[int]]],
     nprobe: int = 1,
     with_dist: bool = False,
 ) -> DataFrame:
-    """:func:`ivf_assign` on an Arrow-vectorized kernel — same contract
-    (centroids are a model parameter, the corpus never shuffles), same
-    RESULTS (exact int64 distances ``n + cn − 2·dot``, ties to the
-    smaller list id — pinned against :func:`ivf_assign` in tests).
+    """:func:`ivf_assign_local`'s kernel above ``_UNROLL_LIMIT`` — same
+    contract (centroids are a model parameter, the corpus never
+    shuffles), same RESULTS (exact int64 distances ``n + cn − 2·dot``,
+    ties to the smaller list id — pinned against :func:`ivf_assign` in
+    tests).
 
-    Why this exists: at production list counts (n_lists ≈ √n — ~1000
-    lists at 1M vectors, Jégou et al. §V), both native spellings hit a
-    wall.  The broadcast-join window (:func:`ivf_assign`) materializes
-    |corpus|·n_lists candidate rows through a per-vector sort, and the
-    literal fold (:func:`ivf_assign_local`) builds an n_lists·dim-term
-    expression tree that parses but evaluates interpreted per element.
-    The assignment IS a dense int64 matmul (corpus batch × centroid
-    matrix) — the same BLAS shape, and the same justification, as
-    :func:`brute_force_topk_arrow`; registered query plans stay native
-    (this kernel serves the training/probe tier and large-list index
-    builds).
+    At production list counts (n_lists ≈ √n — ~1000 lists at 1M
+    vectors, Jégou et al. §V) the literal fold's n_lists·dim-term tree
+    no longer compiles, and the broadcast-join window
+    (:func:`ivf_assign`) materializes |corpus|·n_lists candidate rows
+    through a per-vector sort.  The assignment IS a dense int64 matmul
+    (corpus batch × centroid matrix), streamed once through Arrow
+    batches — the same BLAS shape as :func:`brute_force_topk_arrow`.
+    Registered plans never reach it (their coarse sets are ≤ 512 terms).
 
     ``with_dist=True`` appends the exact squared-L2 distance ``d`` to
     each emitted (vector, probed-list) row — the seeding loop's cost
@@ -745,7 +743,7 @@ def kmeans_parallel_seeds(
     (ties to the smaller candidate id) and re-quantizes means onto the
     integer grid each iteration.
 
-    Scale shape per round: one :func:`ivf_assign_arrow` pass (corpus ×
+    Scale shape per round: one :func:`_ivf_assign_blas` pass (corpus ×
     current candidates, BLAS), one scalar aggregate (Σd²), one
     metadata-scale collect of the sampled rows.  The corpus never
     shuffles; driver state is ~rounds·ℓ·dim ints.
@@ -771,7 +769,7 @@ def kmeans_parallel_seeds(
     ]
     base = prepared.select("vec_id", "q", "n")
     for r in range(rounds):
-        scored = ivf_assign_arrow(base, cand, 1, with_dist=True)
+        scored = _ivf_assign_blas(base, cand, 1, with_dist=True)
         phi = scored.agg(F.sum("d").alias("s")).collect()[0]["s"]
         if not phi:
             break  # every point IS a candidate already
@@ -802,7 +800,7 @@ def kmeans_parallel_seeds(
     # weight each candidate by the points it serves (one BLAS pass)
     wrows = {
         int(row["list_id"]): int(row["w"])
-        for row in ivf_assign_arrow(base, cand, 1)
+        for row in _ivf_assign_blas(base, cand, 1)
         .groupBy("list_id")
         .agg(F.count(F.lit(1)).alias("w"))
         .collect()
@@ -855,7 +853,7 @@ def brute_force_topk_arrow(
     path's ~0.5M); the gap widens with batch size as the matmul amortizes
     the per-batch Arrow transfer.
 
-    Why a Python node is justified HERE and nowhere else: the score kernel
+    Why a Python node is justified here: the score kernel
     is a dense int64 matmul per corpus batch — exactly the shape BLAS
     exists for — and Spark evaluates higher-order ``aggregate`` folds
     interpreted (measured ~0.5M 64-d scores/s on 32 cores vs ~20M+ for
@@ -863,8 +861,11 @@ def brute_force_topk_arrow(
     never row-at-a-time, and each batch emits only its partition-local
     top-k per query — |partitions|·|Q|·k rows reach the final merge, not
     |C|·|Q|.  The engine's UDF discipline (PLANS.md) is unchanged: every
-    REGISTERED query plan stays native; this kernel is the opt-in re-rank
-    path for fleet-scale candidate scoring.
+    REGISTERED query plan stays native.  The encode and coarse-assignment
+    kernels are picked by model size (``_UNROLL_LIMIT``, known on the
+    driver); this one stays an explicit call, because the size that
+    would pick it — corpus × query batch — costs a Spark job to observe.
+    It is the re-rank path for fleet-scale candidate scoring.
 
     Zero-norm vectors are excluded on both sides, mirroring
     :func:`brute_force_topk` — without the filter this kernel's numpy
@@ -1362,8 +1363,10 @@ def gram_stats_arrow(
     final groupBy).  Each Arrow batch contributes ONE d(d+1)/2-row
     partial (its local ``XᵀX``/column sums), so the Python-side output
     is model-sized per batch, never corpus-sized; the justified-kernel
-    case is d² per-row expression arithmetic dominating the scan (same
-    rationale as :func:`pq_codes_arrow`)."""
+    case is d² per-row expression arithmetic dominating the scan.  It
+    stays an explicit call, unlike the size-picked PQ encode kernel:
+    whether the d² arithmetic dominates depends on the corpus size,
+    which costs a Spark job to observe."""
     import pandas as pd  # noqa: PLC0415 — worker-side import
 
     iu = [(i, j) for i in range(dim) for j in range(i, dim)]
@@ -1761,7 +1764,9 @@ def pq_codes(
     a FIXED ~3 s of plan/codegen compilation for the ~m·k·dsub-term tree
     — invisible at fleet scale, dominant at toy scale: encoding 200k×64-d
     vectors measures ~2 s warm (1.9 s in SCALE_PROBE.json), the same
-    wall as 500 vectors.)
+    wall as 500 vectors.)  Above ``_UNROLL_LIMIT`` terms (production
+    k=256 codebooks, where the tree exhausts janino's heap) the same
+    encode runs as :func:`_pq_codes_blas`, with identical output.
 
     Exactness: subvector distances are ``nsub + cn − 2·dot`` over exact
     BIGINTs (cn folded in Python — exact), ties break to the smaller
@@ -1776,6 +1781,8 @@ def pq_codes(
     index via :func:`ivf_pq_index`).
     """
     cents, dsub = _pq_check(centroid_rows, m, dim)
+    if m * len(cents) * dsub > _UNROLL_LIMIT:
+        return _pq_codes_blas(prepared, cents, m, dim, passthrough)
     # Expressions are composed as SQL TEXT and parsed server-side in ONE
     # call per output column: building the same ~m·k·dsub-term tree out
     # of Column operators costs thousands of py4j round-trips (measured
@@ -1834,30 +1841,26 @@ def pq_codes(
     )
 
 
-def pq_codes_arrow(
+def _pq_codes_blas(
     prepared: DataFrame,
     centroid_rows: list[tuple[int, list[int]]],
     m: int = 4,
     dim: int = 64,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """:func:`pq_codes` on an Arrow-vectorized kernel — same contract
+    """:func:`pq_codes`' kernel above ``_UNROLL_LIMIT`` — same contract
     (codebook as plain Python data, scan-local encode, zero exchanges),
     same RESULTS (exact int64 subspace distances, first-min/smaller-cid
     tie-break, exact ``sq_err`` — pinned against the native kernel in
     tests).
 
-    Why this exists: production PQ is k=256 codes per subspace (one
-    byte — Jégou et al. §II), and the native kernel's unrolled
-    m·k·dsub-term distance tree DETONATES whole-stage codegen there
-    (measured: janino compile of the k=256/m=16 encode exhausts the
-    driver heap — the expression-tree wall, not a data-size wall).  The
-    encode is m dense int64 matmuls per batch (corpus-subspace ×
-    codebook-subspace) — the same BLAS shape, and the same
-    justification, as :func:`brute_force_topk_arrow`.  Registered query
-    plans keep the native kernel (their k ≤ 16 geometry compiles fine
-    and stays whole-stage); this kernel serves codebook-scale training,
-    probes, and index builds.
+    Production PQ is k=256 codes per subspace (one byte — Jégou et al.
+    §II), and the unrolled m·k·dsub-term distance tree exhausts the
+    driver heap in janino there (measured at k=256/m=16 — the
+    expression-tree wall, not a data-size wall).  The encode is m dense
+    int64 matmuls per batch (corpus-subspace × codebook-subspace) — the
+    same BLAS shape as :func:`brute_force_topk_arrow`.  Registered plans
+    never reach it (their codebooks are ≤ 512 terms).
     """
     import numpy as np
 
@@ -1995,17 +1998,17 @@ def _adc_lut_cols(
     codebook.  ONE implementation shared by :func:`pq_adc_topk` and
     :func:`ivf_pq_topk` so the LUT spelling can never drift between
     them."""
-    if m * len(cents) * dsub > 2048:
+    if m * len(cents) * dsub > _UNROLL_LIMIT:
         # large-codebook spelling (k=256 production geometry): the
         # unrolled m·k·dsub-term tree detonates janino past ~16k terms
         # (heap-OOM during whole-stage compile, same wall as the native
-        # encode — see pq_codes_arrow).  Spell each LUT as ONE transform
+        # encode — see _pq_codes_blas).  Spell each LUT as ONE transform
         # over the literal per-subspace codebook (an all-literal array
         # constant-folds to a single Literal): interpreted HOF eval, but
         # the LUT projection runs on the METADATA-SCALE probe side
         # (|Q|·nprobe rows), so per-plan compile cost wins over per-row
         # eval cost by orders of magnitude here.  Values identical —
-        # exact int64 either way.  The threshold keeps every k ≤ 16
+        # exact int64 either way.  The limit keeps every k ≤ 16
         # historical plan byte-identical (their unrolled text is part of
         # pinned oracle hashes).
         lut_cols = []
@@ -2161,7 +2164,9 @@ def ivf_assign_local(
     Same staged-projection discipline as :func:`pq_codes`: per-centroid
     distance columns first, the k-entry array second, the selection
     third — keeps every unrolled dot evaluated once and each generated
-    method janino-sized.
+    method janino-sized.  Above ``_UNROLL_LIMIT`` terms (n_lists·dim —
+    production list counts, n_lists ≈ √n) the same assignment runs as
+    :func:`_ivf_assign_blas`, with identical output.
 
     PRECONDITION (matters only outside :func:`prepare` output): every
     input vector must have ≥ dim non-NULL elements.  ``prepare`` pins
@@ -2177,6 +2182,8 @@ def ivf_assign_local(
     ``min(nprobe, k)`` rows per input vector.
     """
     cents = sorted(coarse_rows)
+    if cents and len(cents) * len(cents[0][1]) > _UNROLL_LIMIT:
+        return _ivf_assign_blas(prepared, cents, nprobe)
     ids = [int(cid) for cid, _ in cents]
     stage1 = ["vec_id", "q", "n"]
     for i, (_, cq) in enumerate(cents):
@@ -2236,7 +2243,6 @@ def ivf_pq_index(
     assign: str = "window",
     residual: bool = False,
     coarse_rows: list[tuple[int, list[int]]] | None = None,
-    encode: str = "native",
 ) -> DataFrame:
     """Build the IVF-PQ INDEX — the stored artifact of production ANN
     (Jégou et al., TPAMI 2011; the FAISS ``IVFx,PQy`` layout): every
@@ -2249,16 +2255,16 @@ def ivf_pq_index(
     q, n, list, d) candidate rows, paid once per index build.
     ``assign="local"`` switches to the fully shuffle-free build
     (:func:`ivf_assign_local`: coarse centroids collected — k rows, a
-    model parameter — and folded into literal argmin expressions),
-    making the whole build scan-local: read the corpus once, write the
-    index, zero exchanges.  Both spellings produce identical
-    assignments (same exact integer distances, same tie-break; pinned
-    in tests) — pick by corpus size: the literal fold wins where the
-    exchange is the bill (A/B at the 1M probe in SCALE_PROBE.json), the
-    window spelling skips the fixed plan/codegen cost at toy scale, and
-    ``assign="arrow"`` (the :func:`ivf_assign_arrow` BLAS kernel) takes
-    over at production list counts (n_lists ≈ √n) where both native
-    spellings degrade — see that function's rationale.
+    model parameter — and assigned in the scan), making the whole build
+    scan-local: read the corpus once, write the index, zero exchanges.
+    Both spellings produce identical assignments (same exact integer
+    distances, same tie-break; pinned in tests) — pick by corpus size:
+    the scan-local build wins where the exchange is the bill (A/B at the
+    1M probe in SCALE_PROBE.json), the window spelling skips the fixed
+    plan/codegen cost at toy scale.  Within the scan-local build, and
+    for the PQ encode either way, the model's size picks the kernel:
+    unrolled literal expressions up to ``_UNROLL_LIMIT`` terms, a BLAS
+    kernel above it (production n_lists ≈ √n and k=256 codebooks).
     Write the result partitioned/bucketed by ``list_id`` and searches
     scan only probed lists.
 
@@ -2278,25 +2284,18 @@ def ivf_pq_index(
 
     Output: (vec_id, list_id, code_0..code_{m-1}, sq_err).
     """
-    if assign not in ("window", "local", "arrow"):
+    if assign not in ("window", "local"):
         # fail loudly: a typo silently falling back to the window
         # spelling would pay the corpus-keyed exchange the caller
         # believed they avoided — visible only in the cluster bill
         raise ValueError(
-            f"assign must be 'window', 'local' or 'arrow', got {assign!r}"
+            f"assign must be 'window' or 'local', got {assign!r}"
         )
-    if encode not in ("native", "arrow"):
-        raise ValueError(f"encode must be 'native' or 'arrow', got {encode!r}")
-    # encode dial: native literal tree for registered-plan geometry
-    # (k ≤ 16 — compiles whole-stage), the BLAS kernel for production
-    # k=256 codebooks where the literal tree detonates janino (see
-    # pq_codes_arrow)
-    encoder = pq_codes_arrow if encode == "arrow" else pq_codes
     # ``coarse_rows`` may be passed directly (the coarse quantizer is a
     # model parameter — a streaming foreachBatch encoder, for one, holds
     # it as plain data and has no centroid frame to collect from); with
-    # assign="local"/"arrow" it makes ``coarse_centroids`` fully optional
-    if coarse_rows is None and (assign in ("local", "arrow") or residual):
+    # assign="local" it makes ``coarse_centroids`` fully optional
+    if coarse_rows is None and (assign == "local" or residual):
         if coarse_centroids is None:
             raise ValueError(
                 "pass coarse_centroids or pre-collected coarse_rows"
@@ -2307,13 +2306,6 @@ def ivf_pq_index(
         ]
     if assign == "local":
         assigned = ivf_assign_local(prepared, coarse_rows)
-    elif assign == "arrow":
-        # the large-list dial (n_lists ≈ √n): the literal fold's
-        # n_lists·dim-term tree evaluates interpreted per element and
-        # the window spelling exchanges |corpus|·n_lists candidates —
-        # the BLAS kernel streams the corpus once (same assignments,
-        # pinned in tests)
-        assigned = ivf_assign_arrow(prepared, coarse_rows, 1)
     else:
         if coarse_centroids is None:
             raise ValueError(
@@ -2328,7 +2320,7 @@ def ivf_pq_index(
         assigned = ivf_assign(prepared, coarse_centroids, 1, None)
     if residual:
         assigned = residualize(assigned, coarse_rows)
-        coded = encoder(
+        coded = pq_codes(
             assigned, centroid_rows, m=m, dim=dim, passthrough=("list_id",)
         )
         # store the reconstruction norm rn = ‖coarse(list) + decode(code)‖²
@@ -2361,7 +2353,7 @@ def ivf_pq_index(
             f"aggregate({recon}, CAST(0 AS BIGINT),"
             " (acc, x) -> acc + x * x) AS rn",
         )
-    return encoder(
+    return pq_codes(
         assigned, centroid_rows, m=m, dim=dim, passthrough=("list_id",)
     )
 
@@ -2407,7 +2399,6 @@ def pq_train_codebooks(
     m: int = 4,
     dim: int = 64,
     iters: int = 1,
-    encode: str = "native",
 ) -> list[tuple[int, list[int]]]:
     """Train the per-subspace PQ codebooks — Lloyd's k-means run
     INDEPENDENTLY in each of the ``m`` subspaces (the training half of
@@ -2438,19 +2429,15 @@ def pq_train_codebooks(
     on a bounded sample at fleet scale — codebook quality saturates far
     below full-corpus coverage (100k–1M rows in practice).
 
-    ``encode="arrow"`` assigns with :func:`pq_codes_arrow` instead of
-    the native literal tree — REQUIRED at the k=256 production
-    geometry, where the unrolled encode detonates codegen (see that
-    function's rationale).  Assignments are identical either way, so
-    the trained integers are too.
+    The assignment's kernel follows :func:`pq_codes`' size rule: the
+    unrolled literal tree up to ``_UNROLL_LIMIT`` terms, the BLAS kernel
+    above it (the k=256 production geometry).  Assignments are identical
+    either way, so the trained integers are too.
     """
     from ..functions import exact
 
     if k < 1 or iters < 0:
         raise ValueError(f"need k >= 1 and iters >= 0, got k={k} iters={iters}")
-    if encode not in ("native", "arrow"):
-        raise ValueError(f"encode must be 'native' or 'arrow', got {encode!r}")
-    encoder = pq_codes_arrow if encode == "arrow" else pq_codes
     dsub = dim // m
     seed_rows = sorted(
         residuals.select("vec_id", "q").orderBy(F.col("vec_id").asc())
@@ -2463,7 +2450,7 @@ def pq_train_codebooks(
         (cid, [int(v) for v in r["q"]]) for cid, r in enumerate(seed_rows)
     ]
     for _ in range(iters):
-        coded = encoder(
+        coded = pq_codes(
             residuals.select("vec_id", "q"), codebook, m=m, dim=dim,
             passthrough=("q",),
         )
@@ -3005,9 +2992,11 @@ def ivf_pq_refine(
 
     ``kernel="arrow"`` re-scores with the vectorized Arrow kernel (the
     justified Python node — see :func:`brute_force_topk_arrow`'s BLAS
-    rationale; this is exactly the "opt-in re-rank path" that docstring
-    names).  ``kernel="native"`` spells the same arithmetic as built-in
-    expressions; the two are bit-identical (exact int64 dots, same IEEE
+    rationale).  Unlike the PQ encode and coarse assignment, whose
+    kernel the model's size picks (``_UNROLL_LIMIT``), this stays an
+    explicit choice: ``kernel="native"`` is the in-engine reference the
+    oracle and the parity test read.  It spells the same arithmetic as
+    built-in expressions; the two are bit-identical (exact int64 dots, same IEEE
     division — pinned in tests), which is also what makes the DuckDB
     oracle exact.  Zero-norm vectors are excluded on both sides like
     every cosine kernel here.

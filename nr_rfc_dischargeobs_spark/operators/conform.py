@@ -50,13 +50,6 @@ def round_to_grid(ts: Column, grid_seconds: int = 300) -> Column:
     return F.timestamp_seconds((slot * grid_seconds).cast("long"))
 
 
-def floor_to_grid(ts: Column, grid_seconds: int = 300) -> Column:
-    """Truncate a timestamp down to its grid slot (tumbling-window key)."""
-    return F.timestamp_seconds(
-        (F.floor(ts_seconds(ts) / grid_seconds) * grid_seconds).cast("long")
-    )
-
-
 def dedup_keep_first(
     df: DataFrame,
     keys: list[str],
@@ -110,9 +103,3 @@ def utc_to_local_naive(ts: Column, tz: str = "America/Vancouver") -> Column:
     (``discharge_obs_pd.py:66-67,99``)."""
     return F.from_utc_timestamp(ts, tz)
 
-
-def fixed_offset_hours(ts: Column, hours: int = -8) -> Column:
-    """The reference's blunt fixed −8 h shift (``discharge_obs_pd.py:352``,
-    ``ECCC_hourly.py:36,63``) — preserved verbatim for parity; prefer
-    :func:`utc_to_local_naive` for new pipelines (handles DST)."""
-    return ts + F.expr(f"INTERVAL {hours} HOURS")

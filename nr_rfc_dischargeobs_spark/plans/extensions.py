@@ -673,9 +673,9 @@ def sim_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchanges but regenerates a near-64KB codegen method on every
     # bench invocation — measured [1.92, 2.17, 1.82] → [2.96, 3.28,
     # 3.27] s/pass at sf0.1: the compile cost exceeds the exchange it
-    # saves at in-plan-train scale.  The window spelling stays; the
-    # production tier for large list counts is ivf_assign_arrow (BLAS),
-    # per its docstring.
+    # saves at in-plan-train scale.  The window spelling stays; at
+    # production list counts assign="local" reaches the BLAS kernel by
+    # size (n_lists·dim above similarity._UNROLL_LIMIT).
     cents = similarity.kmeans_lite(prep, k=8, iters=1)
     assigned = similarity.ivf_assign(prep, cents, nprobe=1)
     return assigned.groupBy("list_id").agg(

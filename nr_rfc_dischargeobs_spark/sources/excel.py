@@ -1,4 +1,4 @@
-"""Excel / per-station CSV export edge adapters (reference S7/S11-S13).
+"""Excel edge adapters (reference S7/S12-S13).
 
 Excel is a driver-side edge: model-input workbooks are a few thousand rows
 (``dischargeobs_write_xl.py:75-77,212-250``), so the pattern is
@@ -19,7 +19,6 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class ExcelSupportError(RuntimeError):
@@ -122,17 +121,3 @@ def write_legacy_xls(
             sheet.write(i, j, cell)
     book.save(path)
     return path
-
-
-def write_per_station_csv(
-    obs: DataFrame, out_dir: str, station_col: str = "station_id"
-) -> None:
-    """S11 per-station CSV sink — ``partitionBy(station)`` so each station
-    lands in its own directory, written in parallel (the reference loops
-    stations serially, ``discharge_obs_pd.py:343-357``)."""
-    (
-        obs.repartition(F.col(station_col))
-        .write.partitionBy(station_col)
-        .mode("overwrite")
-        .csv(out_dir, header=True)
-    )

@@ -1,7 +1,8 @@
 """Streaming ANN index maintenance: encode arriving embeddings into a
 persistent IVFADC store, micro-batch by micro-batch.
 
-The whole encode pipeline — coarse assignment (literal-folded argmin),
+The whole encode pipeline — coarse assignment (literal-folded argmin, or
+the BLAS kernel once the quantizer outgrows the unroll limit),
 residual subtraction, PQ coding, stored reconstruction norm — is
 scan-local narrow expressions (``ivf_pq_index(assign="local",
 residual=True)``), so it streams without any stateful operator: each

@@ -10,6 +10,7 @@ and the trained-beats-untrained recall lift itself.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nr_rfc_dischargeobs_spark.extensions import similarity
@@ -421,7 +422,7 @@ def test_index_barrier_materializes_unpersisted_complex_index(spark):
     assert not scan.is_cached
 
 
-def test_ivf_assign_arrow_matches_native(spark):
+def test_ivf_assign_blas_matches_native(spark):
     """The BLAS assignment kernel must reproduce ivf_assign exactly —
     same exact-int64 distances, same smaller-list-id tie-break — at
     nprobe 1 and 3, including a deliberate tie (duplicated centroid)."""
@@ -450,26 +451,26 @@ def test_ivf_assign_arrow_matches_native(spark):
         want = sorted(map(tuple, similarity.ivf_assign(
             prep, cents_df, nprobe, None
         ).select("vec_id", "list_id").collect()))
-        got = sorted(map(tuple, similarity.ivf_assign_arrow(
+        got = sorted(map(tuple, similarity._ivf_assign_blas(
             prep, cents_rows, nprobe
         ).select("vec_id", "list_id").collect()))
         assert got == want, (nprobe, len(cents_rows))
     assert not any(
         t[1] == 100
-        for t in similarity.ivf_assign_arrow(prep, dup_rows, 1)
+        for t in similarity._ivf_assign_blas(prep, dup_rows, 1)
         .select("vec_id", "list_id")
         .collect()
     )
     prep.unpersist()
 
 
-def test_ivf_assign_arrow_with_dist_is_exact(spark):
+def test_ivf_assign_blas_with_dist_is_exact(spark):
     prep = similarity.prepare(
         _emb(spark, [(0, [1.0, 0.0]), (1, [0.0, 1.0])])
     )
     rows = {
         (r["vec_id"], r["list_id"]): r["d"]
-        for r in similarity.ivf_assign_arrow(
+        for r in similarity._ivf_assign_blas(
             prep, [(5, [100_000, 0])], 1, with_dist=True
         ).collect()
     }
@@ -478,28 +479,36 @@ def test_ivf_assign_arrow_with_dist_is_exact(spark):
 
 
 def test_kmeans_lite_arrow_assignment_matches_window(spark):
-    """assign='arrow' must train the IDENTICAL centroids as the window
+    """assign='local' above the unroll limit (40 lists × 64 dims: the
+    BLAS kernel) must train the IDENTICAL centroids as the window
     spelling — integer state, exact distances, same tie-breaks."""
-    prep = similarity.prepare(_clustered(spark, 400, k=4, dim=16))
+    k, dim = 40, 64
+    assert k * dim > similarity._UNROLL_LIMIT
+    prep = similarity.prepare(
+        _clustered(spark, 400, k=8, dim=dim)
+    ).persist()
     want = sorted(map(tuple, similarity.kmeans_lite(
-        prep, k=4, iters=3
+        prep, k=k, iters=3
     ).collect()))
     got = sorted(map(tuple, similarity.kmeans_lite(
-        prep, k=4, iters=3, assign="arrow"
+        prep, k=k, iters=3, assign="local"
     ).collect()))
     assert got == want
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="arrow"):
-        similarity.kmeans_lite(prep, k=4, assign="blas")
+    for bad in ("blas", "arrow"):
+        with pytest.raises(ValueError, match="'window' or 'local'"):
+            similarity.kmeans_lite(prep, k=4, assign=bad)
+    prep.unpersist()
 
 
 def test_ivf_pq_index_arrow_assignment_matches_window(spark):
     emb = similarity.prepare(
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     )
-    coarse = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
-    corpus = emb.filter(F.col("vec_id") >= 28)
+    # 33 coarse lists × 64 dims: above the unroll limit, so the
+    # scan-local build assigns with the BLAS kernel
+    coarse = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 41))
+    corpus = emb.filter(F.col("vec_id") >= 41)
+    assert 33 * 64 > similarity._UNROLL_LIMIT
     cents = [
         (int(r["vec_id"]), [int(v) for v in r["q"]])
         for r in emb.filter(F.col("vec_id") < 8).collect()
@@ -508,7 +517,7 @@ def test_ivf_pq_index_arrow_assignment_matches_window(spark):
         corpus, coarse, cents, residual=True
     ).collect()))
     got = sorted(map(tuple, similarity.ivf_pq_index(
-        corpus, None, cents, residual=True, assign="arrow",
+        corpus, None, cents, residual=True, assign="local",
         coarse_rows=[
             (int(r["vec_id"]), [int(v) for v in r["q"]])
             for r in coarse.collect()
@@ -532,7 +541,7 @@ def test_kmeans_parallel_seeds_deterministic_and_covering(spark):
     assert all(isinstance(v, int) for _, vec in seeds for v in vec)
     # coverage: assign the corpus to the seeds — every seed serves
     # points from exactly one true cluster and all clusters are served
-    assigned = similarity.ivf_assign_arrow(prep, seeds, 1)
+    assigned = similarity.ivf_assign_local(prep, seeds)
     purity = assigned.groupBy("list_id").agg(
         F.count_distinct(F.pmod(F.col("vec_id"), F.lit(k))).alias("nc")
     ).collect()
@@ -540,7 +549,7 @@ def test_kmeans_parallel_seeds_deterministic_and_covering(spark):
     assert all(r["nc"] == 1 for r in purity)
     # seeds feed kmeans_lite directly
     trained = similarity.kmeans_lite(
-        prep, k=k, iters=2, seeds=seeds, assign="arrow"
+        prep, k=k, iters=2, seeds=seeds, assign="local"
     )
     assert trained.count() == k
     prep.unpersist()
@@ -561,7 +570,7 @@ def test_kmeans_parallel_seeds_validation(spark):
         similarity.kmeans_parallel_seeds(prep, 64, rounds=1)
 
 
-def test_pq_codes_arrow_matches_native(spark):
+def test_pq_codes_blas_matches_native(spark):
     """The BLAS encode kernel must reproduce pq_codes exactly — codes,
     tie-breaks, sq_err, passthrough columns — at a geometry the native
     kernel still compiles (k=16, m=4)."""
@@ -579,7 +588,7 @@ def test_pq_codes_arrow_matches_native(spark):
     want = sorted(map(tuple, similarity.pq_codes(
         lid, cents, m=4, dim=64, passthrough=("list_id",)
     ).collect()))
-    got = sorted(map(tuple, similarity.pq_codes_arrow(
+    got = sorted(map(tuple, similarity._pq_codes_blas(
         lid, cents, m=4, dim=64, passthrough=("list_id",)
     ).collect()))
     assert got == want
@@ -592,26 +601,126 @@ def test_pq_codes_arrow_matches_native(spark):
     )
     got_q = sorted(
         (t[0], tuple(t[1]), *t[2:])
-        for t in map(tuple, similarity.pq_codes_arrow(
+        for t in map(tuple, similarity._pq_codes_blas(
             corpus, cents, m=4, dim=64, passthrough=("q",)
         ).collect())
     )
     assert got_q == want_q
 
 
-def test_pq_train_arrow_encode_matches_native(spark):
+def _pq_codes_reference(rows, codebook, m: int, dim: int) -> list[tuple]:
+    """numpy replica of pq_codes: (vec_id, code_0..code_{m-1}, sq_err),
+    exact int64 distances, first-min (smaller cid) tie-break."""
+    import numpy as np
+
+    x = np.array([q for _, q in rows], dtype=np.int64)
+    c = np.array([q for _, q in sorted(codebook)], dtype=np.int64)
+    dsub = dim // m
+    codes, err = [], np.zeros(len(rows), dtype=np.int64)
+    for s in range(m):
+        xs, cs = x[:, s * dsub:(s + 1) * dsub], c[:, s * dsub:(s + 1) * dsub]
+        d = (
+            (xs * xs).sum(1)[:, None] + (cs * cs).sum(1)[None, :]
+            - 2 * xs @ cs.T
+        )
+        codes.append(d.argmin(1))
+        err += d.min(1)
+    return [
+        (vid, *(int(cs[i]) for cs in codes), int(err[i]))
+        for i, (vid, _) in enumerate(rows)
+    ]
+
+
+def test_pq_train_large_k_matches_reference(spark):
+    """Large-k training identity: a codebook above the unroll limit
+    (k=33, m=4, dsub=16: 2112 terms) trains on the BLAS encode and must
+    yield exactly the integers of a numpy replica of the trainer —
+    first-k seeds, first-min assignment, means rounded half away from
+    zero, an empty code keeping its previous centroid."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    k, m, dim, iters = 33, 4, 64, 2
+    assert k * dim > similarity._UNROLL_LIMIT
     emb = similarity.prepare(
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    ).select("vec_id", "q")
-    want = similarity.pq_train_codebooks(emb, k=8, m=4, dim=64, iters=2)
-    got = similarity.pq_train_codebooks(
-        emb, k=8, m=4, dim=64, iters=2, encode="arrow"
+    ).select("vec_id", "q").persist()
+    rows = sorted(
+        (int(r["vec_id"]), [int(v) for v in r["q"]]) for r in emb.collect()
     )
-    assert got == want
-    import pytest as _pytest
+    got = similarity.pq_train_codebooks(emb, k=k, m=m, dim=dim, iters=iters)
+    emb.unpersist()
+    dsub = dim // m
+    cb = [(c, list(q)) for c, (_, q) in enumerate(rows[:k])]
+    for _ in range(iters):
+        sums: dict = {}
+        for vid_codes, (_, q) in zip(
+            _pq_codes_reference(rows, cb, m, dim), rows
+        ):
+            for p in range(dim):
+                key = (vid_codes[1 + p // dsub], p)
+                tot, n = sums.get(key, (0, 0))
+                sums[key] = (tot + q[p], n + 1)
+        cb = [
+            (c, [
+                int(Decimal(repr(sums[(c, p)][0] / sums[(c, p)][1]))
+                    .quantize(Decimal(1), ROUND_HALF_UP))
+                if (c, p) in sums else old[p]
+                for p in range(dim)
+            ])
+            for c, old in cb
+        ]
+    assert got == cb
 
-    with _pytest.raises(ValueError, match="encode"):
-        similarity.pq_train_codebooks(emb, k=8, encode="blas")
+
+def _has_python_node(df) -> bool:
+    plan = df._jdf.queryExecution().explainString(
+        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("formatted")
+    )
+    return "MapInPandas" in plan or "EvalPython" in plan
+
+
+@pytest.mark.parametrize("step", [0, 1])
+@pytest.mark.parametrize("op", ["pq_codes", "ivf_assign_local"])
+def test_unroll_limit_picks_the_kernel(spark, op, step):
+    """One limit for both literal-folded operators: a 64-dim model of
+    ``_UNROLL_LIMIT`` terms (32 PQ codes at m=4 × dsub=16, or 32 coarse
+    lists) unrolls into native expressions — no Python node — and one
+    step above it (33) the same call runs the BLAS kernel.  Rows equal
+    the numpy (PQ) or window (coarse) reference on both sides."""
+    limit = similarity._UNROLL_LIMIT
+    at = limit // 64
+    assert at * 64 == limit
+    emb = similarity.prepare(
+        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    ).persist()
+    model = emb.filter(F.col("vec_id") <= at)
+    rows = [
+        (int(r["vec_id"]), [int(v) for v in r["q"]])
+        for r in model.orderBy("vec_id").collect()
+    ]
+    corpus = emb.filter(F.col("vec_id") > at)
+    corpus_rows = [
+        (int(r["vec_id"]), [int(v) for v in r["q"]])
+        for r in corpus.collect()
+    ]
+    size = at + step
+    if op == "pq_codes":
+        cb = [(i, q) for i, (_, q) in enumerate(rows[:size])]
+        got = similarity.pq_codes(corpus, cb, m=4, dim=64)
+        want = _pq_codes_reference(corpus_rows, cb, 4, 64)
+    else:
+        got = similarity.ivf_assign_local(
+            corpus, rows[:size]
+        ).select("vec_id", "list_id")
+        ref = similarity.ivf_assign(
+            corpus, model.filter(F.col("vec_id") < size), 1, None
+        ).select("vec_id", "list_id")
+        assert not _has_python_node(ref)
+        want = list(map(tuple, ref.collect()))
+    assert _has_python_node(got) == (step == 1)
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+    emb.unpersist()
 
 
 def test_adc_lut_hof_spelling_exact(spark):
@@ -620,7 +729,7 @@ def test_adc_lut_hof_spelling_exact(spark):
     the exact integer subspace dot product."""
     import numpy as np
 
-    m, dsub, k = 8, 8, 40  # m·k·dsub = 2560 > 2048 → HOF spelling
+    m, dsub, k = 8, 8, 40  # m·k·dsub = 2560 > the limit → HOF spelling
     dim = m * dsub
     cents = [
         (c, [(c * 31 + j * 7) % 201 - 100 for j in range(dim)])
@@ -652,8 +761,9 @@ def test_adc_lut_hof_spelling_exact(spark):
 
 def test_ivfadc_k256_geometry_full_probe_identity(spark):
     """The full-probe ≡ brute-force-over-decode identity must hold at
-    the PRODUCTION codebook geometry (k > threshold → arrow encode +
-    HOF LUT spelling) — the end-to-end pin for the k=256 tier."""
+    the PRODUCTION codebook geometry (above the unroll limit → BLAS
+    encode + HOF LUT spelling) — the end-to-end pin for the k=256
+    tier."""
     prep = similarity.prepare(
         _clustered(spark, 1200, k=8, dim=32, noise=0.2)
     ).persist()
@@ -667,15 +777,16 @@ def test_ivfadc_k256_geometry_full_probe_identity(spark):
     queries = prep.filter(F.col("vec_id") < 16)
     corpus = prep.filter(F.col("vec_id") >= 16)
     residuals = similarity.residualize(
-        similarity.ivf_assign_arrow(corpus, coarse_rows, 1), coarse_rows
+        similarity.ivf_assign_local(corpus, coarse_rows), coarse_rows
     )
     # m=8, dsub=4, k=80: m·k·dsub = 2560 > 2048 → the large-k code path
+    assert 8 * 80 * 4 > similarity._UNROLL_LIMIT
     cb = similarity.pq_train_codebooks(
-        residuals, k=80, m=8, dim=32, iters=1, encode="arrow"
+        residuals, k=80, m=8, dim=32, iters=1
     )
     index = similarity.ivf_pq_index(
         corpus, None, cb, m=8, dim=32, residual=True,
-        assign="arrow", coarse_rows=coarse_rows, encode="arrow",
+        assign="local", coarse_rows=coarse_rows,
     ).persist()
     got = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine_adc"])

@@ -2267,10 +2267,11 @@ def test_ivf_pq_index_assign_validation(spark):
             "vec_id long, embedding array<float>",
         )
     )
-    with pytest.raises(ValueError, match="assign must"):
-        similarity.ivf_pq_index(
-            emb, emb.limit(2), [(0, [1, 1])], assign="locla"
-        )
+    for bad in ("locla", "arrow"):
+        with pytest.raises(ValueError, match="'window' or 'local'"):
+            similarity.ivf_pq_index(
+                emb, emb.limit(2), [(0, [1, 1])], assign=bad
+            )
 
 
 def test_ann_paths_exclude_zero_norm_like_exact(spark):

@@ -310,9 +310,9 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
     recall@10 0.0004 at nprobe=4) vs TRAINED (m=32/k=16 per-subspace
     k-means over residuals, 4 Lloyd iterations on a 50k sample —
     IVFADC) vs TRAINED256 (round 10: the PRODUCTION m=32/k=256
-    geometry — 8-bit codes, arrow encode).  nprobe ∈ {1,4,16,64}; 64 =
-    every list probed, isolating pure codebook quality from coarse
-    recall.  Round 10 adds the production COARSE axis too: n_lists ∈
+    geometry — 8-bit codes, the BLAS encode by size).  nprobe ∈
+    {1,4,16,64}; 64 = every list probed, isolating pure codebook
+    quality from coarse recall.  Round 10 adds the production COARSE axis too: n_lists ∈
     {256, 1024} (≈ √n at 1M) trained by k-means|| seeding + BLAS-
     assignment Lloyd — the recall-vs-scanned-fraction story.  Exact ground truth via
     the Arrow kernel (one corpus pass per fixture); every search
@@ -389,13 +389,12 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
             # across nprobe) was PQ distortion; k=256 at m=16 (same 128
             # bits as m=32/k=16) measured a near-noop 0.6691 vs 0.6484
             # at 100k, while doubling the BITRATE (m=32 × 8 bits = 256)
-            # reads 0.9070 — distortion follows bits, not k alone.  The
-            # arrow encode is REQUIRED here (the unrolled literal tree
+            # reads 0.9070 — distortion follows bits, not k alone.  This
+            # size takes the BLAS encode (the unrolled literal tree
             # heap-OOMs janino at this k).
             t0 = time.time()
             cb256 = similarity.pq_train_codebooks(
-                residual_sample, k=256, m=32, dim=64, iters=4,
-                encode="arrow",
+                residual_sample, k=256, m=32, dim=64, iters=4
             )
             t[f"ivfadc_train_m32_k256_sample_{fixture}"] = {
                 "sec": round(time.time() - t0, 1), "rows": 256 * 64,
@@ -406,7 +405,7 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
                 ("trained", trained_cb, 32, True, coarse_df,
                  [1, 4, 16, 64], {}),
                 ("trained256", cb256, 32, True, coarse_df,
-                 [1, 4, 16, 64], {"assign": "arrow", "encode": "arrow"}),
+                 [1, 4, 16, 64], {"assign": "local"}),
             ]
             if fixture == "clustered":
                 # the fully-TRAINED pipeline — no true-centers stand-in:
@@ -463,7 +462,7 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
                 )
                 kmc = similarity.kmeans_lite(
                     sample, k=n_lists, iters=3, seeds=seeds,
-                    assign="arrow",
+                    assign="local",
                 ).persist()
                 held.append(kmc)
                 nl = kmc.count()  # Lloyd dropout can leave < n_lists
@@ -475,20 +474,19 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
                     for r in kmc.select("vec_id", "q").collect()
                 ]
                 resn = similarity.residualize(
-                    similarity.ivf_assign_arrow(sample, km_rows, 1),
+                    similarity.ivf_assign_local(sample, km_rows),
                     km_rows,
                 )
                 t0 = time.time()
                 cbn = similarity.pq_train_codebooks(
-                    resn, k=256, m=32, dim=64, iters=4, encode="arrow"
+                    resn, k=256, m=32, dim=64, iters=4
                 )
                 t[f"ivfadc_train_m32_k256_lists{n_lists}_{fixture}"] = {
                     "sec": round(time.time() - t0, 1), "rows": 256 * 64,
                 }
                 variants.append((
                     f"trained256_lists{n_lists}", cbn, 32, True, kmc,
-                    [1, 4, 16, 64],
-                    {"assign": "arrow", "encode": "arrow"},
+                    [1, 4, 16, 64], {"assign": "local"},
                 ))
             for cb_lbl, cb, m_, residual, coarse_v, probes, bkw in variants:
                 t0 = time.time()
@@ -837,7 +835,7 @@ def r11_tier(spark, t: dict, n: int) -> None:
         ann_store.save_ivfadc(
             similarity.ivf_pq_index(
                 c_side, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="arrow",
+                coarse_rows=coarse_rows, assign="local",
             ),
             path, coarse_rows, cb, m=m_, dim=64,
         )
@@ -865,7 +863,7 @@ def r11_tier(spark, t: dict, n: int) -> None:
         _recall(f"rebalance_recall_before_np{nprobe}")
         t0 = time.time()
         noop = ann_store.rebalance_ivfadc(
-            spark, path, c_side, threshold=1e9, assign="arrow"
+            spark, path, c_side, threshold=1e9
         )
         t["rebalance_noop_sweep"] = {
             "sec": round(time.time() - t0, 1),
@@ -875,7 +873,7 @@ def r11_tier(spark, t: dict, n: int) -> None:
               f"{noop['skew_before']}  rebalance_noop_sweep", file=sys.stderr)
         t0 = time.time()
         rep = ann_store.rebalance_ivfadc(
-            spark, path, c_side, threshold=2.0, assign="arrow"
+            spark, path, c_side, threshold=2.0
         )
         t["rebalance_sweep_1m"] = {
             "sec": round(time.time() - t0, 1),
@@ -947,7 +945,7 @@ def r12_tier(spark, t: dict, n: int) -> None:
         ann_store.save_ivfadc(
             similarity.ivf_pq_index(
                 prep_part, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="arrow",
+                coarse_rows=coarse_rows, assign="local",
             ),
             path, coarse_rows, cb, m=m_, dim=64,
         )
@@ -1202,7 +1200,7 @@ def r13_tier(spark, t: dict, n: int) -> None:
         ann_store.save_ivfadc(
             similarity.ivf_pq_index(
                 prep_part, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="arrow",
+                coarse_rows=coarse_rows, assign="local",
             ),
             path, coarse_rows, cb, m=m_, dim=64,
         )
@@ -1295,7 +1293,6 @@ def r13_tier(spark, t: dict, n: int) -> None:
             "lc_merge_segments",
             lambda: ann_store.merge_segments(
                 spark, [base_path, fresh_path], merged_path, raw_emb=emb,
-                assign="arrow",
             ),
         )
         t["lc_merge_segments"].update(
@@ -1387,7 +1384,7 @@ def r13_budget_tier(spark, t: dict, n: int) -> None:
         ix = ann_store.save_ivfadc(
             similarity.ivf_pq_index(
                 corpus, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="arrow",
+                coarse_rows=coarse_rows, assign="local",
             ),
             root + "/ix", coarse_rows, cb, m=m_, dim=64,
         )
@@ -1466,7 +1463,7 @@ def r13_range_tier(spark, t: dict, n: int) -> None:
         ann_store.save_ivfadc(
             similarity.ivf_pq_index(
                 prep_part, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="arrow",
+                coarse_rows=coarse_rows, assign="local",
             ),
             path, coarse_rows, cb, m=m_, dim=64,
         )
@@ -1612,6 +1609,43 @@ def sq8_tier(spark, t: dict, n: int) -> None:
             df.unpersist()
 
 
+# --tier choices: name -> (run(spark, timings, args), what it measures).
+def _at_adc_vecs(tier):
+    return lambda spark, t, args: tier(spark, t, args.adc_vecs)
+
+
+TIERS = {
+    "ann": (_at_adc_vecs(ann_recall_tier),
+            "the ann-recall matrix (codebook x coarse x nprobe)"),
+    "r10x": (lambda spark, t, args: r10_extras_tier(
+                 spark, t, args.docs, args.adc_vecs),
+             "round-10 extras (PCA gram, star CC, incremental "
+             "admission, BM25)"),
+    "rot": (_at_adc_vecs(rotation_recall_tier),
+            "rotated-vs-raw PQ recall over the anisotropic fixture"),
+    "r11": (_at_adc_vecs(r11_tier),
+            "rotated-vs-raw IVFADC, filtered-search selectivity curve, "
+            "rebalance under drift"),
+    "r12": (_at_adc_vecs(r12_tier),
+            "multi-segment search + tombstones at scale, adaptive-"
+            "nprobe recall-vs-budget"),
+    "r12b": (_at_adc_vecs(r12_adaptive_tier),
+             "the adaptive-nprobe recall-vs-budget sub-tier"),
+    "r13": (_at_adc_vecs(r13_tier),
+            "end-to-end store lifecycle with per-stage timings: build, "
+            "delete, purge, admit, segment search, merge, post-merge "
+            "cost reversion"),
+    "r13b": (_at_adc_vecs(r13_budget_tier),
+             "unfiltered candidate-budget curve on the random fixture"),
+    "r13c": (_at_adc_vecs(r13_range_tier),
+             "range search: top-k anchor vs the rank-window-free range "
+             "pass, single-store and two-segment"),
+    "sq8": (_at_adc_vecs(sq8_tier),
+            "SQ8 scalar quantizer: train/encode/flat-search cost and "
+            "the 8-bit grid's recall ceiling"),
+}
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--events", type=int, default=10_000_000)
@@ -1621,46 +1655,11 @@ def main() -> int:
     ap.add_argument("--curate-docs", type=int, default=10_000_000)
     ap.add_argument("--weather-stations", type=int, default=1_000)
     ap.add_argument("--out", default=None)
-    ap.add_argument("--only-ann", action="store_true",
-                    help="run ONLY the ann-recall matrix tier (fast "
-                         "re-measure of the recall story without the "
-                         "events/docs/curation tiers)")
-    ap.add_argument("--only-r10x", action="store_true",
-                    help="run ONLY the round-10 extras tier (PCA gram, "
-                         "star CC, incremental admission, BM25)")
-    ap.add_argument("--only-rot", action="store_true",
-                    help="run ONLY the rotated-vs-raw PQ recall tier "
-                         "over the anisotropic fixture")
-    ap.add_argument("--only-r11", action="store_true",
-                    help="run ONLY the round-11 tier (rotated-vs-raw "
-                         "IVFADC, filtered-search selectivity curve, "
-                         "rebalance under drift)")
-    ap.add_argument("--only-r12", action="store_true",
-                    help="run ONLY the round-12 tier (multi-segment "
-                         "search + tombstones at scale, adaptive-"
-                         "nprobe recall-vs-budget)")
-    ap.add_argument("--only-r12b", action="store_true",
-                    help="run ONLY the adaptive-nprobe recall-vs-"
-                         "budget sub-tier (fast re-measure)")
-    ap.add_argument("--only-r13b", action="store_true",
-                    help="run ONLY the unfiltered candidate-budget "
-                         "curve on the random fixture (the recall-"
-                         "gradient counterpart of the lifecycle tier)")
-    ap.add_argument("--only-r13", action="store_true",
-                    help="run ONLY the round-13 tier (end-to-end store "
-                         "lifecycle with per-stage timings: build, "
-                         "delete, purge, admit, segment search, MERGE, "
-                         "post-merge cost reversion, unfiltered "
-                         "candidate-budget curve)")
-    ap.add_argument("--only-r13c", action="store_true",
-                    help="run ONLY the range-search tier (top-k anchor "
-                         "vs rank-window-free range pass at the "
-                         "anchor-derived radius, single-store and "
-                         "two-segment)")
-    ap.add_argument("--only-sq8", action="store_true",
-                    help="run ONLY the SQ8 scalar-quantizer tier "
-                         "(train/encode/flat-search cost + the 8-bit "
-                         "grid's recall ceiling on the random fixture)")
+    ap.add_argument(
+        "--tier", choices=["all", *TIERS], default="all",
+        help="run one tier alone (a fast re-measure of its story): "
+             + "; ".join(f"{k}: {v[1]}" for k, v in TIERS.items())
+             + ".  Default 'all' runs the full probe.")
     args = ap.parse_args()
 
     from nr_rfc_dischargeobs_spark.extensions import (
@@ -1683,80 +1682,8 @@ def main() -> int:
     }
     t = results["timings"]
 
-    if args.only_ann:
-        ann_recall_tier(spark, t, args.adc_vecs)
-        out = json.dumps(results)
-        print(out)
-        if args.out:
-            Path(args.out).write_text(out)
-        return 0
-
-    if args.only_r10x:
-        r10_extras_tier(spark, t, args.docs, args.adc_vecs)
-        out = json.dumps(results)
-        print(out)
-        if args.out:
-            Path(args.out).write_text(out)
-        return 0
-
-    if args.only_rot:
-        rotation_recall_tier(spark, t, args.adc_vecs)
-        out = json.dumps(results)
-        print(out)
-        if args.out:
-            Path(args.out).write_text(out)
-        return 0
-
-    if args.only_r11:
-        r11_tier(spark, t, args.adc_vecs)
-        out = json.dumps(results)
-        print(out)
-        if args.out:
-            Path(args.out).write_text(out)
-        return 0
-
-    if args.only_r12b:
-        r12_adaptive_tier(spark, t, args.adc_vecs)
-        out = json.dumps(results)
-        print(out)
-        if args.out:
-            Path(args.out).write_text(out)
-        return 0
-
-    if args.only_r12:
-        r12_tier(spark, t, args.adc_vecs)
-        out = json.dumps(results)
-        print(out)
-        if args.out:
-            Path(args.out).write_text(out)
-        return 0
-
-    if args.only_r13b:
-        r13_budget_tier(spark, t, args.adc_vecs)
-        out = json.dumps(results)
-        print(out)
-        if args.out:
-            Path(args.out).write_text(out)
-        return 0
-
-    if args.only_r13:
-        r13_tier(spark, t, args.adc_vecs)
-        out = json.dumps(results)
-        print(out)
-        if args.out:
-            Path(args.out).write_text(out)
-        return 0
-
-    if args.only_r13c:
-        r13_range_tier(spark, t, args.adc_vecs)
-        out = json.dumps(results)
-        print(out)
-        if args.out:
-            Path(args.out).write_text(out)
-        return 0
-
-    if args.only_sq8:
-        sq8_tier(spark, t, args.adc_vecs)
+    if args.tier != "all":
+        TIERS[args.tier][0](spark, t, args)
         out = json.dumps(results)
         print(out)
         if args.out:
