@@ -1,11 +1,11 @@
 """Shared error-classification helpers.
 
-One place decides what "the store isn't there yet" looks like, because two
-call sites (`sources.store.ObservationStore.exists`,
-`streaming.documents.land_document_stream`) make a fail-safe decision on
-it: misreading a transient error as "fresh store" would send an upsert
-down the overwrite path, and misreading not-found as an error would make
-every first run raise.
+One place decides what "the store isn't there yet" looks like, because
+its call sites (`sources.store.ObservationStore.read`, the landed-set
+reads of `streaming.documents` and `streaming.ann`) make a fail-safe
+decision on it: misreading a transient error as "fresh store" would make
+an upsert merge against nothing and overwrite the stored months, and
+misreading not-found as an error would make every first run raise.
 """
 
 from __future__ import annotations
@@ -37,10 +37,11 @@ def is_missing_path(ex: BaseException) -> bool:
     name.  Only those leading positions are checked — a token quoted
     DEEP in a stack trace's cause chain (a job-abort wrapper whose
     retry log mentions ``[PATH_NOT_FOUND]`` around a genuinely
-    different failure) must NOT classify as a fresh store, because the
-    callers' fresh-store path overwrites.  An exception with an
-    accessor that reports a DIFFERENT condition never falls through to
-    the text match — throttling, credentials, corruption stay loud.
+    different failure) must NOT classify as a fresh store, because a
+    fresh store merges against nothing and then overwrites.  An
+    exception with an accessor that reports a DIFFERENT condition never
+    falls through to the text match — throttling, credentials,
+    corruption stay loud.
     """
     getter = getattr(ex, "getCondition", None) or getattr(
         ex, "getErrorClass", None

@@ -6,15 +6,17 @@ comment at ``discharge_obs_pd.py:176`` notes revised upstream data therefore
 never overwrites — a documented reference quirk we preserve behind
 ``existing_wins=True`` (set False for the corrected merge).
 
-Two layouts:
-- wide (one value column per station): full-outer join + per-column coalesce;
-- long (canonical): union + priority row_number — scales to any number of
-  stations with one shuffle and no per-column plan growth.
+This module holds the wide form (one value column per station): a
+full-outer join + per-column coalesce, used by the registered
+``j3_coalescing_upsert`` plan.  The long (canonical) form lives in one
+place, ``sources.store.ObservationStore.upsert``: union + per-key winner
+window, fused with the store's partitioned write — one shuffle for any
+number of stations.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -44,30 +46,3 @@ def coalesce_upsert_wide(
         out_cols.append(col.alias(c))
     return joined.select(*out_cols)
 
-
-def priority_upsert_long(
-    frames: list[DataFrame],
-    keys: list[str],
-    value: str = "value",
-) -> DataFrame:
-    """J3 on the canonical long table: union N sources and keep, per key, the
-    first non-null value from the highest-priority frame (frames[0] wins —
-    i.e. pass [existing, incoming] for combine_first semantics).
-
-    One shuffle on ``keys`` regardless of source count or station count —
-    this is why long is the canonical layout at 100 TB (SURVEY.md §1.4).
-    """
-    tagged = [
-        f.withColumn("__prio", F.lit(i)) for i, f in enumerate(frames)
-    ]
-    unioned = tagged[0]
-    for f in tagged[1:]:
-        unioned = unioned.unionByName(f, allowMissingColumns=True)
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(value).isNull().asc(), F.col("__prio").asc()
-    )
-    return (
-        unioned.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__prio")
-    )

@@ -9,29 +9,43 @@ the hive layout:
 
     root/year_month=YYYYMM/datatype={Q|H}/part-*.parquet
 
-- writes: ``partitionBy('year_month','datatype')`` with dynamic partition
-  overwrite — only the touched months are rewritten (the reference's
-  per-month upsert loop, without the loop);
-- reads: a ``between`` filter on ``obs_time``/``year_month`` prunes
-  partitions in the Catalyst plan (``PartitionFilters`` in explain) — zero
-  custom code, and it scales to thousands of months;
+- reads: a missing root reads as an empty store (:meth:`read` is the one
+  place that decides what a fresh store is); a ``between`` filter on
+  ``obs_time``/``year_month`` prunes partitions in the Catalyst plan
+  (``PartitionFilters`` in explain) — zero custom code, and it scales to
+  thousands of months;
 - upsert: union-based coalescing merge in long form (J3 semantics:
   existing wins — ``discharge_obs_pd.py:176,182-187``) over only the
-  overlapping partitions.
+  overlapping partitions, the same merge on a fresh store as on a full one;
+- commit: ``write``, ``compact`` and ``upsert`` all end in one
+  ``partitionBy('year_month','datatype')`` write with dynamic partition
+  overwrite — only the touched months are rewritten (the reference's
+  per-month upsert loop, without the loop).
 
-At 100 TB: month×datatype partitions keep files O(GB); within a partition,
-writers can additionally bucket by station_id for co-located station scans.
+At 100 TB: month×datatype partitions keep files O(GB), and each partition
+is written by ``SPREAD`` station-clustered tasks.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..errors import is_missing_path
 
 PARTITION_COLS = ["year_month", "datatype"]
 KEY_COLS = ["station_id", "obs_time", "datatype", "qc_level"]
+# what a written store reads back as: the data columns, then the hive
+# partition columns (year_month inferred as int from the directory names)
+STORE_SCHEMA = (
+    "station_id string, obs_time timestamp, value double, qc_level string,"
+    " source string, year_month int, datatype string"
+)
+# writer tasks per hive partition: repartitioning on the partition columns
+# alone would funnel each month through ONE task (a serial write for a
+# month-sized partition); a station-hash salt keeps writes parallel while
+# each station's rows stay in one file for row-group skipping
+SPREAD = 8
 
 
 def with_year_month(df: DataFrame) -> DataFrame:
@@ -40,6 +54,10 @@ def with_year_month(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "year_month", F.date_format(F.col("obs_time"), "yyyyMM")
     )
+
+
+def _station_salt():
+    return F.pmod(F.xxhash64(F.col("station_id")), F.lit(SPREAD))
 
 
 class ObservationStore:
@@ -51,86 +69,62 @@ class ObservationStore:
 
     # ------------------------------------------------------------- write
 
-    def write(
-        self, obs: DataFrame, mode: str = "overwrite", spread: int = 8
-    ) -> None:
-        """S10: partitioned write.  With ``partitionOverwriteMode=dynamic``
-        (session default) an 'overwrite' only replaces partitions present
-        in ``obs`` — the Spark-native form of the reference's per-month
-        file replacement.
+    def write(self, obs: DataFrame) -> None:
+        """S10: partitioned write of ``obs`` as it is, no merge: only the
+        months present in ``obs`` are replaced (dynamic partition
+        overwrite — the Spark-native form of the reference's per-month
+        file replacement).
 
-        Rows are clustered to ``spread`` writer tasks per hive partition by
-        station hash: repartitioning on the partition columns alone would
-        funnel each month through ONE task (a serial write for a month-sized
-        partition); spreading keeps writes parallel while per-station data
-        stays clustered within each file for row-group skipping.  Tune
-        ``spread`` so partition_bytes/spread lands near 128M-1G; ``compact``
-        can re-tighten later.
+        Rows go to ``SPREAD`` writer tasks per hive partition by station
+        hash; ``compact`` can re-tighten later.
         """
-        salt = F.pmod(F.xxhash64(F.col("station_id")), F.lit(spread))
-        (
+        self._commit(
             with_year_month(obs)
-            .repartition(*[F.col(c) for c in PARTITION_COLS], salt)
+            .repartition(*[F.col(c) for c in PARTITION_COLS], _station_salt())
             # the clustering CLAIM needs an actual sort: without it each
             # writer task holds its station subset interleaved in arrival
             # order and station_id row-group min/max stats prune nothing.
             # Leading with the partition columns satisfies the writer's
             # own required ordering, so no extra sort is inserted.
-            .sortWithinPartitions(
-                *PARTITION_COLS, "station_id", "obs_time"
-            )
-            .write.partitionBy(*PARTITION_COLS)
-            # per-WRITE dynamic overwrite: correctness must not depend on
-            # how the caller's session was built — with Spark's default
-            # STATIC mode an 'overwrite' of one month would truncate every
-            # other partition in the store
-            .option("partitionOverwriteMode", "dynamic")
-            .mode(mode)
-            .parquet(self.root)
+            .sortWithinPartitions(*PARTITION_COLS, "station_id", "obs_time")
         )
 
-    def write_bucketed(
-        self, obs: DataFrame, table: str, buckets: int = 64
-    ) -> None:
-        """S10 at fleet scale: the partitioned layout PLUS station bucketing.
-
-        ``bucketBy(station_id)`` + ``sortBy(station_id, obs_time)`` records
-        the hash distribution in the catalog, so every station-keyed
-        consumer — hourly/daily rollups, forward-fill windows, the A2
-        recurrence's repartition — reads pre-clustered data and plans with
-        NO shuffle (``HashPartitioning(station_id)`` satisfies any grouping
-        that includes station_id).  The shuffle is paid once at write time,
-        amortized over every downstream read; at 100 TB that is the
-        difference between one exchange per query and zero.
-
-        The bucketed table lives at its OWN path (``{root}__bucketed``),
-        not the plain store root: ``write()``/``upsert()``/``compact()``
-        emit non-bucket-named files, and mixing them into a path the
-        catalog records as bucketed either fails reads ("Invalid bucket
-        file") or — worse — lets the planner skip exchanges against data
-        that no longer satisfies the recorded HashPartitioning.
-        """
+    def _commit(self, frame: DataFrame) -> None:
+        """The store's one commit: ``frame`` (carrying ``year_month``)
+        replaces exactly the hive partitions it holds rows for.  The
+        per-write dynamic overwrite pins correctness to this call, not to
+        how the caller's session was built — with Spark's default STATIC
+        mode an overwrite of one month would truncate every other
+        partition in the store."""
         (
-            with_year_month(obs)
-            .repartition(buckets, F.col("station_id"))
-            .write.partitionBy(*PARTITION_COLS)
-            .bucketBy(buckets, "station_id")
-            .sortBy("station_id", "obs_time")
-            .option("path", self.root.rstrip("/") + "__bucketed")
-            .format("parquet")
+            frame.write.partitionBy(*PARTITION_COLS)
+            .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
-            .saveAsTable(table)
+            .parquet(self.root)
         )
 
     # -------------------------------------------------------------- read
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.root)
+        """The whole store.  A missing root — the two conditions of
+        :func:`errors.is_missing_path` — reads as an empty frame with the
+        schema of a written store, so a fresh store merges like any
+        other.  Any other read error (throttling, credentials,
+        corruption) re-raises: misread as "fresh", an upsert would merge
+        against nothing and its dynamic overwrite would delete every
+        stored row of the incoming months."""
+        try:
+            return self.spark.read.parquet(self.root)
+        except Exception as ex:  # noqa: BLE001 — filtered below
+            if is_missing_path(ex):
+                return self.spark.createDataFrame([], STORE_SCHEMA)
+            raise
 
-    def read_table(self, table: str) -> DataFrame:
-        """Catalog read of the bucketed layout — REQUIRED for shuffle
-        elimination (a plain path read sees files, not the bucket spec)."""
-        return self.spark.table(table)
+    def exists(self) -> bool:
+        """True iff the store root holds readable parquet.  Decided by
+        :meth:`read`: only a missing root is False, any other error
+        re-raises."""
+        return bool(self.read().inputFiles())
 
     def read_range(
         self, start: str, end: str, inclusive_start: bool = True
@@ -159,108 +153,60 @@ class ObservationStore:
 
     # ------------------------------------------------------- maintenance
 
-    def compact(
-        self, months: list[str] | None = None, target_files: int = 1
-    ) -> None:
+    def compact(self, months: list[str] | None = None) -> None:
         """Small-file compaction — this store's OPTIMIZE.
 
         Append-mode ingest cycles (each hourly cron run, each streaming
         micro-batch) leave one file per cycle per touched partition; at
         fleet scale the file count, not the byte count, becomes the scan
         bottleneck (one task + one object-store GET per file).  Compaction
-        rewrites each hive partition into ``target_files`` parquet files —
-        pick it so files land near the 128M-1G sweet spot — touching ONLY
+        rewrites each hive partition into one parquet file, touching ONLY
         the selected months (dynamic partition overwrite; untouched months
-        never move).  Rows are spread across the target files by station
-        hash, so per-station data stays clustered for row-group skipping.
+        never move), sorted by station and time for row-group skipping.
         """
         df = self.read()
         if months is not None:
             df = df.filter(F.col("year_month").isin(months))
-        spread = F.pmod(F.xxhash64(F.col("station_id")), F.lit(target_files))
-        (
-            df.repartition(
-                F.col("year_month"), F.col("datatype"), spread
-            )
+        self._commit(
+            df.repartition(*[F.col(c) for c in PARTITION_COLS])
             .drop("year_month")
             .transform(with_year_month)
             # same clustering sort as write(): the row-group-skipping
             # claim is real only if stations are actually contiguous
-            .sortWithinPartitions(
-                *PARTITION_COLS, "station_id", "obs_time"
-            )
-            .write.partitionBy(*PARTITION_COLS)
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(self.root)
+            .sortWithinPartitions(*PARTITION_COLS, "station_id", "obs_time")
         )
 
     # ------------------------------------------------------------ upsert
 
-    def exists(self) -> bool:
-        """True iff the store root holds readable parquet.  ONLY the
-        two expected not-there failures map to False — anything else
-        (object-store throttling, credentials, corruption) re-raises,
-        because a transient read error misread as "fresh store" would
-        send :meth:`upsert` down the overwrite path and dynamic
-        partition overwrite would then DELETE every existing row of
-        the incoming months."""
-        try:
-            self.spark.read.parquet(self.root).schema
-            return True
-        except Exception as ex:  # noqa: BLE001 — filtered below
-            if is_missing_path(ex):
-                return False
-            raise
-
-    def upsert(
-        self,
-        incoming: DataFrame,
-        existing_wins: bool = True,
-        spread: int = 8,
-    ) -> None:
+    def upsert(self, incoming: DataFrame, existing_wins: bool = True) -> None:
         """J3 coalescing merge: for keys present in both, the existing value
         wins (reference ``combine_first`` semantics — set
         ``existing_wins=False`` for the corrected late-data behavior).
 
         Only partitions overlapping the incoming months are read, merged,
-        and dynamically overwritten; untouched months never move.  This is
-        the cron-batch MERGE; the streaming tier reuses it per micro-batch
-        (``streaming/ingest.py``).
+        and dynamically overwritten; untouched months never move.  A fresh
+        store reads as empty, so every upsert takes the same merge — also
+        the one that collapses duplicate keys within ``incoming``.  This
+        is the cron-batch MERGE; the streaming tier reuses it per
+        micro-batch (``streaming/ingest.py``).
+        """
+        self._commit(self.merged_frame(with_year_month(incoming), existing_wins))
+
+    def merged_frame(
+        self, incoming: DataFrame, existing_wins: bool = True
+    ) -> DataFrame:
+        """The upsert's merge plan (exposed for plan-shape tests): incoming
+        must already carry ``year_month``.
 
         The merge+write is ONE shuffle: rows are hash-distributed once by
         (month, datatype, station-salt) — every key's rows land together
         because all three are functions of the key — then the per-key
         winner is picked by a window over that SAME partitioning (Catalyst
-        elides the second exchange) and files are written without any
-        further repartition.  Semantics match ``priority_upsert_long``
-        (first non-null from the winning side); at a month-sized partition
-        this halves the shuffled bytes of the naive merge-then-write.
-        """
-        incoming = with_year_month(incoming)
-        if not self.exists():
-            self.write(incoming.drop("year_month"), mode="overwrite")
-            return
-        merged = self.merged_frame(incoming, existing_wins, spread)
-        (
-            merged.write.partitionBy(*PARTITION_COLS)
-            # writer-level pin: see write() — a foreign session without the
-            # dynamic conf must not truncate untouched months on upsert
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(self.root)
-        )
-
-    def merged_frame(
-        self,
-        incoming: DataFrame,
-        existing_wins: bool = True,
-        spread: int = 8,
-    ) -> DataFrame:
-        """The upsert's merge plan (exposed for plan-shape tests): incoming
-        must already carry ``year_month``.  Exactly one Exchange — the
-        write-ready (month, datatype, salt) distribution — with the per-key
-        winner window riding the same partitioning."""
+        elides the second exchange) and the commit writes without any
+        further repartition.  Per key the winner is the first non-null
+        value from the winning side; ties within a side go to the smallest
+        ``value``, then ``source``, so the survivor never depends on
+        shuffle order."""
         months = [
             r["year_month"]
             for r in incoming.select("year_month").distinct().collect()
@@ -282,17 +228,15 @@ class ObservationStore:
         unioned = existing.withColumn(
             "__prio", F.lit(pri_e)
         ).unionByName(incoming.withColumn("__prio", F.lit(pri_i)))
-        arranged = unioned.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col("station_id")), F.lit(spread))
-        ).repartition(
+        arranged = unioned.withColumn("__salt", _station_salt()).repartition(
             F.col("year_month"), F.col("datatype"), F.col("__salt")
         )
-        from pyspark.sql import Window
-
         w = Window.partitionBy("year_month", "datatype", "__salt").orderBy(
             *[F.col(k) for k in KEY_COLS],
             F.col("value").isNull().asc(),
             F.col("__prio").asc(),
+            F.col("value").asc(),
+            F.col("source").asc(),
         )
         key = F.struct(*[F.col(k) for k in KEY_COLS])
         return (

@@ -197,6 +197,145 @@ def test_exists_reraises_non_missing_errors(spark, tmp_path):
     assert missing.exists() is False
 
 
+def test_read_of_missing_root_is_empty_store_and_garbage_raises(
+    spark, tmp_path
+):
+    """read() is the one place that decides what a fresh store is: a
+    missing root reads as an empty frame with the exact schema of a
+    written store; a garbage root raises from read() AND upsert(), and
+    the upsert leaves the garbage in place instead of overwriting it."""
+    missing = ObservationStore(spark, str(tmp_path / "never_written"))
+    empty = missing.read()
+    assert empty.count() == 0
+    assert empty.schema.simpleString() == (
+        "struct<station_id:string,obs_time:timestamp,value:double,"
+        "qc_level:string,source:string,year_month:int,datatype:string>"
+    )
+    written = ObservationStore(spark, str(tmp_path / "written"))
+    written.write(
+        _obs(spark, [("S1", dt.datetime(2024, 6, 1, 12), "Q", 1.0, "raw", "wsc")])
+    )
+    assert empty.schema == written.read().schema
+    assert written.exists() is True
+
+    root = tmp_path / "garbage"
+    root.mkdir()
+    garbage = root / "part-00000.parquet"
+    garbage.write_text("this is not parquet")
+    store = ObservationStore(spark, str(root))
+    with pytest.raises(Exception):
+        store.read()
+    with pytest.raises(Exception):
+        store.upsert(
+            _obs(spark, [("S1", dt.datetime(2024, 6, 1, 12), "Q", 1.0, "raw", "wsc")])
+        )
+    assert [p.name for p in root.iterdir()] == ["part-00000.parquet"]
+    assert garbage.read_text() == "this is not parquet"
+
+
+def _rows(store):
+    return sorted(
+        (r["station_id"], r["obs_time"], r["datatype"], r["value"], r["source"])
+        for r in store.read().collect()
+    )
+
+
+def test_upsert_into_fresh_store_merges_like_a_full_store(spark, tmp_path):
+    """One batch with a duplicate key leaves the same rows whether the
+    store is fresh or already holds data, and re-upserting it changes no
+    row: a fresh store takes the same merge as any other."""
+    t = dt.datetime(2024, 6, 1, 12)
+    batch = [
+        ("S1", t, "Q", None, "raw", "wsc"),
+        ("S1", t, "Q", 5.0, "raw", "prov"),
+        ("S2", t, "Q", 1.0, "raw", "wsc"),
+    ]
+    schema = ("station_id string, obs_time timestamp, datatype string,"
+              " value double, qc_level string, source string")
+    want = [("S1", t, "Q", 5.0, "prov"), ("S2", t, "Q", 1.0, "wsc")]
+
+    fresh = ObservationStore(spark, str(tmp_path / "fresh"))
+    fresh.upsert(spark.createDataFrame(batch, schema))
+    assert _rows(fresh) == want
+    fresh.upsert(spark.createDataFrame(batch, schema))
+    assert _rows(fresh) == want
+
+    may = ("S3", dt.datetime(2024, 5, 1, 12), "Q", 7.0, "raw", "wsc")
+    full = ObservationStore(spark, str(tmp_path / "full"))
+    full.write(spark.createDataFrame([may], schema))
+    full.upsert(spark.createDataFrame(batch, schema))
+    assert _rows(full) == sorted(want + [("S3", may[1], "Q", 7.0, "wsc")])
+
+
+def test_upsert_fills_stored_null_value(spark, tmp_path):
+    """combine_first on the store: a stored value wins over an incoming
+    one, a stored NULL is filled by the incoming value, and a new key
+    extends the store."""
+    store = ObservationStore(spark, str(tmp_path / "obs"))
+    at = lambda h: dt.datetime(2024, 6, 1, h)  # noqa: E731
+    schema = ("station_id string, obs_time timestamp, datatype string,"
+              " value double, qc_level string, source string")
+    store.write(
+        spark.createDataFrame(
+            [("A", at(1), "Q", 10.0, "raw", "wsc"),
+             ("A", at(2), "Q", None, "raw", "wsc")],
+            schema,
+        )
+    )
+    store.upsert(
+        spark.createDataFrame(
+            [("A", at(h), "Q", v, "raw", "wsc")
+             for h, v in ((1, 99.0), (2, 20.0), (3, 30.0))],
+            schema,
+        )
+    )
+    got = {r["obs_time"].hour: r["value"] for r in store.read().collect()}
+    assert got == {1: 10.0, 2: 20.0, 3: 30.0}
+
+
+def test_upsert_survivor_independent_of_row_order(spark, tmp_path):
+    """Same-priority non-null rows for one key resolve by value, then
+    source — never by shuffle order: permuted and repartitioned copies
+    of one batch always leave the same row."""
+    t = dt.datetime(2024, 6, 1, 12)
+    rows = [
+        ("S1", t, "Q", float(v), "raw", src)
+        for v, src in ((3.0, "wsc"), (0.0, "usgs"), (5.0, "prov"),
+                       (0.0, "prov"), (4.0, "wsc"), (1.0, "wsc"))
+    ]
+    got = set()
+    for rot in range(3):
+        store = ObservationStore(spark, str(tmp_path / f"obs{rot}"))
+        store.upsert(
+            _obs(spark, rows[rot * 2:] + rows[:rot * 2]).repartition(3)
+        )
+        got.update(_rows(store))
+    assert got == {("S1", t, "Q", 0.0, "prov")}
+
+
+def test_upsert_commit_writes_single_exchange_frame(spark, tmp_path):
+    """The frame upsert hands to the commit is the merge plan itself:
+    exactly one Exchange, so the commit adds no repartition."""
+    import re
+
+    store = ObservationStore(spark, str(tmp_path / "obs"))
+    committed = []
+    commit = store._commit
+    store._commit = lambda frame: (committed.append(frame), commit(frame))
+    store.upsert(
+        _obs(spark, [("S1", dt.datetime(2024, 6, 2, 12), "Q", 2.0, "raw", "wsc")])
+    )
+    [frame] = committed
+    plan = frame._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    nodes = [m.group(1) for m in re.finditer(r"^\(\d+\) (\w+)", plan, re.M)]
+    assert sum(n == "Exchange" for n in nodes) == 1
+    assert store.read().count() == 1
+
+
 def test_is_missing_path_token_fallback_without_accessors():
     """ADVICE fix pin: an exception that escaped PySpark's error
     framework (no getCondition/getErrorClass — e.g. a raw Py4JJavaError)

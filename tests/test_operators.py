@@ -145,24 +145,6 @@ def test_coalesce_upsert_incoming_wins_flag(spark):
     assert out.collect()[0]["v"] == 2.0
 
 
-def test_priority_upsert_long(spark):
-    existing = spark.createDataFrame(
-        [("A", 1, 10.0), ("A", 2, None)], ["station", "slot", "value"]
-    )
-    incoming = spark.createDataFrame(
-        [("A", 1, 99.0), ("A", 2, 20.0), ("A", 3, 30.0)],
-        ["station", "slot", "value"],
-    )
-    out = upsert.priority_upsert_long(
-        [existing, incoming], ["station", "slot"]
-    )
-    d = {r["slot"]: r["value"] for r in out.collect()}
-    assert d == {1: 10.0, 2: 20.0, 3: 30.0}
-
-
-# ---------------------------------------------------------------- align
-
-
 def test_time_spine_inclusive_bounds(spark):
     spine = align.time_spine(
         spark, "2024-01-01 00:00:00", "2024-01-01 03:00:00", "1 hour"

@@ -393,33 +393,6 @@ def test_ep3_weather_pipeline_scaffold_and_wide(spark):
     assert vals["2024-06-01 00:00:00"] == 12.5  # 08:00 UTC - 8 h
 
 
-def test_bucketed_store_eliminates_rollup_shuffle(spark, tmp_path):
-    """Station-bucketed table: the hourly rollup's groupBy(station, hour)
-    must plan with no Exchange — the write-time distribution satisfies the
-    aggregation's clustering requirement."""
-    obs = spark.createDataFrame(
-        [
-            ("S%d" % (i % 5), dt.datetime(2024, 6, 1, 10, 5 * (i % 12)), "Q",
-             float(i), "raw", "wsc")
-            for i in range(60)
-        ],
-        ["station_id", "obs_time", "datatype", "value", "qc_level", "source"],
-    )
-    store = ObservationStore(spark, str(tmp_path / "bucketed"))
-    table = "obs_bucketed_test"
-    try:
-        store.write_bucketed(obs, table, buckets=4)
-        hourly = rollup.hourly_rollup(
-            store.read_table(table), "station_id", "obs_time", "value"
-        )
-        plan = hourly._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        # and it still computes the right thing
-        assert hourly.count() == 5
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_ep1_all_three_source_families_land_together(spark, tmp_path):
     """EP1 with WSC + provincial + USGS (NWIS leg via injected opener): the
     three conformed families union into one upsert and coexist in the

@@ -63,6 +63,35 @@ def timed(results: dict, name: str, df: DataFrame) -> None:
           file=sys.stderr)
 
 
+def recall_row(t: dict, key: str, exact: DataFrame, found) -> None:
+    """One recall@10 row: mean recall of ``found()`` against ``exact``.
+    Like :func:`timed`, a row that dies (a broadcast over the driver
+    heap, an OOM) records ``{"sec", "error"}`` under its key and the
+    sweep goes on to the next row."""
+    from nr_rfc_dischargeobs_spark.extensions import similarity
+
+    t0 = time.time()
+    try:
+        row = similarity.ann_recall(found(), exact).agg(
+            F.avg("recall").alias("r"),
+            F.count(F.lit(1)).alias("n"),
+        ).collect()[0]
+    except Exception as ex:  # noqa: BLE001 — record and keep sweeping
+        t[key] = {
+            "sec": round(time.time() - t0, 1),
+            "error": str(ex).splitlines()[0][:200],
+        }
+        print(f"  FAILED  {key}: {t[key]['error'][:120]}", file=sys.stderr)
+        return
+    t[key] = {
+        "sec": round(time.time() - t0, 1),
+        "rows": row.n,
+        "mean_recall_at_10": round(row.r, 4),
+    }
+    print(f"  {t[key]['sec']:7.1f} s  recall@10 "
+          f"{t[key]['mean_recall_at_10']}  {key}", file=sys.stderr)
+
+
 def synth_events(spark, n: int) -> DataFrame:
     """events-shaped table: n rows, ~n/666 series, 5-min-ish cadence."""
     series = max(n // 666, 1)
@@ -325,9 +354,10 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
     never saw its LogicalRDD plan), so the pinned 1M-row blocks would
     silently survive into the disk-hungry curation tier below — the
     headroom that tier's dial was sized for.  persist() entries
-    release for real.  The tier body is failure-isolated: an OOM in
-    the eager ground-truth build must not forfeit every measurement
-    below (the same contract timed() keeps per entry).
+    release for real.  Each recall row is failure-isolated by
+    recall_row() (the contract timed() keeps per entry), and the tier
+    body as a whole by one try: an OOM in the eager ground-truth build
+    must not forfeit every measurement below.
     """
     from nr_rfc_dischargeobs_spark.extensions import similarity
 
@@ -507,47 +537,19 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
                     return fn(q_side, ix, coarse_v, cb, k=k_,
                               nprobe=nprobe_, m=m_, dim=64)
 
+                stem = f"ann_recall10_{adc_n // 1_000_000}m_{fixture}_{cb_lbl}"
                 for nprobe in probes:
-                    t0 = time.time()
-                    row = similarity.ann_recall(
-                        search(10, nprobe), exact10
-                    ).agg(
-                        F.avg("recall").alias("r"),
-                        F.count(F.lit(1)).alias("n"),
-                    ).collect()[0]
-                    key = (f"ann_recall10_{adc_n // 1_000_000}m_{fixture}_{cb_lbl}"
-                           f"_nprobe{nprobe}")
-                    t[key] = {
-                        "sec": round(time.time() - t0, 1),
-                        "rows": row.n,
-                        "mean_recall_at_10": round(row.r, 4),
-                    }
-                    print(f"  {t[key]['sec']:7.1f} s  recall@10 "
-                          f"{t[key]['mean_recall_at_10']}  {key}",
-                          file=sys.stderr)
+                    recall_row(t, f"{stem}_nprobe{nprobe}", exact10,
+                               lambda nprobe=nprobe: search(10, nprobe))
                 # refined at the operating point: R=30 ADC slate, exact
                 # re-rank — must sit at the slate ceiling (r8 identity)
-                t0 = time.time()
-                row = similarity.ann_recall(
-                    similarity.ivf_pq_refine(
+                recall_row(
+                    t, f"{stem}_nprobe4_refined", exact10,
+                    lambda: similarity.ivf_pq_refine(
                         search(30, 4), q_side, c_side, k=10,
                         kernel="arrow",
                     ),
-                    exact10,
-                ).agg(
-                    F.avg("recall").alias("r"),
-                    F.count(F.lit(1)).alias("n"),
-                ).collect()[0]
-                key = (f"ann_recall10_{adc_n // 1_000_000}m_{fixture}"
-                       f"_{cb_lbl}_nprobe4_refined")
-                t[key] = {
-                    "sec": round(time.time() - t0, 1),
-                    "rows": row.n,
-                    "mean_recall_at_10": round(row.r, 4),
-                }
-                print(f"  {t[key]['sec']:7.1f} s  recall@10 "
-                      f"{t[key]['mean_recall_at_10']}  {key}",
-                      file=sys.stderr)
+                )
                 ix.unpersist()
             exact10.unpersist()
             prep_r.unpersist()
