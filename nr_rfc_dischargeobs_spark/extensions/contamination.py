@@ -31,7 +31,6 @@ def ngram_contamination(
     n: int = 8,
     text: str = "text",
     doc_id: str = "doc_id",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """(doc_id, n_grams, n_contaminated, n_bench_docs, contamination)
     per corpus doc that collides with the benchmark at all.
@@ -39,12 +38,10 @@ def ngram_contamination(
     ``contamination`` = contaminated distinct n-grams / doc's distinct
     n-grams, exact integer counts divided once.
 
-    ``broadcast_benchmark``: the default explicit broadcast hint is the
-    right plan while the benchmark side fits an executor (eval suites are
-    MBs) — and a HINT is not governed by ``autoBroadcastJoinThreshold``,
-    so there is no silent automatic fallback.  If a fleet's combined
-    benchmark set outgrows memory, pass ``False`` for the shuffle-join
-    plan; results are identical (``test_contamination_shuffle_fallback``).
+    The benchmark side is broadcast by an explicit hint (eval suites are
+    MBs), and a hint is not governed by ``autoBroadcastJoinThreshold``:
+    the join stays a broadcast whatever the threshold says
+    (``test_contamination_broadcast_is_a_hint``).
     """
     corpus_sh = shingle_rows(corpus, text=text, doc_id=doc_id, n=n).select(
         F.col(doc_id), F.md5(F.col("shingle")).alias("gram")
@@ -69,9 +66,7 @@ def ngram_contamination(
     bench_g = bench_sh.groupBy("gram").agg(
         F.collect_set("bench_doc_id").alias("__bdocs")
     )
-    if broadcast_benchmark:
-        bench_g = F.broadcast(bench_g)
-    tagged = corpus_sh.join(bench_g, "gram", "left")
+    tagged = corpus_sh.join(F.broadcast(bench_g), "gram", "left")
     return (
         tagged.groupBy(doc_id)
         .agg(
@@ -100,7 +95,6 @@ def contamination_spans(
     n: int = 8,
     text: str = "text",
     doc_id: str = "doc_id",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """The audit trail behind :func:`ngram_contamination`'s scores:
     one row per (corpus n-gram occurrence, implicated benchmark doc) —
@@ -119,7 +113,6 @@ def contamination_spans(
     inner join emits only the (rare by contract) hits — the corpus never
     shuffles and nothing aggregates.  ``pos_last`` is capped at the last
     token for the partial tail shingle of short documents.
-    ``broadcast_benchmark`` as in :func:`ngram_contamination`.
     """
     bench_g = (
         shingle_rows(benchmark, text=text, doc_id=doc_id, n=n)
@@ -131,8 +124,6 @@ def contamination_spans(
         .groupBy("gram")
         .agg(F.collect_set("bench_doc_id").alias("__bdocs"))
     )
-    if broadcast_benchmark:
-        bench_g = F.broadcast(bench_g)
     toks = corpus.select(F.col(doc_id), tokens(F.col(text)).alias("__toks"))
     # same indexing discipline as shingle_rows: get() is 0-based and NULL
     # out of range; concat_ws drops NULLs, producing the partial tail
@@ -152,7 +143,7 @@ def contamination_spans(
         F.col("__n_toks"),
         F.col("__s.pos").alias("__pos"),
         F.md5(F.col("__s.shingle")).alias("gram"),
-    ).join(bench_g, "gram", "inner")
+    ).join(F.broadcast(bench_g), "gram", "inner")
     return hits.select(
         F.col(doc_id),
         F.explode("__bdocs").alias("bench_doc_id"),

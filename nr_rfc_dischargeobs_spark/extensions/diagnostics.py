@@ -3,8 +3,9 @@
 Two questions every fleet job answers before it burns a cluster:
 
 - "Will this join/groupBy key skew?"  (:func:`skew_profile` — decides
-  whether the salted-join path, AQE skew hints, or per-key caps are
-  needed BEFORE the 4-hour straggler teaches the lesson.)
+  whether AQE's skew split is enough or a hot key needs a salt
+  (``similarity.semantic_dedup(salt=)``) or a per-key cap, BEFORE the
+  4-hour straggler teaches the lesson.)
 - "Did the corpus drift since the last snapshot?"  (:func:`psi_drift` —
   Population Stability Index over a fixed bin grid, the standard
   monitoring statistic for distribution shift between two snapshots /
@@ -35,7 +36,7 @@ def skew_profile(
 ) -> DataFrame:
     """Key-frequency skew report: the ``top`` heaviest keys with the
     corpus-level ratios that decide whether a join on ``key`` needs
-    salting.
+    more than AQE's skew split.
 
     Columns: (key, cnt, share, n_rows, n_keys, mean_cnt, skew_ratio) —
     ``skew_ratio`` is max-key count over mean-key count: ~1 means

@@ -398,7 +398,7 @@ def cluster_balanced_sample(
 
 def dsir_log_ratio(
     docs: DataFrame,
-    target_docs: DataFrame,
+    target_docs: DataFrame | None,
     raw_docs: DataFrame | None = None,
     n_buckets: int = 4096,
     alpha_inv: int = 100,
@@ -452,18 +452,22 @@ def dsir_log_ratio(
     source column stands in for the target" setup), pass the predicate
     and BOTH count tables ride ONE tokenize + explode + aggregate over
     ``raw`` — ``cr = count(*)``, ``ct = count_if(pred)`` on the same
-    bucket key — deleting a full corpus tokenization pass.  The caller
-    must guarantee ``target_docs ≡ raw.filter(target_pred)`` row-for-row
-    (``target_docs`` is ignored on this path); buckets with ``ct = 0``
-    are dropped from the target table, so both tables carry exactly the
-    rows the two-aggregation plan produced and every downstream value is
-    bit-identical (pinned in tests/test_r14_pins.py).
+    bucket key — deleting a full corpus tokenization pass.  The
+    predicate takes the place of ``target_docs``: pass ``None`` there,
+    and the target model is ``raw.filter(target_pred)``.  Passing both,
+    or neither, raises ``ValueError``.  Buckets with ``ct = 0`` are
+    dropped from the target table, so both tables carry exactly the rows
+    the two-aggregation plan produced for ``raw.filter(target_pred)``
+    and every downstream value is bit-identical (pinned in
+    tests/test_r14_pins.py).
     """
     from . import text as _t  # circular-safe: text never imports dsir
     from .text import _bigram_structs, _check_n_buckets, bigram_lm_counts
 
     SCALE = 1 << 20
     _check_n_buckets(n_buckets)
+    if (target_docs is None) == (target_pred is None):
+        raise ValueError("pass exactly one of target_docs and target_pred")
     if alpha_inv < 1:
         raise ValueError(f"alpha_inv must be >= 1, got {alpha_inv}")
     raw = raw_docs if raw_docs is not None else docs
@@ -575,7 +579,7 @@ def dsir_log_ratio(
 
 def dsir_resample(
     docs: DataFrame,
-    target_docs: DataFrame,
+    target_docs: DataFrame | None,
     k: int,
     raw_docs: DataFrame | None = None,
     n_buckets: int = 4096,
@@ -604,7 +608,8 @@ def dsir_resample(
     perturbed key.
 
     ``target_pred`` forwards to :func:`dsir_log_ratio`'s fused-counts
-    fast path (one corpus tokenization for both models; see there).
+    fast path (one corpus tokenization for both models; see there) and
+    takes the place of ``target_docs``, which must then be ``None``.
     """
     import math
 

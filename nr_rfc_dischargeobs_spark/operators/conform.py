@@ -1,5 +1,5 @@
 """Conform-stage operators: time-grid rounding, deterministic dedup, unit
-conversion, timezone normalization.
+conversion.
 
 Reference semantics being reproduced (citations into /root/reference):
 - 5-minute grid rounding of WSC timestamps: ``discharge_obs_pd.py:143``
@@ -10,7 +10,9 @@ Reference semantics being reproduced (citations into /root/reference):
 - keep-first dedup on (station, timestamp): ``discharge_obs_pd.py:70-71,109,150``.
 - unit conversions cfs→m³/s (÷35.3147) and ft→m (÷3.28084) with 3-decimal
   rounding: ``discharge_obs_pd.py:63-65``.
-- tz-aware → naive local time: ``discharge_obs_pd.py:66-67,99,141``.
+
+The tz-aware → naive local time step (``discharge_obs_pd.py:66-67,99,141``)
+is one ``F.from_utc_timestamp`` inside each conformer (``sources/``).
 """
 
 from __future__ import annotations
@@ -54,7 +56,6 @@ def dedup_keep_first(
     df: DataFrame,
     keys: list[str],
     order_col: str,
-    keep_order_col: bool = True,
     tie_break: tuple[str, ...] = (),
 ) -> DataFrame:
     """Keep exactly one row per key — the first by ``order_col``, ties
@@ -63,7 +64,9 @@ def dedup_keep_first(
     can repeat within a key (e.g. the conformers order by the raw
     timestamp string, which is CONSTANT within a (station, slot) group
     — without a tie-break the survivor is partition-order-dependent and
-    the canonical store nondeterministic across runs).
+    the canonical store nondeterministic across runs).  Every input
+    column survives, ``order_col`` included: ``dedup_5min_grid`` returns
+    the kept ``event_id``, and the conformers drop their own order column.
 
     The reference relies on pandas file order (``drop_duplicates(keep='first')``,
     ``discharge_obs_pd.py:150``); Spark's ``dropDuplicates`` keeps an
@@ -78,28 +81,19 @@ def dedup_keep_first(
     is arbitrary, acceptable for at-least-once upstream feeds).
     """
     if df.isStreaming:
-        out = df.dropDuplicates(keys)
-        return out if keep_order_col else out.drop(order_col)
+        return df.dropDuplicates(keys)
     w = Window.partitionBy(*keys).orderBy(
         F.col(order_col).asc(),
         *[F.col(c).asc_nulls_last() for c in tie_break],
     )
-    out = (
+    return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    return out if keep_order_col else out.drop(order_col)
 
 
 def convert_units(value: Column, divisor: float, decimals: int = 3) -> Column:
     """Unit conversion + fixed rounding (``discharge_obs_pd.py:63-65``)."""
     return F.round(value / divisor, decimals)
-
-
-def utc_to_local_naive(ts: Column, tz: str = "America/Vancouver") -> Column:
-    """UTC → local wall-clock with the zone dropped, matching the
-    reference's ``tz_convert(...).tz_localize(None)`` pattern
-    (``discharge_obs_pd.py:66-67,99``)."""
-    return F.from_utc_timestamp(ts, tz)
 

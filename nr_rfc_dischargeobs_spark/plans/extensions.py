@@ -2334,9 +2334,7 @@ def sample_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: target ≡ raw.filter(pred) here, so both hashed-bigram models
     # ride ONE corpus tokenization (dsir_log_ratio target_pred fast path)
     return sampling.dsir_log_ratio(
-        docs,
-        docs.filter(F.col("doc_id") % 10 == 0),
-        target_pred=F.col("doc_id") % 10 == 0,
+        docs, None, target_pred=F.col("doc_id") % 10 == 0
     )
 
 
@@ -2347,10 +2345,7 @@ def sample_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # r14: same fused-counts fast path as sample_dsir_weights
     return sampling.dsir_resample(
-        docs,
-        docs.filter(F.col("doc_id") % 10 == 0),
-        k=25,
-        target_pred=F.col("doc_id") % 10 == 0,
+        docs, None, k=25, target_pred=F.col("doc_id") % 10 == 0
     )
 
 

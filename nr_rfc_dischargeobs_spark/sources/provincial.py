@@ -25,14 +25,12 @@ def conform_provincial(
     window_start: Column | None = None,
     window_end: Column | None = None,
     tz: str = "America/Vancouver",
-    order_col: str | None = None,
 ) -> DataFrame:
     """F2 → F7 for one file (datatype 'Q' for Discharge.csv, 'H' for
     Stage.csv).  ``station_dim`` is F5 (ID provincial, ID2 RFC alias)."""
     ts = F.from_utc_timestamp(
         F.to_timestamp(F.trim(F.col("datetime_utc"))), tz
     )
-    order = order_col or "datetime_utc"
     conformed = (
         raw.join(
             F.broadcast(
@@ -48,7 +46,7 @@ def conform_provincial(
             "station_id",
             ts.alias("obs_time"),
             F.col("value"),
-            F.col(order).alias("__order"),
+            F.col("datetime_utc").alias("__order"),
         )
     )
     if window_start is not None:

@@ -23,10 +23,8 @@ def conform_usgs(
     raw: DataFrame,
     station_dim: DataFrame | None = None,
     tz: str = "US/Pacific",
-    order_col: str | None = None,
 ) -> DataFrame:
     """F3 → F7 (two long rows per input row: datatype 'Q' and 'H')."""
-    order = order_col or "datetime"
     base = raw.select(
         F.col("site_no"),
         F.from_utc_timestamp(F.col("datetime"), tz).alias("obs_time"),
@@ -34,7 +32,7 @@ def conform_usgs(
             F.col("discharge_cfs"), conform.CFS_TO_CMS
         ).alias("Q"),
         conform.convert_units(F.col("stage_ft"), conform.FT_TO_M).alias("H"),
-        F.col(order).alias("__order"),
+        F.col("datetime").alias("__order"),
     )
     if station_dim is not None:
         dim = station_dim.select(

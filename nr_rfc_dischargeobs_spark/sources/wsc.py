@@ -5,10 +5,12 @@ columns).  Steps, preserving reference semantics:
 
 1. parse the offset timestamp → instant, render as local naive
    (``:141`` strips tz after parse; tz configurable, default PST);
-2. round to the 5-minute grid (``:143``, half-up like pandas ``dt.round``);
+2. round to the 5-minute grid (``:143``, half-to-even like pandas
+   ``dt.round``);
 3. melt stage/discharge into long (datatype 'H'/'Q') — the reference pivots
    each to wide instead; long is this engine's canonical layout;
-4. keep-first dedup per (station, slot, datatype) by file order (``:150``).
+4. keep-first dedup per (station, slot, datatype) (``:150``), ordered by
+   the ``Date`` string with a value tie-break.
 
 The whole conformer is generated expressions — it fuses into the scan.
 """
@@ -25,14 +27,11 @@ WSC_TZ = "America/Vancouver"
 
 def conform_wsc(
     raw: DataFrame,
-    order_col: str | None = None,
     tz: str = WSC_TZ,
     grid_seconds: int = 300,
 ) -> DataFrame:
-    """F1 → F7.  ``order_col``: monotonic ingest-order column for
-    deterministic keep-first dedup; when None, uses the timestamp string
-    itself (stable for identical inputs)."""
-    order = order_col or "Date"
+    """F1 → F7.  Keep-first dedup orders by the ``Date`` string itself
+    (stable for identical inputs), ties broken by value."""
     # offset timestamps parse to UTC instants under the engine's UTC
     # session tz; from_utc_timestamp renders local wall-clock, tz dropped
     ts = F.from_utc_timestamp(
@@ -43,7 +42,7 @@ def conform_wsc(
         conform.round_to_grid(ts, grid_seconds).alias("obs_time"),
         F.col("water_level_m").alias("H"),
         F.col("discharge_cms").alias("Q"),
-        F.col(order).alias("__order"),
+        F.col("Date").alias("__order"),
     )
     long_ = slotted.unpivot(
         ["station_id", "obs_time", "__order"], ["Q", "H"], "datatype", "value"

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
 from nr_rfc_dischargeobs_spark.operators import (
@@ -227,25 +226,6 @@ def test_rising_falling_alias_semantics_differ_from_copy(spark):
     assert recurrence.rising_falling_python(maxs, lasts) == [10.0, 7.0, 8.5]
 
 
-def test_salted_join_equals_plain_join(spark):
-    from nr_rfc_dischargeobs_spark.operators.skew import salted_join
-
-    # one hot key (k=1 carries 200 rows), one cold
-    big = spark.createDataFrame(
-        [(1, i) for i in range(200)] + [(2, 900), (3, 901)], ["k", "row_id"]
-    )
-    small = spark.createDataFrame([(1, "hot"), (2, "cold")], ["k", "label"])
-    got = sorted(
-        (r["k"], r["row_id"], r["label"])
-        for r in salted_join(big, small, ["k"], "row_id", salts=8).collect()
-    )
-    want = sorted(
-        (r["k"], r["row_id"], r["label"])
-        for r in big.join(small, "k").collect()
-    )
-    assert got == want and len(got) == 201
-
-
 def test_rising_falling_randomized_matches_python_port(spark):
     """Property-style sweep: random walks with NaN holes across many
     stations must match the straight-Python port of the reference loop
@@ -295,134 +275,3 @@ def test_rising_falling_randomized_matches_python_port(spark):
             a_nan = a is None or (isinstance(a, float) and math.isnan(a))
             b_nan = b is None or (isinstance(b, float) and math.isnan(b))
             assert both_nan or (a_nan and b_nan) or a == b, (sid, vals, expect)
-
-
-def test_salted_join_rejects_right_and_full_outer(spark):
-    """Review regression: an unmatched small-side key would surface once
-    per salt replica under right/full outer — the contract violation is
-    now a loud error."""
-    from nr_rfc_dischargeobs_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame([(1, 10)], ["k", "row_id"])
-    small = spark.createDataFrame([(2, "x")], ["k", "v"])
-    for how in ("right", "full_outer", "outer"):
-        with pytest.raises(ValueError, match="salted_join cannot"):
-            salted_join(big, small, ["k"], "row_id", how=how)
-    # left outer stays fine: only big-side rows surface unmatched
-    got = salted_join(big, small, ["k"], "row_id", how="left").collect()
-    assert len(got) == 1 and got[0]["v"] is None
-
-
-def test_salted_join_auto_sizes_from_measured_skew(spark):
-    """salts='auto' must pick the SAME S a profiling engineer would read
-    off skew_profile (ceil of max/mean), and the result must stay
-    row-identical to the plain join."""
-    import math as _math
-
-    from nr_rfc_dischargeobs_spark.operators.skew import (
-        choose_salts,
-        salted_join,
-    )
-
-    # planted hot key: k=1 carries 200 rows, 50 cold keys carry 1 each
-    big = spark.createDataFrame(
-        [(1, i) for i in range(200)] + [(k, 900 + k) for k in range(2, 52)],
-        ["k", "row_id"],
-    )
-    small = spark.createDataFrame(
-        [(k, f"v{k}") for k in range(1, 52)], ["k", "label"]
-    )
-    # manual choice from the profile: ratio = max_cnt·n_keys/n_rows
-    ratio = 200 * 51 / 250
-    assert choose_salts(big, ["k"]) == _math.ceil(ratio) == 41
-    auto = sorted(
-        (r["k"], r["row_id"], r["label"])
-        for r in salted_join(big, small, ["k"], "row_id", salts="auto").collect()
-    )
-    manual = sorted(
-        (r["k"], r["row_id"], r["label"])
-        for r in salted_join(big, small, ["k"], "row_id", salts=41).collect()
-    )
-    plain = sorted(
-        (r["k"], r["row_id"], r["label"])
-        for r in big.join(small, "k").collect()
-    )
-    assert auto == manual == plain and len(plain) == 250
-
-
-def test_salted_join_auto_uniform_key_skips_salting(spark):
-    """Uniform keys (ratio ~1 <= threshold) must measure S=1 and take the
-    plain-join path — no salt column, no small-side replication."""
-    from nr_rfc_dischargeobs_spark.operators.skew import (
-        choose_salts,
-        salted_join,
-    )
-
-    big = spark.createDataFrame(
-        [(k, 10 * k + i) for k in range(50) for i in range(4)],
-        ["k", "row_id"],
-    )
-    small = spark.createDataFrame([(k, f"v{k}") for k in range(50)], ["k", "v"])
-    assert choose_salts(big, ["k"]) == 1
-    auto = salted_join(big, small, ["k"], "row_id", salts="auto")
-    # S=1 short-circuits to the plain join: no salt expression in the plan
-    assert "pmod" not in auto._jdf.queryExecution().optimizedPlan().toString()
-    assert sorted(map(tuple, auto.collect())) == sorted(
-        map(tuple, big.join(small, "k").collect())
-    )
-
-
-def test_salted_join_salts_validation_and_empty_big(spark):
-    from nr_rfc_dischargeobs_spark.operators.skew import (
-        choose_salts,
-        salted_join,
-    )
-
-    big = spark.createDataFrame([(1, 10)], ["k", "row_id"])
-    small = spark.createDataFrame([(1, "x")], ["k", "v"])
-    for bad in (0, -3, "sixteen", 2.5):
-        with pytest.raises(ValueError, match="salts"):
-            salted_join(big, small, ["k"], "row_id", salts=bad)
-    # empty big side: nothing to profile -> S=1, result stays empty
-    empty = big.filter("k < 0")
-    assert choose_salts(empty, ["k"]) == 1
-    assert salted_join(empty, small, ["k"], "row_id", salts="auto").count() == 0
-
-
-def test_choose_salts_low_cardinality_uniform_key_restores_parallelism(
-    spark,
-):
-    """Review-fix pin: a PERFECTLY UNIFORM key over few distinct values
-    (ratio ~1, so the skew trigger is silent) still concentrates the
-    table on n_keys tasks — the concurrency trigger sizes salts to
-    ceil(partitions / n_keys) once the average key carries a
-    bucket worth splitting."""
-    import math as _math
-
-    from nr_rfc_dischargeobs_spark.operators.skew import (
-        choose_salts,
-        salted_join,
-    )
-
-    # 4 keys × 50 rows — uniform; threshold floor lowered so the unit
-    # test exercises the trigger without a million-row fixture
-    big = spark.createDataFrame(
-        [(k, 100 * k + i) for k in range(4) for i in range(50)],
-        ["k", "row_id"],
-    )
-    small = spark.createDataFrame([(k, f"v{k}") for k in range(4)], ["k", "v"])
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    want = _math.ceil(parts / 4)
-    assert choose_salts(big, ["k"], min_rows_per_key=10) == min(64, want)
-    # default floor (1M rows/key): 50-row keys are not worth splitting
-    assert choose_salts(big, ["k"]) == 1
-    # values unchanged under the concurrency-sized salted join
-    got = sorted(
-        map(
-            tuple,
-            salted_join(
-                big, small, ["k"], "row_id", salts=min(64, want)
-            ).collect(),
-        )
-    )
-    assert got == sorted(map(tuple, big.join(small, "k").collect()))

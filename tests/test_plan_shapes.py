@@ -141,12 +141,11 @@ def test_top_terms_shuffle_fallback_same_values(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_contamination_shuffle_fallback_same_values(spark):
-    """The contamination operators' broadcast is an explicit HINT (not
-    governed by the threshold), so the escape hatch is the
-    broadcast_benchmark flag: the shuffle-join plan must appear and the
-    results must be identical — both for the count query and the spans
-    audit trail."""
+def test_contamination_broadcast_is_a_hint(spark):
+    """The contamination operators broadcast the benchmark side by an
+    explicit HINT: with ``autoBroadcastJoinThreshold`` off, both the
+    count query and the spans audit trail still plan a broadcast join,
+    so the hint, not the threshold, picks the join."""
     from nr_rfc_dischargeobs_spark.extensions import contamination
     from nr_rfc_dischargeobs_spark.plans import load
 
@@ -157,18 +156,15 @@ def test_contamination_shuffle_fallback_same_values(spark):
         docs.filter(F.col("doc_id") < 25),
     )
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    # threshold off too, so AQE can't silently re-broadcast the small side
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         for op in (
             contamination.ngram_contamination,
             contamination.contamination_spans,
         ):
-            hinted = op(corpus, bench, n=4)
-            fallback = op(corpus, bench, n=4, broadcast_benchmark=False)
-            assert "BroadcastHashJoin" in _formatted(hinted)
-            assert "SortMergeJoin" in _formatted(fallback)
-            assert _hash_rows(fallback) == _hash_rows(hinted)
+            plan = _formatted(op(corpus, bench, n=4))
+            assert "BroadcastHashJoin" in plan, op.__name__
+            assert "SortMergeJoin" not in plan, op.__name__
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

@@ -199,7 +199,7 @@ def test_dsir_target_pred_parity(corpus):
         map(
             tuple,
             sampling.dsir_log_ratio(
-                corpus, target, target_pred=pred
+                corpus, None, target_pred=pred
             ).collect(),
         )
     )
@@ -211,11 +211,30 @@ def test_dsir_target_pred_parity(corpus):
         map(
             tuple,
             sampling.dsir_resample(
-                corpus, target, k=3, target_pred=pred
+                corpus, None, k=3, target_pred=pred
             ).collect(),
         )
     )
     assert fused_s == plain_s
+
+
+def test_dsir_target_docs_and_target_pred_are_exclusive(corpus):
+    """The predicate replaces the target frame: passing both (one would
+    be silently ignored) or neither is an input error, for the weights
+    and the resample surfaces."""
+    from nr_rfc_dischargeobs_spark.extensions import sampling
+
+    pred = F.col("doc_id") % 2 == 0
+    target = corpus.filter(pred)
+    for target_docs, target_pred in ((target, pred), (None, None)):
+        with pytest.raises(ValueError, match="exactly one"):
+            sampling.dsir_log_ratio(
+                corpus, target_docs, target_pred=target_pred
+            )
+        with pytest.raises(ValueError, match="exactly one"):
+            sampling.dsir_resample(
+                corpus, target_docs, k=3, target_pred=target_pred
+            )
 
 
 def test_curate_rule_gate_matches_quality_scores(corpus):

@@ -106,7 +106,7 @@ def test_semantic_dedup_salt_is_output_invariant(spark):
         assert salted == base, f"salt={s} changed the output"
 
 
-def test_semantic_dedup_salted_join_keys_on_cluster_and_salt(spark):
+def test_semantic_dedup_salt_keys_the_pair_join(spark):
     # plan guard: with salt > 1 the pair join is still a pure EQUALITY
     # join whose key includes the salt column — a hot cluster's b-side
     # spreads across S hash partitions instead of landing on one task

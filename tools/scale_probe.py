@@ -24,6 +24,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from py4j.protocol import Py4JJavaError  # noqa: E402
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from nr_rfc_dischargeobs_spark.session import (  # noqa: E402
@@ -40,6 +41,24 @@ def force(df: DataFrame) -> int:
     ).collect()[0].n
 
 
+def error_line(ex: BaseException) -> str:
+    """The one line a probe row records for a failure: its cause.
+
+    A Py4J failure's own first line is only the ``An error occurred
+    while calling oNNN.collectToPython.`` preamble, so for a
+    ``Py4JJavaError`` this is the first line of the Java exception;
+    otherwise the first line that is not that preamble."""
+    if isinstance(ex, Py4JJavaError):
+        text = str(ex.java_exception.toString())
+    else:
+        text = str(ex)
+    lines = [
+        ln for ln in text.splitlines()
+        if ln.strip() and not ln.startswith("An error occurred while calling")
+    ]
+    return (lines[0] if lines else repr(ex))[:200]
+
+
 def timed(results: dict, name: str, df: DataFrame) -> None:
     t0 = time.time()
     try:
@@ -50,7 +69,7 @@ def timed(results: dict, name: str, df: DataFrame) -> None:
         # record the failure and keep sweeping
         results[name] = {
             "sec": round(time.time() - t0, 1),
-            "error": str(ex).splitlines()[0][:200],
+            "error": error_line(ex),
         }
         print(f"  FAILED  {name}: {results[name]['error'][:120]}",
               file=sys.stderr)
@@ -79,7 +98,7 @@ def recall_row(t: dict, key: str, exact: DataFrame, found) -> None:
     except Exception as ex:  # noqa: BLE001 — record and keep sweeping
         t[key] = {
             "sec": round(time.time() - t0, 1),
-            "error": str(ex).splitlines()[0][:200],
+            "error": error_line(ex),
         }
         print(f"  FAILED  {key}: {t[key]['error'][:120]}", file=sys.stderr)
         return
@@ -320,8 +339,9 @@ def rotation_recall_tier(spark, t: dict, n: int) -> None:
                   f"{t[key]['mean_recall_at_10']}  {key}", file=sys.stderr)
             codes.unpersist()
     except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["rotation_tier_error"] = str(ex).splitlines()[0][:200]
-        print(f"  FAILED  rotation tier: {str(ex)[:120]}", file=sys.stderr)
+        t["rotation_tier_error"] = error_line(ex)
+        print(f"  FAILED  rotation tier: {t['rotation_tier_error']}",
+              file=sys.stderr)
     finally:
         for df in held:
             df.unpersist()
@@ -554,8 +574,9 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
             exact10.unpersist()
             prep_r.unpersist()
     except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["ann_recall_tier_error"] = str(ex).splitlines()[0][:200]
-        print(f"  FAILED  ann_recall tier: {str(ex)[:120]}", file=sys.stderr)
+        t["ann_recall_tier_error"] = error_line(ex)
+        print(f"  FAILED  ann_recall tier: {t['ann_recall_tier_error']}",
+              file=sys.stderr)
     finally:
         # unpersist in FINALLY: an exception above would otherwise leak
         # ~1M-row cached blocks into the disk-headroom-sensitive curation
@@ -599,7 +620,7 @@ def r10_extras_tier(spark, t: dict, docs_n: int, vecs_n: int) -> None:
     except Exception as ex:  # noqa: BLE001 — same contract as timed()
         t["cc_star_chain_100k"] = {
             "sec": round(time.time() - t0, 1),
-            "error": str(ex).splitlines()[0][:200],
+            "error": error_line(ex),
         }
         print(f"  FAILED  cc_star_chain_100k: "
               f"{t['cc_star_chain_100k']['error'][:120]}", file=sys.stderr)
@@ -737,8 +758,9 @@ def r11_tier(spark, t: dict, n: int) -> None:
             print(f"  {t[key]['sec']:7.1f} s  recall@10 "
                   f"{t[key]['mean_recall_at_10']}  {key}", file=sys.stderr)
     except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["r11_rotation_error"] = str(ex).splitlines()[0][:200]
-        print(f"  FAILED  r11 rotation: {str(ex)[:120]}", file=sys.stderr)
+        t["r11_rotation_error"] = error_line(ex)
+        print(f"  FAILED  r11 rotation: {t['r11_rotation_error']}",
+              file=sys.stderr)
     finally:
         for df in held:
             df.unpersist()
@@ -795,8 +817,9 @@ def r11_tier(spark, t: dict, n: int) -> None:
             print(f"  {t[key]['sec']:7.1f} s  recall@10 "
                   f"{t[key]['mean_recall_at_10']}  {key}", file=sys.stderr)
     except Exception as ex:  # noqa: BLE001
-        t["r11_filtered_error"] = str(ex).splitlines()[0][:200]
-        print(f"  FAILED  r11 filtered: {str(ex)[:120]}", file=sys.stderr)
+        t["r11_filtered_error"] = error_line(ex)
+        print(f"  FAILED  r11 filtered: {t['r11_filtered_error']}",
+              file=sys.stderr)
     finally:
         for df in held:
             df.unpersist()
@@ -891,8 +914,9 @@ def r11_tier(spark, t: dict, n: int) -> None:
 
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)
     except Exception as ex:  # noqa: BLE001
-        t["r11_rebalance_error"] = str(ex).splitlines()[0][:200]
-        print(f"  FAILED  r11 rebalance: {str(ex)[:120]}", file=sys.stderr)
+        t["r11_rebalance_error"] = error_line(ex)
+        print(f"  FAILED  r11 rebalance: {t['r11_rebalance_error']}",
+              file=sys.stderr)
     finally:
         for df in held:
             df.unpersist()
@@ -1051,8 +1075,9 @@ def r12_tier(spark, t: dict, n: int) -> None:
               f"  seg_search_tombstoned_recall10_np8", file=sys.stderr)
         shutil.rmtree(root, ignore_errors=True)
     except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["r12_segments_error"] = str(ex).splitlines()[0][:200]
-        print(f"  FAILED  r12 segments: {str(ex)[:120]}", file=sys.stderr)
+        t["r12_segments_error"] = error_line(ex)
+        print(f"  FAILED  r12 segments: {t['r12_segments_error']}",
+              file=sys.stderr)
     finally:
         for df in held:
             df.unpersist()
@@ -1146,8 +1171,9 @@ def r12_adaptive_tier(spark, t: dict, n: int) -> None:
                       f"{t[key]['mean_recall_at_10']}  {key}",
                       file=sys.stderr)
     except Exception as ex:  # noqa: BLE001
-        t["r12_adaptive_error"] = str(ex).splitlines()[0][:200]
-        print(f"  FAILED  r12 adaptive: {str(ex)[:120]}", file=sys.stderr)
+        t["r12_adaptive_error"] = error_line(ex)
+        print(f"  FAILED  r12 adaptive: {t['r12_adaptive_error']}",
+              file=sys.stderr)
     finally:
         for df in held:
             df.unpersist()
@@ -1333,8 +1359,9 @@ def r13_tier(spark, t: dict, n: int) -> None:
             )
         shutil.rmtree(root, ignore_errors=True)
     except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["r13_lifecycle_error"] = str(ex).splitlines()[0][:200]
-        print(f"  FAILED  r13 lifecycle: {str(ex)[:160]}", file=sys.stderr)
+        t["r13_lifecycle_error"] = error_line(ex)
+        print(f"  FAILED  r13 lifecycle: {t['r13_lifecycle_error']}",
+              file=sys.stderr)
     finally:
         for df in held:
             df.unpersist()
@@ -1415,8 +1442,9 @@ def r13_budget_tier(spark, t: dict, n: int) -> None:
                  nprobe=1, target_candidates=target)
         shutil.rmtree(root, ignore_errors=True)
     except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["r13_budget_error"] = str(ex).splitlines()[0][:200]
-        print(f"  FAILED  r13 budget: {str(ex)[:160]}", file=sys.stderr)
+        t["r13_budget_error"] = error_line(ex)
+        print(f"  FAILED  r13 budget: {t['r13_budget_error']}",
+              file=sys.stderr)
     finally:
         for df in held:
             df.unpersist()
@@ -1544,8 +1572,9 @@ def r13_range_tier(spark, t: dict, n: int) -> None:
               f"rng_seg_range_np8 (rows={n_seg})", file=sys.stderr)
         shutil.rmtree(root, ignore_errors=True)
     except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["r13_range_error"] = str(ex).splitlines()[0][:200]
-        print(f"  FAILED  r13 range: {str(ex)[:160]}", file=sys.stderr)
+        t["r13_range_error"] = error_line(ex)
+        print(f"  FAILED  r13 range: {t['r13_range_error']}",
+              file=sys.stderr)
     finally:
         for df in held:
             df.unpersist()
@@ -1604,8 +1633,9 @@ def sq8_tier(spark, t: dict, n: int) -> None:
         print(f"  {t['sq8_search_flat']['sec']:7.1f} s  recall@10 {r}"
               f"  sq8_search_flat", file=sys.stderr)
     except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["sq8_error"] = str(ex).splitlines()[0][:200]
-        print(f"  FAILED  sq8: {str(ex)[:160]}", file=sys.stderr)
+        t["sq8_error"] = error_line(ex)
+        print(f"  FAILED  sq8: {t['sq8_error']}",
+              file=sys.stderr)
     finally:
         for df in held:
             df.unpersist()
@@ -2137,8 +2167,9 @@ def main() -> int:
         if not t["ep1_stream_upsert_10m"]["matches_batch"]:
             print("  !! EP1 stream/batch store MISMATCH", file=sys.stderr)
     except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["ep1_stream_tier_error"] = str(ex).splitlines()[0][:200]
-        print(f"  FAILED  ep1 stream tier: {str(ex)[:120]}", file=sys.stderr)
+        t["ep1_stream_tier_error"] = error_line(ex)
+        print(f"  FAILED  ep1 stream tier: {t['ep1_stream_tier_error']}",
+              file=sys.stderr)
     finally:
         shutil.rmtree(ep1_root, ignore_errors=True)
 
