@@ -56,11 +56,12 @@ _ROTATED_VERSION = 2
 
 def _check_rotation(rotation: dict | None) -> dict | None:
     """Validate a rotation spec: ``mode`` is ``"pre"`` (a trained float
-    model — :func:`~.similarity.pca_rotation` / ``opq_train`` output,
-    applied to raw embeddings via ``pca_project`` BEFORE quantization)
-    or ``"post_int"`` (an all-integer matrix — e.g.
-    :func:`~.similarity.hadamard_rows` — applied to the quantized
-    vectors via ``rotate_quantized``; exact, hence oracle-checkable).
+    model — :func:`~.similarity.pca_rotation` /
+    :func:`~.similarity.opq_allocate` output, applied to raw embeddings
+    via ``pca_project`` BEFORE quantization) or ``"post_int"`` (an
+    all-integer matrix — e.g. :func:`~.similarity.hadamard_rows` —
+    applied to the quantized vectors via ``rotate_quantized``; exact,
+    hence oracle-checkable).
     Returns a plain-JSON-normalized copy."""
     if rotation is None:
         return None
@@ -932,7 +933,7 @@ def rebalance_ivfadc(
        farthest_first_seeds` + the scan-local
        :func:`~.similarity.kmeans_lite`, the settled production recipe;
        the list count picks the assignment kernel).
-       The sample follows the ``opq_train`` bounded-sample discipline:
+       The sample is a bounded deterministic cut:
        a ceil'd hash-mod prefilter bounds the survivors to
        ~``sample_limit`` rows under ANY corpus size, then a
        hash-ordered limit makes the cut exact and deterministic under
@@ -1001,7 +1002,7 @@ def rebalance_ivfadc(
     if skew <= threshold:
         return report
 
-    # opq_train's deterministic bounded cut (similarity.py): the hash
+    # a deterministic bounded cut: the hash
     # prefilter bounds the sort input to ~sample_limit rows, the
     # hash-ordered limit makes the cap exact and partition-order-proof;
     # the repartition restores parallelism for the Lloyd iterations

@@ -205,26 +205,6 @@ def bpe_segment_vocab(
     )
 
 
-def segment_tokens(
-    tokens: DataFrame,
-    merges: list[tuple[str, str]],
-    token: str = "token",
-) -> DataFrame:
-    """Apply an ALREADY-LEARNED merge list to a token column — the
-    inference half (scan-local replace chain, no training jobs).
-    ``merges`` is [(left_sym, right_sym), ...] in rank order."""
-    syms = F.regexp_replace(F.col(token), "(.)", "<$1>")
-    for a, b in merges:
-        syms = F.replace(syms, F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>"))
-    staged = tokens.withColumn("__bpe_syms", syms)
-    sy = F.split(F.expr("trim(BOTH '<>' FROM __bpe_syms)"), "><")
-    return staged.select(
-        *tokens.columns,
-        F.size(sy).alias("n_subwords"),
-        F.array_join(sy, " ").alias("segmentation"),
-    )
-
-
 def _stage_sql(i: int) -> str:
     """One unrolled iteration: pair counts over s{i-1}, deterministic
     argmax, merge applied by the same boundary-exact replace.  The

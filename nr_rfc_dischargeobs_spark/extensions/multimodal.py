@@ -17,13 +17,11 @@ byte-statistics over the payload, exactly reproducible by a DuckDB twin
 with hex/substr blob arithmetic — so the whole mapInPandas stage is
 value-hash-oracled end to end, not just rows-counted.  ``mode="real"``
 raises ``NotImplementedError`` at the exact call site a codec belongs —
-EXCEPT for the pure formats: :func:`decode_bmp` (round 11) really decodes
-uncompressed 24-bit BMP with plain byte arithmetic (header parse, row
-de-padding, bottom-up flip, BGR→RGB), and :func:`decode_png` (rounds
-12–13) really decodes gray/gray+alpha/RGB/palette/RGBA PNG at depths
-8 and 16, sequential or Adam7-interlaced, via the stdlib (chunk walk +
-CRC verify, ``zlib`` inflate, all five scanline-filter reversals, the
-§8.2 pass scatter) — both emit exact-integer image features, so the
+EXCEPT for the pure format: :func:`decode_png` (rounds 12–13) really
+decodes gray/gray+alpha/RGB/palette/RGBA PNG at depths 8 and 16,
+sequential or Adam7-interlaced, via the stdlib (chunk walk + CRC
+verify, ``zlib`` inflate, all five scanline-filter reversals, the §8.2
+pass scatter) — it emits exact-integer image features, so the
 real-decode tier is exercised end to end without any codec dependency;
 JPEG and MP4 stay honestly gated.
 """
@@ -136,8 +134,8 @@ def decode_features(blobs: DataFrame, mode: str = "bytes") -> DataFrame:
                 raise NotImplementedError(
                     "codec decode requires image/audio libraries not present "
                     "in this environment; plug PIL/librosa/av here (for "
-                    "uncompressed 24-bit BMP, decode_bmp is a real, "
-                    "dependency-free decoder)"
+                    "8/16-bit PNG, decode_png is a real, dependency-free "
+                    "decoder)"
                 )
             feats = [
                 byte_features(b"" if b is None else bytes(b))
@@ -211,117 +209,7 @@ def resize_dims(
 
 
 # ---------------------------------------------------------------------------
-# round 11: a REAL decoder for one pure format — BMP (uncompressed 24-bit)
-# ---------------------------------------------------------------------------
-
-BMP_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("mime", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("bmp_ok", LongType()),      # 1 decoded / 0 rejected
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_pixels", LongType()),
-        # channel means on a milli grid: (1000 * Σ channel) div n_pixels —
-        # exact integer arithmetic, reproducible by any engine
-        StructField("mean_r_milli", LongType()),
-        StructField("mean_g_milli", LongType()),
-        StructField("mean_b_milli", LongType()),
-    ]
-)
-
-
-def bmp_pixels(payload: bytes) -> np.ndarray | None:
-    """Decode an uncompressed 24-bit BMP (``BM`` + BITMAPINFOHEADER, the
-    format every paint tool exports) to an (h, w, 3) uint8 RGB array —
-    pure byte arithmetic, no codec library: little-endian header fields,
-    BGR channel order, rows padded to 4 bytes and stored bottom-up
-    (top-down when height is negative).  Returns ``None`` for anything
-    that is not exactly this format (wrong magic, compressed, other bit
-    depths, truncated pixel data) — the caller decides whether that is
-    an error or a skip.  This de-gates the ``mode="real"`` tier for one
-    deterministic format; PIL/av territory (JPEG/PNG/MP4) stays gated."""
-    if len(payload) < 54 or payload[:2] != b"BM":
-        return None
-    le = lambda lo, n: int.from_bytes(  # noqa: E731
-        payload[lo:lo + n], "little", signed=True
-    )
-    data_off = le(10, 4)
-    hdr_size = le(14, 4)
-    if hdr_size < 40:  # BITMAPCOREHEADER etc. — out of scope
-        return None
-    width, height = le(18, 4), le(22, 4)
-    planes, bpp, compression = le(26, 2), le(28, 2), le(30, 4)
-    if planes != 1 or bpp != 24 or compression != 0:
-        return None
-    if width <= 0 or height == 0 or data_off < 14 + hdr_size:
-        return None
-    top_down = height < 0
-    h = -height if top_down else height
-    row_bytes = (width * 3 + 3) & ~3  # 4-byte row alignment
-    need = data_off + row_bytes * h
-    if len(payload) < need or width * h > 50_000_000:  # 50MP sanity bound
-        return None
-    rows = np.frombuffer(
-        payload, dtype=np.uint8, count=row_bytes * h, offset=data_off
-    ).reshape(h, row_bytes)[:, : width * 3].reshape(h, width, 3)
-    if not top_down:
-        rows = rows[::-1]
-    return rows[:, :, ::-1]  # BGR -> RGB
-
-
-def decode_bmp(blobs: DataFrame) -> DataFrame:
-    """The de-gated real-decode stage for the one pure format:
-    Arrow-batched ``mapInPandas`` over (doc_id, blob, mime, n_bytes)
-    rows, decoding each payload with :func:`bmp_pixels` and emitting
-    exact-integer image features (dimensions + milli-grid channel
-    means).  Rejected payloads (NULL, truncated, non-BMP) emit
-    ``bmp_ok = 0`` with NULL features — fail-soft, one row per input,
-    so a mixed media table keeps every id (the ``decode_features``
-    contract).  Same batch shape and scale posture as the byte-feature
-    kernel: bytes move columnar, Python sees one worker per partition,
-    output is metadata-scale."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": pdf["doc_id"],
-                "mime": pdf["mime"],
-                "n_bytes": pdf["n_bytes"],
-                "bmp_ok": [],
-                "width": [],
-                "height": [],
-                "n_pixels": [],
-                "mean_r_milli": [],
-                "mean_g_milli": [],
-                "mean_b_milli": [],
-            }
-            for b in pdf["blob"]:
-                px = None if b is None else bmp_pixels(bytes(b))
-                if px is None:
-                    out["bmp_ok"].append(0)
-                    for k in ("width", "height", "n_pixels", "mean_r_milli",
-                              "mean_g_milli", "mean_b_milli"):
-                        out[k].append(None)
-                    continue
-                h, w, _ = px.shape
-                n = h * w
-                sums = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                out["bmp_ok"].append(1)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(n)
-                out["mean_r_milli"].append(int(1000 * sums[0]) // n)
-                out["mean_g_milli"].append(int(1000 * sums[1]) // n)
-                out["mean_b_milli"].append(int(1000 * sums[2]) // n)
-            yield pd.DataFrame(out)
-
-    return blobs.mapInPandas(run, schema=BMP_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# rounds 12-13: a second REAL decoder via the stdlib — PNG (all five
+# rounds 12-13: a REAL decoder via the stdlib — PNG (all five
 # color types at depths 8/16, sequential + Adam7).  zlib ships with
 # Python, so inflate + per-scanline filter reversal + the pass scatter
 # need no codec library; JPEG/MP4 stay honestly gated.
@@ -425,7 +313,8 @@ def png_pixels(payload: bytes) -> np.ndarray | None:
     ``None`` for anything outside these profiles (bad signature or
     CRC, sub-byte depths, 16-bit palette, palette
     without/overflowing PLTE, truncated or over-long inflate output)
-    — fail-soft like :func:`bmp_pixels`.
+    — fail-soft: the caller decides whether that is an error or a
+    skip.
 
     The filter reversal is sequential by construction (each byte
     depends on the reconstructed left neighbor), so this is a
@@ -467,7 +356,7 @@ def png_pixels(payload: bytes) -> np.ndarray | None:
         return None
     if color == 3 and depth != 8:
         return None  # the spec caps palette indices at 8 bits
-    if w == 0 or h == 0 or w * h > 50_000_000:  # same sanity bound as BMP
+    if w == 0 or h == 0 or w * h > 50_000_000:  # 50MP sanity bound
         return None
     if color == 3 and (plte is None or len(plte) % 3 or not plte):
         return None  # palette image without a usable PLTE
@@ -643,13 +532,13 @@ def decode_png(blobs: DataFrame) -> DataFrame:
     """Real PNG decode over binary payloads (gray / gray+alpha / RGB /
     palette / RGBA at depth 8; the non-palette types at depth 16 too;
     sequential or Adam7-interlaced layouts —
-    see :func:`png_pixels`) — the :func:`decode_bmp`
-    posture for the second pure format: Arrow-batched ``mapInPandas``
-    over (doc_id, blob, mime, n_bytes), each payload through
-    :func:`png_pixels`, exact-integer features out (dimensions,
-    channel count, byte sum, positional weighted sum over the decoded
-    row-major stream).  Rejected payloads emit ``png_ok = 0`` with
-    NULL features — fail-soft, one row per input."""
+    see :func:`png_pixels`) — the real-decode stage for the pure
+    format: Arrow-batched ``mapInPandas`` over (doc_id, blob, mime,
+    n_bytes), each payload through :func:`png_pixels`, exact-integer
+    features out (dimensions, channel count, byte sum, positional
+    weighted sum over the decoded row-major stream).  Rejected payloads
+    emit ``png_ok = 0`` with NULL features — fail-soft, one row per
+    input."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

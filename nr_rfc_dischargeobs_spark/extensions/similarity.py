@@ -1523,105 +1523,6 @@ def opq_allocate(model: dict, m: int) -> dict:
     }
 
 
-def opq_train(
-    emb: DataFrame,
-    dim: int,
-    m: int,
-    k: int,
-    sample_limit: int = 50_000,
-    iters: int = 8,
-    lloyd_iters: int = 2,
-    vec_id: str = "vec_id",
-    embedding: str = "embedding",
-) -> dict:
-    """Non-parametric OPQ (Ge et al., CVPR 2013 §3): learn the rotation
-    PQ distortion is minimal under by ALTERNATING per-subspace k-means
-    (codebooks for the current rotation) with an orthogonal-Procrustes
-    update (the rotation best mapping centered data onto its own
-    reconstruction — one SVD of a d×d matrix).  The parametric
-    :func:`opq_allocate` is the spectral initialization; this refines
-    it on the actual codebook geometry, which matters when the spectrum
-    alone under-determines the best split.
-
-    Driver-side on a BOUNDED deterministic sample (xxhash64-rated down
-    to ≤ ``sample_limit`` rows — codebook/rotation quality saturates
-    far below full coverage, the ``pq_train_codebooks`` posture), so
-    training cost is sample-scale regardless of corpus size; apply the
-    result corpus-wide with :func:`pca_project` (the returned model is
-    projection-compatible: mean + orthonormal component rows).
-
-    Monotonicity by construction: codebooks warm-start from the
-    previous iteration, and each of the three steps (assign, centroid
-    update, Procrustes) cannot increase ‖Y − Ŷ‖² — the per-iteration
-    total is returned as ``distortion_per_iter`` and pinned
-    non-increasing in tests.
-    """
-    import numpy as np  # noqa: PLC0415
-
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    n_total = emb.count()
-    if n_total == 0:
-        raise ValueError("opq_train received an empty embeddings frame")
-    # deterministic cut, partition-order-proof: the hash prefilter
-    # bounds the sort input to ~sample_limit rows (ceil keeps the
-    # expected survivor count AT OR BELOW the limit), then the
-    # hash-ordered TakeOrdered picks the same rows under any
-    # partitioning — an unordered .limit() here trained a rotation
-    # that could differ between runs of the same corpus
-    frac_mod = -(-n_total // sample_limit)  # ceil
-    rows = (
-        emb.filter(F.pmod(F.xxhash64(vec_id), F.lit(frac_mod)) == 0)
-        .orderBy(F.xxhash64(vec_id), F.col(vec_id))
-        .limit(sample_limit)
-        .select(embedding)
-        .collect()
-    )
-    x = np.array([r[0] for r in rows], dtype="float64")
-    mean = x.mean(axis=0)
-    xc = x - mean
-    # spectral init: PCA basis + balanced eigenvalue allocation
-    cov = (xc.T @ xc) / len(xc)
-    evals, evecs = np.linalg.eigh(cov)
-    order = np.argsort(evals)[::-1]
-    init = {
-        "mean": [0.0] * dim,
-        "components": evecs[:, order].T.tolist(),
-        "eigenvalues": evals[order].tolist(),
-        "n_vecs": len(xc),
-    }
-    r = np.array(opq_allocate(init, m)["components"])
-    dsub = dim // m
-    cents: list = [None] * m
-    distortions = []
-    for _ in range(iters):
-        y = xc @ r.T
-        yhat = np.empty_like(y)
-        for s in range(m):
-            sub = y[:, s * dsub : (s + 1) * dsub]
-            c = sub[:k].copy() if cents[s] is None else cents[s]
-            for _ in range(lloyd_iters):
-                d2 = ((sub[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-                a = d2.argmin(axis=1)
-                for ci in range(k):
-                    if (a == ci).any():
-                        c[ci] = sub[a == ci].mean(axis=0)
-            d2 = ((sub[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            yhat[:, s * dsub : (s + 1) * dsub] = c[d2.argmin(axis=1)]
-            cents[s] = c
-        distortions.append(float(((y - yhat) ** 2).sum()))
-        # orthogonal Procrustes: R ← argmin ‖Xc Rᵀ − Ŷ‖ over RᵀR = I
-        u, _, vt = np.linalg.svd(xc.T @ yhat)
-        r = (u @ vt).T
-    return {
-        "mean": mean.tolist(),
-        "components": r.tolist(),
-        "eigenvalues": np.var(xc @ r.T, axis=0).tolist(),
-        "n_vecs": int(len(xc)),
-        "distortion_per_iter": distortions,
-    }
-
-
 def pca_project(
     emb: DataFrame,
     model: dict,
@@ -1662,8 +1563,8 @@ def rotate_prepare(
 ) -> DataFrame:
     """The FAISS ``OPQxx,IVFyy,PQzz`` pre-transform entry point: project
     raw embeddings through a trained rotation (:func:`pca_rotation` /
-    :func:`opq_allocate` / :func:`opq_train` output) and quantize the
-    result — a :func:`prepare`-shaped (vec_id, q, n) frame in the
+    :func:`opq_allocate` output) and quantize the result — a
+    :func:`prepare`-shaped (vec_id, q, n) frame in the
     ROTATED basis, ready for the whole IVF/PQ stack unchanged.  The
     rotation composes BEFORE quantization, not inside the index build:
     coarse assignment, residuals, codebook training and ADC search all

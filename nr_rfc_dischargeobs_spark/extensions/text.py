@@ -637,10 +637,7 @@ def hash_classifier(
 
     The weights here are a deterministic function of the bucket hash
     (``(bucket mod 21) − 10`` ∈ [−10, 10]) — the operator ships the
-    *shape* (hashed sparse linear model evaluated at scan bandwidth);
-    :func:`hash_classifier_trained` is the production swap-in that takes
-    an actual trained weight table through the same
-    token→bucket→weight path and the same plan.
+    *shape* (hashed sparse linear model evaluated at scan bandwidth).
 
     Everything is row-local higher-order-function arithmetic over one
     ``split`` — no shuffle, no UDF, no vocabulary join — so the op runs
@@ -698,89 +695,6 @@ def _check_n_buckets(n_buckets: int) -> None:
             f"n_buckets {n_buckets} outside [1, 65536]: hash_bucket "
             "produces [0, 65536), so larger tables are unreachable"
         )
-
-
-def hash_classifier_trained(
-    docs: DataFrame,
-    weights,
-    n_buckets: int = 1 << 16,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    salt: str = "clf",
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
-    """:func:`hash_classifier` with TRAINED weights — the production
-    swap-in: ``weights`` is the model's weight table, either plain
-    ``[(bucket, weight_int), ...]`` rows or a small (bucket, weight)
-    DataFrame (collected driver-side — a hashing-trick weight table is
-    ``n_buckets`` ints, a MODEL PARAMETER like the PQ codebook, not
-    data).  Buckets absent from the table weigh 0, so a sparse table —
-    the normal outcome of L1-regularized training — stays sparse.
-
-    The plan is the same scan-bandwidth shape as the deterministic
-    variant: token → md5 bucket → weight, all row-local expression
-    arithmetic over one ``split`` — no shuffle, no UDF, no vocabulary
-    join.  The weight lookup is ``element_at`` into ONE dense literal
-    array composed as SQL text (a single server-side parse) — measured
-    at the full 2¹⁶ default: 3.6-9.6 s of ONE-TIME plan parse/fold,
-    amortized over the corpus scan, vs ~28 s for the ``F.lit(list)``
-    spelling whose per-element py4j serialization dominates.  Weights
-    are integers by contract
-    (fixed-point: scale float model weights by 1e4 upstream), which
-    keeps ``weight_sum`` an exact BIGINT — the same engine-portability
-    discipline as every score column here.
-
-    Output: (doc_id, n_tokens, weight_sum, score, positive) — identical
-    schema to :func:`hash_classifier`, so the two are drop-in
-    interchangeable in :func:`~.curate.curate_corpus` and the streaming
-    gate.
-    """
-    from .sampling import hash_bucket
-
-    _check_n_buckets(n_buckets)
-    if hasattr(weights, "collect"):  # small weight DataFrame
-        weights = [(r[0], r[1]) for r in weights.collect()]
-    dense = [0] * n_buckets
-    for b, wt in weights:
-        if not 0 <= int(b) < n_buckets:
-            raise ValueError(f"bucket {b} outside [0, {n_buckets})")
-        dense[int(b)] = int(wt)
-    warr = F.expr(
-        "array(" + ",".join(f"{v}L" for v in dense) + ")"
-    )
-    toks = F.filter(
-        _tokens(F.coalesce(F.col(text), F.lit(""))), lambda t: t != ""
-    )
-    weight = lambda t: F.element_at(  # noqa: E731
-        warr, (hash_bucket(t, salt) % n_buckets).cast("int") + 1
-    )
-    wsum = F.aggregate(
-        F.transform(toks, weight),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    # stage the md5-per-token fold and the split ONCE: inlined, wsum
-    # evaluated 3× and the tokenizer ~5× per row (no CSE for
-    # CodegenFallback HOFs — the repo's measured cost model), tripling
-    # the classifier gate's dominant cost
-    staged = docs.select(
-        F.col(doc_id),
-        *[F.col(c) for c in passthrough],
-        F.size(toks).cast("long").alias("n_tokens"),
-        wsum.alias("weight_sum"),
-    )
-    score = F.when(
-        F.col("n_tokens") > 0,
-        F.col("weight_sum").cast("double") / F.col("n_tokens"),
-    ).otherwise(F.lit(0.0))
-    return staged.select(
-        doc_id,
-        *passthrough,
-        "n_tokens",
-        "weight_sum",
-        score.alias("score"),
-        (score > 0).alias("positive"),
-    )
 
 
 def _bigram_structs(toks: Column) -> Column:
@@ -1444,82 +1358,6 @@ def token_entropy(
         F.when(F.col("n_tokens") > 0, entropy).otherwise(F.lit(0.0)).alias(
             "entropy"
         ),
-    )
-
-
-def hash_classifier_train_nb(
-    labeled: DataFrame,
-    label: str = "label",
-    n_buckets: int = 1 << 16,
-    text: str = "text",
-    salt: str = "clf",
-    weight_scale: int = 10_000,
-    alpha_inv: int = 100,
-) -> DataFrame:
-    """Train the weight table :func:`hash_classifier_trained` consumes —
-    in-engine, closed-form: multinomial Naive Bayes log-odds per hashed
-    token bucket,
-
-        w_b = round(weight_scale · [log₂ P̂(b | positive)
-                                    − log₂ P̂(b | negative)])
-
-    with the same add-(1/``alpha_inv``) smoothing discipline as
-    :func:`~.sampling.dsir_log_ratio` (add-ONE collapses tiny corpora
-    toward uniform).  Closed-form NB is the standard bootstrap for
-    fastText-shaped quality gates: label a seed set (e.g. "target
-    domain" vs "random crawl"), train in one aggregation pass, swap the
-    table into the scan-bandwidth scorer — no gradient loop, no Python.
-    Weights are fixed-point integers (``weight_scale`` = 1e4 by
-    contract), so downstream ``weight_sum`` stays an exact BIGINT.
-
-    Scale shape: one explode + one bucket-keyed aggregation (≤
-    ``n_buckets`` output rows, map-side combined) + two 1-row totals —
-    the corpus never shuffles as text.  Buckets no labeled token ever
-    hit carry weight 0 implicitly (absent rows; the dense fold in
-    :func:`hash_classifier_trained` fills them).
-
-    Output: (bucket, weight) — rows with weight 0 are dropped (the
-    dense table is the consumer's job; sparse rows keep the artifact
-    small).
-    """
-    from .sampling import hash_bucket
-
-    _check_n_buckets(n_buckets)
-    if alpha_inv < 1:
-        raise ValueError(f"alpha_inv must be >= 1, got {alpha_inv}")
-    bucket = (hash_bucket(F.col("w"), salt) % n_buckets).cast("int")
-    exploded = labeled.select(
-        F.col(label).cast("boolean").alias("__pos"),
-        F.explode(
-            F.filter(
-                _tokens(F.coalesce(F.col(text), F.lit(""))),
-                lambda t: t != "",
-            )
-        ).alias("w"),
-    ).select("__pos", bucket.alias("bucket"))
-    per = exploded.groupBy("bucket").agg(
-        F.sum(F.col("__pos").cast("long")).alias("cpos"),
-        F.sum((~F.col("__pos")).cast("long")).alias("cneg"),
-    )
-    totals = per.agg(
-        F.sum("cpos").alias("__np"), F.sum("cneg").alias("__nn")
-    )
-    a = F.lit(alpha_inv)
-    lg = lambda c: F.log2(c.cast("double"))  # noqa: E731
-    w = F.round(
-        F.lit(float(weight_scale))
-        * (
-            lg(a * F.col("cpos") + 1)
-            - lg(a * F.coalesce(F.col("__np"), F.lit(0)) + n_buckets)
-            - lg(a * F.col("cneg") + 1)
-            + lg(a * F.coalesce(F.col("__nn"), F.lit(0)) + n_buckets)
-        ),
-        0,
-    ).cast("long")
-    return (
-        per.crossJoin(F.broadcast(totals))
-        .select("bucket", w.alias("weight"))
-        .filter(F.col("weight") != 0)
     )
 
 

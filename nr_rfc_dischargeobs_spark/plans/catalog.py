@@ -10,27 +10,33 @@ named operators (e.g. ``SELECT * FROM a1_hourly_rollup_last_override WHERE
 station_id = 'S1'`` — the outer predicate is pushed INTO the view's plan by
 the optimizer).
 
-Views are session-scoped metadata only — nothing materializes until an
-action, so registering all ~60 plans is free.
+Views are session-scoped metadata only — a view runs nothing until an
+action.  Registering all 156 plans still builds each one, so the plans
+that train a model or build an index run their build jobs then.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from ..errors import is_missing_path
 from . import TABLES
 
 
 def register_tables(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Temp view per driver table; returns the registered names."""
+    """Temp view per table of ``TABLES``; returns the registered names.  A
+    table absent at this scale factor is skipped; any other read failure
+    (a corrupt or unreadable table) raises."""
     from . import load
 
     registered = []
     for name in TABLES:
         try:
             load(spark, sf_dir, name).createOrReplaceTempView(name)
-        except Exception:
-            continue  # table absent at this scale factor
+        except Exception as ex:  # noqa: BLE001 — filtered below
+            if is_missing_path(ex):
+                continue  # table absent at this scale factor
+            raise
         registered.append(name)
     return registered
 

@@ -13,17 +13,10 @@ The reference fetches one XML file per (station, hour) and extracts named
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SWOB_VARS = ("air_temp", "avg_air_temp_pst1hr", "pcpn_amt_pst1hr")
-
-
-def xml_attr(xml: Column, name: str) -> Column:
-    """Extract <element name='{name}' value='...'/> from a SWOB payload."""
-    return F.xpath_string(
-        xml, F.lit(f"string(//element[@name='{name}']/@value)")
-    )
 
 
 def parse_swob_xml(
@@ -45,12 +38,12 @@ def parse_swob_xml(
     to structure around the elements, at a cost independent of how many
     variables are extracted.  ASSUMPTION the zip rests on: every
     ``element`` node carries BOTH attributes (true of SWOB-ML payloads —
-    a name-only node SHIFTS the value array; use :func:`xml_attr`
-    per variable for feeds without that guarantee).  The lookup uses
-    the out-of-bounds-NULL ``get`` rather than ANSI ``element_at``, so
-    a malformed name-only payload degrades that row to ''/misaligned
-    values instead of killing an 8.8M-payload ingestion job with
-    INVALID_ARRAY_INDEX.  Measured at the EP3 probe (8.76M
+    a name-only node SHIFTS the value array; feeds without that
+    guarantee need the per-variable ``xpath_string`` spelling).  The
+    lookup uses the out-of-bounds-NULL ``get`` rather than ANSI
+    ``element_at``, so a malformed name-only payload degrades that row
+    to ''/misaligned values instead of killing an 8.8M-payload ingestion
+    job with INVALID_ARRAY_INDEX.  Measured at the EP3 probe (8.76M
     payloads × 3 vars): 81.7 s per-variable → see SCALE_PROBE
     ``ep3_swob_parse`` for the zipped number.  Absent variables yield
     NULL (``array_position`` 0 guarded — under ANSI ``element_at(…, 0)``

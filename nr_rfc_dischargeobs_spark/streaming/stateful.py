@@ -28,9 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -101,67 +99,6 @@ def rising_falling_stream(hourly: DataFrame) -> DataFrame:
         _rising_falling_step,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-QUOTA_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("source", StringType()),
-        StructField("kept", BooleanType()),
-        StructField("domain_seq", LongType()),
-    ]
-)
-
-# running per-domain admission count — one long per domain, forever
-QUOTA_STATE_SCHEMA = StructType([StructField("n_seen", LongType())])
-
-
-def source_caps_stream(docs: DataFrame, cap: int = 100) -> DataFrame:
-    """Streaming per-domain quota: admit each domain's first ``cap``
-    documents ACROSS micro-batches, label the rest dropped — the
-    continuous-ingest twin of :func:`~..extensions.sampling.source_caps`.
-
-    The policy is deliberately different from the batch operator and the
-    docstring says so: batch ranks by key hash (it can see the whole
-    corpus), a stream admits FIRST-ARRIVED (it cannot rank documents
-    that haven't arrived).  Within one micro-batch, rows are sorted by
-    doc_id before sequencing, so intra-batch arrival order never changes
-    the outcome; across batches the landing order is the policy.
-
-    State is one counter per domain — O(domains) forever, no watermark
-    needed for correctness (GC only if domains churn).  ``domain_seq``
-    (1-based admission index) is emitted for the audit trail: a dropped
-    doc's seq says how far past the quota it arrived.
-    """
-
-    def step(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        n0 = state.get[0] if state.exists else 0
-        seq = n0 + 1 + pdf.index.to_numpy()
-        state.update((int(n0 + len(pdf)),))
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "source": key[0],
-                "kept": seq <= cap,
-                "domain_seq": seq,
-            }
-        )
-
-    return docs.groupBy("source").applyInPandasWithState(
-        step,
-        outputStructType=QUOTA_OUTPUT_SCHEMA,
-        stateStructType=QUOTA_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -91,7 +91,6 @@ _SLOW_TESTS = {
     "test_connected_components_match_union_find_on_mixed_forest",
     "test_connected_components_star_long_path_converges_fast",
     "test_connected_components_star_matches_min_label",
-    "test_decode_bmp_frame_fail_soft_and_exact_means",
     "test_decode_jpeg_headers_fail_soft",
     "test_ivf_pq_nprobe_recall_dial_on_testdata",
     "test_kmeans_trained_ivf_beats_arbitrary_seed_recall",

@@ -2,7 +2,7 @@
 replica of the reference algorithm (Sennrich et al. 2016 get_stats /
 merge loop), plus the semantic corners the string-replace formulation
 must honor (greedy leftmost application, overlapping pair counting,
-deterministic tie-break, early stop, inference-only application)."""
+deterministic tie-break, early stop)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import re
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from nr_rfc_dischargeobs_spark.extensions import bpe
 
@@ -139,32 +138,6 @@ def test_bpe_validation(spark):
     docs = spark.createDataFrame([(0, "a b")], ["doc_id", "text"])
     with pytest.raises(ValueError, match="n_merges"):
         bpe.bpe_merges(docs, n_merges=0)
-
-
-def test_segment_tokens_inference_matches_training_segmentation(spark):
-    """Applying the learned merge list with the scan-local inference op
-    reproduces the training-time segmentation on the same vocabulary."""
-    texts = ["the cat sat on the mat", "the cats sat"]
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), ["doc_id", "text"]
-    )
-    merges = [
-        (r["left_sym"], r["right_sym"])
-        for r in bpe.bpe_merges(docs, n_merges=6).collect()
-    ]
-    vocab = bpe.bpe_segment_vocab(docs, n_merges=6)
-    inferred = bpe.segment_tokens(
-        vocab.select("token"), merges
-    )
-    joined = vocab.alias("v").join(
-        inferred.alias("i"), "token"
-    ).select(
-        "token",
-        F.col("v.segmentation").alias("train_seg"),
-        F.col("i.segmentation").alias("infer_seg"),
-    )
-    rows = joined.collect()
-    assert rows and all(r["train_seg"] == r["infer_seg"] for r in rows)
 
 
 @given(

@@ -947,69 +947,9 @@ def test_kmeans_trained_ivf_beats_arbitrary_seed_recall(spark):
 
 
 # ---------------------------------------------------------------------------
-# round 11: BMP decode — the de-gated real-codec tier for one pure format
+# rounds 12-13: PNG decode — the de-gated real-codec tier for the pure
+# format
 # ---------------------------------------------------------------------------
-
-
-def _bmp_bytes(pixels_topdown, pad_rows=True):
-    """Hand-assemble an uncompressed 24-bit bottom-up BMP."""
-    import struct
-
-    h = len(pixels_topdown)
-    w = len(pixels_topdown[0])
-    pad = b"\x00" * ((4 - (w * 3) % 4) % 4)
-    rows = [
-        b"".join(bytes([b, g, r]) for r, g, b in row) + pad
-        for row in reversed(pixels_topdown)  # bottom-up storage
-    ]
-    pix = b"".join(rows)
-    hdr = b"BM" + struct.pack("<IHHI", 54 + len(pix), 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pix),
-                       2835, 2835, 0, 0)
-    return hdr + info + pix
-
-
-def test_bmp_pixels_exact_decode():
-    import numpy as np
-
-    from nr_rfc_dischargeobs_spark.extensions.multimodal import bmp_pixels
-
-    top = [(255, 0, 0), (0, 255, 0), (0, 0, 255)]
-    bot = [(10, 20, 30)] * 3
-    px = bmp_pixels(_bmp_bytes([top, bot]))
-    assert px.shape == (2, 3, 3)
-    assert [tuple(int(v) for v in p) for p in px[0]] == top
-    assert [tuple(int(v) for v in p) for p in px[1]] == bot
-    # rejections: wrong magic, truncation, unsupported depth/compression
-    assert bmp_pixels(b"PNG....") is None
-    assert bmp_pixels(_bmp_bytes([top, bot])[:40]) is None
-    hacked = bytearray(_bmp_bytes([top, bot]))
-    hacked[28] = 8  # bpp = 8
-    assert bmp_pixels(bytes(hacked)) is None
-
-
-def test_decode_bmp_frame_fail_soft_and_exact_means(spark):
-    from nr_rfc_dischargeobs_spark.extensions.multimodal import decode_bmp
-
-    good = _bmp_bytes([[(255, 0, 0), (0, 255, 0)], [(0, 0, 255), (9, 9, 9)]])
-    rows = [
-        (1, bytearray(good), "image/bmp", len(good)),
-        (2, bytearray(b"junk"), "image/bmp", 4),
-        (3, None, "image/bmp", None),
-    ]
-    blobs = spark.createDataFrame(
-        rows, "doc_id long, blob binary, mime string, n_bytes long"
-    )
-    got = {r["doc_id"]: r.asDict() for r in decode_bmp(blobs).collect()}
-    assert len(got) == 3  # one row per input, rejects included
-    ok = got[1]
-    assert ok["bmp_ok"] == 1 and (ok["width"], ok["height"]) == (2, 2)
-    # exact milli means: R (255+0+0+9)/4, G (0+255+0+9)/4, B (0+0+255+9)/4
-    assert ok["mean_r_milli"] == 1000 * 264 // 4
-    assert ok["mean_g_milli"] == 1000 * 264 // 4
-    assert ok["mean_b_milli"] == 1000 * 264 // 4
-    for did in (2, 3):
-        assert got[did]["bmp_ok"] == 0 and got[did]["width"] is None
 
 
 def test_png_pixels_hand_built_decode():

@@ -264,28 +264,6 @@ def test_rotation_plus_allocation_reduces_pq_distortion(spark):
     assert alloc_err < raw_err * 0.7, (alloc_err, rot_err, raw_err)
     assert alloc_err < rot_err * 0.5, (alloc_err, rot_err, raw_err)
     assert raw_err * 0.5 < rot_err < raw_err * 2.0, (rot_err, raw_err)
-    # the non-parametric refinement starts from the allocated basis and
-    # must not end worse (same trainer geometry, same corpus)
-    opq = similarity.opq_train(emb, dim=DIM, m=m, k=k, iters=6)
-    comps = np.array(opq["components"])
-    assert np.allclose(comps @ comps.T, np.eye(DIM), atol=1e-9)
-    d = opq["distortion_per_iter"]
-    assert all(d[i + 1] <= d[i] * (1 + 1e-9) for i in range(len(d) - 1)), d
-    opq_err = _pq_total_err(spark, proj(opq), m, k)
-    assert opq_err <= alloc_err * 1.02, (opq_err, alloc_err)
-
-
-def test_opq_train_validates_inputs(spark):
-    import pytest as _pytest
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    with _pytest.raises(ValueError, match="empty"):
-        similarity.opq_train(empty, dim=DIM, m=2, k=4)
-    one = spark.createDataFrame(
-        [(0, [0.1] * DIM)], "vec_id long, embedding array<float>"
-    )
-    with _pytest.raises(ValueError, match="divisible"):
-        similarity.opq_train(one, dim=DIM, m=3, k=4)
 
 
 def test_pca_energy_compaction_beats_raw_truncation(emb_df, vectors):

@@ -321,61 +321,6 @@ def test_hash_classifier_deterministic_and_fails_closed(spark):
     assert abs(out[0]["weight_sum"]) <= 10 * out[0]["n_tokens"]
 
 
-def test_hash_classifier_trained_planted_weights(spark):
-    """The trained-weights swap-in scores exactly what the planted weight
-    table says: bucket(token) computed the same way in the fixture, so
-    weight_sum is the literal sum of planted weights."""
-    import hashlib
-
-    n_buckets = 4096
-
-    def bucket(tok):
-        h = hashlib.md5(f"clf|{tok}".encode()).hexdigest()
-        return int(h[:4], 16) % n_buckets
-
-    # planted model: "good" strongly positive, "bad" strongly negative,
-    # everything else 0 (sparse table — absent buckets weigh zero)
-    weights = [(bucket("good"), 70000), (bucket("bad"), -50000)]
-    docs = spark.createDataFrame(
-        [
-            (0, "good good bad filler"),
-            (1, "bad bad filler"),
-            (2, "filler only text"),
-            (3, None),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {
-        r["doc_id"]: r
-        for r in textops.hash_classifier_trained(
-            docs, weights, n_buckets=n_buckets
-        ).collect()
-    }
-    assert out[0]["weight_sum"] == 2 * 70000 - 50000
-    assert out[0]["positive"] is True
-    assert out[1]["weight_sum"] == -2 * 50000
-    assert out[1]["positive"] is False
-    assert out[2]["weight_sum"] == 0 and out[2]["positive"] is False
-    assert out[3]["n_tokens"] == 0 and out[3]["positive"] is False
-    # identical output schema to the deterministic variant — drop-in
-    assert (
-        textops.hash_classifier_trained(docs, weights, n_buckets).columns
-        == textops.hash_classifier(docs).columns
-    )
-
-
-def test_hash_classifier_trained_weight_df_and_plan_shape(spark):
-    """Weights may arrive as a small DataFrame (collected — a model
-    parameter); the plan stays scan-local: no exchange, no Python."""
-    wdf = spark.createDataFrame([(7, 123), (9, -5)], ["bucket", "weight"])
-    docs = spark.createDataFrame([(0, "alpha beta")], ["doc_id", "text"])
-    df = textops.hash_classifier_trained(docs, wdf, n_buckets=64)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "Python" not in plan
-    df.collect()  # and it runs
-
-
 def test_document_stream_classifier_gate_batch_twin(spark):
     """curate_document_stream's optional classifier gate drops low-scoring
     docs on the batch (backfill) driver — and the output schema is
@@ -1480,47 +1425,6 @@ def test_pack_sequence_rows_is_partitioning_invariant(spark):
     b = sorted(map(tuple, packing.pack_sequence_rows(
         docs.repartition(11), budget=7, shards=2).collect()))
     assert a == b
-
-
-def test_hash_classifier_train_nb_separates_planted_classes(spark):
-    """Closed-form NB training closes the classifier loop: label a seed
-    set, train the bucket weight table in one pass, swap it into
-    hash_classifier_trained — held-out docs from each class must score
-    on the right side of 0, and weight signs must follow class usage."""
-    from nr_rfc_dischargeobs_spark.extensions.text import (
-        hash_classifier_train_nb,
-        hash_classifier_trained,
-    )
-
-    pos_words = "excellent detailed thorough informative precise"
-    neg_words = "spam junk scam clickbait garbage"
-    labeled = spark.createDataFrame(
-        [(i, f"{pos_words} item{i}", True) for i in range(6)]
-        + [(i + 10, f"{neg_words} item{i}", False) for i in range(6)],
-        ["doc_id", "text", "label"],
-    )
-    weights = hash_classifier_train_nb(labeled, n_buckets=4096)
-    held_out = spark.createDataFrame(
-        [
-            (100, "a truly excellent informative and thorough report"),
-            (101, "pure clickbait junk spam garbage nonsense"),
-            (102, None),  # fails closed
-        ],
-        ["doc_id", "text"],
-    )
-    out = {
-        r["doc_id"]: r
-        for r in hash_classifier_trained(
-            held_out, weights, n_buckets=4096
-        ).collect()
-    }
-    assert out[100]["positive"] is True and out[100]["score"] > 0
-    assert out[101]["positive"] is False and out[101]["score"] < 0
-    assert out[102]["positive"] is False and out[102]["weight_sum"] == 0
-    # training is deterministic
-    again = sorted(map(tuple, hash_classifier_train_nb(
-        labeled, n_buckets=4096).collect()))
-    assert again == sorted(map(tuple, weights.collect()))
 
 
 # ------------------------------------------------------------ UniMax (r6)

@@ -408,68 +408,6 @@ def test_document_curation_batch_twin(spark):
     assert [r.doc_id for r in out] == [5]  # junk gated, dup keeps min id
 
 
-def test_stream_source_caps_across_microbatches(spark, tmp_path):
-    """The running domain quota persists across micro-batches: a domain
-    that used 2 of its 3 slots in batch 1 admits exactly 1 more in
-    batch 2, and the admission index keeps counting for the audit."""
-    import json as _json
-
-    from nr_rfc_dischargeobs_spark.streaming.stateful import (
-        source_caps_stream,
-    )
-
-    landing = tmp_path / "quota_landing"
-    landing.mkdir()
-    out_dir = str(tmp_path / "quota_out")
-    ckpt = str(tmp_path / "ckpt_quota")
-    schema = "doc_id long, source string"
-
-    def drain(name, rows):
-        (landing / name).write_text(
-            "\n".join(_json.dumps(r) for r in rows) + "\n"
-        )
-        stream = spark.readStream.schema(schema).json(str(landing))
-        q = (
-            source_caps_stream(stream, cap=3)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain(
-        "b1.jsonl",
-        [
-            {"doc_id": 1, "source": "hot"},
-            {"doc_id": 2, "source": "hot"},
-            {"doc_id": 3, "source": "cold"},
-        ],
-    )
-    drain(
-        "b2.jsonl",
-        [
-            {"doc_id": 4, "source": "hot"},  # 3rd hot → admitted
-            {"doc_id": 5, "source": "hot"},  # 4th hot → dropped
-            {"doc_id": 6, "source": "cold"},
-        ],
-    )
-    got = {
-        r["doc_id"]: (r["kept"], r["domain_seq"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == {
-        1: (True, 1),
-        2: (True, 2),
-        3: (True, 1),
-        4: (True, 3),
-        5: (False, 4),
-        6: (True, 2),
-    }
-
-
 def test_compact_near_dups_sweeps_landed_directory(spark, tmp_path):
     """The periodic near-dup compaction over landed output: drops the
     higher id of a verified near-dup pair, leaves distinct docs, and

@@ -8,16 +8,23 @@ Catalyst cannot prune the work being measured — a plain ``count()``
 silently optimizes scan-fused operators down to nothing.
 
     python tools/scale_probe.py [--events N] [--docs N] [--out FILE]
+    python tools/scale_probe.py --tier ann [--adc-vecs N]
 
 Prints one JSON object; re-run after operator changes and refresh the
-README numbers from it.
+README numbers from it.  Two tiers remain: ``all`` (the default: events,
+documents, embeddings, the ann-recall matrix, composed curation with the
+``semantic_dedup(salt=)`` rows, and the EP1/EP2/EP3 pipeline rows) and
+``ann`` (the ann-recall matrix alone).  The tiers that re-measured
+finished rounds (rotation, segments, tombstones, adaptive nprobe,
+candidate budget, range search, SQ8) are gone; their last numbers stay
+frozen in ``SCALE_PROBE.json`` under keys such as ``seg_*``, ``lc_*``,
+``bud_*``, ``rng_*``, ``sq8_*``, ``rebalance_*`` and ``pca_gram_*``.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 from pathlib import Path
@@ -225,126 +232,6 @@ def synth_clustered_embs(
             f"  - floor(sin({nz}) * 9871.123) - 0.5) as float))"
         ).alias("embedding"),
     )
-
-
-def synth_aniso_embs(spark, n: int, dim: int = 64, rank: int = 6,
-                     noise: float = 0.02) -> DataFrame:
-    """n vectors on a rank-``rank`` manifold MIXED across all ``dim``
-    raw dimensions (a seeded orthonormal 64×rank mixing matrix folded
-    in as literals, decaying factor scales 1.5/(1+f)) plus small
-    independent noise — the ANISOTROPIC shape real embedding corpora
-    have and the only shape a decorrelating rotation can help:
-    :func:`synth_random_embs` is isotropic (rotation is a provable
-    noop) and :func:`synth_clustered_embs`' energy is cluster-centered,
-    so neither can measure the OPQ tier."""
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    w, _ = np.linalg.qr(rng.randn(dim, rank))
-    t_cols = []
-    for f in range(rank):
-        a, b = 12.9898 + 3.77 * f, 7.13 * f
-        h = f"sin(id * {a:.4f} + {b:.2f}) * 43758.5453"
-        t_cols.append(
-            f"(({h}) - floor({h}) - 0.5) * {1.5 / (1 + f):.6f} AS t{f}"
-        )
-    dims = []
-    for i in range(dim):
-        terms = " + ".join(
-            f"({w[i, f]:.8f}) * t{f}" for f in range(rank)
-        )
-        nz = f"sin(id * 7.1234 + {i} * 3.456) * 9871.123"
-        dims.append(
-            f"cast({terms} + {noise} * (({nz}) - floor({nz}) - 0.5)"
-            " as float)"
-        )
-    return (
-        spark.range(n)
-        .selectExpr("id AS vec_id", "id", *t_cols)
-        .selectExpr("vec_id", f"array({', '.join(dims)}) AS embedding")
-    )
-
-
-def rotation_recall_tier(spark, t: dict, n: int) -> None:
-    """Rotated-vs-raw PQ recall at volume — the at-scale evidence for
-    the PCA/OPQ tier: plain-PQ (m=16, k=16; trained by the SAME
-    sampler/trainer in both bases) over the anisotropic fixture, ADC
-    top-10 audited against one exact ground truth (rotation is
-    orthogonal, so exact neighbors are basis-invariant).  The rotated
-    basis comes from the full production path: `gram_stats_arrow` one
-    pass over the corpus → `pca_rotation` → `opq_allocate(m)` →
-    scan-local `pca_project`."""
-    from nr_rfc_dischargeobs_spark.extensions import similarity
-
-    m_, k_ = 16, 16
-    held = []
-    try:
-        aniso = synth_aniso_embs(spark, n)
-        prep = similarity.prepare(aniso).persist()
-        held.append(prep)
-        prep.count()
-        exact10 = similarity.brute_force_topk_arrow(
-            prep.filter(F.col("vec_id") < 256),
-            prep.filter(F.col("vec_id") >= 256),
-            k=10,
-        ).persist()
-        held.append(exact10)
-        exact10.count()
-
-        t0 = time.time()
-        model = similarity.opq_allocate(
-            similarity.pca_rotation(
-                similarity.gram_stats_arrow(aniso, dim=64), dim=64
-            ),
-            m=m_,
-        )
-        t["rotation_train_gram_1m"] = {
-            "sec": round(time.time() - t0, 1), "rows": 64 * 65 // 2,
-        }
-        rotated = similarity.pca_project(aniso, model).selectExpr(
-            "vec_id", "pvec AS embedding"
-        )
-        prep_rot = similarity.prepare(rotated).persist()
-        held.append(prep_rot)
-        prep_rot.count()
-
-        for label, p in (("raw", prep), ("rotated", prep_rot)):
-            q_side = p.filter(F.col("vec_id") < 256)
-            c_side = p.filter(F.col("vec_id") >= 256)
-            sample = c_side.filter(
-                F.pmod(F.xxhash64("vec_id"), F.lit(20)) == 0
-            )
-            t0 = time.time()
-            cb = similarity.pq_train_codebooks(
-                sample.select("vec_id", "q"), k=k_, m=m_, dim=64, iters=4
-            )
-            codes = similarity.pq_codes(c_side, cb, m=m_, dim=64).persist()
-            held.append(codes)
-            codes.count()
-            row = similarity.ann_recall(
-                similarity.pq_adc_topk(
-                    q_side, codes, cb, k=10, m=m_, dim=64
-                ),
-                exact10,
-            ).agg(
-                F.avg("recall").alias("r"), F.count(F.lit(1)).alias("nq")
-            ).collect()[0]
-            key = f"ann_recall10_{n // 1_000_000}m_aniso_pq_{label}"
-            t[key] = {
-                "sec": round(time.time() - t0, 1),
-                "rows": row.nq,
-                "mean_recall_at_10": round(row.r, 4),
-            }
-            print(f"  {t[key]['sec']:7.1f} s  recall@10 "
-                  f"{t[key]['mean_recall_at_10']}  {key}", file=sys.stderr)
-            codes.unpersist()
-    except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["rotation_tier_error"] = error_line(ex)
-        print(f"  FAILED  rotation tier: {t['rotation_tier_error']}",
-              file=sys.stderr)
-    finally:
-        for df in held:
-            df.unpersist()
 
 
 def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
@@ -587,1097 +474,6 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
             df.unpersist()
 
 
-def r10_extras_tier(spark, t: dict, docs_n: int, vecs_n: int) -> None:
-    """Volume probes for the round-10 late additions: the PCA/OPQ Gram
-    aggregate (BLAS vs native-expression spelling), star connected
-    components on an ADVERSARIAL-diameter chain (the input min-label
-    propagation structurally cannot finish: a 100k-node path needs 100k
-    one-hop rounds, vs the star bound of ~log² n rewiring rounds),
-    cross-corpus incremental admission at a production-shaped 2% batch
-    ratio, and BM25 over the 1M-doc corpus (cost probe: the per-term tf
-    filters and the stats aggregate scan every doc; the synthetic
-    vocabulary is doc-unique so matches are sparse)."""
-    from nr_rfc_dischargeobs_spark.extensions import dedup, similarity
-    from nr_rfc_dischargeobs_spark.extensions import text as textops
-
-    print("r10-extras tier:", file=sys.stderr)
-    timed(t, "pca_gram_arrow_1m_d64",
-          similarity.gram_stats_arrow(synth_random_embs(spark, vecs_n), dim=64))
-    timed(t, "pca_gram_native_200k_d64",
-          similarity.gram_stats(synth_random_embs(spark, 200_000), dim=64))
-
-    # star CC builds its result eagerly (the rewiring loop runs jobs at
-    # call time), so the wall clock wraps the CALL, not just the force
-    t0 = time.time()
-    try:
-        chain = spark.range(100_000).select(
-            F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
-        )
-        n = force(dedup.connected_components_star(chain, max_iter=40))
-        t["cc_star_chain_100k"] = {"sec": round(time.time() - t0, 1), "rows": n}
-        print(f"  {t['cc_star_chain_100k']['sec']:7.1f} s  {n:>12,} rows  "
-              "cc_star_chain_100k", file=sys.stderr)
-    except Exception as ex:  # noqa: BLE001 — same contract as timed()
-        t["cc_star_chain_100k"] = {
-            "sec": round(time.time() - t0, 1),
-            "error": error_line(ex),
-        }
-        print(f"  FAILED  cc_star_chain_100k: "
-              f"{t['cc_star_chain_100k']['error'][:120]}", file=sys.stderr)
-
-    nd = synth_neardup_docs(spark, docs_n).localCheckpoint()
-    timed(t, "incremental_admission_2pct_batch_1m",
-          dedup.incremental_admission(
-              nd.filter(F.col("doc_id") % 50 == 0),
-              nd.filter(F.col("doc_id") % 50 != 0),
-              bands=4, rows_per_band=2, n=3,
-          ))
-    # the production form: corpus fingerprints + signatures are STORED
-    # artifacts (computed once here, stand-ins for the landed tables) —
-    # the admission join itself is what remains per ingest
-    corpus_side = nd.filter(F.col("doc_id") % 50 != 0)
-    fps = corpus_side.select(
-        F.md5("text").alias("fingerprint"), "doc_id"
-    ).localCheckpoint()
-    sigs = dedup.minhash_signatures(
-        dedup.shingle_rows(corpus_side, n=3), bands=4, rows_per_band=2
-    ).localCheckpoint()
-    timed(t, "incremental_admission_stored_artifacts_1m",
-          dedup.incremental_admission(
-              nd.filter(F.col("doc_id") % 50 == 0),
-              bands=4, rows_per_band=2, n=3,
-              corpus_fingerprints=fps, corpus_signatures=sigs,
-          ))
-    import hashlib
-
-    terms = [
-        hashlib.md5(f"{d}_{i}".encode()).hexdigest()[:5]
-        for d, i in ((0, 0), (1, 3), (2, 7))
-    ]
-    timed(t, "bm25_topk_1m_docs",
-          textops.bm25_topk(synth_docs(spark, docs_n), terms, k=10))
-
-
-def r11_tier(spark, t: dict, n: int) -> None:
-    """Round-11 probes, all at ``n`` (default 1M) codes:
-
-    1. **Rotated vs raw IVFADC at equal nprobe** on the anisotropic
-       fixture — the composition evidence for the rotation tier: the
-       SAME production pipeline (coarse k-means on a hash sample →
-       residual PQ training → IVFADC search) run once in the raw basis
-       and once in the trained-OPQ basis (``gram_stats_arrow →
-       pca_rotation → opq_allocate → rotate_prepare``), recall@10
-       audited against one exact ground truth.
-    2. **Filtered-search recall under selectivity** {0.5, 0.1, 0.01} on
-       the clustered fixture: ``ivfadc_topk(where=…)`` vs exact
-       brute-force over the filtered corpus — the hybrid-search
-       degradation curve (survivors concentrate in fewer probed lists).
-    3. **Rebalance under drift**: an index built with a coarse
-       quantizer trained on HALF the clusters (yesterday's
-       distribution), measured before/after one
-       ``rebalance_ivfadc`` sweep — trigger skew, repaired skew,
-       recall at fixed nprobe, and the no-op sweep's cost.
-    """
-    from nr_rfc_dischargeobs_spark.extensions import ann_store, similarity
-
-    m_, k_, n_lists, nprobe = 16, 16, 64, 8
-    held = []
-
-    def _ivfadc(prep, tag):
-        """coarse (trained) + residual-PQ index from a prepared frame."""
-        c_side = prep.filter(F.col("vec_id") >= 256)
-        sample = c_side.filter(F.pmod(F.xxhash64("vec_id"), F.lit(20)) == 0)
-        t0 = time.time()
-        coarse = similarity.kmeans_lite(
-            sample, k=n_lists, iters=3,
-            seeds=similarity.farthest_first_seeds(sample, n_lists),
-        ).persist()
-        held.append(coarse)
-        lists = coarse.count()
-        coarse_rows = [
-            (int(r["vec_id"]), [int(v) for v in r["q"]])
-            for r in coarse.select("vec_id", "q").collect()
-        ]
-        res_sample = similarity.residualize(
-            similarity.ivf_assign(sample, coarse, 1, None), coarse_rows
-        )
-        cb = similarity.pq_train_codebooks(
-            res_sample, k=k_, m=m_, dim=64, iters=4
-        )
-        index = similarity.ivf_pq_index(
-            c_side, coarse, cb, m=m_, dim=64, residual=True,
-            coarse_rows=coarse_rows,
-        ).persist()
-        held.append(index)
-        index.count()
-        t[f"ivfadc_build_{tag}"] = {
-            "sec": round(time.time() - t0, 1), "rows": lists,
-        }
-        return coarse, coarse_rows, cb, index
-
-    # --- 1: rotated vs raw IVFADC on the anisotropic fixture ---------
-    try:
-        aniso = synth_aniso_embs(spark, n)
-        prep_raw = similarity.prepare(aniso).persist()
-        held.append(prep_raw)
-        prep_raw.count()
-        exact10 = similarity.brute_force_topk_arrow(
-            prep_raw.filter(F.col("vec_id") < 256),
-            prep_raw.filter(F.col("vec_id") >= 256),
-            k=10,
-        ).persist()
-        held.append(exact10)
-        exact10.count()
-        model = similarity.opq_allocate(
-            similarity.pca_rotation(
-                similarity.gram_stats_arrow(aniso, dim=64), dim=64
-            ),
-            m=m_,
-        )
-        model["mode"] = "pre"
-        prep_rot = similarity.rotate_prepare(aniso, model).persist()
-        held.append(prep_rot)
-        prep_rot.count()
-        for label, prep in (("raw", prep_raw), ("rotated", prep_rot)):
-            coarse, coarse_rows, cb, index = _ivfadc(prep, f"aniso_{label}")
-            t0 = time.time()
-            row = similarity.ann_recall(
-                similarity.ivfadc_topk(
-                    prep.filter(F.col("vec_id") < 256), index, coarse,
-                    cb, k=10, nprobe=nprobe, m=m_, dim=64,
-                ),
-                exact10,
-            ).agg(
-                F.avg("recall").alias("r"), F.count(F.lit(1)).alias("nq")
-            ).collect()[0]
-            key = f"ivfadc_recall10_{n // 1_000_000}m_aniso_{label}_np{nprobe}"
-            t[key] = {
-                "sec": round(time.time() - t0, 1), "rows": row.nq,
-                "mean_recall_at_10": round(row.r, 4),
-            }
-            print(f"  {t[key]['sec']:7.1f} s  recall@10 "
-                  f"{t[key]['mean_recall_at_10']}  {key}", file=sys.stderr)
-    except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["r11_rotation_error"] = error_line(ex)
-        print(f"  FAILED  r11 rotation: {t['r11_rotation_error']}",
-              file=sys.stderr)
-    finally:
-        for df in held:
-            df.unpersist()
-        held = []
-
-    # --- 2: filtered-search recall vs selectivity ---------------------
-    try:
-        prep = similarity.prepare(synth_clustered_embs(spark, n)).persist()
-        held.append(prep)
-        prep.count()
-        q_side = prep.filter(F.col("vec_id") < 256)
-        coarse, coarse_rows, cb, index = _ivfadc(prep, "clustered_filter")
-        # mod=1 is the UNFILTERED anchor (every vector matches): the
-        # same index, probes, and scorer with no predicate — the
-        # baseline that makes the selectivity curve interpretable.
-        # "corr" is the ADVERSARIAL case: this fixture clusters by
-        # vec_id % 64, so `vec_id % 64 = 0` selects exactly ONE true
-        # cluster (sel ≈ 1/64) and the survivors concentrate in one or
-        # two coarse lists — a query from any other cluster probes its
-        # own neighborhood and misses them entirely.  The orthogonal
-        # rows measure the production norm; this row measures the
-        # failure mode the ivfadc_topk docstring warns about
-        # (predicate CORRELATED with embedding position).
-        for mod, sel, match_only in (
-            (1, "1.0", False), (2, "0.5", False), (10, "0.1", False),
-            (100, "0.01", False),
-            (64, "corr0.016", False),       # the adversarial collapse
-            (64, "corr_matchprobe", True),  # …and its repair
-        ):
-            pred = f"vec_id % {mod} = 0"
-            exact = similarity.brute_force_topk_arrow(
-                q_side,
-                prep.filter(F.col("vec_id") >= 256).filter(pred),
-                k=10,
-            ).persist()
-            held.append(exact)
-            exact.count()
-            t0 = time.time()
-            row = similarity.ann_recall(
-                similarity.ivfadc_topk(
-                    q_side, index, coarse, cb, k=10, nprobe=nprobe,
-                    m=m_, dim=64, where=pred,
-                    probe_matching_only=match_only,
-                ),
-                exact,
-            ).agg(
-                F.avg("recall").alias("r"), F.count(F.lit(1)).alias("nq")
-            ).collect()[0]
-            key = f"ivfadc_filtered_recall10_{n // 1_000_000}m_sel{sel}"
-            t[key] = {
-                "sec": round(time.time() - t0, 1), "rows": row.nq,
-                "mean_recall_at_10": round(row.r, 4),
-            }
-            print(f"  {t[key]['sec']:7.1f} s  recall@10 "
-                  f"{t[key]['mean_recall_at_10']}  {key}", file=sys.stderr)
-    except Exception as ex:  # noqa: BLE001
-        t["r11_filtered_error"] = error_line(ex)
-        print(f"  FAILED  r11 filtered: {t['r11_filtered_error']}",
-              file=sys.stderr)
-    finally:
-        for df in held:
-            df.unpersist()
-        held = []
-
-    # --- 3: rebalance under drift --------------------------------------
-    try:
-        import tempfile
-
-        prep = similarity.prepare(synth_clustered_embs(spark, n)).persist()
-        held.append(prep)
-        prep.count()
-        c_side = prep.filter(F.col("vec_id") >= 256)
-        # drifted coarse: trained on HALF the clusters only (vec_id % 64
-        # < 32 ↔ cluster id % 64 < 32 in this fixture) — yesterday's
-        # distribution; today's corpus covers all 64
-        stale_sample = c_side.filter(
-            (F.pmod(F.xxhash64("vec_id"), F.lit(20)) == 0)
-            & (F.col("vec_id") % 64 < 32)
-        )
-        coarse = similarity.kmeans_lite(
-            stale_sample, k=n_lists, iters=3,
-            seeds=similarity.farthest_first_seeds(stale_sample, n_lists),
-        )
-        coarse_rows = sorted(
-            (int(r["vec_id"]), [int(v) for v in r["q"]])
-            for r in coarse.select("vec_id", "q").collect()
-        )
-        res_sample = similarity.residualize(
-            similarity.ivf_assign_local(stale_sample, coarse_rows),
-            coarse_rows,
-        )
-        cb = similarity.pq_train_codebooks(
-            res_sample, k=k_, m=m_, dim=64, iters=4
-        )
-        path = tempfile.mkdtemp(prefix="nr_rfc_probe_rebal_") + "/idx"
-        t0 = time.time()
-        ann_store.save_ivfadc(
-            similarity.ivf_pq_index(
-                c_side, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="local",
-            ),
-            path, coarse_rows, cb, m=m_, dim=64,
-        )
-        t["rebalance_store_build_drifted"] = {
-            "sec": round(time.time() - t0, 1), "rows": len(coarse_rows),
-        }
-        exact10 = similarity.brute_force_topk_arrow(
-            prep.filter(F.col("vec_id") < 256), c_side, k=10
-        ).persist()
-        held.append(exact10)
-        exact10.count()
-
-        def _recall(label):
-            loaded = ann_store.load_ivfadc(path)
-            row = similarity.ann_recall(
-                loaded.search(
-                    prep.filter(F.col("vec_id") < 256), k=10, nprobe=nprobe
-                ),
-                exact10,
-            ).agg(F.avg("recall").alias("r")).collect()[0]
-            t[label] = {"mean_recall_at_10": round(row.r, 4)}
-            print(f"  recall@10 {t[label]['mean_recall_at_10']}  {label}",
-                  file=sys.stderr)
-
-        _recall(f"rebalance_recall_before_np{nprobe}")
-        t0 = time.time()
-        noop = ann_store.rebalance_ivfadc(
-            spark, path, c_side, threshold=1e9
-        )
-        t["rebalance_noop_sweep"] = {
-            "sec": round(time.time() - t0, 1),
-            "skew": noop["skew_before"],
-        }
-        print(f"  {t['rebalance_noop_sweep']['sec']:7.1f} s  skew "
-              f"{noop['skew_before']}  rebalance_noop_sweep", file=sys.stderr)
-        t0 = time.time()
-        rep = ann_store.rebalance_ivfadc(
-            spark, path, c_side, threshold=2.0
-        )
-        t["rebalance_sweep_1m"] = {
-            "sec": round(time.time() - t0, 1),
-            "skew_before": rep.get("skew_before"),
-            "skew_after": rep.get("skew_after"),
-            "rebalanced": rep.get("rebalanced"),
-        }
-        print(f"  {t['rebalance_sweep_1m']['sec']:7.1f} s  skew "
-              f"{rep.get('skew_before')} -> {rep.get('skew_after')}  "
-              "rebalance_sweep_1m", file=sys.stderr)
-        _recall(f"rebalance_recall_after_np{nprobe}")
-        import shutil
-
-        shutil.rmtree(os.path.dirname(path), ignore_errors=True)
-    except Exception as ex:  # noqa: BLE001
-        t["r11_rebalance_error"] = error_line(ex)
-        print(f"  FAILED  r11 rebalance: {t['r11_rebalance_error']}",
-              file=sys.stderr)
-    finally:
-        for df in held:
-            df.unpersist()
-
-
-def r12_tier(spark, t: dict, n: int) -> None:
-    """Round-12 probes on the clustered fixture:
-
-    1. **Multi-segment search at scale**: a ``n``-code frozen base plus
-       a 10 %-of-n fresh admission segment with its OWN coarse
-       quantizer (fewer lists — admission segments are smaller) and
-       OWN codebook, searched as one via
-       ``ann_store.search_segments``; recall@10 vs exact ground truth
-       over the FULL corpus, anchored by one combined index trained on
-       everything.  Then 1 % of the base is tombstoned
-       (``delete_vectors``) and the merged search re-measured against
-       exact-over-survivors — the broadcast anti-join's cost and the
-       slate's correctness under deletion, at scale.
-    2. **Adaptive nprobe under the correlated predicate** (the r11
-       collapse fixture, ``vec_id % 64 = 0``): recall-vs-budget rows
-       for ``target_candidates`` ∈ {1k, 4k, 16k} at floor nprobe=1,
-       anchored by the r11 ``probe_matching_only`` repair at nprobe=8
-       — the dial should walk recall up toward the full-matching
-       ceiling as the budget covers more of the ~n/64 survivors.
-    """
-    import shutil
-    import tempfile
-
-    from nr_rfc_dischargeobs_spark.extensions import ann_store, similarity
-
-    m_, k_ = 16, 16
-    held = []
-
-    def _train_save(prep_part, lists, path, sample_mod=20):
-        sample = prep_part.filter(
-            F.pmod(F.xxhash64("vec_id"), F.lit(sample_mod)) == 0
-        )
-        coarse = similarity.kmeans_lite(
-            sample, k=lists, iters=3,
-            seeds=similarity.farthest_first_seeds(sample, lists),
-        )
-        coarse_rows = sorted(
-            (int(r["vec_id"]), [int(v) for v in r["q"]])
-            for r in coarse.select("vec_id", "q").collect()
-        )
-        res_sample = similarity.residualize(
-            similarity.ivf_assign_local(sample, coarse_rows), coarse_rows
-        )
-        cb = similarity.pq_train_codebooks(
-            res_sample, k=k_, m=m_, dim=64, iters=4
-        )
-        ann_store.save_ivfadc(
-            similarity.ivf_pq_index(
-                prep_part, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="local",
-            ),
-            path, coarse_rows, cb, m=m_, dim=64,
-        )
-
-    # --- 1: segments at scale ------------------------------------------
-    try:
-        total = n + n // 10
-        emb = synth_clustered_embs(spark, total).persist()
-        held.append(emb)
-        emb.count()
-        prep = similarity.prepare(emb).persist()
-        held.append(prep)
-        prep.count()
-        q_raw = emb.filter(F.col("vec_id") < 256)
-        corpus = prep.filter(F.col("vec_id") >= 256)
-        base_p = prep.filter(
-            (F.col("vec_id") >= 256) & (F.col("vec_id") < n)
-        )
-        fresh_p = prep.filter(F.col("vec_id") >= n)
-        root = tempfile.mkdtemp(prefix="nr_rfc_probe_seg_")
-        base_path, fresh_path = root + "/base", root + "/fresh"
-        combo_path = root + "/combined"
-
-        t0 = time.time()
-        _train_save(base_p, 64, base_path)
-        t["seg_base_build"] = {"sec": round(time.time() - t0, 1), "rows": n}
-        t0 = time.time()
-        _train_save(fresh_p, 16, fresh_path)
-        t["seg_fresh_build"] = {
-            "sec": round(time.time() - t0, 1), "rows": n // 10,
-        }
-        t0 = time.time()
-        _train_save(corpus, 64, combo_path)
-        t["seg_combined_build"] = {
-            "sec": round(time.time() - t0, 1), "rows": total - 256,
-        }
-
-        exact10 = similarity.brute_force_topk_arrow(
-            prep.filter(F.col("vec_id") < 256), corpus, k=10
-        ).persist()
-        held.append(exact10)
-        exact10.count()
-
-        t0 = time.time()
-        seg_row = similarity.ann_recall(
-            ann_store.search_segments(
-                spark, [base_path, fresh_path], q_raw, k=10, nprobe=8
-            ),
-            exact10,
-        ).agg(F.avg("recall").alias("r")).collect()[0]
-        t["seg_search_recall10_np8"] = {
-            "sec": round(time.time() - t0, 1),
-            "mean_recall_at_10": round(seg_row.r, 4),
-        }
-        t0 = time.time()
-        combo_row = similarity.ann_recall(
-            ann_store.load_ivfadc(combo_path).search_embeddings(
-                q_raw, k=10, nprobe=8
-            ),
-            exact10,
-        ).agg(F.avg("recall").alias("r")).collect()[0]
-        t["seg_combined_recall10_np8"] = {
-            "sec": round(time.time() - t0, 1),
-            "mean_recall_at_10": round(combo_row.r, 4),
-        }
-        for key in ("seg_search_recall10_np8", "seg_combined_recall10_np8"):
-            print(f"  {t[key]['sec']:7.1f} s  recall@10 "
-                  f"{t[key]['mean_recall_at_10']}  {key}", file=sys.stderr)
-
-        # tombstone 1% of the base, re-measure vs exact-over-survivors
-        t0 = time.time()
-        n_del = ann_store.delete_vectors(
-            spark, base_path, "vec_id % 100 = 7"
-        )
-        t["seg_delete_1pct"] = {
-            "sec": round(time.time() - t0, 1), "rows": n_del,
-        }
-        exact_surv = similarity.brute_force_topk_arrow(
-            prep.filter(F.col("vec_id") < 256),
-            corpus.filter(
-                (F.col("vec_id") >= n) | (F.col("vec_id") % 100 != 7)
-            ),
-            k=10,
-        ).persist()
-        held.append(exact_surv)
-        exact_surv.count()
-        t0 = time.time()
-        del_row = similarity.ann_recall(
-            ann_store.search_segments(
-                spark, [base_path, fresh_path], q_raw, k=10, nprobe=8
-            ),
-            exact_surv,
-        ).agg(F.avg("recall").alias("r")).collect()[0]
-        t["seg_search_tombstoned_recall10_np8"] = {
-            "sec": round(time.time() - t0, 1),
-            "mean_recall_at_10": round(del_row.r, 4),
-        }
-        print(f"  {t['seg_search_tombstoned_recall10_np8']['sec']:7.1f} s  "
-              f"recall@10 "
-              f"{t['seg_search_tombstoned_recall10_np8']['mean_recall_at_10']}"
-              f"  seg_search_tombstoned_recall10_np8", file=sys.stderr)
-        shutil.rmtree(root, ignore_errors=True)
-    except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["r12_segments_error"] = error_line(ex)
-        print(f"  FAILED  r12 segments: {t['r12_segments_error']}",
-              file=sys.stderr)
-    finally:
-        for df in held:
-            df.unpersist()
-        held = []
-
-    r12_adaptive_tier(spark, t, n)
-
-
-def r12_adaptive_tier(spark, t: dict, n: int) -> None:
-    """Adaptive-nprobe (``target_candidates``) recall-vs-budget rows.
-
-    Two predicates, two regimes:
-    - **correlated** (``vec_id % 64 = 0`` — one true cluster): the
-      survivors concentrate in ~ONE matched list, so every budget
-      probes that list and the rows pin the important invariant —
-      the dial reaches the full matching-probe recall at 1/64th of
-      the index scanned, regardless of target.
-    - **uncorrelated selective** (``vec_id % 100 = 0`` — survivors
-      spread ~n/6400 per list): the budget CURVE shows — each target
-      covers ⌈target/per-list⌉ matched lists per query, so recall
-      rises with target while a fixed nprobe=8 anchor is stuck at 8
-      lists' worth of candidates.
-    """
-    from nr_rfc_dischargeobs_spark.extensions import similarity
-
-    m_, k_ = 16, 16
-    held = []
-    try:
-        prep = similarity.prepare(synth_clustered_embs(spark, n)).persist()
-        held.append(prep)
-        prep.count()
-        q_side = prep.filter(F.col("vec_id") < 256)
-        c_side = prep.filter(F.col("vec_id") >= 256)
-        sample = c_side.filter(F.pmod(F.xxhash64("vec_id"), F.lit(20)) == 0)
-        coarse = similarity.kmeans_lite(
-            sample, k=64, iters=3,
-            seeds=similarity.farthest_first_seeds(sample, 64),
-        ).persist()
-        held.append(coarse)
-        coarse.count()
-        coarse_rows = [
-            (int(r["vec_id"]), [int(v) for v in r["q"]])
-            for r in coarse.select("vec_id", "q").collect()
-        ]
-        cb = similarity.pq_train_codebooks(
-            similarity.residualize(
-                similarity.ivf_assign(sample, coarse, 1, None), coarse_rows
-            ),
-            k=k_, m=m_, dim=64, iters=4,
-        )
-        index = similarity.ivf_pq_index(
-            c_side, coarse, cb, m=m_, dim=64, residual=True,
-            coarse_rows=coarse_rows,
-        ).persist()
-        held.append(index)
-        index.count()
-        for tag, pred, targets in (
-            ("corr", "vec_id % 64 = 0", (1000, 16000)),
-            ("sel0.01", "vec_id % 100 = 0", (500, 2000, 8000)),
-        ):
-            exact = similarity.brute_force_topk_arrow(
-                q_side, c_side.filter(pred), k=10
-            ).persist()
-            held.append(exact)
-            exact.count()
-            runs = [
-                (f"{tag}_filtered_np8", dict(nprobe=8)),
-                (f"{tag}_matchprobe_np8",
-                 dict(nprobe=8, probe_matching_only=True)),
-            ]
-            runs += [
-                (f"{tag}_target{tc}_np1",
-                 dict(nprobe=1, target_candidates=tc))
-                for tc in targets
-            ]
-            for label, kw in runs:
-                t0 = time.time()
-                row = similarity.ann_recall(
-                    similarity.ivfadc_topk(
-                        q_side, index, coarse, cb, k=10, m=m_, dim=64,
-                        where=pred, **kw,
-                    ),
-                    exact,
-                ).agg(F.avg("recall").alias("r")).collect()[0]
-                key = f"ivfadc_adaptive_recall10_{n // 1_000_000}m_{label}"
-                t[key] = {
-                    "sec": round(time.time() - t0, 1),
-                    "mean_recall_at_10": round(row.r, 4),
-                }
-                print(f"  {t[key]['sec']:7.1f} s  recall@10 "
-                      f"{t[key]['mean_recall_at_10']}  {key}",
-                      file=sys.stderr)
-    except Exception as ex:  # noqa: BLE001
-        t["r12_adaptive_error"] = error_line(ex)
-        print(f"  FAILED  r12 adaptive: {t['r12_adaptive_error']}",
-              file=sys.stderr)
-    finally:
-        for df in held:
-            df.unpersist()
-
-
-def r13_tier(spark, t: dict, n: int) -> None:
-    """Round-13 probe: the END-TO-END store lifecycle at scale, one
-    quotable artifact with per-stage timings — build (ingest), delete
-    (GDPR latency), purge sweep, fresh admission, multi-segment search
-    (the pre-merge steady state), **segment merge**, and post-merge
-    search.  The headline is the merge's COST REVERSION: round 12
-    measured two-segment search at ~2× single-index cost
-    (``seg_search_recall10_np8`` 21.5 s vs ``seg_combined_recall10_np8``
-    9.6 s) with nothing to shrink the segment set; ``merge_segments``
-    is the closer, and ``lc_merged_search`` must land back at
-    single-index cost with recall ≈ the combined-index anchor.  Same
-    fixture and recipe as the r12 tier (m=16, k=16, 64-list base,
-    16-list fresh with its OWN model — so the merge exercises the
-    re-encode-from-raw path, the hard one).
-
-    Second half: the UNFILTERED candidate-budget curve
-    (``target_candidates`` with no predicate — nprobe auto-tune) on
-    the merged 1M store: recall@10 should walk up with the budget
-    while the fixed nprobe=8 anchor is stuck at 8 lists' worth.
-    """
-    import shutil
-    import tempfile
-
-    from nr_rfc_dischargeobs_spark.extensions import ann_store, similarity
-
-    m_, k_ = 16, 16
-    held = []
-
-    def _train_save(prep_part, lists, path, sample_mod=20):
-        sample = prep_part.filter(
-            F.pmod(F.xxhash64("vec_id"), F.lit(sample_mod)) == 0
-        )
-        coarse = similarity.kmeans_lite(
-            sample, k=lists, iters=3,
-            seeds=similarity.farthest_first_seeds(sample, lists),
-        )
-        coarse_rows = sorted(
-            (int(r["vec_id"]), [int(v) for v in r["q"]])
-            for r in coarse.select("vec_id", "q").collect()
-        )
-        res_sample = similarity.residualize(
-            similarity.ivf_assign_local(sample, coarse_rows), coarse_rows
-        )
-        cb = similarity.pq_train_codebooks(
-            res_sample, k=k_, m=m_, dim=64, iters=4
-        )
-        ann_store.save_ivfadc(
-            similarity.ivf_pq_index(
-                prep_part, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="local",
-            ),
-            path, coarse_rows, cb, m=m_, dim=64,
-        )
-
-    def _stage(key, fn, **extra):
-        t0 = time.time()
-        out = fn()
-        t[key] = {"sec": round(time.time() - t0, 1), **extra}
-        print(f"  {t[key]['sec']:7.1f} s  {key}", file=sys.stderr)
-        return out
-
-    try:
-        total = n + n // 10
-        emb = synth_clustered_embs(spark, total).persist()
-        held.append(emb)
-        emb.count()
-        prep = similarity.prepare(emb).persist()
-        held.append(prep)
-        prep.count()
-        q_raw = emb.filter(F.col("vec_id") < 256)
-        base_p = prep.filter(
-            (F.col("vec_id") >= 256) & (F.col("vec_id") < n)
-        )
-        fresh_p = prep.filter(F.col("vec_id") >= n)
-        root = tempfile.mkdtemp(prefix="nr_rfc_probe_lc_")
-        base_path, fresh_path = root + "/base", root + "/fresh"
-        merged_path = root + "/merged"
-
-        # 1: ingest — the frozen base
-        _stage("lc_base_build", lambda: _train_save(base_p, 64, base_path),
-               rows=n)
-        # 2: GDPR deletes — latency is one small parquet append
-        ndel = _stage(
-            "lc_delete_1pct",
-            lambda: ann_store.delete_vectors(
-                spark, base_path, "vec_id % 100 = 7"
-            ),
-        )
-        t["lc_delete_1pct"]["rows"] = int(ndel)
-        # 3: purge sweep — the staged-swap rewrite, bytes actually gone
-        rep = _stage(
-            "lc_compact_deleted",
-            lambda: ann_store.compact_deleted(spark, base_path),
-        )
-        t["lc_compact_deleted"].update(
-            purged=rep["purged"], kept=rep["kept"]
-        )
-        # re-delete a fresh 1% AFTER the purge so the merge still has
-        # tombstones to resolve (the steady state: deletes keep landing)
-        ndel2 = _stage(
-            "lc_delete_post_sweep",
-            lambda: ann_store.delete_vectors(
-                spark, base_path, "vec_id % 100 = 11"
-            ),
-        )
-        t["lc_delete_post_sweep"]["rows"] = int(ndel2)
-        # 4: fresh admission segment, own (smaller) model
-        _stage("lc_fresh_build",
-               lambda: _train_save(fresh_p, 16, fresh_path),
-               rows=n // 10)
-
-        surv = prep.filter(
-            (F.col("vec_id") >= n)
-            | ((F.col("vec_id") >= 256)
-               & (F.col("vec_id") % 100 != 7)
-               & (F.col("vec_id") % 100 != 11))
-        )
-        exact10 = similarity.brute_force_topk_arrow(
-            prep.filter(F.col("vec_id") < 256), surv, k=10
-        ).persist()
-        held.append(exact10)
-        exact10.count()
-
-        def _recall(df):
-            return round(similarity.ann_recall(df, exact10).agg(
-                F.avg("recall").alias("r")
-            ).collect()[0].r, 4)
-
-        # 5: the pre-merge steady state — two segments per search
-        r_seg = _stage(
-            "lc_segment_search_np8",
-            lambda: _recall(ann_store.search_segments(
-                spark, [base_path, fresh_path], q_raw, k=10, nprobe=8
-            )),
-        )
-        t["lc_segment_search_np8"]["mean_recall_at_10"] = r_seg
-        # 6: THE CLOSER — fold the fresh segment into the base (its own
-        # model differs, so this is the re-encode-from-raw path)
-        mrep = _stage(
-            "lc_merge_segments",
-            lambda: ann_store.merge_segments(
-                spark, [base_path, fresh_path], merged_path, raw_emb=emb,
-            ),
-        )
-        t["lc_merge_segments"].update(
-            rows=mrep["rows"], carried=mrep["carried"],
-            reencoded=mrep["reencoded"],
-            dropped_deleted=mrep["dropped_deleted"],
-        )
-        # 7: post-merge — ONE path, single-index cost again
-        merged = ann_store.load_ivfadc(merged_path)
-        r_m = _stage(
-            "lc_merged_search_np8",
-            lambda: _recall(merged.search_embeddings(q_raw, k=10,
-                                                     nprobe=8)),
-        )
-        t["lc_merged_search_np8"]["mean_recall_at_10"] = r_m
-
-        # --- unfiltered candidate-budget curve on the merged store ---
-        anchor = _stage(
-            "lc_budget_anchor_np8",
-            lambda: _recall(merged.search_embeddings(q_raw, k=10,
-                                                     nprobe=8)),
-        )
-        t["lc_budget_anchor_np8"]["mean_recall_at_10"] = anchor
-        # at 1M/64 lists (~15.6k/list) the three targets land below, at,
-        # and ABOVE the np8 anchor's 8-lists-worth of candidates — the
-        # curve should cross the anchor on the way up
-        for target in (16_000, 64_000, 256_000):
-            r_b = _stage(
-                f"lc_budget_target_{target // 1000}k",
-                lambda target=target: _recall(merged.search_embeddings(
-                    q_raw, k=10, nprobe=1, target_candidates=target
-                )),
-            )
-            t[f"lc_budget_target_{target // 1000}k"].update(
-                mean_recall_at_10=r_b, floor_nprobe=1,
-            )
-        shutil.rmtree(root, ignore_errors=True)
-    except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["r13_lifecycle_error"] = error_line(ex)
-        print(f"  FAILED  r13 lifecycle: {t['r13_lifecycle_error']}",
-              file=sys.stderr)
-    finally:
-        for df in held:
-            df.unpersist()
-
-
-def r13_budget_tier(spark, t: dict, n: int) -> None:
-    """Unfiltered candidate-budget curve on the RANDOM fixture — the
-    counterpart of the r13 lifecycle tier's clustered curve.  On
-    clustered data every query's true neighbors live in ONE list, so
-    recall is budget-insensitive and the dial converts directly into
-    byte savings (10.7 s at ~1 list vs 13.6 s at nprobe=8, same
-    recall).  On random data the true top-10 scatter across lists, so
-    recall must WALK UP with the budget — the curve a caller tuning
-    "candidates per query" actually reads — while the fixed-np8 anchor
-    sits at 8 lists' worth."""
-    import shutil
-    import tempfile
-
-    from nr_rfc_dischargeobs_spark.extensions import ann_store, similarity
-
-    m_, k_ = 16, 16
-    held = []
-    try:
-        prep = similarity.prepare(synth_random_embs(spark, n)).persist()
-        held.append(prep)
-        prep.count()
-        q_raw_prep = prep.filter(F.col("vec_id") < 256)
-        corpus = prep.filter(F.col("vec_id") >= 256)
-        sample = corpus.filter(
-            F.pmod(F.xxhash64("vec_id"), F.lit(20)) == 0
-        )
-        coarse = similarity.kmeans_lite(
-            sample, k=64, iters=3,
-            seeds=similarity.farthest_first_seeds(sample, 64),
-        )
-        coarse_rows = sorted(
-            (int(r["vec_id"]), [int(v) for v in r["q"]])
-            for r in coarse.select("vec_id", "q").collect()
-        )
-        cb = similarity.pq_train_codebooks(
-            similarity.residualize(
-                similarity.ivf_assign_local(sample, coarse_rows),
-                coarse_rows,
-            ),
-            k=k_, m=m_, dim=64, iters=4,
-        )
-        root = tempfile.mkdtemp(prefix="nr_rfc_probe_bud_")
-        t0 = time.time()
-        ix = ann_store.save_ivfadc(
-            similarity.ivf_pq_index(
-                corpus, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="local",
-            ),
-            root + "/ix", coarse_rows, cb, m=m_, dim=64,
-        )
-        t["bud_random_build"] = {
-            "sec": round(time.time() - t0, 1), "rows": n - 256,
-        }
-        exact10 = similarity.brute_force_topk_arrow(
-            q_raw_prep, corpus, k=10
-        ).persist()
-        held.append(exact10)
-        exact10.count()
-
-        def _run(key, **kw):
-            t0 = time.time()
-            r = round(similarity.ann_recall(
-                ix.search(q_raw_prep, k=10, **kw), exact10
-            ).agg(F.avg("recall").alias("r")).collect()[0].r, 4)
-            t[key] = {"sec": round(time.time() - t0, 1),
-                      "mean_recall_at_10": r, **kw}
-            print(f"  {t[key]['sec']:7.1f} s  recall@10 {r}  {key}",
-                  file=sys.stderr)
-
-        _run("bud_random_anchor_np8", nprobe=8)
-        for target in (16_000, 64_000, 256_000):
-            _run(f"bud_random_target_{target // 1000}k",
-                 nprobe=1, target_candidates=target)
-        shutil.rmtree(root, ignore_errors=True)
-    except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["r13_budget_error"] = error_line(ex)
-        print(f"  FAILED  r13 budget: {t['r13_budget_error']}",
-              file=sys.stderr)
-    finally:
-        for df in held:
-            df.unpersist()
-
-
-def r13_range_tier(spark, t: dict, n: int) -> None:
-    """Range search at scale (round 13): the radius question answered
-    WITHOUT the per-query rank window.  On the clustered 1M fixture —
-    the near-dup-harvest shape range search exists for — build the
-    standard 64-list store, time the top-10 anchor, derive the radius
-    from the anchor itself (the median 10th-neighbor score, so the
-    range answer is "everything at least as close as a typical 10th
-    neighbor" and returns a comparable row volume), then time the same
-    probed scan as a range query: the sort exchange is gone, so the
-    range pass should land at-or-below the top-k pass while returning
-    MORE rows.  Second half: the same radius through
-    ``range_search_segments`` on the base + fresh two-segment posture
-    (per-segment threshold, max-dedup merge, still no rank window)."""
-    import shutil
-    import tempfile
-
-    from nr_rfc_dischargeobs_spark.extensions import ann_store, similarity
-
-    m_, k_ = 16, 16
-    held = []
-
-    def _train_save(prep_part, lists, path):
-        sample = prep_part.filter(
-            F.pmod(F.xxhash64("vec_id"), F.lit(20)) == 0
-        )
-        coarse = similarity.kmeans_lite(
-            sample, k=lists, iters=3,
-            seeds=similarity.farthest_first_seeds(sample, lists),
-        )
-        coarse_rows = sorted(
-            (int(r["vec_id"]), [int(v) for v in r["q"]])
-            for r in coarse.select("vec_id", "q").collect()
-        )
-        cb = similarity.pq_train_codebooks(
-            similarity.residualize(
-                similarity.ivf_assign_local(sample, coarse_rows),
-                coarse_rows,
-            ),
-            k=k_, m=m_, dim=64, iters=4,
-        )
-        ann_store.save_ivfadc(
-            similarity.ivf_pq_index(
-                prep_part, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="local",
-            ),
-            path, coarse_rows, cb, m=m_, dim=64,
-        )
-
-    try:
-        total = n + n // 10
-        emb = synth_clustered_embs(spark, total).persist()
-        held.append(emb)
-        emb.count()
-        prep = similarity.prepare(emb).persist()
-        held.append(prep)
-        prep.count()
-        q_raw = emb.filter(F.col("vec_id") < 256)
-        q_prep = prep.filter(F.col("vec_id") < 256)
-        base_part = prep.filter(
-            (F.col("vec_id") >= 256) & (F.col("vec_id") < n)
-        )
-        fresh_part = prep.filter(F.col("vec_id") >= n)
-        root = tempfile.mkdtemp(prefix="nr_rfc_probe_rng_")
-        base_path, fresh_path = root + "/base", root + "/fresh"
-
-        t0 = time.time()
-        _train_save(base_part, 64, base_path)
-        t["rng_base_build"] = {
-            "sec": round(time.time() - t0, 1), "rows": n - 256,
-        }
-        print(f"  {t['rng_base_build']['sec']:7.1f} s  rng_base_build",
-              file=sys.stderr)
-        ix = ann_store.load_ivfadc(base_path)
-
-        # top-k anchor: the rank-window plan this tier compares against
-        t0 = time.time()
-        anchor = ix.search(q_prep, k=10, nprobe=8)
-        n_anchor = force(anchor)
-        t["rng_topk10_np8"] = {
-            "sec": round(time.time() - t0, 1), "rows": n_anchor,
-        }
-        print(f"  {t['rng_topk10_np8']['sec']:7.1f} s  rng_topk10_np8",
-              file=sys.stderr)
-
-        # the radius: median 10th-neighbor score over the 256 queries —
-        # a bounded collect (≤ 256 rows), data-derived so the range
-        # volume is comparable across fixture regenerations
-        tenth = sorted(
-            float(r["cosine_adc"])
-            for r in anchor.filter(F.col("rank") == 10)
-            .select("cosine_adc").collect()
-        )
-        tau = round(tenth[len(tenth) // 2], 4) if tenth else 0.5
-
-        t0 = time.time()
-        n_rng = force(ix.range_search(q_prep, tau, nprobe=8))
-        t["rng_range_np8"] = {
-            "sec": round(time.time() - t0, 1), "rows": n_rng, "tau": tau,
-        }
-        print(f"  {t['rng_range_np8']['sec']:7.1f} s  rng_range_np8 "
-              f"(tau={tau}, rows={n_rng})", file=sys.stderr)
-
-        # the two-segment posture: same radius through the per-segment
-        # range + max-dedup merge (fresh segment has its OWN model)
-        t0 = time.time()
-        _train_save(fresh_part, 16, fresh_path)
-        t["rng_fresh_build"] = {
-            "sec": round(time.time() - t0, 1), "rows": n // 10,
-        }
-        print(f"  {t['rng_fresh_build']['sec']:7.1f} s  rng_fresh_build",
-              file=sys.stderr)
-        t0 = time.time()
-        n_seg = force(ann_store.range_search_segments(
-            spark, [base_path, fresh_path], q_raw, tau, nprobe=8
-        ))
-        t["rng_seg_range_np8"] = {
-            "sec": round(time.time() - t0, 1), "rows": n_seg, "tau": tau,
-        }
-        print(f"  {t['rng_seg_range_np8']['sec']:7.1f} s  "
-              f"rng_seg_range_np8 (rows={n_seg})", file=sys.stderr)
-        shutil.rmtree(root, ignore_errors=True)
-    except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["r13_range_error"] = error_line(ex)
-        print(f"  FAILED  r13 range: {t['r13_range_error']}",
-              file=sys.stderr)
-    finally:
-        for df in held:
-            df.unpersist()
-
-
-def sq8_tier(spark, t: dict, n: int) -> None:
-    """SQ8 at scale (round 13): the scalar-quantizer rung measured on
-    the RANDOM 1M fixture (the honest recall shape — clustered recall
-    saturates).  Train (one aggregate), encode (scan-local tinyint
-    codes + stored norms), then flat search 256 exact queries against
-    the full reconstructed corpus — no coarse pruning, so the search
-    cost is the 1-byte/dim full-scan price and the recall ceiling of
-    the 8-bit grid itself, the number that brackets every IVF-SQ
-    composition from above."""
-    from nr_rfc_dischargeobs_spark.extensions import similarity
-
-    held = []
-    try:
-        prep = similarity.prepare(synth_random_embs(spark, n)).persist()
-        held.append(prep)
-        prep.count()
-        queries = prep.filter(F.col("vec_id") < 256)
-        corpus = prep.filter(F.col("vec_id") >= 256)
-
-        t0 = time.time()
-        scales = similarity.sq8_scales(corpus)
-        t["sq8_train"] = {"sec": round(time.time() - t0, 1),
-                          "dims": len(scales)}
-        print(f"  {t['sq8_train']['sec']:7.1f} s  sq8_train",
-              file=sys.stderr)
-
-        t0 = time.time()
-        codes = similarity.sq8_codes(corpus, scales).persist()
-        held.append(codes)
-        n_codes = codes.count()
-        t["sq8_encode"] = {"sec": round(time.time() - t0, 1),
-                           "rows": n_codes}
-        print(f"  {t['sq8_encode']['sec']:7.1f} s  sq8_encode",
-              file=sys.stderr)
-
-        exact10 = similarity.brute_force_topk_arrow(
-            queries, corpus, k=10
-        ).persist()
-        held.append(exact10)
-        exact10.count()
-
-        t0 = time.time()
-        got = similarity.sq8_adc_topk(queries, codes, scales, k=10)
-        r = round(similarity.ann_recall(got, exact10).agg(
-            F.avg("recall").alias("r")
-        ).collect()[0].r, 4)
-        t["sq8_search_flat"] = {
-            "sec": round(time.time() - t0, 1),
-            "mean_recall_at_10": r,
-        }
-        print(f"  {t['sq8_search_flat']['sec']:7.1f} s  recall@10 {r}"
-              f"  sq8_search_flat", file=sys.stderr)
-    except Exception as ex:  # noqa: BLE001 — isolate the tier
-        t["sq8_error"] = error_line(ex)
-        print(f"  FAILED  sq8: {t['sq8_error']}",
-              file=sys.stderr)
-    finally:
-        for df in held:
-            df.unpersist()
-
-
-# --tier choices: name -> (run(spark, timings, args), what it measures).
-def _at_adc_vecs(tier):
-    return lambda spark, t, args: tier(spark, t, args.adc_vecs)
-
-
-TIERS = {
-    "ann": (_at_adc_vecs(ann_recall_tier),
-            "the ann-recall matrix (codebook x coarse x nprobe)"),
-    "r10x": (lambda spark, t, args: r10_extras_tier(
-                 spark, t, args.docs, args.adc_vecs),
-             "round-10 extras (PCA gram, star CC, incremental "
-             "admission, BM25)"),
-    "rot": (_at_adc_vecs(rotation_recall_tier),
-            "rotated-vs-raw PQ recall over the anisotropic fixture"),
-    "r11": (_at_adc_vecs(r11_tier),
-            "rotated-vs-raw IVFADC, filtered-search selectivity curve, "
-            "rebalance under drift"),
-    "r12": (_at_adc_vecs(r12_tier),
-            "multi-segment search + tombstones at scale, adaptive-"
-            "nprobe recall-vs-budget"),
-    "r12b": (_at_adc_vecs(r12_adaptive_tier),
-             "the adaptive-nprobe recall-vs-budget sub-tier"),
-    "r13": (_at_adc_vecs(r13_tier),
-            "end-to-end store lifecycle with per-stage timings: build, "
-            "delete, purge, admit, segment search, merge, post-merge "
-            "cost reversion"),
-    "r13b": (_at_adc_vecs(r13_budget_tier),
-             "unfiltered candidate-budget curve on the random fixture"),
-    "r13c": (_at_adc_vecs(r13_range_tier),
-             "range search: top-k anchor vs the rank-window-free range "
-             "pass, single-store and two-segment"),
-    "sq8": (_at_adc_vecs(sq8_tier),
-            "SQ8 scalar quantizer: train/encode/flat-search cost and "
-            "the 8-bit grid's recall ceiling"),
-}
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--events", type=int, default=10_000_000)
@@ -1688,10 +484,10 @@ def main() -> int:
     ap.add_argument("--weather-stations", type=int, default=1_000)
     ap.add_argument("--out", default=None)
     ap.add_argument(
-        "--tier", choices=["all", *TIERS], default="all",
-        help="run one tier alone (a fast re-measure of its story): "
-             + "; ".join(f"{k}: {v[1]}" for k, v in TIERS.items())
-             + ".  Default 'all' runs the full probe.")
+        "--tier", choices=["all", "ann"], default="all",
+        help="'ann' runs the ann-recall matrix (codebook x coarse x "
+             "nprobe) alone at --adc-vecs.  Default 'all' runs the full "
+             "probe.")
     args = ap.parse_args()
 
     from nr_rfc_dischargeobs_spark.extensions import (
@@ -1714,8 +510,8 @@ def main() -> int:
     }
     t = results["timings"]
 
-    if args.tier != "all":
-        TIERS[args.tier][0](spark, t, args)
+    if args.tier == "ann":
+        ann_recall_tier(spark, t, args.adc_vecs)
         out = json.dumps(results)
         print(out)
         if args.out:
