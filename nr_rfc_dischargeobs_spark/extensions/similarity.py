@@ -1327,9 +1327,7 @@ def gram_stats(
     d=64) but feeds a map-side-combined groupBy on 2080 keys — partials,
     not exploded rows, cross the wire; the shuffle is O(partitions·d²)
     regardless of corpus size.  The O(n·d²) multiply cost is inherent to
-    a covariance; :func:`gram_stats_arrow` runs the same statistics as
-    per-batch BLAS ``XᵀX`` partials when d² expression arithmetic is the
-    bottleneck.  Overflow budget: |q| ≤ quant·max|v| (~592 at the 1024
+    a covariance.  Overflow budget: |q| ≤ quant·max|v| (~592 at the 1024
     default on unit-norm vectors), so Σ qᵢqⱼ stays in int64 past 10¹³
     vectors.
     """
@@ -1349,67 +1347,6 @@ def gram_stats(
         F.sum("qi").alias("s_i"),
         F.sum("qj").alias("s_j"),
         F.sum(F.col("qi") * F.col("qj")).alias("s_ij"),
-    )
-
-
-def gram_stats_arrow(
-    emb: DataFrame,
-    dim: int,
-    quant: int = 1024,
-    embedding: str = "embedding",
-) -> DataFrame:
-    """BLAS twin of :func:`gram_stats` — bit-identical by construction
-    (same integer grid, int64 matmul partials, exact addition in the
-    final groupBy).  Each Arrow batch contributes ONE d(d+1)/2-row
-    partial (its local ``XᵀX``/column sums), so the Python-side output
-    is model-sized per batch, never corpus-sized; the justified-kernel
-    case is d² per-row expression arithmetic dominating the scan.  It
-    stays an explicit call, unlike the size-picked PQ encode kernel:
-    whether the d² arithmetic dominates depends on the corpus size,
-    which costs a Spark job to observe."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    iu = [(i, j) for i in range(dim) for j in range(i, dim)]
-
-    def partials(batches):
-        import numpy as np  # noqa: PLC0415
-
-        ii = np.array([p[0] for p in iu])
-        jj = np.array([p[1] for p in iu])
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf[embedding].to_numpy())
-            # HALF-AWAY-FROM-ZERO, matching F.round()/quantized() — NOT
-            # np.rint, whose banker's rounding diverges on exact .5 grid
-            # points (0.5/quant is representable in float32, and
-            # rint(0.5)=0 while Spark round(0.5)=1)
-            scaled = x.astype("float64") * quant
-            qm = (np.sign(scaled) * np.floor(np.abs(scaled) + 0.5)).astype(
-                "int64"
-            )
-            g = qm.T @ qm  # exact: |q| small enough that int64 never wraps
-            s = qm.sum(axis=0)
-            yield pd.DataFrame(
-                {
-                    "i": ii,
-                    "j": jj,
-                    "n_vecs": np.int64(len(qm)),
-                    "s_i": s[ii],
-                    "s_j": s[jj],
-                    "s_ij": g[ii, jj],
-                }
-            )
-
-    part = emb.select(embedding).mapInPandas(
-        partials,
-        schema="i int, j int, n_vecs long, s_i long, s_j long, s_ij long",
-    )
-    return part.groupBy("i", "j").agg(
-        F.sum("n_vecs").alias("n_vecs"),
-        F.sum("s_i").alias("s_i"),
-        F.sum("s_j").alias("s_j"),
-        F.sum("s_ij").alias("s_ij"),
     )
 
 

@@ -4,7 +4,7 @@ names so the same implementations serve the canonical observation table
 
 Design rules (SURVEY.md §4): every operator is a pure DataFrame→DataFrame
 transformation built from Catalyst-visible expressions — no Python
-row-at-a-time UDFs, no driver-side collect in the data path.  The single
-exception is the rising/falling recurrence (``recurrence.py``), a grouped-map
-Pandas UDF because its output depends on its own prior output.
+row-at-a-time UDFs, no driver-side collect in the data path.  That holds
+for the rising/falling recurrence (``recurrence.py``) too: its output depends
+on its own prior output, but its state is one bit, so it is a window scan.
 """

@@ -10,91 +10,78 @@ while it is falling.  Implemented there as a sequential loop:
             hrly_val[i] = hrly_last[i]
 
 Because ``hrly_val`` aliases ``hrly_max``, the comparison at step i sees the
-already-overwritten value at i-1 — a true recurrence (output depends on prior
-output), not expressible as a window function.  We reproduce it exactly,
-alias semantics included, as a grouped-map Pandas UDF: partition by station,
-order by hour inside the group.  Each group is one station's hours (a year ≈
-8.8k rows — trivially in-memory), and groups run in parallel across
-executors, so the operator scales with station count, not history length.
+already-overwritten value at i-1 — output depends on prior output.  It is
+still a window function, because the state is one bit: the output at hour i
+is always ``hrly_max[i]`` (state M) or ``hrly_last[i]`` (state L).  With
+``a = hrly_max[i] <= hrly_max[i-1]`` and ``b = hrly_max[i] <= hrly_last[i-1]``
+each hour applies one of four maps to that bit:
+
+* ``a ∧ b``   → L whatever the prior state (constant);
+* ``¬a ∧ ¬b`` → M whatever the prior state (constant; every station's first
+  hour, where the lags are NULL);
+* ``a ∧ ¬b``  → swap (M reads ``a`` and goes to L, L reads ``b`` and goes to M);
+* ``¬a ∧ b``  → identity.
+
+So the state at hour i is the last constant step's value, flipped once per
+swap after it: a ``lag``, a running ``sum`` of swaps and a running
+``last(…, ignorenulls)`` over one station-partitioned, hour-ordered window.
+One Exchange, no Python worker, and the operator scales with station count,
+not history length.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 
-RESULT_SCHEMA = StructType(
-    [
-        StructField("station_id", StringType()),
-        StructField("hour", TimestampType()),
-        StructField("value", DoubleType()),
-    ]
-)
+def _le(x: Column, y: Column) -> Column:
+    """``x <= y`` as the reference's numpy loop reads it: NULL or NaN on
+    either side is false (Spark alone would order NaN above every value)."""
+    return F.coalesce(
+        (x <= y) & ~F.isnan(x) & ~F.isnan(y), F.lit(False)
+    )
 
 
-def rising_falling(
-    hourly: DataFrame,
-    key: str = "station_id",
-    hour: str = "hour",
-    hrly_max: str = "hrly_max",
-    hrly_last: str = "hrly_last",
-) -> DataFrame:
+def rising_falling(hourly: DataFrame, key: str = "station_id") -> DataFrame:
     """Apply the rising/falling rule per station.
 
     Input: one row per (key, hour) with the hour's max and last observation
-    (produce with ``groupBy(key, date_trunc('hour', ts)).agg(max, max_by)``).
-    Output: (station_id, hour, value).
-
-    Executed as hash-repartition on station + ONE ``mapInPandas`` call per
-    partition with a pandas groupby inside, not ``applyInPandas`` per
-    station: station groups are tiny (a year ≈ 8.8k hourly rows) and
-    per-group Arrow dispatch dominates — batching ~N/shuffle-partitions
-    stations per Python call amortizes it ~50× while keeping the identical
-    per-station recurrence.  A partition holds (total hourly rows /
-    ``spark.sql.shuffle.partitions``) rows — size that knob for the fleet,
-    as with any shuffle.
+    in ``hrly_max`` / ``hrly_last`` (produce with
+    ``groupBy(key, date_trunc('hour', ts)).agg(max, max_by)``).
+    Output: (station_id, hour, value), NaN read as NULL on both sides.
     """
-    prepared = hourly.select(
-        F.col(key).cast("string").alias("station_id"),
-        F.col(hour).alias("hour"),
-        F.col(hrly_max).cast("double").alias("hrly_max"),
-        F.col(hrly_last).cast("double").alias("hrly_last"),
+    # a NULL hour sorts last, where the reference's pandas sort puts NaT
+    by_hour = Window.partitionBy("station_id").orderBy(
+        F.col("hour").asc_nulls_last()
     )
-
-    def run_partition(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if not len(pdf):
-            return
-        # one sorted pass with station-boundary resets instead of a pandas
-        # groupby: building ~|stations| per-group frames costs more than
-        # the recurrence itself
-        pdf = pdf.sort_values(["station_id", "hour"], ignore_index=True)
-        station = pdf["station_id"].to_numpy()
-        vals = pdf["hrly_max"].to_numpy(copy=True)
-        maxs = pdf["hrly_max"].to_numpy()
-        last = pdf["hrly_last"].to_numpy()
-        for i in range(1, len(vals)):
-            if station[i] == station[i - 1] and maxs[i] <= vals[i - 1]:
-                vals[i] = last[i]
-        yield pd.DataFrame(
-            {"station_id": station, "hour": pdf["hour"], "value": vals}
+    so_far = by_hour.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    m, last = F.col("hrly_max"), F.col("hrly_last")
+    a = _le(m, F.col("prev_max"))
+    b = _le(m, F.col("prev_last"))
+    steps = (
+        hourly.select(
+            F.col(key).cast("string").alias("station_id"),
+            "hour",
+            m.cast("double").alias("hrly_max"),
+            last.cast("double").alias("hrly_last"),
         )
-
-    return prepared.repartition("station_id").mapInPandas(
-        run_partition, schema=RESULT_SCHEMA
+        .withColumn("prev_max", F.lag("hrly_max").over(by_hour))
+        .withColumn("prev_last", F.lag("hrly_last").over(by_hour))
+        # const: True → L, False → M, NULL for swap/identity steps
+        .withColumn("const", F.when(a == b, a))
+        .withColumn("swaps", F.sum((a & ~b).cast("int")).over(so_far))
+    )
+    anchor = F.last(
+        F.when(F.col("const").isNotNull(), F.struct("const", "swaps")),
+        ignorenulls=True,
+    ).over(so_far)
+    flipped = (F.col("swaps") - F.col("anchor.swaps")) % 2 == 1
+    value = F.when(F.col("anchor.const") != flipped, last).otherwise(m)
+    return steps.withColumn("anchor", anchor).select(
+        "station_id",
+        "hour",
+        F.nanvl(value, F.lit(None).cast("double")).alias("value"),
     )
 
 

@@ -473,9 +473,10 @@ def rising_falling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2/W4 rising/falling recurrence (``dischargeobs_write_xl.py:108-129``):
     hourly value = hourly max while rising, last-in-hour while falling, where
     "rising" compares against the *already-rewritten* previous output (the
-    reference's alias bug, preserved).  Grouped-map Pandas UDF per station —
-    the engine's only Python-side operator; parallel across stations, so it
-    scales with station count, not history length.
+    reference's alias bug, preserved).  A native window scan per station
+    (``operators/recurrence.py``): one Exchange on top of the hourly
+    aggregate, no Python worker, parallel across stations, so it scales with
+    station count, not history length.
 
     max/last aggregates move single input values (no summation), so the
     doubles are exact and the ``<=`` comparisons match any engine bit-for-bit.

@@ -7,8 +7,8 @@ the right default on a 1000-executor cluster reading 100 TB:
   reference's hand-rolled partition logic (SURVEY.md §4).
 - shuffle partitions sized for the local harness; on a real cluster AQE's
   coalescing makes the initial number mostly irrelevant.
-- Arrow enabled for the few pandas-interop edges (grouped-map recurrence,
-  Excel export adapters) so batches move columnar, never row-at-a-time.
+- Arrow enabled for the few pandas-interop edges (Excel export adapters,
+  the stated Python kernels) so batches move columnar, never row-at-a-time.
 - Session timezone pinned to UTC: the engine stores event-time as naive-UTC
   and converts to local (America/Vancouver) only at export edges, which keeps
   parquet/DuckDB/Spark agreeing bit-for-bit on timestamp values.
@@ -89,7 +89,7 @@ def get_spark(
         # volume; entries are weak-referenced, a few MB total.  Static
         # conf, so it must be set at session build.
         .config("spark.sql.codegen.cache.maxEntries", "4000")
-        # Arrow for the pandas edges (grouped-map recurrence, export adapters).
+        # Arrow for the pandas edges (export adapters, the Python kernels).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Partition discovery + pruning on the hive-layout observation store.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -107,7 +107,7 @@ _SLOW_TESTS = {
     # test_pca.py
     "test_rotation_plus_allocation_reduces_pq_distortion",
     # test_plan_shapes.py
-    "test_no_python_eval_outside_the_recurrence",
+    "test_no_python_eval_outside_the_stated_kernels",
     # test_properties.py
     "test_entropy_bounds_and_classifier_score_bound",
     "test_pack_assignments_match_pure_python_packer",

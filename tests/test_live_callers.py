@@ -44,7 +44,6 @@ KEEP = {
     "extensions/ann_store.py::rebalance_ivfadc": "next-round",
     "extensions/similarity.py::pca_rotation": "next-round",
     "extensions/similarity.py::opq_allocate": "next-round",
-    "extensions/similarity.py::gram_stats_arrow": "next-round",
 }
 
 _DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)

@@ -275,3 +275,77 @@ def test_rising_falling_randomized_matches_python_port(spark):
             a_nan = a is None or (isinstance(a, float) and math.isnan(a))
             b_nan = b is None or (isinstance(b, float) and math.isnan(b))
             assert both_nan or (a_nan and b_nan) or a == b, (sid, vals, expect)
+
+
+def _a2_run(rng, kind, n):
+    """One station's (maxs, lasts) built to exercise one step kind of the
+    scan: ``swap`` (max ≤ prior max, max > prior last), ``identity``
+    (last > max, so the next max can sit between them), ``ties`` (a
+    three-value pool) and ``holes`` (NULL and NaN on either side)."""
+    nan = float("nan")
+    if kind == "swap":
+        return [5.0] * n, [4.0] * n
+    if kind == "identity":
+        return [float(i) for i in range(n)], [i + 1.5 for i in range(n)]
+    pool = [1.0, 2.0, 3.0] + ([None, nan] if kind == "holes" else [])
+    return (
+        [rng.choice(pool) for _ in range(n)],
+        [rng.choice(pool) for _ in range(n)],
+    )
+
+
+def test_rising_falling_scan_matches_python_port_on_every_step_kind(spark):
+    """The window scan against the reference loop, per station, over
+    NULL, NaN, ties, ``last > max`` (the identity step) and long runs of
+    swaps, spliced so every step kind follows every other.  Compared
+    exactly: where the loop yields NaN the operator yields NULL."""
+    import math
+    import random
+
+    rng = random.Random(2024)
+    kinds = ["swap", "identity", "ties", "holes"]
+    rows, want = [], {}
+    for s in range(120):
+        maxs, lasts = [], []
+        for _ in range(rng.randint(1, 4)):
+            m, l = _a2_run(rng, rng.choice(kinds), rng.randint(1, 30))
+            maxs += m
+            lasts += l
+        sid = f"S{s:03d}"
+        rows += [
+            (sid, dt.datetime(2024, 1, 1) + dt.timedelta(hours=i), m, l)
+            for i, (m, l) in enumerate(zip(maxs, lasts))
+        ]
+        want[sid] = [
+            None if v is None or math.isnan(v) else v
+            for v in recurrence.rising_falling_python(maxs, lasts)
+        ]
+    df = spark.createDataFrame(
+        rows, "station_id string, hour timestamp, hrly_max double, "
+        "hrly_last double",
+    )
+    got = {}
+    for r in recurrence.rising_falling(df).collect():
+        got.setdefault(r["station_id"], []).append((r["hour"], r["value"]))
+    assert {
+        sid: [v for _, v in sorted(series)] for sid, series in got.items()
+    } == want
+
+
+def test_rising_falling_nan_comes_out_null(spark):
+    """A NaN output is NULL, never NaN: the contract the Arrow round trip
+    of the pandas operator set, kept by the scan."""
+    nan = float("nan")
+    hours = [ts(f"2024-01-01 0{i}:00:00") for i in range(3)]
+    df = spark.createDataFrame(
+        [("S", h, m, l) for h, m, l in zip(hours, [nan, 2.0, 1.0],
+                                           [nan, 2.0, nan])],
+        "station_id string, hour timestamp, hrly_max double, "
+        "hrly_last double",
+    )
+    got = sorted(
+        (r["hour"], r["value"])
+        for r in recurrence.rising_falling(df).collect()
+    )
+    # hour 0 keeps its NaN max; hour 2 falls (1 <= 2) onto its NaN last
+    assert [v for _, v in got] == [None, 2.0, None]

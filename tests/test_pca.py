@@ -1,5 +1,5 @@
 """PCA / OPQ-rotation tier: exact Gram sufficient statistics (native ≡
-Arrow ≡ numpy), driver-side eigendecomposition, scan-local projection,
+numpy), driver-side eigendecomposition, scan-local projection,
 and the energy-compaction property the rotation exists for."""
 
 from __future__ import annotations
@@ -66,19 +66,11 @@ def test_gram_stats_matches_numpy(emb_df, vectors):
     assert got == _numpy_gram(vectors)
 
 
-def test_gram_stats_arrow_bit_identical(emb_df):
-    native = _collect_gram(similarity.gram_stats(emb_df, dim=DIM, quant=QUANT))
-    arrow = _collect_gram(
-        similarity.gram_stats_arrow(emb_df, dim=DIM, quant=QUANT)
-    )
-    assert native == arrow
-
-
-def test_gram_stats_arrow_half_rounding_on_exact_grid_points(spark):
+def test_gram_stats_half_rounding_on_exact_grid_points(spark):
     """Values landing EXACTLY on .5 grid points (0.5/quant and -2.5/quant
-    are float32-representable) must quantize half-AWAY-FROM-ZERO on both
-    paths — np.rint in the Arrow kernel would read 0 and -2 where Spark's
-    round reads 1 and -3."""
+    are float32-representable) must quantize half-AWAY-FROM-ZERO —
+    banker's rounding (np.rint) would read 0 and -2 where Spark's round
+    reads 1 and -3."""
     half = 0.5 / QUANT
     rows = [
         (0, [half, -5 * half, 0.25, 0.0, 0.0, 0.0, 0.0, 0.0]),
@@ -86,9 +78,7 @@ def test_gram_stats_arrow_half_rounding_on_exact_grid_points(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     native = _collect_gram(similarity.gram_stats(df, dim=DIM, quant=QUANT))
-    arrow = _collect_gram(similarity.gram_stats_arrow(df, dim=DIM, quant=QUANT))
-    assert native == arrow
-    # and the values really are the away-from-zero ones: Σq over dim 0
+    # the values are the away-from-zero ones: Σq over dim 0
     # is 1 + 2 = 3 (banker's would read 0 + 2 = 2), dim 1 is -3 + -1 = -4
     assert native[(0, 0)][1] == 3
     assert native[(1, 1)][1] == -4

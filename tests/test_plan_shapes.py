@@ -55,11 +55,18 @@ def test_store_range_read_prunes_partitions(spark, tmp_path):
     assert pruned.count() == 1  # only February survives
 
 
-def test_no_python_eval_outside_the_recurrence(spark):
+_PYTHON_NODES = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+)
+
+
+def test_no_python_eval_outside_the_stated_kernels(spark):
     """Every plan except the STATED Python kernels must stay fully
     JVM-side — no Arrow/Batch Python eval nodes.  The whitelist is the
-    audited list (PLANS.md): the A2 recurrence (output depends on prior
-    output), the gated multimodal decode, the IVF-PQ refine stage's
+    audited list (PLANS.md): the gated multimodal decode, the IVF-PQ refine stage's
     Arrow re-rank kernel (dense int64 matmul — the BLAS shape; its
     native-expression twin is pinned bit-identical, so the Python node
     is a measured choice, not a semantic one), the round-12/13 real
@@ -69,7 +76,6 @@ def test_no_python_eval_outside_the_recurrence(spark):
     import __spark_entry__ as e
 
     allowed = {
-        "a2_rising_falling_recurrence",
         "ext_mm_decode_features",
         "ext_sim_ivf_pq_refined",
         "ext_mm_decode_png",
@@ -81,17 +87,32 @@ def test_no_python_eval_outside_the_recurrence(spark):
         if name in allowed:
             continue
         plan = _formatted(fn(spark, SF))
-        if any(
-            marker in plan
-            for marker in (
-                "ArrowEvalPython",
-                "BatchEvalPython",
-                "MapInPandas",
-                "FlatMapGroupsInPandas",
-            )
-        ):
+        if any(marker in plan for marker in _PYTHON_NODES):
             offenders.append(name)
     assert offenders == []
+
+
+def test_a2_recurrence_is_one_native_window_scan(spark):
+    """The A2 rising/falling rule runs in the JVM on both of its paths:
+    EP2's ``coffee_instant_frame`` and the registered plan.  The scan adds
+    ONE Exchange (station) on top of the hourly aggregate's own."""
+    from nr_rfc_dischargeobs_spark import pipelines
+
+    hourly = spark.createDataFrame(
+        [("S1", dt.datetime(2024, 1, 1, h), 2.0, 1.0) for h in range(3)],
+        "station_id string, hour timestamp, hrly_max double, "
+        "hrly_last double",
+    )
+    coffee = _formatted(
+        pipelines.coffee_instant_frame(hourly, stations=["S1"])
+    )
+    assert not any(marker in coffee for marker in _PYTHON_NODES)
+
+    a2 = events.rising_falling_hourly(spark, SF)
+    plan = a2._jdf.queryExecution().executedPlan().toString()
+    assert not any(marker in plan for marker in _PYTHON_NODES)
+    assert plan.count("Exchange hashpartitioning") == 2
+    assert plan.count("Window [") == 3
 
 
 def test_q21_exists_and_not_exists_are_semi_and_anti_joins(spark):

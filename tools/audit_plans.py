@@ -86,7 +86,7 @@ def main() -> None:
         "parquet scans / scans with non-empty `PushedFilters` / shuffle",
         "exchanges / broadcast-hash joins / sort-merge joins / Python eval",
         "nodes.  Engine promises: Python nodes",
-        "only in the five justified kernels — the A2 recurrence, the",
+        "only in the four justified kernels — the",
         "gated multimodal decode, the refine re-rank (BLAS matmul), the",
         "real PNG decode, and the JPEG header walk (fixture generation +",
         "inflate/filter reversal/marker parsing are inherently",
