@@ -42,35 +42,33 @@ MODEL_FILE = "_ivfadc_model.json"
 # rewrite.  Underscore-prefixed, so every parquet reader of the index
 # table ignores it (the _SUCCESS convention, verified) while a direct
 # read of <index>/_deleted sees it.  Deletions are soft until
-# compact_deleted / rebalance_ivfadc physically drops the rows.
+# compact_deleted (or merge_segments) physically drops the rows.
 TOMBSTONE_DIR = "_deleted"
 # version 1: table + coarse/codebook model.  Version 2 adds the optional
-# query-side ROTATION (the FAISS OPQ pre-transform carried with the
-# artifact): a v1 reader would search a rotated index with unrotated
-# queries — silently wrong — so rotated artifacts version-bump and an
-# old loader refuses them loudly; unrotated artifacts keep writing v1,
-# and this loader reads both.
+# query-side ROTATION (an integer matrix carried with the artifact): a
+# v1 reader would search a rotated index with unrotated queries —
+# silently wrong — so rotated artifacts version-bump and an old loader
+# refuses them loudly; unrotated artifacts keep writing v1, and this
+# loader reads both.
 _FORMAT_VERSION = 1
 _ROTATED_VERSION = 2
 
 
 def _check_rotation(rotation: dict | None) -> dict | None:
-    """Validate a rotation spec: ``mode`` is ``"pre"`` (a trained float
-    model — :func:`~.similarity.pca_rotation` /
-    :func:`~.similarity.opq_allocate` output, applied to raw embeddings
-    via ``pca_project`` BEFORE quantization) or ``"post_int"`` (an
-    all-integer matrix — e.g. :func:`~.similarity.hadamard_rows` —
+    """Validate a rotation spec: ``mode`` is ``"post_int"``, an
+    all-integer matrix (e.g. :func:`~.similarity.hadamard_rows`)
     applied to the quantized vectors via ``rotate_quantized``; exact,
-    hence oracle-checkable).
+    hence oracle-checkable.  A sidecar is input from outside the
+    process, so :func:`load_ivfadc` runs every check again.
     Returns a plain-JSON-normalized copy."""
     if rotation is None:
         return None
     mode = rotation.get("mode")
     comps = rotation.get("components")
-    if mode not in ("pre", "post_int") or not comps:
+    if mode != "post_int" or not comps:
         raise ValueError(
-            'rotation must carry mode "pre" or "post_int" and a non-empty'
-            " components matrix"
+            f'rotation must carry mode "post_int" (got {mode!r}) and a'
+            " non-empty components matrix"
         )
     width = len(comps[0])
     if any(len(row) != width for row in comps):
@@ -79,26 +77,10 @@ def _check_rotation(rotation: dict | None) -> dict | None:
             " a ragged matrix would fail (or misproject) deep inside"
             " the projection instead of at the artifact boundary"
         )
-    if mode == "post_int":
-        if any(int(v) != v for row in comps for v in row):
-            raise ValueError(
-                "post_int rotation components must be integers — a float"
-                " matrix belongs in a mode='pre' spec"
-            )
-        return {"mode": mode,
-                "components": [[int(v) for v in row] for row in comps]}
-    mean = rotation.get("mean") or [0.0] * width
-    if len(mean) != width:
-        raise ValueError(
-            f"rotation mean length {len(mean)} != components row length"
-            f" {width} — a malformed trained model, refused at the"
-            " artifact boundary"
-        )
-    return {
-        "mode": mode,
-        "components": [[float(v) for v in row] for row in comps],
-        "mean": [float(v) for v in mean],
-    }
+    if any(int(v) != v for row in comps for v in row):
+        raise ValueError("post_int rotation components must be integers")
+    return {"mode": mode,
+            "components": [[int(v) for v in row] for row in comps]}
 
 
 def apply_rotation(emb: DataFrame, rotation: dict | None) -> DataFrame:
@@ -108,13 +90,10 @@ def apply_rotation(emb: DataFrame, rotation: dict | None) -> DataFrame:
     shared by index builds, query preparation, and streamed admission
     so they can never drift."""
     rotation = _check_rotation(rotation)
+    prepared = similarity.prepare(emb)
     if rotation is None:
-        return similarity.prepare(emb)
-    if rotation["mode"] == "post_int":
-        return similarity.rotate_quantized(
-            similarity.prepare(emb), rotation["components"]
-        )
-    return similarity.rotate_prepare(emb, rotation)
+        return prepared
+    return similarity.rotate_quantized(prepared, rotation["components"])
 
 
 def _local_path(path: str) -> str:
@@ -293,10 +272,9 @@ def save_ivfadc(
     stored ``rn`` column) BEFORE writing — a raw-coded index saved here
     would search wrong, the same guard as ``ivfadc_topk``.
 
-    ``rotation`` (see :func:`_check_rotation`) records the pre-transform
-    the corpus went through before indexing — the FAISS
-    ``OPQxx,IVFyy,PQzz`` chain's OPQ matrix, carried WITH the artifact
-    so any fresh session rotates queries identically
+    ``rotation`` (see :func:`_check_rotation`) records the integer
+    rotation the corpus went through before indexing, carried WITH the
+    artifact so any fresh session rotates queries identically
     (:meth:`IvfadcIndex.search_embeddings`).  Rotated artifacts write
     format version 2; version-1 readers refuse them instead of
     silently searching with unrotated queries."""
@@ -446,9 +424,9 @@ def delete_vectors(spark: SparkSession, path: str, where) -> int:
     and the SQL TVF) anti-joins the tombstones BEFORE top-k selection,
     so deleted vectors can neither rank nor displace survivors.  The
     bytes stay on disk until :func:`compact_deleted` (pure purge) or
-    :func:`rebalance_ivfadc` (purge folded into the drift rewrite)
-    physically drops them — deletion latency is one small parquet
-    append, never a corpus rewrite.
+    an in-place :func:`merge_segments` physically drops them —
+    deletion latency is one small parquet append, never a corpus
+    rewrite.
 
     Scale shape: one pruned scan of the code table (the predicate
     pushes into parquet) for the count + id projection; the tombstone
@@ -527,11 +505,10 @@ def search_segments(
     target_candidates: int | None = None,
 ) -> DataFrame:
     """Search SEVERAL stored indexes as one — the FAISS-shards /
-    Lucene-segments posture that :func:`rebalance_ivfadc`'s contract
-    makes the steady state: after a sweep, streamed admission resumes
-    into a NEW directory and the swept store is its frozen base
-    segment, so "the" index is a frozen base plus one or more fresh
-    admission segments and production search must read them all.
+    Lucene-segments posture: streamed admission writes into a NEW
+    directory beside a frozen base store, so "the" index is a frozen
+    base plus one or more fresh admission segments and production
+    search must read them all.
 
     Per segment this is exactly :meth:`IvfadcIndex.search_embeddings`:
     the segment's OWN coarse quantizer ranks its OWN lists, its OWN
@@ -657,11 +634,11 @@ def merge_segments(
     allow_requantize: bool = False,
 ) -> dict:
     """Fold segments back into ONE store — the lifecycle CLOSER that
-    :func:`search_segments` was missing: after a rebalance the swept
-    store is a frozen base and admission accumulates fresh segments,
-    so search cost grows linearly with the segment count (each segment
-    re-prepares and re-probes every query) and nothing shrinks the set
-    — the FAISS/Lucene answer is a segment merge, and this is it.
+    :func:`search_segments` was missing: beside a frozen base store,
+    admission accumulates fresh segments, so search cost grows
+    linearly with the segment count (each segment re-prepares and
+    re-probes every query) and nothing shrinks the set — the
+    FAISS/Lucene answer is a segment merge, and this is it.
     ``paths[0]`` is the BASE: its model (coarse + codebook) and basis
     (sidecar rotation) define the merged store; every other segment's
     live rows are folded into that model.
@@ -685,14 +662,12 @@ def merge_segments(
     3. **Requantize reconstructions** (``allow_requantize=True``, same
        BASIS only): decode each code back to its quantized
        reconstruction (:func:`~.similarity.ivfadc_decode`) and encode
-       that against the base model.  This COMPOUNDS quantization error
-       (the reason :func:`rebalance_ivfadc` demands ``corpus_prepared``
-       instead of decoding) — opt-in, for callers whose raw vectors
-       are gone; recall parity is probed, never bit-pinned.  Cross-
-       BASIS requantize is refused outright: inverting a rotation on
-       the quantized grid is not exact (a Hadamard inverse divides by
-       the dimension), so the round-trip would silently shear every
-       vector.
+       that against the base model.  This COMPOUNDS quantization
+       error — opt-in, for callers whose raw vectors are gone; recall
+       parity is probed, never bit-pinned.  Cross-BASIS requantize is
+       refused outright: inverting a rotation on the quantized grid is
+       not exact (a Hadamard inverse divides by the dimension), so the
+       round-trip would silently shear every vector.
 
     Tombstones are RESOLVED, not copied: each segment's ``_deleted``
     side table drops that segment's own rows before the fold (the
@@ -722,7 +697,7 @@ def merge_segments(
     later-wins resolution anti-joins each segment against the LIVE id
     sets of later segments (fresh segments are small next to the
     frozen base by construction — corpus-scale duplication belongs in
-    a rebalance); re-encode is the scan-local ``assign="local"`` build
+    a full rebuild); re-encode is the scan-local ``assign="local"`` build
     (the model's size picks literal expressions or the BLAS kernels);
     nothing collects corpus-scale data.
     STREAMED source segments (the ``batch_id=N/list_id=K/`` layout of
@@ -902,164 +877,5 @@ def merge_segments(
         rows=n_rows,
         dropped_deleted=int(dropped_deleted),
         superseded=int(superseded),
-    )
-    return report
-
-
-def rebalance_ivfadc(
-    spark: SparkSession,
-    path: str,
-    corpus_prepared: DataFrame,
-    threshold: float = 4.0,
-    sample_limit: int = 100_000,
-    lloyd_iters: int = 3,
-) -> dict:
-    """Index MAINTENANCE under corpus drift: streamed admission
-    (:func:`~..streaming.ann.ivfadc_index_stream`) assigns new vectors
-    to a coarse quantizer trained on yesterday's distribution, so a
-    drifting corpus piles into a few hot lists — probe cost grows
-    toward a scan of the hot list and recall-per-scanned-byte decays.
-    This sweep watches exactly that and repairs it only when warranted:
-
-    1. **Trigger** — one combine-friendly aggregate over the stored
-       code table (``skew_profile`` discipline): max list occupancy
-       over MEAN occupancy across all ``n_lists`` trained lists (empty
-       lists count — a quantizer whose lists drifted empty is
-       imbalanced even if the occupied ones look even).  At or below
-       ``threshold`` the sweep is a cheap NO-OP: one aggregation, the
-       artifact untouched, ``rebalanced: False``.
-    2. **Re-train** — coarse centroids re-learned on a CAPPED sample
-       of the current corpus (:func:`~.similarity.
-       farthest_first_seeds` + the scan-local
-       :func:`~.similarity.kmeans_lite`, the settled production recipe;
-       the list count picks the assignment kernel).
-       The sample is a bounded deterministic cut:
-       a ceil'd hash-mod prefilter bounds the survivors to
-       ~``sample_limit`` rows under ANY corpus size, then a
-       hash-ordered limit makes the cut exact and deterministic under
-       any partitioning — at 100 TB the Lloyd input is ``sample_limit``
-       rows, not a fixed fraction of the corpus.
-    3. **Rewrite** — the full index rebuilt from ``corpus_prepared``
-       against the new coarse (same PQ codebook: it was trained on
-       residual GEOMETRY, which survives a coarse refresh to second
-       order — retraining it too is a separate, dearer decision the
-       caller can take with :func:`~.similarity.pq_train_codebooks` +
-       :func:`save_ivfadc`), staged and swapped through the
-       crash-recoverable compaction engine (:func:`~..streaming.
-       documents.compact_corpus` — snapshot guard, ``.precompact``
-       recovery), with the refreshed model sidecar written INTO the
-       stage so table and model can never be swapped separately.
-
-    ``corpus_prepared`` is the current corpus in the INDEX'S BASIS
-    (for a rotated artifact: ``load_ivfadc(path).prepare_queries(raw)``)
-    — codes cannot be reassigned from the stored table alone, since
-    re-encoding decoded reconstructions would compound quantization
-    error into the scores.
-
-    STREAMED stores (the ``batch_id=N/list_id=K/`` layout of
-    :func:`~..streaming.ann.ivfadc_index_stream`) rebalance into the
-    canonical flat ``list_id=K/`` layout — the sweep IS the compaction
-    of the batch history, exactly like the document store's sweeps.
-    The quiesced contract therefore extends one step: after the sweep,
-    do not write ANY further ``batch_id=N`` path into the swept tree —
-    neither the old checkpoint's next batch nor a fresh stream's batch
-    0 — because mixing the two partition schemes at one directory
-    level fails Spark's partition discovery outright
-    (CONFLICTING_PARTITION_COLUMN_NAMES; verified, not assumed).
-    Resume admission into a NEW index directory and treat the swept
-    store as its frozen base segment (searches read both and union).
-    Pinned in tests.
-
-    Returns a report dict: ``{rebalanced, n_lists, n_codes,
-    skew_before[, skew_after, n_lists_after, kept]}``.
-    """
-    from ..streaming.documents import compact_corpus
-    from .diagnostics import skew_profile
-
-    loaded = load_ivfadc(path)
-    n_lists = len(loaded.coarse_rows)
-    # the rewrite is also the tombstone purge: deleted vectors must not
-    # re-enter the rebuilt table (and the swap drops the _deleted side
-    # table with the rows it named, atomically)
-    dele = deleted_ids(spark, path)
-    if dele is not None:
-        corpus_prepared = corpus_prepared.join(
-            F.broadcast(dele), "vec_id", "left_anti"
-        )
-
-    def _skew(frame: DataFrame, lists: int) -> tuple[float, int]:
-        prof = skew_profile(frame, "list_id", top=1).collect()[0]
-        n = int(prof["n_rows"])
-        return (float(prof["cnt"]) * lists / n if n else 0.0), n
-
-    skew, n_codes = _skew(loaded.frame(spark), n_lists)
-    report = {
-        "rebalanced": False,
-        "n_lists": n_lists,
-        "n_codes": n_codes,
-        "skew_before": round(skew, 3),
-    }
-    if skew <= threshold:
-        return report
-
-    # a deterministic bounded cut: the hash
-    # prefilter bounds the sort input to ~sample_limit rows, the
-    # hash-ordered limit makes the cap exact and partition-order-proof;
-    # the repartition restores parallelism for the Lloyd iterations
-    # (limit would otherwise leave one partition).  One count job —
-    # maintenance-op scale, and only on the > threshold path.
-    n_total = corpus_prepared.count()
-    frac_mod = max(1, -(-n_total // sample_limit))  # ceil
-    sample = (
-        corpus_prepared.filter(
-            F.pmod(F.xxhash64("vec_id"), F.lit(frac_mod)) == 0
-        )
-        .orderBy(F.xxhash64("vec_id"), F.col("vec_id"))
-        .limit(sample_limit)
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .persist()  # seeding + every Lloyd pass re-reads the sample
-    )
-    try:
-        new_coarse = similarity.kmeans_lite(
-            sample,
-            k=n_lists,
-            iters=lloyd_iters,
-            seeds=similarity.farthest_first_seeds(sample, n_lists),
-            assign="local",
-        )
-        new_rows = sorted(
-            (int(r["vec_id"]), [int(v) for v in r["q"]])
-            for r in new_coarse.select("vec_id", "q").collect()
-        )
-    finally:
-        sample.unpersist()
-
-    def transform(_old_codes: DataFrame) -> DataFrame:
-        return similarity.ivf_pq_index(
-            corpus_prepared,
-            None,
-            loaded.centroid_rows,
-            m=loaded.m,
-            dim=loaded.dim,
-            assign="local",
-            residual=True,
-            coarse_rows=new_rows,
-        )
-
-    def finalize(staged: str) -> None:
-        write_ivfadc_model(
-            staged, new_rows, loaded.centroid_rows,
-            m=loaded.m, dim=loaded.dim, rotation=loaded.rotation,
-        )
-
-    kept, _ = compact_corpus(
-        spark, path, transform, partition_by=("list_id",), finalize=finalize
-    )
-    skew_after, _ = _skew(load_ivfadc(path).frame(spark), len(new_rows))
-    report.update(
-        rebalanced=True,
-        kept=int(kept),
-        n_lists_after=len(new_rows),
-        skew_after=round(skew_after, 3),
     )
     return report

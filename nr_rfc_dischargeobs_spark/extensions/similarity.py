@@ -1306,11 +1306,9 @@ def gram_stats(
     quant: int = 1024,
     embedding: str = "embedding",
 ) -> DataFrame:
-    """Covariance sufficient statistics in ONE corpus pass — the training
-    aggregate for :func:`pca_rotation` (the PCA / OPQ-style decorrelating
-    rotation in front of PQ: Jégou et al. §V.A use a PCA-rotated variant;
-    OPQ, Ge et al. CVPR 2013, learns the rotation PQ distortion drops
-    under — PCA is its spectral initialization).
+    """Covariance sufficient statistics in ONE corpus pass — the
+    second moments a PCA / OPQ-style decorrelating rotation in front of
+    PQ is computed from (Jégou et al. §V.A; Ge et al. CVPR 2013).
 
     Output: one row per dimension pair ``0 ≤ i ≤ j < dim``::
 
@@ -1350,171 +1348,6 @@ def gram_stats(
     )
 
 
-def pca_rotation(
-    gram: DataFrame,
-    dim: int,
-    k: int | None = None,
-    quant: int = 1024,
-) -> dict:
-    """Eigendecompose collected :func:`gram_stats` output into a PCA
-    model — driver-side numpy on d(d+1)/2 BOUNDED rows (2080 at d=64,
-    a model parameter like every codebook here, never corpus-scale).
-
-    Returns ``{"mean": [d floats], "components": [k][d] floats,
-    "eigenvalues": [k floats, descending], "n_vecs": n}`` in ORIGINAL
-    embedding units (the quant grid divides out).  Sign convention:
-    each component is flipped so its largest-|coordinate| entry is
-    positive — eigenvectors are sign-ambiguous and an unpinned sign
-    makes stored rotations differ between otherwise-identical training
-    runs.
-    """
-    import numpy as np  # noqa: PLC0415
-
-    rows = gram.collect() if isinstance(gram, DataFrame) else gram
-    if not rows:
-        raise ValueError(
-            "pca_rotation received an empty Gram aggregate — gram_stats"
-            " over an empty corpus produces no rows; train on a"
-            " non-empty embeddings table"
-        )
-    n = rows[0]["n_vecs"]
-    s = np.zeros(dim)
-    g = np.zeros((dim, dim))
-    for r in rows:
-        i, j = r["i"], r["j"]
-        g[i, j] = g[j, i] = float(r["s_ij"])
-        s[i], s[j] = float(r["s_i"]), float(r["s_j"])
-    mean_q = s / n
-    cov = g / n - np.outer(mean_q, mean_q)
-    evals, evecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(evals)[::-1]
-    k = dim if k is None else k
-    comps = evecs[:, order[:k]].T.copy()
-    for c in comps:
-        m = np.argmax(np.abs(c))
-        if c[m] < 0:
-            c *= -1.0
-    return {
-        "mean": (mean_q / quant).tolist(),
-        "components": comps.tolist(),
-        "eigenvalues": (evals[order[:k]] / quant / quant).tolist(),
-        "n_vecs": int(n),
-    }
-
-
-def opq_allocate(model: dict, m: int) -> dict:
-    """Eigenvalue-balanced subspace allocation — the parametric OPQ step
-    (Ge et al., CVPR 2013, §4 "OPQ-P"): reorder a :func:`pca_rotation`
-    basis so the m contiguous ``dim/m`` blocks :func:`pq_codes` splits
-    on carry BALANCED variance products.
-
-    Why this, and not the raw PCA order: PQ distortion is the SUM of
-    per-subspace quantizer distortions, and a k-centroid quantizer's
-    distortion scales with the subspace's variance at a rate set by its
-    intrinsic dimension.  Descending PCA order stacks every dominant
-    component into subspace 0 — one overloaded quantizer and m−1 idle
-    ones.  Greedy balanced allocation (assign each component, largest
-    eigenvalue first, to the non-full subspace with the smallest
-    eigenvalue log-product) gives each subspace one slice of the heavy
-    spectrum — on low-rank corpora each subspace degenerates to a
-    near-1-D quantization problem, the regime where k centroids are
-    worth k levels, not k^(1/d).  Pure rotation WITHOUT reallocation is
-    measurably a wash (tests pin both facts).
-
-    Allocation runs in ROUNDS of m (one component per bucket per round,
-    largest remaining eigenvalue to the lightest bucket): comparing
-    Σ log λ loads is only scale-invariant between EQUAL-SIZED buckets —
-    the naive "smallest running product" greedy inverts into
-    descending-order stacking whenever eigenvalues are < 1, because
-    every assignment then *lowers* the product and the fullest bucket
-    keeps winning.
-
-    Returns a new model dict with ``components`` / ``eigenvalues``
-    reordered; feed it to :func:`pca_project` and PQ-encode the result.
-    """
-    evs = model["eigenvalues"]
-    dim = len(model["components"])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    import math  # noqa: PLC0415
-
-    buckets: list[list[int]] = [[] for _ in range(m)]
-    loads = [0.0] * m
-    eps = max(evs) * 1e-12 if evs and max(evs) > 0 else 1e-30
-    ranked = sorted(range(dim), key=lambda i: -evs[i])
-    for r in range(dim // m):
-        by_load = sorted(range(m), key=lambda b: (loads[b], b))
-        for b, idx in zip(by_load, ranked[r * m : (r + 1) * m]):
-            buckets[b].append(idx)
-            # clamp at 0 before the log: eigh of a floating-point
-            # covariance can return tiny NEGATIVE eigenvalues (a PSD
-            # matrix computed as g/n − mean⊗mean), and on an all-
-            # degenerate spectrum (max ≤ 0) the eps fallback alone
-            # would feed log a negative argument
-            loads[b] += math.log(max(evs[idx], 0.0) + eps)
-    order = [i for b in buckets for i in b]
-    return {
-        **model,
-        "components": [model["components"][i] for i in order],
-        "eigenvalues": [evs[i] for i in order],
-    }
-
-
-def pca_project(
-    emb: DataFrame,
-    model: dict,
-    vec_id: str = "vec_id",
-    embedding: str = "embedding",
-) -> DataFrame:
-    """Project embeddings onto a trained PCA basis — scan-local, the
-    rotation folded in as literal arrays exactly like a PQ codebook:
-    ``out[c] = Σᵢ vᵢ·R[c][i] − ⟨mean, R[c]⟩`` is one ``zip_with``
-    fold per output component, zero joins, zero shuffles.  Output
-    ``(vec_id, pvec)`` with ``pvec`` an array<double> of the k rotated
-    (centered) coordinates — feed it to :func:`prepare` / the PQ tier
-    for rotation-then-quantize pipelines."""
-    comps = model["components"]
-    mean = model["mean"]
-    outs = []
-    for c, row in enumerate(comps):
-        lit = F.array(*[F.lit(float(x)) for x in row])
-        const = float(sum(m * x for m, x in zip(mean, row)))
-        outs.append(
-            F.aggregate(
-                F.zip_with(
-                    F.col(embedding), lit, lambda v, r: v.cast("double") * r
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            - F.lit(const)
-        )
-    return emb.select(F.col(vec_id), F.array(*outs).alias("pvec"))
-
-
-def rotate_prepare(
-    emb: DataFrame,
-    model: dict,
-    vec_id: str = "vec_id",
-    embedding: str = "embedding",
-) -> DataFrame:
-    """The FAISS ``OPQxx,IVFyy,PQzz`` pre-transform entry point: project
-    raw embeddings through a trained rotation (:func:`pca_rotation` /
-    :func:`opq_allocate` output) and quantize the result — a
-    :func:`prepare`-shaped (vec_id, q, n) frame in the
-    ROTATED basis, ready for the whole IVF/PQ stack unchanged.  The
-    rotation composes BEFORE quantization, not inside the index build:
-    coarse assignment, residuals, codebook training and ADC search all
-    operate on rotated integers, so every downstream operator (and its
-    exactness story) is reused verbatim.  Scan-local like
-    :func:`pca_project` — the rotation rides as literal arrays."""
-    return prepare(
-        pca_project(emb, model, vec_id=vec_id, embedding=embedding),
-        vec_id=vec_id,
-        embedding="pvec",
-    )
-
-
 def hadamard_rows(dim: int) -> list[list[int]]:
     """The ±1 Sylvester–Hadamard matrix H(dim) as row lists —
     ``h[c][i] = (−1)^popcount(c AND i)``, dim a power of two.  H·Hᵀ =
@@ -1547,9 +1380,9 @@ def rotate_quantized(
 
     Scan-local and exchange-free: the matrix is a model parameter
     (dim² small ints) folded in as literal arrays — one ``zip_with``
-    fold per output coordinate, the :func:`pca_project` plan shape on
-    the integer grid.  Order-independence is unconditional (BIGINT
-    addition is associative), which is what makes a rotated index
+    fold per output coordinate on the integer grid.
+    Order-independence is unconditional (BIGINT addition is
+    associative), which is what makes a rotated index
     DuckDB-oracle-checkable where a float rotation is only
     fold-order-reproducible."""
     dim = len(rows)

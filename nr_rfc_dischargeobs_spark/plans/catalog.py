@@ -44,10 +44,15 @@ def register_tables(spark: SparkSession, sf_dir: str) -> list[str]:
 def register_queries(
     spark: SparkSession, sf_dir: str, names: list[str] | None = None
 ) -> list[str]:
-    """Temp view per named plan (default: all of ``queries()``)."""
+    """Temp view per named plan (default: all of ``queries()``, which
+    runs every plan's build jobs).  A name that is not in ``queries()``
+    raises ``ValueError`` before any view is registered."""
     import __spark_entry__ as entrymod
 
     queries = entrymod.queries()
+    unknown = sorted(set(names or ()) - set(queries))
+    if unknown:
+        raise ValueError(f"no registered query named {unknown}")
     registered = []
     for name, fn in queries.items():
         if names is not None and name not in names:

@@ -2241,13 +2241,11 @@ QUALIFY rank <= 3
 
 
 def sim_pca_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA / OPQ-rotation training aggregate: exact integer covariance
-    sufficient statistics (n, Σqᵢ, Σqᵢqⱼ per dimension pair i ≤ j) over
-    the full embedding corpus in ONE pass — the d(d+1)/2-row model input
-    ``similarity.pca_rotation`` eigendecomposes into the decorrelating
-    rotation applied in front of PQ.  Statistics are add-mergeable
-    across shards/runs, so incremental corpora fold in without
-    rescanning history."""
+    """Exact integer covariance sufficient statistics (n, Σqᵢ, Σqᵢqⱼ
+    per dimension pair i ≤ j) over the full embedding corpus in ONE
+    pass — d(d+1)/2 rows, the second moments of the corpus.
+    Statistics are add-mergeable across shards/runs, so incremental
+    corpora fold in without rescanning history."""
     return similarity.gram_stats(
         load(spark, sf_dir, "embeddings"), dim=64, quant=1024
     )
@@ -3584,11 +3582,7 @@ SIM_IVFADC_FILTERED_SQL = _IVFADC_CTES.rstrip() + _IVFADC_SEARCH_CTES.format(
 # query: ±1 Sylvester-Hadamard (orthogonal up to the cosine-invariant
 # scale √64), applied to the QUANTIZED vectors so every downstream
 # integer (assignment, residual, trained codebook, code, rn, ADC dot)
-# is exact BIGINT arithmetic DuckDB reproduces.  The trained float OPQ
-# rotation rides the SAME code path (rotation mode "pre" /
-# ``rotate_prepare``) — its recall lift is pinned at 1M on the
-# anisotropic fixture in SCALE_PROBE.json, where bit-exact oracle
-# checking is impossible by construction (eigendecomposition floats).
+# is exact BIGINT arithmetic DuckDB reproduces.
 def _had64() -> list[list[int]]:
     return similarity.hadamard_rows(64)
 
@@ -3701,8 +3695,9 @@ def sim_ivfadc_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank nor shorten the slate.  Values equal the base search with the
     deleted pairs filtered before ranking (scores are per-pair, so
     exclusion commutes with scoring — the oracle's spelling).  The
-    physical purge half (``compact_deleted``, rebalance fold-in) is
-    covered by tests; this row pins the search-visible semantics."""
+    physical purge half (``compact_deleted``) is covered by tests and
+    ``ext_sim_ivfadc_maintenance``; this row pins the search-visible
+    semantics."""
     from ..extensions import ann_store
 
     path = _ensure_deleted_store(spark, sf_dir)
@@ -3776,7 +3771,7 @@ SIM_IVFADC_ADAPTIVE_SQL = _IVFADC_CTES.rstrip() + _IVFADC_SEARCH_CTES.format(
 # --- multi-segment search (round 12) ---------------------------------------
 # Two segments with DIFFERENT models and DIFFERENT bases, searched as
 # one index (ann_store.search_segments — the frozen-base + fresh-
-# admission posture rebalance_ivfadc's contract creates):
+# admission posture):
 #   segment A: raw basis,      coarse = rows  8-10, corpus = even ids ≥ 28
 #   segment B: Hadamard basis, coarse = rows 10-12, corpus = odd  ids ≥ 28
 # Each segment trains its own residual PQ codebook; nprobe=1 of 2 lists
@@ -3891,9 +3886,8 @@ def sim_ivfadc_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`~..extensions.ann_store.search_segments`): each segment
     ranks its own lists with its own coarse, rotates the raw queries
     by its own sidecar, scores its own codes, and one global top-3
-    merges the slates.  This is the steady-state posture
-    ``rebalance_ivfadc`` creates — a frozen swept base plus a fresh
-    admission segment — made a real searchable operator.  Same
+    merges the slates.  This is the frozen-base plus fresh-admission
+    posture made a real searchable operator.  Same
     session-scoped build-once discipline as the other store rows: the
     timed body is two loads + the merged search."""
     from ..extensions import ann_store
@@ -4083,8 +4077,7 @@ def sim_ivfadc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     purge-then-search ≡ tombstone-then-search, the identity that makes
     soft deletion safe to defer: the bytes can follow the GDPR flag at
     leisure because search results never depend on WHICH of the two
-    states the store is in.  (The rebalance fold-in purge is pinned by
-    tests and the 1M lifecycle probe.)"""
+    states the store is in."""
     from ..extensions import ann_store
 
     path = _ensure_maintained_store(spark, sf_dir)

@@ -498,24 +498,13 @@ def _ivfadc_search_tvf_sql(
       through the matrix (materialized as the ``ivfadc_model_rotation``
       view — (c, i, w) triples): ``e'(c) = Σᵢ w(c,i)·e(i)``, exact
       BIGINTs, so TVF-vs-operator parity stays bit-identical even as a
-      GROUP BY sum (BIGINT addition is order-independent).
-    - ``pre`` (trained float model — round 12): the rotation is folded
-      into the body as LITERAL arrays and applied with the exact
-      expression ``pca_project`` emits — ``aggregate(zip_with(
-      embedding, R_c, (v, r) -> CAST(v AS DOUBLE) * r), 0.0D,
-      (acc, x) -> acc + x) − ⟨mean, R_c⟩`` — i.e. the SAME
-      left-to-right IEEE fold the operator runs, NOT a GROUP BY sum
-      whose partition-dependent addition order could flip a rank in
-      the last ulp.  That determinism is what un-refuses the float
-      tier from SQL; parity with ``search_embeddings`` is pinned
-      bit-identical in tests.  The matrix rides as ~dim² double
-      literals analyzed once at CREATE time (model-parameter scale)."""
+      GROUP BY sum (BIGINT addition is order-independent)."""
     if rotation is None:
         qsrc = """uq AS (
   SELECT vec_id, e, i FROM u
   WHERE vec_id >= query_lo AND vec_id < query_hi
 ),"""
-    elif rotation["mode"] == "post_int":
+    else:  # "post_int"
         qsrc = """ur AS (
   SELECT u.vec_id, rot.c AS i, sum(u.e * rot.w) AS e
   FROM u JOIN ivfadc_model_rotation rot ON rot.i = u.i
@@ -523,25 +512,6 @@ def _ivfadc_search_tvf_sql(
 ), uq AS (
   SELECT vec_id, e, i FROM ur
   WHERE vec_id >= query_lo AND vec_id < query_hi
-),"""
-    else:  # "pre": literal-folded float projection, quantized like prepare()
-        comps, mean = rotation["components"], rotation["mean"]
-        folds = []
-        for row in comps:
-            lit = ", ".join(f"{float(v)!r}D" for v in row)
-            const = float(sum(m * x for m, x in zip(mean, row)))
-            folds.append(
-                "cast(round((aggregate(zip_with(embedding,"
-                f" array({lit}), (v, r) -> cast(v AS DOUBLE) * r),"
-                " cast(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-                f" - {const!r}D) * 100000, 0) AS BIGINT)"
-            )
-        qsrc = f"""pr AS (
-  SELECT vec_id, array({', '.join(folds)}) AS q
-  FROM embeddings
-  WHERE vec_id >= query_lo AND vec_id < query_hi
-), uq AS (
-  SELECT vec_id, pos AS i, e FROM pr LATERAL VIEW posexplode(q) x AS pos, e
 ),"""
     probe = (
         _FIXED_PROBE
@@ -713,15 +683,9 @@ def register_ivfadc_search_tvf(
     the coarse view to matched lists — the operator's coarse-miss
     repair without the budget walk.
 
-    ROTATED artifacts register transparently for BOTH modes:
-    ``post_int`` (exact integer tier — the matrix becomes the
-    ``ivfadc_model_rotation`` view and the TVF rotates query vectors
-    in exact BIGINT arithmetic) and, since round 12, ``pre`` (trained
-    float models — the rotation folds into the body as literal arrays
-    applied with ``pca_project``'s exact deterministic fold, closing
-    the one operator/TVF asymmetry); see
-    :func:`_ivfadc_search_tvf_sql` for why the fold, not a GROUP BY
-    sum, is what makes the float tier rank-stable from SQL."""
+    ROTATED (``post_int``) artifacts register transparently: the
+    matrix becomes the ``ivfadc_model_rotation`` view and the TVF
+    rotates query vectors in exact BIGINT arithmetic."""
     from ..extensions import ann_store
 
     model = ann_store.load_ivfadc(index_path)
@@ -731,7 +695,7 @@ def register_ivfadc_search_tvf(
             f" code layout (code_0..code_3); this artifact has m={model.m}"
         )
     rotation = model.rotation
-    if rotation is not None and rotation["mode"] == "post_int":
+    if rotation is not None:
         comps = rotation["components"]
         spark.createDataFrame(
             [
@@ -814,10 +778,10 @@ def register_ivfadc_search_tvf(
 # TVF ≡ operator parity holds row-for-row.  The body is analyzed once
 # at CREATE time; n_segments is fixed at registration (SQL bodies
 # cannot take a list argument), which matches the deployment shape —
-# the segment set changes only at rebalance boundaries, and
-# re-registering is metadata-cheap.
+# the segment set changes only when a segment is admitted or merged,
+# and re-registering is metadata-cheap.
 _SEG_TVF_CTES = (
-    "p u ur pr uq nq co nco qa query_probe code recon rn_ adc scored"
+    "p u ur uq nq co nco qa query_probe code recon rn_ adc scored"
 ).split()
 
 
@@ -861,13 +825,12 @@ def register_ivfadc_segments_tvf(
     nprobe)`` over SEVERAL stored artifacts — the pure-SQL spelling of
     :func:`~..extensions.ann_store.search_segments`: each segment's
     model sidecar becomes its own view set, each segment's chain
-    probes its own coarse, applies its own rotation (post_int via the
-    rotation view in exact BIGINTs; ``pre`` float models via the
-    literal-folded deterministic projection; mixed-basis segment sets
-    are fine), excludes its own tombstones, and the merged global
-    top-k dedups re-admitted ids at their best score.  Segments must
-    agree on ``(m, dim)`` and sit on the registered m=4 layout —
-    refused loudly otherwise, same as the operator.
+    probes its own coarse, applies its own rotation (via the rotation
+    view in exact BIGINTs; mixed-basis segment sets are fine),
+    excludes its own tombstones, and the merged global top-k dedups
+    re-admitted ids at their best score.  Segments must agree on
+    ``(m, dim)`` and sit on the registered m=4 layout — refused loudly
+    otherwise, same as the operator.
 
     ALL THREE hybrid dials thread through per segment, exactly as
     :func:`~..extensions.ann_store.search_segments` passes them to
@@ -926,7 +889,7 @@ def register_ivfadc_segments_tvf(
             ],
             "cid int, s int, i int, ce long",
         ).createOrReplaceTempView(f"ivfadc_seg{i}_codebook")
-        if mdl.rotation is not None and mdl.rotation["mode"] == "post_int":
+        if mdl.rotation is not None:
             spark.createDataFrame(
                 [
                     (c, j, int(w))

@@ -144,7 +144,7 @@ def tombstone_stream(
     (:data:`~..extensions.ann_store.TOMBSTONE_DIR`), so GDPR requests
     flow through the same micro-batch machinery as admissions; the
     bytes follow at the next :func:`~..extensions.ann_store.
-    compact_deleted` / ``rebalance_ivfadc`` sweep.
+    compact_deleted` sweep.
 
     Visibility contract, per surface — stated precisely because the
     GDPR clock cares: the OPERATOR surfaces

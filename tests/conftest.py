@@ -56,18 +56,14 @@ _SLOW_TESTS = {
     "test_adaptive_target_candidates_dial",
     "test_compact_deleted_purges_rows_and_clears_tombstones",
     "test_delete_vectors_search_parity_with_rebuilt_index",
-    "test_full_lifecycle_rebalance_stream_admit_segment_search",
+    "test_full_lifecycle_stream_admit_segment_search",
     "test_merge_segments_carry_matches_search_segments",
     "test_merge_segments_in_place_swap_and_dest_guard",
     "test_merge_segments_reencode_from_raw",
     "test_merge_segments_requantize_and_refusals",
-    "test_pre_mode_rotation_search_embeddings",
     "test_range_search_equals_thresholded_full_slate",
     "test_range_search_segments_matches_thresholded_merge",
     "test_readmission_after_delete_via_fresh_segment",
-    "test_rebalance_compacts_streamed_layout",
-    "test_rebalance_preserves_rotation",
-    "test_rebalance_purges_tombstones_and_caps_sample",
     "test_rotated_artifact_round_trip_and_versioning",
     "test_save_load_search_round_trip",
     "test_search_segments_mixed_bases_and_tombstones",
@@ -102,10 +98,6 @@ _SLOW_TESTS = {
     "test_kmeans_parallel_seeds_deterministic_and_covering",
     "test_probe_matching_only_repairs_correlated_filter",
     "test_trained_residual_codebook_lifts_recall_over_untrained",
-    # test_maintenance.py
-    "test_rebalance_ivfadc_noop_trigger_and_repair",
-    # test_pca.py
-    "test_rotation_plus_allocation_reduces_pq_distortion",
     # test_plan_shapes.py
     "test_no_python_eval_outside_the_stated_kernels",
     # test_properties.py

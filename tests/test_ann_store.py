@@ -239,8 +239,9 @@ def test_ensure_store_builds_once_and_rebuilds_after_a_crash(
 def test_rotated_artifact_round_trip_and_versioning(spark, tmp_path):
     """A rotated artifact carries its rotation in the v2 sidecar; a
     fresh load must rotate raw queries itself (search_embeddings ==
-    search over hand-rotated queries), and the validation guards
-    refuse malformed specs and corrupt version-2 sidecars."""
+    search over hand-rotated queries), a purge rewrite keeps the
+    rotation, and the load guards refuse malformed specs and corrupt
+    version-2 sidecars."""
     import json
     import os
 
@@ -282,17 +283,26 @@ def test_rotated_artifact_round_trip_and_versioning(spark, tmp_path):
     want = sorted(map(tuple, loaded.search(by_hand, k=2, nprobe=2).collect()))
     assert got == want and got
 
-    # guards: bad mode, float matrix in post_int, corrupt v2 sidecar
-    for bad in (
-        {"mode": "sideways", "components": h},
-        {"mode": "post_int", "components": [[0.5] * 4] * 4},
-        {"mode": "pre", "components": []},
+    # a purge rewrites table and sidecar together; the rotation rides
+    assert ann_store.delete_vectors(spark, path, "vec_id = 6") == 1
+    assert ann_store.compact_deleted(spark, path)["compacted"] is True
+    assert ann_store.load_ivfadc(path).rotation == loaded.rotation
+
+    # guards, each read back from an on-disk v2 sidecar: an unknown
+    # mode, the retired trained-float "pre" mode, a float matrix in
+    # post_int, a ragged matrix, an empty matrix; then a v2 sidecar
+    # without a rotation
+    for bad, msg in (
+        ({"mode": "sideways", "components": h}, "'sideways'"),
+        ({"mode": "pre", "components": h, "mean": [0.0] * 4}, "'pre'"),
+        ({"mode": "post_int", "components": [[0.5] * 4] * 4}, "integers"),
+        ({"mode": "post_int", "components": [[1, -1], [1]]}, "same length"),
+        ({"mode": "post_int", "components": []}, "non-empty"),
     ):
-        try:
-            ann_store._check_rotation(bad)
-            raise AssertionError(f"accepted {bad}")
-        except ValueError:
-            pass
+        with open(os.path.join(path, ann_store.MODEL_FILE), "w") as fh:
+            json.dump({**sidecar, "rotation": bad}, fh)
+        with pytest.raises(ValueError, match=msg):
+            ann_store.load_ivfadc(path)
     sidecar.pop("rotation")
     json.dump(sidecar, open(os.path.join(path, ann_store.MODEL_FILE), "w"))
     try:
@@ -300,49 +310,6 @@ def test_rotated_artifact_round_trip_and_versioning(spark, tmp_path):
         raise AssertionError("v2 sidecar without rotation must refuse")
     except ValueError as ex:
         assert "rotation" in str(ex)
-
-
-def test_pre_mode_rotation_search_embeddings(spark, tmp_path):
-    """mode='pre' (a float OPQ/PCA model) round-trips through the
-    sidecar too: search_embeddings equals searching hand-projected
-    queries — the trained-rotation production path."""
-    import numpy as np
-
-    from nr_rfc_dischargeobs_spark.extensions import ann_store
-
-    rng = np.random.default_rng(5)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in rng.normal(size=4)]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    model = {
-        "mode": "pre",
-        "mean": [0.0, 0.0, 0.0, 0.0],
-        "components": [[0.0, 1.0, 0.0, 0.0], [1.0, 0.0, 0.0, 0.0],
-                       [0.0, 0.0, 0.0, 1.0], [0.0, 0.0, 1.0, 0.0]],
-    }
-    rot = similarity.rotate_prepare(emb, model)
-    coarse = rot.filter(F.col("vec_id") < 2)
-    corpus = rot.filter(F.col("vec_id") >= 6)
-    coarse_rows = [
-        (int(r["vec_id"]), [int(v) for v in r["q"]]) for r in coarse.collect()
-    ]
-    res = similarity.residualize(
-        similarity.ivf_assign(corpus, coarse, 1, None), coarse_rows
-    )
-    cb = similarity.pq_train_codebooks(res, k=4, m=2, dim=4, iters=1)
-    idx = similarity.ivf_pq_index(corpus, coarse, cb, m=2, dim=4, residual=True)
-    path = str(tmp_path / "preidx")
-    ann_store.save_ivfadc(idx, path, coarse_rows, cb, m=2, dim=4,
-                          rotation=model)
-    loaded = ann_store.load_ivfadc(path)
-    queries_raw = emb.filter(F.col("vec_id").between(2, 5))
-    got = sorted(map(tuple, loaded.search_embeddings(
-        queries_raw, k=2, nprobe=2).collect()))
-    want = sorted(map(tuple, loaded.search(
-        similarity.rotate_prepare(queries_raw, model), k=2, nprobe=2
-    ).collect()))
-    assert got == want and got
 
 
 def test_streamed_rotated_admission_matches_batch_build(spark, tmp_path):
@@ -423,117 +390,9 @@ def test_streamed_rotated_admission_matches_batch_build(spark, tmp_path):
     assert got  # raw-basis queries answered through the sidecar rotation
 
 
-def test_rebalance_preserves_rotation(spark, tmp_path):
-    """A rotated artifact's rotation spec survives the rebalance swap —
-    the refreshed sidecar must carry it, or a post-maintenance search
-    would silently un-rotate its queries."""
-    import numpy as np
-
-    h = similarity.hadamard_rows(4)
-    rot = {"mode": "post_int", "components": h}
-    rng = np.random.default_rng(13)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in rng.normal(size=4)]) for i in range(40)],
-        "vec_id long, embedding array<float>",
-    )
-    basis = ann_store.apply_rotation(emb, rot)
-    coarse_rows = [
-        (int(r["vec_id"]), [int(v) for v in r["q"]])
-        for r in basis.filter(F.col("vec_id") < 2).collect()
-    ]
-    cb = similarity.pq_train_codebooks(
-        similarity.residualize(
-            similarity.ivf_assign_local(basis, coarse_rows), coarse_rows
-        ),
-        k=2, m=2, dim=4, iters=1,
-    )
-    path = str(tmp_path / "rotidx")
-    ann_store.save_ivfadc(
-        similarity.ivf_pq_index(
-            basis, None, cb, m=2, dim=4, assign="local",
-            residual=True, coarse_rows=coarse_rows,
-        ),
-        path, coarse_rows, cb, m=2, dim=4, rotation=rot,
-    )
-    rep = ann_store.rebalance_ivfadc(spark, path, basis, threshold=0.5)
-    assert rep["rebalanced"] is True
-    loaded = ann_store.load_ivfadc(path)
-    assert loaded.rotation == ann_store._check_rotation(rot)
-    assert loaded.search_embeddings(emb.limit(3), k=2, nprobe=2).collect()
-
-
-def test_rebalance_compacts_streamed_layout(spark, tmp_path):
-    """Rebalancing a STREAMED store (batch_id=N/list_id=K) compacts it
-    into the canonical flat list_id layout — loadable, searchable, no
-    batch_id column — and a post-sweep batch write into the same tree
-    is structurally impossible (Spark refuses the mixed partition
-    schemes), which is why the docstring directs new admission to a
-    fresh directory."""
-    import json as _json
-
-    import pytest as _pytest
-
-    from nr_rfc_dischargeobs_spark.streaming import ivfadc_index_stream
-
-    emb = spark.createDataFrame(
-        [(i, [0.04 * i, -0.03 * i, 0.2, 0.01 * i]) for i in range(1, 13)],
-        "vec_id long, embedding array<float>",
-    )
-    prep = similarity.prepare(emb)
-    coarse_rows = [
-        (int(r["vec_id"]), [int(v) for v in r["q"]])
-        for r in prep.filter(F.col("vec_id") <= 2).collect()
-    ]
-    cb = similarity.pq_train_codebooks(
-        similarity.residualize(
-            similarity.ivf_assign_local(prep, coarse_rows), coarse_rows
-        ),
-        k=2, m=2, dim=4, iters=1,
-    )
-    landing = tmp_path / "vecs"
-    landing.mkdir()
-    (landing / "s1.jsonl").write_text(
-        "\n".join(
-            _json.dumps({"vec_id": r["vec_id"],
-                         "embedding": [float(v) for v in r["embedding"]]})
-            for r in emb.collect()
-        )
-        + "\n"
-    )
-    index_dir = str(tmp_path / "index")
-    stream = spark.readStream.schema(
-        "vec_id BIGINT, embedding ARRAY<FLOAT>"
-    ).json(str(landing))
-    ivfadc_index_stream(
-        stream, index_dir, str(tmp_path / "ckpt"), coarse_rows, cb,
-        m=2, dim=4,
-    ).awaitTermination(120)
-    ann_store.write_ivfadc_model(index_dir, coarse_rows, cb, m=2, dim=4)
-
-    assert "batch_id" in spark.read.parquet(index_dir).columns
-    rep = ann_store.rebalance_ivfadc(
-        spark, index_dir, prep, threshold=0.5
-    )
-    assert rep["rebalanced"] is True and rep["kept"] == 12
-    swept = spark.read.parquet(index_dir)
-    assert "batch_id" not in swept.columns  # history compacted away
-    loaded = ann_store.load_ivfadc(index_dir)
-    assert loaded.search(prep.limit(2), k=2, nprobe=2).collect()
-
-    # a further batch write into the swept tree breaks discovery — the
-    # documented reason admission must resume in a fresh directory
-    spark.range(1).selectExpr(
-        "id AS vec_id", "CAST(0 AS INT) AS list_id"
-    ).write.partitionBy("list_id").parquet(index_dir + "/batch_id=9")
-    with _pytest.raises(Exception, match="CONFLICTING_PARTITION"):
-        spark.read.parquet(index_dir).collect()
-
-
 # ---------------------------------------------------------------------------
 # multi-segment search (round 12): frozen base + fresh admission segments
-# searched as ONE index — the steady state rebalance_ivfadc's contract
-# creates ("resume admission into a NEW index directory and treat the
-# swept store as its frozen base segment")
+# searched as ONE index
 # ---------------------------------------------------------------------------
 
 
@@ -1100,7 +959,7 @@ def test_merge_segments_in_place_swap_and_dest_guard(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# tombstones (round 12): delete_vectors / compact_deleted / rebalance purge
+# tombstones: delete_vectors / compact_deleted
 # ---------------------------------------------------------------------------
 
 
@@ -1178,70 +1037,6 @@ def test_compact_deleted_purges_rows_and_clears_tombstones(spark, tmp_path):
     assert after == before
     # nothing left to purge → cheap no-op
     assert ann_store.compact_deleted(spark, path)["compacted"] is False
-
-
-def test_rebalance_purges_tombstones_and_caps_sample(spark, tmp_path):
-    """The drift rewrite folds the tombstone purge in (deleted ids do
-    not re-enter, the _deleted side table vanishes with the swap), and
-    the coarse retrain input is hard-capped at sample_limit rows under
-    any corpus size."""
-    import numpy as np
-
-    from nr_rfc_dischargeobs_spark.extensions import similarity as S
-
-    rng = np.random.default_rng(9)
-    centers = [np.zeros(8), np.ones(8), -np.ones(8),
-               np.array([2.0] * 4 + [-2.0] * 4)]
-    rows = []
-    for g in range(4):
-        rows += [
-            (g * 50 + i,
-             [float(x) for x in centers[g] + 0.05 * rng.normal(size=8)])
-            for i in range(50)
-        ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    prep = S.prepare(emb)
-    stale = [
-        (0, [int(v) for v in (100000 * centers[0]).astype(int)]),
-        (1, [int(v) for v in (100000 * centers[1]).astype(int)]),
-        (2, [int(v) for v in (100000 * (centers[0] + 0.01)).astype(int)]),
-        (3, [int(v) for v in (100000 * (centers[1] + 0.01)).astype(int)]),
-    ]
-    res = S.residualize(S.ivf_assign_local(prep, stale), stale)
-    cb = S.pq_train_codebooks(res, k=4, m=2, dim=8, iters=1)
-    path = str(tmp_path / "drifted")
-    ann_store.save_ivfadc(
-        S.ivf_pq_index(prep, None, cb, m=2, dim=8, residual=True,
-                       coarse_rows=stale, assign="local"),
-        path, stale, cb, m=2, dim=8,
-    )
-    assert ann_store.delete_vectors(spark, path, "vec_id >= 190") == 10
-
-    captured = {}
-    orig = S.kmeans_lite
-
-    def spy(sample, **kw):
-        captured["n"] = sample.count()
-        return orig(sample, **kw)
-
-    import nr_rfc_dischargeobs_spark.extensions.ann_store as mod
-    old = mod.similarity.kmeans_lite
-    mod.similarity.kmeans_lite = spy
-    try:
-        rep = ann_store.rebalance_ivfadc(
-            spark, path, prep, threshold=1.5, sample_limit=64
-        )
-    finally:
-        mod.similarity.kmeans_lite = old
-
-    assert rep["rebalanced"] is True
-    assert captured["n"] <= 64  # hard cap, not a proportional fraction
-    # purge: deleted ids are gone from the rebuilt table AND the side
-    # table itself vanished with the swap
-    left = spark.read.parquet(path)
-    assert left.filter(F.col("vec_id") >= 190).count() == 0
-    assert rep["kept"] == 190
-    assert ann_store.deleted_ids(spark, path) is None
 
 
 def test_rotate_quantized_dim_mismatch_fails_loudly(spark):
@@ -1322,16 +1117,12 @@ def test_adaptive_target_candidates_dial(spark, tmp_path):
                              "cosine_adc"]
 
 
-def test_full_lifecycle_rebalance_stream_admit_segment_search(
-    spark, tmp_path
-):
+def test_full_lifecycle_stream_admit_segment_search(spark, tmp_path):
     """The COMPLETE production lifecycle, end to end: a streamed store
-    drifts → rebalance sweeps it flat (the frozen base segment) →
-    admission resumes into a FRESH directory (per the quiesced
-    contract) → `search_segments` reads base + fresh as one index and
-    returns every vector, old and new, from raw queries — the exact
-    workflow the rebalance docstring prescribes, now executable rather
-    than prose."""
+    is the frozen base segment → admission resumes into a FRESH
+    directory → `search_segments` reads base + fresh as one index and
+    returns every vector, old and new, from raw queries →
+    `merge_segments` folds both into ONE flat store."""
     import json as _json
 
     from nr_rfc_dischargeobs_spark.streaming import ivfadc_index_stream
@@ -1380,10 +1171,6 @@ def test_full_lifecycle_rebalance_stream_admit_segment_search(
     base_dir = str(tmp_path / "base")
     land_and_stream(emb_old, tmp_path / "land_old", base_dir,
                     str(tmp_path / "ckpt_old"))
-    # drifted → sweep flat: the base segment is now frozen
-    rep = ann_store.rebalance_ivfadc(spark, base_dir, prep_old,
-                                     threshold=0.5)
-    assert rep["rebalanced"] is True
 
     # admission resumes in a FRESH directory (same model here — the
     # admission-segment norm; a retrained model is the seg-a/seg-b case)
@@ -1421,16 +1208,23 @@ def test_full_lifecycle_rebalance_stream_admit_segment_search(
         "query_id", "neighbor_id", "rank", "cosine_adc"
     ).collect()))
     assert sorted(map(tuple, rows_)) == want
+    # a full-width slate over both lists reaches every stored vector
+    wide = ann_store.search_segments(
+        spark, [base_dir, fresh_dir], queries, k=20, nprobe=2
+    ).filter(F.col("query_id") == 100)
+    assert {int(r["neighbor_id"]) for r in wide.collect()} == (
+        set(range(1, 13)) | set(range(20, 28))
+    )
 
     # --- r13: the loop CLOSES — merge the fresh segment back into the
-    # (rebalanced, hence different-model) base.  The fresh segment was
-    # streamed with the pre-sweep coarse, so this is the re-encode-from-
-    # raw path; afterwards ONE store serves both generations.
+    # base.  Both streamed segments share one model, so every row is
+    # carried; the streamed batch_id=N/ layout is flattened on the way,
+    # and afterwards ONE store serves both generations.
     merged_dir = str(tmp_path / "merged")
-    mrep = ann_store.merge_segments(
-        spark, [base_dir, fresh_dir], merged_dir, raw_emb=emb_new
-    )
-    assert mrep["reencoded"] == 8 and mrep["rows"] == 20
+    mrep = ann_store.merge_segments(spark, [base_dir, fresh_dir], merged_dir)
+    assert mrep["carried"] == 20 and mrep["rows"] == 20
+    assert "batch_id" in spark.read.parquet(base_dir).columns
+    assert "batch_id" not in spark.read.parquet(merged_dir).columns
     one = ann_store.load_ivfadc(merged_dir).search_embeddings(
         queries, k=4, nprobe=2
     )
@@ -1444,8 +1238,8 @@ def test_readmission_after_delete_via_fresh_segment(spark, tmp_path):
     segment is found again by search_segments — the base's tombstone
     suppresses only the base's (stale) copy, and the fresh segment's
     copy wins the merge.  This is why tombstones are per-store and
-    re-insertion goes to a new directory, never back into the swept
-    tree."""
+    re-insertion goes to a new directory, never back into the frozen
+    base's tree."""
     coarse, queries, corpus, coarse_rows, cb = _trained_parts(spark)
     base_path = str(tmp_path / "base")
     ann_store.save_ivfadc(

@@ -1,5 +1,6 @@
 """register_tables skips only tables that are absent; a table that is
-present but unreadable raises instead of silently going unregistered."""
+present but unreadable raises instead of silently going unregistered.
+register_queries refuses a name it does not know."""
 
 from __future__ import annotations
 
@@ -28,3 +29,14 @@ def test_register_tables_raises_on_a_corrupt_table(spark, tmp_path):
     # the footer read fails and names the file; it is not "absent"
     with pytest.raises(Exception, match="part-00000.parquet"):
         catalog.register_tables(spark, str(tmp_path))
+
+
+def test_register_queries_refuses_unknown_names(spark, sf_dir):
+    import __spark_entry__ as entrymod
+
+    real = next(iter(entrymod.queries()))
+    spark.catalog.dropTempView(real)
+    with pytest.raises(ValueError, match="typo"):
+        catalog.register_queries(spark, sf_dir, [real, "typo"])
+    # nothing is registered, not even the name that exists
+    assert not spark.catalog.tableExists(real)

@@ -8,9 +8,10 @@ dead code unless :data:`KEEP` names it with its reason:
 
 * ``oracle``: a test's independent reference implementation;
 * ``reference-edge``: an edge of the reference ETL a user drives directly;
-* ``sql-surface``: README's SQL entry points (tables, queries, TVFs);
-* ``next-round``: lost its last caller; the next deletion round decides
-  (ROADMAP direction 8).
+* ``sql-surface``: README's SQL entry points (tables, queries, TVFs).
+
+A second AST check covers the other hand-kept name list: every entry
+of ``tests/conftest.py``'s slow list is a test that exists.
 
 AST only, no Spark.
 """
@@ -22,6 +23,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "nr_rfc_dischargeobs_spark"
+TESTS = ROOT / "tests"
 
 KEEP = {
     "extensions/similarity.py::cosine_neardup_pairs": "oracle",
@@ -41,9 +43,6 @@ KEEP = {
     "plans/sqlfn.py::register_ivf_pq_search_tvf": "sql-surface",
     "plans/sqlfn.py::register_ivfadc_range_tvf": "sql-surface",
     "plans/sqlfn.py::register_ivfadc_segments_tvf": "sql-surface",
-    "extensions/ann_store.py::rebalance_ivfadc": "next-round",
-    "extensions/similarity.py::pca_rotation": "next-round",
-    "extensions/similarity.py::opq_allocate": "next-round",
 }
 
 _DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -94,10 +93,33 @@ def test_every_package_def_has_a_caller_outside_the_tests():
 
 
 def test_keep_list_names_only_live_uncalled_defs():
-    assert set(KEEP.values()) <= {
-        "oracle", "reference-edge", "sql-surface", "next-round"}
+    assert set(KEEP.values()) <= {"oracle", "reference-edge", "sql-surface"}
     defs, refs = _scan()
     gone = sorted(k for k in KEEP if k not in defs)
     assert not gone, f"KEEP names defs that no longer exist: {gone}"
     called = sorted(k for k in KEEP if defs[k] in refs)
     assert not called, f"KEEP names defs that now have a caller: {called}"
+
+
+def _slow_list() -> set[str]:
+    tree = ast.parse((TESTS / "conftest.py").read_text())
+    for top in tree.body:
+        if isinstance(top, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "_SLOW_TESTS"
+            for t in top.targets
+        ):
+            return {node.value for node in ast.walk(top.value)
+                    if isinstance(node, ast.Constant)}
+    raise AssertionError("tests/conftest.py assigns no _SLOW_TESTS")
+
+
+def test_slow_list_names_only_existing_tests():
+    tests = {
+        node.name
+        for path in sorted(TESTS.rglob("test_*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.name.startswith("test_")
+    }
+    stale = sorted(_slow_list() - tests)
+    assert not stale, f"_SLOW_TESTS names no test under tests/: {stale}"

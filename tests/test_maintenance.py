@@ -395,81 +395,3 @@ def test_is_missing_path_token_fallback_without_accessors():
             return "PATH_NOT_FOUND"
 
     assert is_missing_path(StructuredMissing("anything"))
-
-
-# ---------------------------------------------------------------------------
-# round 11: ANN index maintenance (rebalance under drift)
-# ---------------------------------------------------------------------------
-
-
-def test_rebalance_ivfadc_noop_trigger_and_repair(spark, tmp_path):
-    """The maintenance sweep: below-threshold skew is a no-op (artifact
-    byte-untouched); above it, the coarse quantizer retrains on the
-    current corpus, the table+sidecar swap atomically, skew drops, and
-    the post-swap artifact still satisfies the full-probe-==-brute-
-    force-over-decode IVFADC invariant."""
-    import os
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from nr_rfc_dischargeobs_spark.extensions import ann_store, similarity as S
-
-    rng = np.random.default_rng(9)
-    centers = [np.zeros(8), np.ones(8), -np.ones(8),
-               np.array([2.0] * 4 + [-2.0] * 4)]
-    rows = []
-    for g in range(4):
-        rows += [
-            (g * 50 + i,
-             [float(x) for x in centers[g] + 0.05 * rng.normal(size=8)])
-            for i in range(50)
-        ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    prep = S.prepare(emb)
-    # stale coarse: 4 lists, all near clusters 0/1 — clusters 2/3 pile in
-    stale = [
-        (0, [int(v) for v in (100000 * centers[0]).astype(int)]),
-        (1, [int(v) for v in (100000 * centers[1]).astype(int)]),
-        (2, [int(v) for v in (100000 * (centers[0] + 0.01)).astype(int)]),
-        (3, [int(v) for v in (100000 * (centers[1] + 0.01)).astype(int)]),
-    ]
-    res = S.residualize(S.ivf_assign_local(prep, stale), stale)
-    cb = S.pq_train_codebooks(res, k=4, m=2, dim=8, iters=1)
-    idx = S.ivf_pq_index(prep, None, cb, m=2, dim=8, residual=True,
-                         coarse_rows=stale, assign="local")
-    path = str(tmp_path / "drifted")
-    ann_store.save_ivfadc(idx, path, stale, cb, m=2, dim=8)
-
-    before = sorted(
-        os.path.join(r, f) for r, _, fs in os.walk(path) for f in fs
-    )
-    rep0 = ann_store.rebalance_ivfadc(
-        spark, path, prep, threshold=100.0
-    )
-    assert rep0["rebalanced"] is False and rep0["skew_before"] > 1.5
-    after = sorted(
-        os.path.join(r, f) for r, _, fs in os.walk(path) for f in fs
-    )
-    assert after == before  # no-op leaves the artifact untouched
-
-    rep = ann_store.rebalance_ivfadc(
-        spark, path, prep, threshold=1.5
-    )
-    assert rep["rebalanced"] is True
-    assert rep["skew_after"] < rep["skew_before"]
-    assert rep["kept"] == 200  # every code survives the rewrite
-
-    loaded = ann_store.load_ivfadc(path)
-    q = prep.filter(F.col("vec_id") < 6)
-    got = loaded.search(q, k=3, nprobe=rep["n_lists_after"])
-    dec = S.ivfadc_decode(
-        loaded.frame(spark), loaded.coarse_rows, loaded.centroid_rows,
-        m=2, dim=8,
-    )
-    want = S.brute_force_topk(q, dec, k=3).withColumnRenamed(
-        "cosine", "cosine_adc"
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )

@@ -287,10 +287,7 @@ def test_tvf_ivfadc_search_filtered_and_rotated(spark, tmp_path):
     registration pre-filters the store view — SQL results equal
     ivfadc_topk(where=…) exactly; (2) a post_int-rotated artifact
     registers transparently (the rotation view rotates query vectors in
-    exact BIGINTs) and matches search_embeddings; (3) a float ('pre')
-    rotation refuses loudly."""
-    import pytest as _pytest
-
+    exact BIGINTs) and matches search_embeddings."""
     from nr_rfc_dischargeobs_spark.extensions import ann_store, similarity
     from nr_rfc_dischargeobs_spark.plans.sqlfn import (
         register_ivfadc_search_tvf,
@@ -336,44 +333,6 @@ def test_tvf_ivfadc_search_filtered_and_rotated(spark, tmp_path):
     )
     assert rows(got_f) == rows(want_f)
     assert all(r["neighbor_id"] % 3 == 1 for r in got_f.collect())
-
-    # float ("pre") rotations: since round 12 the TVF folds the trained
-    # matrix in as literal arrays applied with pca_project's exact
-    # deterministic fold — registration succeeds and parity with
-    # search_embeddings is bit-identical (the GROUP BY addition-order
-    # hazard is what the fold spelling avoids)
-    pre_path = str(tmp_path / "pre_artifact")
-    pre = {
-        "mode": "pre",
-        "mean": [0.0] * 64,
-        "components": [[float(v) / 8.0 for v in row] for row in h],
-    }
-    basis_pre = ann_store.apply_rotation(emb_raw, pre)
-    corpus_pre = basis_pre.filter(F.col("vec_id") >= 28)
-    coarse_pre = basis_pre.filter(
-        (F.col("vec_id") >= 8) & (F.col("vec_id") < 12)
-    )
-    coarse_rows_pre = [
-        (int(r["vec_id"]), [int(v) for v in r["q"]])
-        for r in coarse_pre.collect()
-    ]
-    cb_pre = similarity.pq_train_codebooks(
-        similarity.residualize(
-            similarity.ivf_assign(corpus_pre, coarse_pre, 1, None),
-            coarse_rows_pre,
-        ),
-        k=8, m=4, dim=64, iters=0,
-    )
-    pre_handle = ann_store.save_ivfadc(
-        similarity.ivf_pq_index(
-            corpus_pre, coarse_pre, cb_pre, residual=True
-        ),
-        pre_path, coarse_rows_pre, cb_pre, m=4, dim=64, rotation=pre,
-    )
-    register_ivfadc_search_tvf(spark, pre_path)
-    got_pre = spark.sql("SELECT * FROM tvf_ivfadc_search(12, 28, 3, 2)")
-    want_pre = pre_handle.search_embeddings(queries_raw, k=3, nprobe=2)
-    assert rows(got_pre) == rows(want_pre)
 
 
 def test_tvf_ivfadc_search_applies_tombstones(spark, tmp_path):
