@@ -630,8 +630,6 @@ def merge_segments(
     spark: SparkSession,
     paths: list[str],
     dest: str,
-    raw_emb: DataFrame | None = None,
-    allow_requantize: bool = False,
 ) -> dict:
     """Fold segments back into ONE store — the lifecycle CLOSER that
     :func:`search_segments` was missing: beside a frozen base store,
@@ -643,31 +641,12 @@ def merge_segments(
     (sidecar rotation) define the merged store; every other segment's
     live rows are folded into that model.
 
-    Three fold tiers, strictest first — the tier is chosen PER
-    SEGMENT, so one merge can carry one segment and re-encode another:
-
-    1. **Carry** (segment model+basis == base's, the admission norm —
-       fresh segments are usually encoded with the frozen base's own
-       model): code rows move as-is.  Bit-exact, zero re-encoding —
-       a scan→write copy, no shuffle.
-    2. **Re-encode from raw** (``raw_emb`` — (vec_id, embedding) rows
-       covering the segment's live ids): the segment's vectors are
-       admitted into the base's basis+model from their ORIGINALS —
-       :func:`apply_rotation` then the scan-local
-       ``ivf_pq_index(assign="local", residual=True)`` encode, exactly
-       a fresh admission, hence bit-identical to having streamed them
-       into the base in the first place.  Ids missing from ``raw_emb``
-       fail loudly (a vector that cannot be re-encoded must not
-       silently vanish from the corpus).
-    3. **Requantize reconstructions** (``allow_requantize=True``, same
-       BASIS only): decode each code back to its quantized
-       reconstruction (:func:`~.similarity.ivfadc_decode`) and encode
-       that against the base model.  This COMPOUNDS quantization
-       error — opt-in, for callers whose raw vectors are gone; recall
-       parity is probed, never bit-pinned.  Cross-BASIS requantize is
-       refused outright: inverting a rotation on the quantized grid is
-       not exact (a Hadamard inverse divides by the dimension), so the
-       round-trip would silently shear every vector.
+    Every segment must share the base's model and basis (coarse,
+    codebook and rotation) — the admission norm, since fresh segments
+    are encoded with the frozen base's own model: code rows move as-is.
+    Bit-exact, zero re-encoding — a scan→write copy, no shuffle.  A
+    segment with another model or basis is refused; rebuild it with
+    the base's model first.
 
     Tombstones are RESOLVED, not copied: each segment's ``_deleted``
     side table drops that segment's own rows before the fold (the
@@ -697,9 +676,7 @@ def merge_segments(
     later-wins resolution anti-joins each segment against the LIVE id
     sets of later segments (fresh segments are small next to the
     frozen base by construction — corpus-scale duplication belongs in
-    a full rebuild); re-encode is the scan-local ``assign="local"`` build
-    (the model's size picks literal expressions or the BLAS kernels);
-    nothing collects corpus-scale data.
+    a full rebuild); nothing collects corpus-scale data.
     STREAMED source segments (the ``batch_id=N/list_id=K/`` layout of
     :func:`~..streaming.ann.ivfadc_index_stream`, deployed with a
     model sidecar) merge transparently: the canonical column selection
@@ -707,8 +684,8 @@ def merge_segments(
     segment's batch history into the flat layout — pinned by the
     full-lifecycle test, which merges a streamed admission directory.
 
-    Returns ``{merged, dest, segments, rows, carried, reencoded,
-    requantized, dropped_deleted, superseded}``."""
+    Returns ``{merged, dest, segments, rows, carried, dropped_deleted,
+    superseded}``."""
     from ..streaming.documents import compact_corpus
 
     if not paths:
@@ -740,6 +717,15 @@ def merge_segments(
             and ix.rotation == base.rotation
         )
 
+    for p, ix in zip(paths[1:], idxs[1:]):
+        if not _same_model(ix):
+            raise ValueError(
+                f"segment {p!r} has a different model"
+                + (" and a different basis" if ix.rotation != base.rotation
+                   else "")
+                + " — rebuild it with the base's model before merging"
+            )
+
     # live rows per segment: own tombstones out, then later-wins —
     # anti-join against every LATER segment's live id set
     lives = []
@@ -762,63 +748,8 @@ def merge_segments(
         lives[i] = lives[i].join(later, "vec_id", "left_anti")
         superseded += n0 - lives[i].count()
 
-    parts, report = [], {"carried": 0, "reencoded": 0, "requantized": 0}
-    for i, (p, ix) in enumerate(zip(paths, idxs)):
-        live = lives[i]
-        if i == 0 or _same_model(ix):
-            # carried rows are counted at the end as the remainder —
-            # one total count instead of one job per carried segment
-            part = live.select(*cols)
-            if i == 0:
-                base_live = part
-                continue
-        elif raw_emb is not None:
-            ids = live.select("vec_id")
-            src = raw_emb.join(ids, "vec_id", "semi")
-            n_ids, n_src = ids.count(), src.count()
-            if n_src != n_ids:
-                raise ValueError(
-                    f"raw_emb covers {n_src} of segment {p!r}'s {n_ids}"
-                    " live ids — a vector that cannot be re-encoded"
-                    " must not silently vanish from the merged corpus"
-                )
-            part = similarity.ivf_pq_index(
-                apply_rotation(src, base.rotation),
-                None,
-                base.centroid_rows,
-                m=base.m,
-                dim=base.dim,
-                assign="local",
-                residual=True,
-                coarse_rows=base.coarse_rows,
-            ).select(*cols)
-            report["reencoded"] += n_ids
-        elif allow_requantize and ix.rotation == base.rotation:
-            recon = similarity.ivfadc_decode(
-                live, ix.coarse_rows, ix.centroid_rows, m=ix.m, dim=ix.dim
-            )
-            part = similarity.ivf_pq_index(
-                recon,
-                None,
-                base.centroid_rows,
-                m=base.m,
-                dim=base.dim,
-                assign="local",
-                residual=True,
-                coarse_rows=base.coarse_rows,
-            ).select(*cols)
-            report["requantized"] += part.count()
-        else:
-            raise ValueError(
-                f"segment {p!r} has a different model"
-                + (" and a different basis" if ix.rotation != base.rotation
-                   else "")
-                + " — pass raw_emb to re-encode from originals (exact),"
-                " or allow_requantize=True to re-encode decoded"
-                " reconstructions (same basis only; compounds"
-                " quantization error)"
-            )
-        parts.append(part)
+    base_live, *parts = [live.select(*cols) for live in lives]
+    report = {}
 
     def _merged(base_part: DataFrame) -> DataFrame:
         return reduce(lambda a, b: a.unionByName(b), [base_part, *parts])
@@ -867,10 +798,8 @@ def merge_segments(
         finalize(dest)
         n_rows = spark.read.parquet(dest).count()
 
-    report["carried"] = int(
-        n_rows - report["reencoded"] - report["requantized"]
-    )
     report.update(
+        carried=n_rows,
         merged=True,
         dest=dest,
         segments=len(paths),

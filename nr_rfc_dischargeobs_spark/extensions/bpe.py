@@ -32,10 +32,10 @@ collect, then driver-local training — n_merges no longer multiplies
 Spark jobs, so a production 30k-merge run costs the same cluster work
 as a 12-merge one.
 
-Tokens are restricted to ``token_pattern`` (default lowercase
-alphanumeric) so the ``<``/``>`` sentinels can never collide with
-symbol text — out-of-alphabet tokens are EXCLUDED from training, the
-standard pre-tokenizer posture, not silently mangled.
+Tokens are restricted to ``TOKEN_PATTERN`` (lowercase alphanumeric) so
+the ``<``/``>`` sentinels can never collide with symbol text — out-of-
+alphabet tokens are EXCLUDED from training, the standard pre-tokenizer
+posture, not silently mangled.
 """
 
 from __future__ import annotations
@@ -43,18 +43,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Tokens the merges learn over, in both the Spark and the DuckDB twin.
+TOKEN_PATTERN = "[a-z0-9]+"
+
 MERGES_SCHEMA = (
     "rank INT, left_sym STRING, right_sym STRING, merged STRING,"
     " pair_count BIGINT"
 )
 
 
-def _vocab(docs: DataFrame, text: str, token_pattern: str) -> DataFrame:
+def _vocab(docs: DataFrame) -> DataFrame:
     """(token, cnt, syms) — the corpus's single scan: whitespace-split,
     lowercase, alphabet-filtered, counted, and bracket-symbolized."""
     toks = docs.select(
-        F.explode(F.split(F.lower(F.col(text)), " ")).alias("token")
-    ).filter(F.col("token").rlike(f"^{token_pattern}$"))
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("token")
+    ).filter(F.col("token").rlike(f"^{TOKEN_PATTERN}$"))
     return (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -74,11 +77,7 @@ def _apply_merge(state: DataFrame, a: str, b: str) -> DataFrame:
 
 
 def _train(
-    docs: DataFrame,
-    n_merges: int,
-    text: str,
-    token_pattern: str,
-    min_count: int = 1,
+    docs: DataFrame, n_merges: int
 ) -> tuple[list[tuple], DataFrame, DataFrame]:
     """Shared loop: returns (merge rows, final symbolized vocabulary,
     the base-vocab frame).
@@ -108,28 +107,10 @@ def _train(
     as ``F.replace``/DuckDB ``replace``.  The returned ``state`` frame
     re-derives the vocab scan lazily with the learned merges as chained
     scan-local replaces — zero extra jobs until a caller evaluates it.
-
-    ``min_count`` is the driver-memory bound for fleet scale (r14,
-    VERDICT r13 #5): tokens with ``cnt < min_count`` are dropped from
-    the vocabulary BEFORE the collect, capping the driver working set
-    at the head of the (Zipf-shaped) frequency distribution instead of
-    the full long tail.  The default ``1`` keeps every token — output,
-    plan, and hashes identical to the historical spelling (the filter
-    is not even added to the plan, so cached plan shapes are
-    unchanged).  Training on the floored vocabulary is the standard
-    trainer posture (rare-token pairs cannot win an argmax whose
-    winning counts dwarf ``min_count`` anyway); note the floor also
-    removes the dropped tokens from the returned ``state``/vocab
-    frames, which is the honest contract — a segmentation audit over
-    tokens the trainer never saw would be misleading.
     """
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    if min_count < 1:
-        raise ValueError("min_count must be >= 1")
-    vocab = _vocab(docs, text, token_pattern)
-    if min_count > 1:
-        vocab = vocab.filter(F.col("cnt") >= min_count)
+    vocab = _vocab(docs)
     local = [
         (int(r["cnt"]), r["syms"])
         for r in vocab.select("cnt", "syms").collect()
@@ -156,46 +137,23 @@ def _train(
     return merges, state, vocab
 
 
-def bpe_merges(
-    docs: DataFrame,
-    n_merges: int = 12,
-    text: str = "text",
-    token_pattern: str = "[a-z0-9]+",
-    min_count: int = 1,
-) -> DataFrame:
+def bpe_merges(docs: DataFrame, n_merges: int = 12) -> DataFrame:
     """The learned merge table — BPE's model artifact: (rank, left_sym,
     right_sym, merged, pair_count), rank in learning order.  Fewer than
     ``n_merges`` rows when the corpus runs out of adjacent pairs.
 
-    ``min_count`` floors the vocabulary before the driver-local merge
-    loop (the fleet-scale driver-memory bound — see :func:`_train`);
-    the default keeps every token and the historical output.  Nothing
-    persists: the vocabulary is collected once and the merge loop runs
+    Nothing persists: the vocabulary is collected once and the merge loop runs
     on the driver."""
-    merges, _state, _vocab_frame = _train(
-        docs, n_merges, text, token_pattern, min_count
-    )
+    merges, _state, _vocab_frame = _train(docs, n_merges)
     return docs.sparkSession.createDataFrame(merges, MERGES_SCHEMA)
 
 
-def bpe_segment_vocab(
-    docs: DataFrame,
-    n_merges: int = 12,
-    text: str = "text",
-    token_pattern: str = "[a-z0-9]+",
-    min_count: int = 1,
-) -> DataFrame:
+def bpe_segment_vocab(docs: DataFrame, n_merges: int = 12) -> DataFrame:
     """Train ``n_merges`` rules and return every vocabulary token's
     resulting segmentation: (token, cnt, n_subwords, segmentation) with
     subwords space-joined — the fertility audit (subwords per token)
-    that decides whether the merge budget is big enough.
-
-    ``min_count`` floors the vocabulary before training AND in the
-    returned frame (tokens the trainer never saw are excluded — see
-    :func:`_train`); the default keeps every token."""
-    _, state, _vocab_frame = _train(
-        docs, n_merges, text, token_pattern, min_count
-    )
+    that decides whether the merge budget is big enough."""
+    _, state, _vocab_frame = _train(docs, n_merges)
     sy = F.split(F.expr("trim(BOTH '<>' FROM syms)"), "><")
     return state.select(
         "token",
@@ -244,13 +202,13 @@ def _stage_sql(i: int) -> str:
 )"""
 
 
-def _base_sql(source_sql: str, token_pattern: str) -> str:
+def _base_sql(source_sql: str) -> str:
     return f"""WITH src AS MATERIALIZED (
   {source_sql}
 ), words AS MATERIALIZED (
   SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt
   FROM (SELECT unnest(string_split(lower(t), ' ')) AS token FROM src)
-  WHERE regexp_matches(token, '^{token_pattern}$')
+  WHERE regexp_matches(token, '^{TOKEN_PATTERN}$')
   GROUP BY 1
 ), s0 AS MATERIALIZED (
   SELECT token, cnt,
@@ -259,11 +217,7 @@ def _base_sql(source_sql: str, token_pattern: str) -> str:
 )"""
 
 
-def bpe_merges_sql(
-    source_sql: str,
-    n_merges: int = 12,
-    token_pattern: str = "[a-z0-9]+",
-) -> str:
+def bpe_merges_sql(source_sql: str, n_merges: int = 12) -> str:
     """DuckDB twin of :func:`bpe_merges`: the iterations unroll into
     ``n_merges`` chained CTE stages — same pair counting, same argmax
     collation, same boundary-exact replace.  ``source_sql`` must yield
@@ -275,22 +229,18 @@ def bpe_merges_sql(
         for i in range(1, n_merges + 1)
     )
     return (
-        _base_sql(source_sql, token_pattern)
+        _base_sql(source_sql)
         + ",\n"
         + stages
         + f"\nSELECT * FROM (\n{union}\n) ORDER BY rank"
     )
 
 
-def bpe_segment_vocab_sql(
-    source_sql: str,
-    n_merges: int = 12,
-    token_pattern: str = "[a-z0-9]+",
-) -> str:
+def bpe_segment_vocab_sql(source_sql: str, n_merges: int = 12) -> str:
     """DuckDB twin of :func:`bpe_segment_vocab`."""
     stages = ",\n".join(_stage_sql(i) for i in range(1, n_merges + 1))
     return (
-        _base_sql(source_sql, token_pattern)
+        _base_sql(source_sql)
         + ",\n"
         + stages
         + f"""

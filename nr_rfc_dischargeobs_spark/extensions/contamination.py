@@ -26,11 +26,7 @@ from .dedup import shingle_rows, tokens
 
 
 def ngram_contamination(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-    text: str = "text",
-    doc_id: str = "doc_id",
+    corpus: DataFrame, benchmark: DataFrame, n: int = 8
 ) -> DataFrame:
     """(doc_id, n_grams, n_contaminated, n_bench_docs, contamination)
     per corpus doc that collides with the benchmark at all.
@@ -43,14 +39,14 @@ def ngram_contamination(
     the join stays a broadcast whatever the threshold says
     (``test_contamination_broadcast_is_a_hint``).
     """
-    corpus_sh = shingle_rows(corpus, text=text, doc_id=doc_id, n=n).select(
-        F.col(doc_id), F.md5(F.col("shingle")).alias("gram")
+    corpus_sh = shingle_rows(corpus, n=n).select(
+        F.col("doc_id"), F.md5(F.col("shingle")).alias("gram")
     )
     bench_sh = (
-        shingle_rows(benchmark, text=text, doc_id=doc_id, n=n)
+        shingle_rows(benchmark, n=n)
         .select(
             F.md5(F.col("shingle")).alias("gram"),
-            F.col(doc_id).alias("bench_doc_id"),
+            F.col("doc_id").alias("bench_doc_id"),
         )
         .distinct()
     )
@@ -68,7 +64,7 @@ def ngram_contamination(
     )
     tagged = corpus_sh.join(F.broadcast(bench_g), "gram", "left")
     return (
-        tagged.groupBy(doc_id)
+        tagged.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.count("__bdocs").alias("n_contaminated"),
@@ -78,7 +74,7 @@ def ngram_contamination(
         )
         .filter(F.col("n_contaminated") > 0)
         .select(
-            F.col(doc_id),
+            F.col("doc_id"),
             "n_grams",
             "n_contaminated",
             "n_bench_docs",
@@ -90,11 +86,7 @@ def ngram_contamination(
 
 
 def contamination_spans(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-    text: str = "text",
-    doc_id: str = "doc_id",
+    corpus: DataFrame, benchmark: DataFrame, n: int = 8
 ) -> DataFrame:
     """The audit trail behind :func:`ngram_contamination`'s scores:
     one row per (corpus n-gram occurrence, implicated benchmark doc) —
@@ -115,21 +107,23 @@ def contamination_spans(
     token for the partial tail shingle of short documents.
     """
     bench_g = (
-        shingle_rows(benchmark, text=text, doc_id=doc_id, n=n)
+        shingle_rows(benchmark, n=n)
         .select(
             F.md5(F.col("shingle")).alias("gram"),
-            F.col(doc_id).alias("bench_doc_id"),
+            F.col("doc_id").alias("bench_doc_id"),
         )
         .distinct()
         .groupBy("gram")
         .agg(F.collect_set("bench_doc_id").alias("__bdocs"))
     )
-    toks = corpus.select(F.col(doc_id), tokens(F.col(text)).alias("__toks"))
+    toks = corpus.select(
+        F.col("doc_id"), tokens(F.col("text")).alias("__toks")
+    )
     # same indexing discipline as shingle_rows: get() is 0-based and NULL
     # out of range; concat_ws drops NULLs, producing the partial tail
     idx = ", ".join(f"get(__toks, i + {k})" for k in range(n))
     pos_sh = toks.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.size("__toks").alias("__n_toks"),
         F.explode(
             F.expr(
@@ -139,13 +133,13 @@ def contamination_spans(
         ).alias("__s"),
     )
     hits = pos_sh.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.col("__n_toks"),
         F.col("__s.pos").alias("__pos"),
         F.md5(F.col("__s.shingle")).alias("gram"),
     ).join(F.broadcast(bench_g), "gram", "inner")
     return hits.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.explode("__bdocs").alias("bench_doc_id"),
         F.col("__pos").cast("long").alias("pos_first"),
         F.least(F.col("__pos") + (n - 1), F.col("__n_toks") - 1)
@@ -181,12 +175,7 @@ def _check_bloom_dials(m_bits: int, k: int) -> None:
 
 
 def bloom_build(
-    benchmark: DataFrame,
-    n: int = 8,
-    m_bits: int = 1 << 16,
-    k: int = 3,
-    text: str = "text",
-    doc_id: str = "doc_id",
+    benchmark: DataFrame, n: int = 8, m_bits: int = 1 << 16, k: int = 3
 ) -> list[int]:
     """Build the benchmark-side Bloom filter: ``m_bits`` bits packed into
     ``m_bits/64`` int64 words, ready to inline into :func:`bloom_screen`.
@@ -207,7 +196,7 @@ def bloom_build(
     """
     _check_bloom_dials(m_bits, k)
     words = (
-        shingle_rows(benchmark, text=text, doc_id=doc_id, n=n)
+        shingle_rows(benchmark, n=n)
         .select(
             F.explode(
                 _bloom_positions(F.md5(F.col("shingle")), m_bits, k)
@@ -232,8 +221,6 @@ def bloom_screen(
     n: int = 8,
     m_bits: int = 1 << 16,
     k: int = 3,
-    text: str = "text",
-    doc_id: str = "doc_id",
 ) -> DataFrame:
     """Scan-local Bloom decontamination gate: per corpus doc, how many of
     its distinct word n-grams the filter flags as benchmark members.
@@ -268,8 +255,8 @@ def bloom_screen(
     # flagged_frac = 1.0, corrupting any downstream aggregate of the
     # promised per-doc decision rows
     toks = corpus.select(
-        F.col(doc_id),
-        tokens(F.coalesce(F.col(text), F.lit(""))).alias("__toks"),
+        F.col("doc_id"),
+        tokens(F.coalesce(F.col("text"), F.lit(""))).alias("__toks"),
     )
     if n == 1:
         grams = F.array_distinct(F.col("__toks"))
@@ -286,7 +273,7 @@ def bloom_screen(
     # fixed position set every degenerate doc would share)
     grams = F.filter(grams, lambda g: F.trim(g) != "")
     staged = toks.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.transform(
             grams, lambda g: _bloom_positions(F.md5(g), m_bits, k)
         ).alias("__poss"),
@@ -311,12 +298,12 @@ def bloom_screen(
     # column referenced three times downstream survives CollapseProject
     # (the span_dedup staging discipline).
     counted = staged.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.size("__poss").cast("long").alias("n_grams"),
         flagged.cast("long").alias("__flag"),
     )
     return counted.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         "n_grams",
         F.col("__flag").alias("n_flagged"),
         F.when(
@@ -335,20 +322,14 @@ def bloom_decontamination(
     n: int = 8,
     m_bits: int = 1 << 16,
     k: int = 3,
-    text: str = "text",
-    doc_id: str = "doc_id",
 ) -> DataFrame:
     """:func:`bloom_build` + :func:`bloom_screen` in one call — the
     fixed-memory sibling of :func:`ngram_contamination` for the common
     case where build and screen run in one job."""
     return bloom_screen(
         corpus,
-        bloom_build(
-            benchmark, n=n, m_bits=m_bits, k=k, text=text, doc_id=doc_id
-        ),
+        bloom_build(benchmark, n=n, m_bits=m_bits, k=k),
         n=n,
         m_bits=m_bits,
         k=k,
-        text=text,
-        doc_id=doc_id,
     )

@@ -38,8 +38,6 @@ def rule_gate(
     min_words: int | None = None,
     max_words: int | None = None,
     min_uniq: float | None = None,
-    text: str = "text",
-    doc_id: str = "doc_id",
 ) -> DataFrame:
     """The scan-fused rule gate: every ``docs`` column plus ``n_words``
     and ``uniq_ratio``, filtered to the thresholds — ONE scan, ONE
@@ -56,7 +54,7 @@ def rule_gate(
     row.  Every consumer is permutation-invariant (``size``,
     ``size∘array_distinct``), so the values, the kept-row set, and the
     output hashes are bit-identical to both prior spellings; the
-    interleaved A/B (tools/ab_curate.py, idle box, noop sink) measured
+    interleaved A/B (idle box, noop sink) measured
     fused 2.97 s / join 3.10 s / this 2.63 s median on the full
     curate_corpus pipeline at sf0.1.  The marker's only optimizer
     effect is local: the gate predicates were never scan-pushable
@@ -75,7 +73,7 @@ def rule_gate(
             f"rule_gate: docs already has column(s) {clash}; rename or drop"
             " them — the gate adds n_words and uniq_ratio itself"
         )
-    toks = F.shuffle(tx._tokens(F.col(text)))
+    toks = F.shuffle(tx._tokens(F.col("text")))
     staged = docs.select("*", toks.alias("__toks"))
     n_words_raw = F.size(F.col("__toks"))
     gated = staged.select(
@@ -98,35 +96,14 @@ def rule_gate(
 
 def curate_corpus(
     docs: DataFrame,
-    min_words: int = 10,
-    max_words: int = 5000,
-    min_uniq: float = 0.2,
-    bands: int = 4,
-    rows_per_band: int = 2,
     shingle_n: int = 3,
-    jaccard_threshold: float = 0.8,
-    text: str = "text",
-    doc_id: str = "doc_id",
     cache_shingles: bool = False,
-    classifier_min_score: float | None = None,
-    entropy_band: tuple[float, float] | None = None,
 ) -> DataFrame:
     """Returns the kept documents: (doc_id, n_words, uniq_ratio).
 
     Deterministic end-to-end: every survivor choice is a min over exact
     integers/hashes, so the output is reproducible across engines,
     partitionings, and retries.
-
-    Two OPTIONAL model-grade gates slot in after the rule gate (both off
-    by default — the registered query's oracle covers the rule-only
-    path; the gated variants are unit-tested):
-
-    - ``classifier_min_score`` — :func:`~.text.hash_classifier` mean
-      weight threshold (the fastText-shaped quality gate), scan-local;
-    - ``entropy_band`` — keep docs whose :func:`~.text.token_entropy`
-      falls inside ``(lo, hi)``: cuts keyboard-mash (high tail) and
-      template spam (low tail) in one screen; one combine-friendly
-      aggregation keyed by doc.
     """
     # r13 (guide §2.4): the gate signals are scan-local expressions over
     # ``text``, so compute them ON the docs scan and filter in place —
@@ -134,29 +111,7 @@ def curate_corpus(
     # twice and paid a doc_id-keyed join (measured: 2 scans + 1 BHJ →
     # 1 scan, 0 join).  r14: single-tokenization staging via
     # :func:`rule_gate` (see its docstring for the A/B numbers).
-    gated = rule_gate(
-        docs,
-        min_words=min_words,
-        max_words=max_words,
-        min_uniq=min_uniq,
-        text=text,
-        doc_id=doc_id,
-    )
-    if classifier_min_score is not None:
-        clf_ids = (
-            tx.hash_classifier(gated, text=text, doc_id=doc_id)
-            .filter(F.col("score") >= classifier_min_score)
-            .select(doc_id)
-        )
-        gated = gated.join(clf_ids, doc_id)
-    if entropy_band is not None:
-        lo, hi = entropy_band
-        ent_ids = (
-            tx.token_entropy(gated, text=text, doc_id=doc_id)
-            .filter(F.col("entropy").between(lo, hi))
-            .select(doc_id)
-        )
-        gated = gated.join(ent_ids, doc_id)
+    gated = rule_gate(docs, min_words=10, max_words=5000, min_uniq=0.2)
 
     # exact: min doc_id per normalized fingerprint.  groupBy-min, not a
     # row_number window: the survivor rule is a plain min, so the partial
@@ -164,13 +119,13 @@ def curate_corpus(
     # the exchange — a window would shuffle-and-sort EVERY row.  Measured
     # at sf0.1 warm: 2.5 s vs 2.9 s whole-pipeline; the gap widens with
     # duplicate mass.
-    fp = tx.fingerprint(gated, text=text, doc_id=doc_id)
+    fp = tx.fingerprint(gated)
     exact_kept = (
         fp.groupBy("fingerprint")
-        .agg(F.min(doc_id).alias(doc_id))
-        .select(doc_id)
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
     )
-    survivors = gated.join(exact_kept, doc_id)
+    survivors = gated.join(exact_kept, "doc_id")
     if cache_shingles:
         # three consumers re-scan this subtree (shingles, and both ends of
         # the final anti-join); same materialize-once trade as the shingle
@@ -183,16 +138,11 @@ def curate_corpus(
     # overlap track real similarity and r=2 suppresses the rest as s².
     dropped = near_dup_drop_ids(
         survivors,
-        bands=bands,
-        rows_per_band=rows_per_band,
         shingle_n=shingle_n,
-        jaccard_threshold=jaccard_threshold,
-        text=text,
-        doc_id=doc_id,
         cache_shingles=cache_shingles,
     )
-    kept = survivors.join(dropped, doc_id, "left_anti")
-    return kept.select(doc_id, "n_words", "uniq_ratio")
+    kept = survivors.join(dropped, "doc_id", "left_anti")
+    return kept.select("doc_id", "n_words", "uniq_ratio")
 
 
 def near_dup_drop_ids(
@@ -201,8 +151,6 @@ def near_dup_drop_ids(
     rows_per_band: int = 2,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.8,
-    text: str = "text",
-    doc_id: str = "doc_id",
     cache_shingles: bool = False,
 ) -> DataFrame:
     """The near-dup DROP LIST (one ``doc_id`` column): the higher id of
@@ -215,7 +163,7 @@ def near_dup_drop_ids(
     # the shingle table feeds signatures, sizes, and both sides of the
     # intersection join; caching it trades memory for 4 subtree re-scans
     # (at fleet scale, materialize it as a table instead)
-    shingles = dd.shingle_rows(docs, text=text, doc_id=doc_id, n=shingle_n)
+    shingles = dd.shingle_rows(docs, n=shingle_n)
     if cache_shingles:
         shingles = pin(shingles)
     # r13 (guide §2.4): the shingle-set sizes ride the signature groupBy
@@ -226,22 +174,21 @@ def near_dup_drop_ids(
     # old sizes aggregation counted, so na/nb and every verdict are
     # bit-identical.
     sigs = dd.minhash_signatures(
-        shingles, bands=bands, rows_per_band=rows_per_band, doc_id=doc_id,
-        with_count=True,
+        shingles, bands=bands, rows_per_band=rows_per_band, with_count=True,
     )
     candidates = dd.lsh_candidate_pairs(
-        sigs, bands=bands, doc_id=doc_id, carry=("n_sh",)
+        sigs, bands=bands, carry=("n_sh",)
     )
     inter = (
         candidates.join(
             shingles.select(
-                F.col(doc_id).alias("doc_a"), F.col("shingle")
+                F.col("doc_id").alias("doc_a"), F.col("shingle")
             ),
             "doc_a",
         )
         .join(
             shingles.select(
-                F.col(doc_id).alias("doc_b"), F.col("shingle")
+                F.col("doc_id").alias("doc_b"), F.col("shingle")
             ),
             ["doc_b", "shingle"],
         )
@@ -258,4 +205,4 @@ def near_dup_drop_ids(
         / (F.col("na") + F.col("nb") - F.col("n_inter"))
         >= jaccard_threshold
     )
-    return verified.select(F.col("doc_b").alias(doc_id)).distinct()
+    return verified.select(F.col("doc_b").alias("doc_id")).distinct()

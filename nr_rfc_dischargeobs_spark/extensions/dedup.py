@@ -25,17 +25,15 @@ from pyspark.sql import functions as F
 HEX = "0123456789abcdef"
 
 
-def exact_clusters(
-    docs: DataFrame, text: str = "text", doc_id: str = "doc_id"
-) -> DataFrame:
+def exact_clusters(docs: DataFrame) -> DataFrame:
     """Exact dedup via content fingerprint: one row per distinct content,
     with the cluster size and the keeper (min id)."""
     return (
-        docs.select(F.md5(F.col(text)).alias("fingerprint"), F.col(doc_id))
+        docs.select(F.md5(F.col("text")).alias("fingerprint"), F.col("doc_id"))
         .groupBy("fingerprint")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.min(doc_id).alias("keep_doc_id"),
+            F.min("doc_id").alias("keep_doc_id"),
         )
     )
 
@@ -45,9 +43,7 @@ def tokens(text_col: Column) -> Column:
     return F.split(F.lower(text_col), " ")
 
 
-def shingle_rows(
-    docs: DataFrame, text: str = "text", doc_id: str = "doc_id", n: int = 1
-) -> DataFrame:
+def shingle_rows(docs: DataFrame, n: int = 1) -> DataFrame:
     """(doc_id, shingle) rows — distinct word n-grams, exploded.
 
     The token array is materialized in its own projection and the n-gram
@@ -64,7 +60,7 @@ def shingle_rows(
     hits in the n-gram screen and false Jaccard-1.0 near-dup drops
     between docs that share zero content.
     """
-    toks = docs.select(F.col(doc_id), tokens(F.col(text)).alias("__toks"))
+    toks = docs.select(F.col("doc_id"), tokens(F.col("text")).alias("__toks"))
     if n == 1:
         sh = F.array_distinct(F.col("__toks"))
     else:
@@ -79,7 +75,7 @@ def shingle_rows(
             )
         )
     return (
-        toks.select(F.col(doc_id), F.explode(sh).alias("shingle"))
+        toks.select(F.col("doc_id"), F.explode(sh).alias("shingle"))
         .filter(F.trim(F.col("shingle")) != "")
     )
 
@@ -88,7 +84,6 @@ def minhash_signatures(
     shingles: DataFrame,
     bands: int = 4,
     rows_per_band: int = 1,
-    doc_id: str = "doc_id",
     with_count: bool = False,
 ) -> DataFrame:
     """Per-doc banded min-hash signature, one column per band
@@ -140,7 +135,7 @@ def minhash_signatures(
             for salt in salts[:n_calls]
         ]
     )
-    hashed = shingles.select(F.col(doc_id), cat.alias("__cat"))
+    hashed = shingles.select(F.col("doc_id"), cat.alias("__cat"))
     aggs = [
         F.min(F.substring(F.col("__cat"), 8 * h + 1, 8)).alias(f"__h{h}")
         for h in range(n_hashes)
@@ -153,15 +148,15 @@ def minhash_signatures(
     if with_count:
         aggs.append(F.count(F.lit(1)).alias("n_sh"))
     extra = ["n_sh"] if with_count else []
-    per_hash = hashed.groupBy(doc_id).agg(*aggs)
+    per_hash = hashed.groupBy("doc_id").agg(*aggs)
     if rows_per_band == 1:
         return per_hash.select(
-            doc_id,
+            "doc_id",
             *[F.col(f"__h{b}").alias(f"mh{b}") for b in range(bands)],
             *extra,
         )
     return per_hash.select(
-        doc_id,
+        "doc_id",
         *[
             F.md5(
                 F.concat_ws(
@@ -181,7 +176,6 @@ def minhash_signatures(
 def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 4,
-    doc_id: str = "doc_id",
     max_bucket: int | None = None,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -209,7 +203,7 @@ def lsh_candidate_pairs(
     Jaccard verifier skip its own sizes aggregation + two re-attach
     joins (r13, guide §2.4)."""
     long_ = signatures.unpivot(
-        [doc_id, *carry], [f"mh{b}" for b in range(bands)], "band", "sig"
+        ["doc_id", *carry], [f"mh{b}" for b in range(bands)], "band", "sig"
     )
     if max_bucket is not None:
         keep = (
@@ -220,13 +214,13 @@ def lsh_candidate_pairs(
         )
         long_ = long_.join(keep, ["band", "sig"], "leftsemi")
     a = long_.select(
-        F.col(doc_id).alias("doc_a"),
+        F.col("doc_id").alias("doc_a"),
         F.col("band"),
         F.col("sig"),
         *[F.col(c).alias(f"{c}_a") for c in carry],
     )
     b = long_.select(
-        F.col(doc_id).alias("doc_b"),
+        F.col("doc_id").alias("doc_b"),
         F.col("band"),
         F.col("sig"),
         *[F.col(c).alias(f"{c}_b") for c in carry],
@@ -242,16 +236,11 @@ def lsh_candidate_pairs(
 
 def incremental_admission(
     new_docs: DataFrame,
-    corpus: DataFrame | None = None,
+    corpus: DataFrame,
     *,
     bands: int = 4,
     rows_per_band: int = 1,
     n: int = 3,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    max_bucket: int | None = None,
-    corpus_fingerprints: DataFrame | None = None,
-    corpus_signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Admission screen for an INCOMING batch against a LANDED corpus —
     the continuous-ingest posture (each crawl snapshot deduplicated
@@ -278,90 +267,52 @@ def incremental_admission(
       |bucket_new|·|bucket_corpus|, and the incoming batch is typically
       orders of magnitude smaller than the corpus — the dominant cost is
       one scan of the corpus side, not a quadratic pair explosion;
-    - in production the corpus side of both joins is a STORED artifact:
-      pass ``corpus_fingerprints`` (``(fingerprint, doc_id)`` rows — raw,
-      this function groups them) and/or ``corpus_signatures`` (a
-      ``minhash_signatures`` output table with matching (bands,
-      rows_per_band)) instead of ``corpus``, and neither derivation
-      rescans the landed text — the artifacts only ever APPEND, so the
-      maintenance cost per ingest is one batch-sized write (the sweep
-      engine heals them if a partial write ever loses rows).  Passing
-      ``corpus`` recomputes both in-query (self-contained / test form);
-      artifact-form output is pinned identical to corpus-form in tests;
-    - ``max_bucket`` gates HOT corpus buckets (viral boilerplate) before
-      the join, exactly like :func:`lsh_candidate_pairs` — the corpus
-      side is where the degenerate mass lives;
     - admission is deterministic and order-free: a replayed batch
       returns the identical admit set (no state beyond the corpus).
     """
-    if corpus is None and (
-        corpus_fingerprints is None or corpus_signatures is None
-    ):
-        raise ValueError(
-            "pass corpus, or BOTH corpus_fingerprints and"
-            " corpus_signatures (the stored-artifact form)"
-        )
-    fp_raw = (
-        corpus_fingerprints
-        if corpus_fingerprints is not None
-        else corpus.select(
-            F.md5(F.col(text)).alias("fingerprint"), F.col(doc_id)
-        )
+    fp_raw = corpus.select(
+        F.md5(F.col("text")).alias("fingerprint"), F.col("doc_id")
     )
     fp_corpus = fp_raw.groupBy("fingerprint").agg(
-        F.min(doc_id).alias("exact_dup_of")
+        F.min("doc_id").alias("exact_dup_of")
     )
     fp_new = new_docs.select(
-        F.col(doc_id), F.md5(F.col(text)).alias("fingerprint")
+        F.col("doc_id"), F.md5(F.col("text")).alias("fingerprint")
     )
     exact = fp_new.join(fp_corpus, "fingerprint", "left").select(
-        doc_id, "exact_dup_of"
+        "doc_id", "exact_dup_of"
     )
 
     band_cols = [f"mh{b}" for b in range(bands)]
     sig_new = minhash_signatures(
-        shingle_rows(new_docs, text, doc_id, n),
+        shingle_rows(new_docs, n=n),
         bands=bands,
         rows_per_band=rows_per_band,
-        doc_id=doc_id,
-    ).unpivot([doc_id], band_cols, "band", "sig")
-    sig_corpus = (
-        corpus_signatures
-        if corpus_signatures is not None
-        else minhash_signatures(
-            shingle_rows(corpus, text, doc_id, n),
-            bands=bands,
-            rows_per_band=rows_per_band,
-            doc_id=doc_id,
-        )
-    ).unpivot([doc_id], band_cols, "band", "sig")
-    if max_bucket is not None:
-        keep = (
-            sig_corpus.groupBy("band", "sig")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_bucket)
-            .select("band", "sig")
-        )
-        sig_corpus = sig_corpus.join(keep, ["band", "sig"], "leftsemi")
+    ).unpivot(["doc_id"], band_cols, "band", "sig")
+    sig_corpus = minhash_signatures(
+        shingle_rows(corpus, n=n),
+        bands=bands,
+        rows_per_band=rows_per_band,
+    ).unpivot(["doc_id"], band_cols, "band", "sig")
     near = (
         sig_new.select(
-            F.col(doc_id).alias("__new_id"), "band", "sig"
+            F.col("doc_id").alias("__new_id"), "band", "sig"
         )
         .join(
             sig_corpus.select(
-                F.col(doc_id).alias("__corpus_id"), "band", "sig"
+                F.col("doc_id").alias("__corpus_id"), "band", "sig"
             ),
             ["band", "sig"],
         )
         .groupBy("__new_id")
         .agg(F.min("__corpus_id").alias("near_dup_of"))
-        .withColumnRenamed("__new_id", doc_id)
+        .withColumnRenamed("__new_id", "doc_id")
     )
 
     return (
-        new_docs.select(doc_id)
-        .join(exact, doc_id, "left")
-        .join(near, doc_id, "left")
+        new_docs.select("doc_id")
+        .join(exact, "doc_id", "left")
+        .join(near, "doc_id", "left")
         .withColumn(
             "admit",
             F.col("exact_dup_of").isNull() & F.col("near_dup_of").isNull(),
@@ -369,9 +320,7 @@ def incremental_admission(
     )
 
 
-def simhash64(
-    docs: DataFrame, text: str = "text", doc_id: str = "doc_id"
-) -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """64-bit SimHash from md5 nibbles of each (frequency-weighted) token.
 
     bit b reads nibble ``b div 4`` of md5(token) (64 bits consume the first
@@ -388,10 +337,10 @@ def simhash64(
     the 64-bit pattern.
     """
     tok = docs.select(
-        F.col(doc_id), F.explode(tokens(F.col(text))).alias("tok")
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok")
     ).withColumn("h", F.md5(F.col("tok")))
     bits = tok.select(
-        doc_id,
+        "doc_id",
         "h",
         F.explode(F.expr("sequence(0, 63)")).alias("bit"),
     ).withColumn(
@@ -405,9 +354,9 @@ def simhash64(
         F.col("bit") == 63, F.lit(-9223372036854775808)
     ).otherwise(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(bit AS INT))"))
     return (
-        bits.groupBy(doc_id, "bit")
+        bits.groupBy("doc_id", "bit")
         .agg(F.sum("contrib").alias("s"))
-        .groupBy(doc_id)
+        .groupBy("doc_id")
         .agg(
             F.sum(
                 F.when(F.col("s") > 0, weight).otherwise(F.lit(0))
@@ -417,11 +366,7 @@ def simhash64(
 
 
 def jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.6,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    n: int = 1,
+    docs: DataFrame, threshold: float = 0.6, n: int = 1
 ) -> DataFrame:
     """Word/n-gram Jaccard similarity pairs ≥ threshold.
 
@@ -430,10 +375,10 @@ def jaccard_pairs(
     division.  At corpus scale, run *after* LSH candidate generation; this
     direct form is the verifier / small-partition path.
     """
-    sh = shingle_rows(docs, text, doc_id, n)
-    sizes = sh.groupBy(doc_id).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(doc_id).alias("doc_a"), "shingle")
-    b = sh.select(F.col(doc_id).alias("doc_b"), "shingle")
+    sh = shingle_rows(docs, n=n)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
         a.join(b, "shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -441,10 +386,10 @@ def jaccard_pairs(
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     sz_a = sizes.select(
-        F.col(doc_id).alias("doc_a"), F.col("n_sh").alias("na")
+        F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")
     )
     sz_b = sizes.select(
-        F.col(doc_id).alias("doc_b"), F.col("n_sh").alias("nb")
+        F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")
     )
     jac = (
         F.col("n_inter").cast("double")
@@ -460,11 +405,7 @@ def jaccard_pairs(
 
 
 def containment_pairs(
-    docs: DataFrame,
-    threshold: float = 0.9,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    n: int = 3,
+    docs: DataFrame, threshold: float = 0.9, n: int = 3
 ) -> DataFrame:
     """Shingle-containment pairs: (inner, outer) where
     |shingles(inner) ∩ shingles(outer)| / |shingles(inner)| ≥ threshold.
@@ -481,10 +422,10 @@ def containment_pairs(
     at corpus scale it runs *after* LSH candidate generation; this direct
     form is the verifier / small-partition path.
     """
-    sh = shingle_rows(docs, text, doc_id, n)
-    sizes = sh.groupBy(doc_id).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(doc_id).alias("inner_id"), "shingle")
-    b = sh.select(F.col(doc_id).alias("outer_id"), "shingle")
+    sh = shingle_rows(docs, n=n)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    a = sh.select(F.col("doc_id").alias("inner_id"), "shingle")
+    b = sh.select(F.col("doc_id").alias("outer_id"), "shingle")
     inter = (
         a.join(b, "shingle")
         .filter(F.col("inner_id") != F.col("outer_id"))
@@ -494,7 +435,8 @@ def containment_pairs(
     return (
         inter.join(
             sizes.select(
-                F.col(doc_id).alias("inner_id"), F.col("n_sh").alias("n_inner")
+                F.col("doc_id").alias("inner_id"),
+                F.col("n_sh").alias("n_inner"),
             ),
             "inner_id",
         )
@@ -507,12 +449,7 @@ def containment_pairs(
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 50,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """Connected components over a near-dup pair graph → (node, label).
 
     The cluster-level upgrade to ``curate``'s per-edge min-id rule: every
@@ -561,8 +498,8 @@ def connected_components(
     pairs = edges.select(
         F.explode(
             F.array(
-                F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-                F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+                F.struct(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
+                F.struct(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")),
             )
         ).alias("e")
     ).select("e.a", "e.b")
@@ -651,10 +588,7 @@ _LIGHT_EDGES = 100_000
 
 
 def connected_components_star(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 30,
+    edges: DataFrame, max_iter: int = 30
 ) -> DataFrame:
     """EAGER at call time (counts + checkpoints per round, unlike the
     lazy sibling operators — composing this into a larger plan pays the
@@ -691,7 +625,7 @@ def connected_components_star(
     recomputing a large-star shuffle twice costs far more than one
     materialization.  The labeling is identical either way.
     """
-    raw = edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+    raw = edges.select(F.col("doc_a").alias("x"), F.col("doc_b").alias("y"))
     # node universe BEFORE self-loop removal: a node whose only edge is
     # a self-loop must still appear in the output (as its own singleton
     # component), exactly as the min-label variant labels it

@@ -69,15 +69,13 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def to_blob_table(
-    docs: DataFrame, text: str = "text", doc_id: str = "doc_id"
-) -> DataFrame:
+def to_blob_table(docs: DataFrame) -> DataFrame:
     """Pose a text column as an opaque binary payload with metadata —
     the schema every real image/audio table shares:
     (id, blob BINARY, mime STRING, n_bytes BIGINT)."""
-    blob = F.encode(F.col(text), "UTF-8")
+    blob = F.encode(F.col("text"), "UTF-8")
     return docs.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         blob.alias("blob"),
         F.lit("application/octet-stream").alias("mime"),
         F.length(blob).alias("n_bytes"),
@@ -153,54 +151,43 @@ def decode_features(blobs: DataFrame, mode: str = "bytes") -> DataFrame:
     return blobs.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def frame_sample_plan(
-    media: DataFrame,
-    n_frames_col: str = "n_frames",
-    every: int = 10,
-    doc_id: str = "doc_id",
-) -> DataFrame:
+def frame_sample_plan(media: DataFrame, every: int = 10) -> DataFrame:
     """Frame-sampling plan: which frame indices to decode for each clip —
     pure metadata arithmetic (``sequence(0, n-1, every)``), exploded to one
     row per (clip, frame).  The decode of those frames is the
     ``decode_features`` stage; planning never touches bytes."""
     return media.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.explode(
             F.sequence(
                 F.lit(0),
-                F.greatest(F.col(n_frames_col) - 1, F.lit(0)),
+                F.greatest(F.col("n_frames") - 1, F.lit(0)),
                 F.lit(every),
             )
         ).alias("frame_idx"),
     )
 
 
-def resize_dims(
-    media: DataFrame,
-    width_col: str = "width",
-    height_col: str = "height",
-    box: int = 256,
-    doc_id: str = "doc_id",
-) -> DataFrame:
-    """Resize planning: target dimensions fitting a ``box``×``box`` square,
+def resize_dims(media: DataFrame) -> DataFrame:
+    """Resize planning: target dimensions fitting a 256×256 square,
     aspect preserved — pure integer arithmetic on metadata columns
-    (``(short_side * box) div long_side``), exact in any engine.
+    (``(short_side * 256) div long_side``), exact in any engine.
 
     Like ``frame_sample_plan``, planning is split from pixel work: the
     per-image resample belongs in the ``decode_features`` mapInPandas stage
     (PIL's ``Image.resize`` at the ``mode="real"`` call site); the plan
     tier never touches bytes, so a 100 TB media table plans its resize
     pass from kilobytes of metadata."""
-    w, h = F.col(width_col), F.col(height_col)
+    w, h = F.col("width"), F.col("height")
     landscape = w >= h
-    new_w = F.when(landscape, F.lit(box)).otherwise(
-        F.greatest(F.expr(f"({width_col} * {box}) div {height_col}"), F.lit(1))
+    new_w = F.when(landscape, F.lit(256)).otherwise(
+        F.greatest(F.expr("(width * 256) div height"), F.lit(1))
     )
-    new_h = F.when(~landscape, F.lit(box)).otherwise(
-        F.greatest(F.expr(f"({height_col} * {box}) div {width_col}"), F.lit(1))
+    new_h = F.when(~landscape, F.lit(256)).otherwise(
+        F.greatest(F.expr("(height * 256) div width"), F.lit(1))
     )
     return media.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         w.alias("width"),
         h.alias("height"),
         new_w.alias("target_width"),
@@ -413,13 +400,11 @@ def png_pixels(payload: bytes) -> np.ndarray | None:
     return out.reshape(h, w, c)
 
 
-def _filter_lines(
-    flat: np.ndarray, bpp: int, filters: str, y0: int = 0
-) -> list[bytes]:
+def _filter_lines(flat: np.ndarray, bpp: int, y0: int = 0) -> list[bytes]:
     """Apply the forward PNG scanline filters to a ``(h, stride)``
     int64 byte grid — one prefixed line per row, filter state starting
     fresh (prior = zeros), the shared kernel under the sequential and
-    Adam7 layouts.  ``y0`` offsets the "cycle" rotation so interlaced
+    Adam7 layouts.  ``y0`` offsets the filter rotation so interlaced
     passes keep cycling through all five types across pass
     boundaries."""
     stride = flat.shape[1]
@@ -427,7 +412,7 @@ def _filter_lines(
     prior = np.zeros(stride, dtype=np.int64)
     for y in range(flat.shape[0]):
         row = flat[y]
-        ft = ((y0 + y) % 5) if filters == "cycle" else 0
+        ft = (y0 + y) % 5
         if ft == 0:
             enc = row
         elif ft == 1:
@@ -454,15 +439,13 @@ def _filter_lines(
     return lines
 
 
-def encode_png(
-    pixels: np.ndarray, filters: str = "cycle", interlace: bool = False
-) -> bytes:
+def encode_png(pixels: np.ndarray, interlace: bool = False) -> bytes:
     """The inverse path, used by fixtures and the registered decode
     row's deterministic payload generator: encode an (h, w, 1|2|3|4)
     uint8 (depth 8) or uint16 (depth 16, big-endian) array as a valid
-    PNG (grayscale / gray+alpha / RGB / RGBA).  ``filters="cycle"`` rotates through all
-    five filter types row by row so a decode of the output exercises
-    every reversal arm; ``"none"`` writes filter 0 only.
+    PNG (grayscale / gray+alpha / RGB / RGBA).  The rows rotate
+    through all five filter types so a decode of the output exercises
+    every reversal arm.
     ``interlace=True`` writes the Adam7 layout (spec §8.2): the byte
     grid is sliced into the seven pass lattices, each pass filtered as
     its own sub-image with fresh filter state.  Independent
@@ -493,7 +476,7 @@ def encode_png(
         else pixels.reshape(h, stride)
     ).astype(np.int64)
     if not interlace:
-        lines = _filter_lines(flat, bpp, filters)
+        lines = _filter_lines(flat, bpp)
     else:
         lines = []
         n_lines = 0
@@ -507,7 +490,7 @@ def encode_png(
             sub = np.zeros((hp, wp * bpp), dtype=np.int64)
             for b in range(bpp):
                 sub[:, b::bpp] = flat[np.ix_(rows, cols + b)]
-            lines.extend(_filter_lines(sub, bpp, filters, y0=n_lines))
+            lines.extend(_filter_lines(sub, bpp, y0=n_lines))
             n_lines += hp
 
     def chunk(ctype: bytes, data: bytes) -> bytes:
@@ -579,7 +562,7 @@ def decode_png(blobs: DataFrame) -> DataFrame:
     return blobs.mapInPandas(run, schema=PNG_SCHEMA)
 
 
-def png_fixture_blobs(ids: DataFrame, doc_id: str = "doc_id") -> DataFrame:
+def png_fixture_blobs(ids: DataFrame) -> DataFrame:
     """Deterministic PNG payloads from bare ids — the registered decode
     row's input generator: doc ``d`` becomes a ``((d % 3) + 2) ×
     ((d % 5) + 2)`` image, RGBA for odd ids and RGB for even, raw pixel
@@ -602,7 +585,7 @@ def png_fixture_blobs(ids: DataFrame, doc_id: str = "doc_id") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             blobs, nb = [], []
-            for d in pdf[doc_id]:
+            for d in pdf["doc_id"]:
                 d = int(d)
                 w, h = d % 5 + 2, d % 3 + 2
                 c = 4 if d % 2 else 3
@@ -615,7 +598,7 @@ def png_fixture_blobs(ids: DataFrame, doc_id: str = "doc_id") -> DataFrame:
                 nb.append(len(b))
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[doc_id],
+                    "doc_id": pdf["doc_id"],
                     "blob": blobs,
                     "mime": ["image/png"] * len(blobs),
                     "n_bytes": nb,
@@ -625,9 +608,7 @@ def png_fixture_blobs(ids: DataFrame, doc_id: str = "doc_id") -> DataFrame:
     return ids.mapInPandas(run, schema=schema)
 
 
-def png_fixture_blobs_wide(
-    ids: DataFrame, doc_id: str = "doc_id"
-) -> DataFrame:
+def png_fixture_blobs_wide(ids: DataFrame) -> DataFrame:
     """:func:`png_fixture_blobs` for the WIDENED profile grid (round
     13): doc ``d`` becomes a ``((d % 3) + 2) × ((d % 5) + 2)`` image
     with ``(d % 4) + 1`` channels — gray / gray+alpha / RGB / RGBA —
@@ -653,7 +634,7 @@ def png_fixture_blobs_wide(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             blobs, nb = [], []
-            for d in pdf[doc_id]:
+            for d in pdf["doc_id"]:
                 d = int(d)
                 w, h, c = d % 5 + 2, d % 3 + 2, d % 4 + 1
                 n = w * h * c
@@ -668,7 +649,7 @@ def png_fixture_blobs_wide(
                 nb.append(len(b))
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[doc_id],
+                    "doc_id": pdf["doc_id"],
                     "blob": blobs,
                     "mime": ["image/png"] * len(blobs),
                     "n_bytes": nb,
@@ -817,7 +798,7 @@ def decode_jpeg_headers(blobs: DataFrame) -> DataFrame:
     return blobs.mapInPandas(run, schema=JPEG_SCHEMA)
 
 
-def jpeg_fixture_blobs(ids: DataFrame, doc_id: str = "doc_id") -> DataFrame:
+def jpeg_fixture_blobs(ids: DataFrame) -> DataFrame:
     """Deterministic JPEG header streams from bare ids — the
     registered header row's input generator, the
     :func:`png_fixture_blobs` pattern: doc ``d`` becomes a
@@ -851,7 +832,7 @@ def jpeg_fixture_blobs(ids: DataFrame, doc_id: str = "doc_id") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             blobs, nb = [], []
-            for d in pdf[doc_id]:
+            for d in pdf["doc_id"]:
                 d = int(d)
                 w, h = (d * 7) % 300 + 16, (d * 11) % 200 + 16
                 ncomp = 1 if d % 5 == 0 else 3
@@ -882,7 +863,7 @@ def jpeg_fixture_blobs(ids: DataFrame, doc_id: str = "doc_id") -> DataFrame:
                 nb.append(len(b))
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[doc_id],
+                    "doc_id": pdf["doc_id"],
                     "blob": blobs,
                     "mime": ["image/jpeg"] * len(blobs),
                     "n_bytes": nb,

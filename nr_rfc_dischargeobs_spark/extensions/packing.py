@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 
 from .sampling import BUCKETS, hash_bucket, hash_bucket_sql
 
+_SALT = "pack"
+
 
 def span_columns(budget: int) -> tuple[Column, Column, Column]:
     """(seq_first, seq_last, n_seqs) expressions over columns
@@ -57,12 +59,7 @@ def span_columns(budget: int) -> tuple[Column, Column, Column]:
 
 
 def pack_assignments(
-    docs: DataFrame,
-    budget: int = 512,
-    shards: int = 8,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    salt: str = "pack",
+    docs: DataFrame, budget: int = 512, shards: int = 8
 ) -> DataFrame:
     """(doc_id, shard, n_tokens, start_offset, seq_first, seq_last,
     n_seqs) — all exact BIGINTs.  One shuffle on ``shard``.
@@ -81,27 +78,29 @@ def pack_assignments(
     # NULL text packs as zero tokens (occupies no block space) instead of
     # poisoning its row with NULL offsets — mirrored in the SQL twin
     n_tokens = F.coalesce(
-        F.size(F.split(F.col(text), r"\s+")).cast("long"), F.lit(0)
+        F.size(F.split(F.col("text"), r"\s+")).cast("long"), F.lit(0)
     )
     base = docs.select(
-        F.col(doc_id),
-        (hash_bucket(F.col(doc_id), salt) % shards).cast("long").alias("shard"),
+        F.col("doc_id"),
+        (hash_bucket(F.col("doc_id"), _SALT) % shards)
+        .cast("long")
+        .alias("shard"),
         n_tokens.alias("n_tokens"),
     )
     w = (
         Window.partitionBy("shard")
-        .orderBy(F.col(doc_id).asc())
+        .orderBy(F.col("doc_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = base.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         "shard",
         "n_tokens",
         F.sum("n_tokens").over(w).alias("cum_end"),
     )
     seq_first, seq_last, n_seqs = span_columns(budget)
     return cum.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         "shard",
         "n_tokens",
         (F.col("cum_end") - F.col("n_tokens")).alias("start_offset"),
@@ -111,23 +110,18 @@ def pack_assignments(
     )
 
 
-def pack_assignments_sql(
-    budget: int = 512,
-    shards: int = 8,
-    salt: str = "pack",
-    table: str = "documents",
-) -> str:
+def pack_assignments_sql(budget: int = 512, shards: int = 8) -> str:
     """DuckDB twin of :func:`pack_assignments` — same window arithmetic;
     the zero-token CASE keeps both engines off the one negative operand
     (cum_end - 1 at a shard head) where floor and truncation diverge."""
-    bucket = hash_bucket_sql("doc_id", salt)
+    bucket = hash_bucket_sql("doc_id", _SALT)
     return rf"""
 WITH base AS (
   SELECT doc_id,
          {bucket} % {shards} AS shard,
          COALESCE(CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT),
                   0) AS n_tokens
-  FROM {table}
+  FROM documents
 ), summed AS (
   SELECT doc_id, shard, n_tokens,
          SUM(n_tokens) OVER (
@@ -150,12 +144,7 @@ FROM summed
 
 
 def pack_sequence_rows(
-    docs: DataFrame,
-    budget: int = 512,
-    shards: int = 8,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    salt: str = "pack",
+    docs: DataFrame, budget: int = 512, shards: int = 8
 ) -> DataFrame:
     """MATERIALIZE the packed training sequences — the physical rows a
     training loader reads: :func:`pack_assignments` decides where every
@@ -187,19 +176,19 @@ def pack_sequence_rows(
             f" so {shards} shards would alias to {BUCKETS}"
         )
     toks_expr = F.coalesce(
-        F.split(F.col(text), r"\s+"),
+        F.split(F.col("text"), r"\s+"),
         F.array().cast("array<string>"),
     )
     base = docs.select(
-        F.col(doc_id),
-        (hash_bucket(F.col(doc_id), salt) % shards)
+        F.col("doc_id"),
+        (hash_bucket(F.col("doc_id"), _SALT) % shards)
         .cast("long")
         .alias("shard"),
         toks_expr.alias("__toks"),
     ).withColumn("n_tokens", F.size("__toks").cast("long"))
     w = (
         Window.partitionBy("shard")
-        .orderBy(F.col(doc_id).asc())
+        .orderBy(F.col("doc_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = base.select(

@@ -21,6 +21,8 @@ from ..session import pin
 
 HEX = "0123456789abcdef"
 BUCKETS = 1 << 16
+_STRATIFIED_SALT = "stratified"
+_SHARD_SALT = "shard"
 
 
 def hash_bucket(key: Column, salt: str = "split") -> Column:
@@ -52,29 +54,20 @@ def hash_bucket_sql(key_sql: str, salt: str = "split") -> str:
 
 
 def deterministic_split(
-    df: DataFrame,
-    key: str,
-    train_frac: float = 0.9,
-    salt: str = "split",
-    out_col: str = "split",
+    df: DataFrame, key: str, train_frac: float = 0.9
 ) -> DataFrame:
     """Label each row 'train'/'val' by key hash — scan-fused, shuffle-free,
     stable under appends."""
     threshold = int(train_frac * BUCKETS)
-    bucket = hash_bucket(F.col(key), salt)
+    bucket = hash_bucket(F.col(key), "split")
     return df.withColumn(
-        out_col,
+        "split",
         F.when(bucket < threshold, F.lit("train")).otherwise(F.lit("val")),
     )
 
 
 def stratified_sample(
-    df: DataFrame,
-    key: str,
-    stratum: str,
-    rates: dict[str, float],
-    default_rate: float = 1.0,
-    salt: str = "stratified",
+    df: DataFrame, key: str, stratum: str, rates: dict[str, float]
 ) -> DataFrame:
     """Keep each row with its stratum's rate, decided by the row key's hash —
     the training-mix rebalancer (downsample dominant languages/sources,
@@ -84,8 +77,8 @@ def stratified_sample(
     no shuffle, no rand(), membership stable under appends and retries —
     a doc's fate depends only on (salt, key, its own stratum).
     """
-    bucket = hash_bucket(F.col(key), salt)
-    threshold = F.lit(int(default_rate * BUCKETS))
+    bucket = hash_bucket(F.col(key), _STRATIFIED_SALT)
+    threshold = F.lit(BUCKETS)
     for value, rate in rates.items():
         threshold = F.when(
             F.col(stratum) == value, F.lit(int(rate * BUCKETS))
@@ -94,11 +87,7 @@ def stratified_sample(
 
 
 def token_mix_rates(
-    docs: DataFrame,
-    targets: dict[str, float],
-    budget_tokens: int,
-    stratum: str = "lang",
-    text: str = "text",
+    docs: DataFrame, targets: dict[str, float], budget_tokens: int
 ) -> DataFrame:
     """Token-budget mix planning: given target corpus proportions per
     stratum (language, source, quality band) and a total token budget,
@@ -126,10 +115,10 @@ def token_mix_rates(
     result itself broadcasts into whatever consumes it.
     """
     n_tok = F.coalesce(
-        F.size(F.split(F.col(text), r"\s+")).cast("long"), F.lit(0)
+        F.size(F.split(F.col("text"), r"\s+")).cast("long"), F.lit(0)
     )
     per = (
-        docs.select(F.col(stratum).alias("stratum"), n_tok.alias("__t"))
+        docs.select(F.col("lang").alias("stratum"), n_tok.alias("__t"))
         .groupBy("stratum")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -153,12 +142,7 @@ def token_mix_rates(
     )
 
 
-def token_mix_rates_sql(
-    targets: dict[str, float],
-    budget_tokens: int,
-    stratum_sql: str = "lang",
-    table: str = "documents",
-) -> str:
+def token_mix_rates_sql(targets: dict[str, float], budget_tokens: int) -> str:
     """DuckDB twin of :func:`token_mix_rates` — same embedded integer
     targets, same single division."""
     cases = " ".join(
@@ -167,11 +151,11 @@ def token_mix_rates_sql(
     )
     return rf"""
 WITH per AS (
-  SELECT {stratum_sql} AS stratum,
+  SELECT lang AS stratum,
          CAST(COUNT(*) AS BIGINT) AS n_docs,
          CAST(SUM(COALESCE(len(regexp_split_to_array(text, '\s+')), 0))
               AS BIGINT) AS n_tokens
-  FROM {table} GROUP BY 1
+  FROM documents GROUP BY 1
 )
 SELECT stratum, n_docs, n_tokens,
        CAST(CASE {cases} ELSE 0 END AS BIGINT) AS target_tokens,
@@ -182,11 +166,7 @@ FROM per
 
 
 def stratified_sample_sql(
-    key_sql: str,
-    stratum_sql: str,
-    rates: dict[str, float],
-    default_rate: float = 1.0,
-    salt: str = "stratified",
+    key_sql: str, stratum_sql: str, rates: dict[str, float]
 ) -> str:
     """DuckDB twin of :func:`stratified_sample`'s filter predicate."""
     cases = " ".join(
@@ -194,17 +174,12 @@ def stratified_sample_sql(
         for v, r in rates.items()
     )
     return (
-        f"{hash_bucket_sql(key_sql, salt)} < "
-        f"(CASE {cases} ELSE {int(default_rate * BUCKETS)} END)"
+        f"{hash_bucket_sql(key_sql, _STRATIFIED_SALT)} < "
+        f"(CASE {cases} ELSE {BUCKETS} END)"
     )
 
 
-def shard_plan(
-    df: DataFrame,
-    key: str,
-    shards: int = 64,
-    salt: str = "shard",
-) -> DataFrame:
+def shard_plan(df: DataFrame, key: str, shards: int = 64) -> DataFrame:
     """Deterministic global shuffle + shard layout for training export:
     every row gets a ``(shard, pos)`` address — which output file it
     lands in and where inside it — reproducible across runs, engines,
@@ -231,7 +206,9 @@ def shard_plan(
     """
     from pyspark.sql import Window
 
-    h = F.md5(F.concat_ws("|", F.lit(salt), F.col(key).cast("string")))
+    h = F.md5(
+        F.concat_ws("|", F.lit(_SHARD_SALT), F.col(key).cast("string"))
+    )
     shard = F.lit(0).cast("long")
     for i in range(8):
         nibble = F.instr(F.lit(HEX), F.substring(h, i + 1, 1)) - 1
@@ -239,7 +216,9 @@ def shard_plan(
             "long"
         )
     order_hex = F.md5(
-        F.concat_ws("|", F.lit(salt), F.lit("order"), F.col(key).cast("string"))
+        F.concat_ws(
+            "|", F.lit(_SHARD_SALT), F.lit("order"), F.col(key).cast("string")
+        )
     )
     w = Window.partitionBy("shard").orderBy(
         F.col("order_hex").asc(), F.col(key).asc()
@@ -256,11 +235,11 @@ def shard_plan(
 
 
 def shard_plan_sql(
-    key_sql: str, shards: int = 64, salt: str = "shard", table: str = "documents"
+    key_sql: str, shards: int = 64, table: str = "documents"
 ) -> str:
     """DuckDB twin of :func:`shard_plan` (same 8-nibble shard, same
     order key)."""
-    h = f"md5('{salt}' || '|' || CAST({key_sql} AS VARCHAR))"
+    h = f"md5('{_SHARD_SALT}' || '|' || CAST({key_sql} AS VARCHAR))"
     parts = [
         f"CAST(strpos('{HEX}', substr({h}, {i + 1}, 1)) - 1 AS BIGINT)"
         f" * {16 ** (7 - i)}"
@@ -268,7 +247,8 @@ def shard_plan_sql(
     ]
     shard = "((" + " + ".join(parts) + f") % {shards})"
     order_hex = (
-        f"md5('{salt}' || '|' || 'order' || '|' || CAST({key_sql} AS VARCHAR))"
+        f"md5('{_SHARD_SALT}' || '|' || 'order' || '|' || "
+        f"CAST({key_sql} AS VARCHAR))"
     )
     return f"""
 SELECT {key_sql} AS key, {shard} AS shard,
@@ -356,8 +336,6 @@ def cluster_balanced_sample(
     prepared: DataFrame,
     coarse_rows: list[tuple[int, list[int]]],
     cap: int = 100,
-    salt: str = "cbal",
-    prerank_buckets: int = 16,
 ) -> DataFrame:
     """Cluster-balanced subsampling — :func:`source_caps`' quota rule
     applied to LEARNED embedding clusters instead of a metadata column
@@ -391,20 +369,13 @@ def cluster_balanced_sample(
         key="vec_id",
         stratum="list_id",
         cap=cap,
-        salt=salt,
-        prerank_buckets=prerank_buckets,
+        salt="cbal",
     )
 
 
 def dsir_log_ratio(
     docs: DataFrame,
     target_docs: DataFrame | None,
-    raw_docs: DataFrame | None = None,
-    n_buckets: int = 4096,
-    alpha_inv: int = 100,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    salt: str = "lm",
     target_pred: Column | None = None,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al., NeurIPS 2023 — "Data
@@ -422,11 +393,11 @@ def dsir_log_ratio(
     features at n=2), trained through the SAME
     :func:`~.text.bigram_lm_counts` aggregation as the CCNet-style LM
     gate, so count semantics are shared engine-wide.  Per-feature
-    probability is add-α smoothed with α = ``1/alpha_inv`` —
-    ``(c_b + α) / (N + α·n_buckets)``, spelled on the integer grid as
-    ``log₂(alpha_inv·c_b + 1) − log₂(alpha_inv·N + n_buckets)``.  α must
+    probability is add-α smoothed with α = 1/100 over 4096 buckets —
+    ``(c_b + α) / (N + α·4096)``, spelled on the integer grid as
+    ``log₂(100·c_b + 1) − log₂(100·N + 4096)``.  α must
     be SMALL: with add-ONE smoothing and corpora of only a few thousand
-    n-grams (N ≪ n_buckets), both models collapse toward uniform and the
+    n-grams (N ≪ 4096), both models collapse toward uniform and the
     ratio can even INVERT (the raw model, holding more mass, assigns
     rare junk less probability than the near-uniform target model — so
     junk out-scores target text; caught by the selection-bias unit
@@ -437,7 +408,7 @@ def dsir_log_ratio(
     :func:`~.text.token_entropy` discipline — so ``logw_scaled`` is
     bit-identical across engines and partitionings.
 
-    Scale shape: two bounded (≤ ``n_buckets``-row) count tables + two
+    Scale shape: two bounded (≤ 4096-row) count tables + two
     1-row totals, all broadcast back; scoring never shuffles the corpus
     — the only corpus-keyed exchange is the final per-doc aggregate.
     Docs with 0 bigrams score the 0 sentinel (distinguish via
@@ -451,36 +422,32 @@ def dsir_log_ratio(
     row-filter of the raw corpus (the common "every Nth doc / this
     source column stands in for the target" setup), pass the predicate
     and BOTH count tables ride ONE tokenize + explode + aggregate over
-    ``raw`` — ``cr = count(*)``, ``ct = count_if(pred)`` on the same
+    ``docs`` — ``cr = count(*)``, ``ct = count_if(pred)`` on the same
     bucket key — deleting a full corpus tokenization pass.  The
     predicate takes the place of ``target_docs``: pass ``None`` there,
-    and the target model is ``raw.filter(target_pred)``.  Passing both,
+    and the target model is ``docs.filter(target_pred)``.  Passing both,
     or neither, raises ``ValueError``.  Buckets with ``ct = 0`` are
     dropped from the target table, so both tables carry exactly the rows
-    the two-aggregation plan produced for ``raw.filter(target_pred)``
+    the two-aggregation plan produced for ``docs.filter(target_pred)``
     and every downstream value is bit-identical (pinned in
     tests/test_r14_pins.py).
     """
     from . import text as _t  # circular-safe: text never imports dsir
-    from .text import _bigram_structs, _check_n_buckets, bigram_lm_counts
+    from .text import _bigram_structs, bigram_lm_counts
 
     SCALE = 1 << 20
-    _check_n_buckets(n_buckets)
     if (target_docs is None) == (target_pred is None):
         raise ValueError("pass exactly one of target_docs and target_pred")
-    if alpha_inv < 1:
-        raise ValueError(f"alpha_inv must be >= 1, got {alpha_inv}")
-    raw = raw_docs if raw_docs is not None else docs
-    bucket = lambda c: (hash_bucket(c, salt) % n_buckets).cast("int")  # noqa: E731
+    bucket = lambda c: (hash_bucket(c, "lm") % 4096).cast("int")  # noqa: E731
     if target_pred is not None:
         # one corpus pass for both models: same tokenize/explode staging
         # and bucket expression as bigram_lm_counts, with the target
         # membership flag riding each bigram row as one boolean
         both = (
-            raw.select(
+            docs.select(
                 target_pred.alias("__t"),
                 F.filter(
-                    _t._tokens(F.coalesce(F.col(text), F.lit(""))),
+                    _t._tokens(F.coalesce(F.col("text"), F.lit(""))),
                     lambda t: t != "",
                 ).alias("__toks"),
             )
@@ -500,19 +467,15 @@ def dsir_log_ratio(
         bt = both.filter(F.col("ct") > 0).select("bucket", "ct")
         br = both.select("bucket", "cr")
     else:
-        bt, _ = bigram_lm_counts(
-            target_docs, n_buckets=n_buckets, text=text, salt=salt
-        )
-        br, _ = bigram_lm_counts(
-            raw, n_buckets=n_buckets, text=text, salt=salt
-        )
+        bt, _ = bigram_lm_counts(target_docs)
+        br, _ = bigram_lm_counts(docs)
         bt = bt.select(F.col("bucket"), F.col("cb").alias("ct"))
         br = br.select(F.col("bucket"), F.col("cb").alias("cr"))
         # each count table feeds TWO consumers (its 1-row total and
         # the broadcast score join) — without a barrier both re-run the
         # full corpus-scan count aggregation (audited: 5 scans /
         # 8 exchanges → 3 scans / 4 with the pins).  The tables are
-        # ≤ n_buckets rows.
+        # ≤ 4096 rows.
         bt, br = pin(bt), pin(br)
     grid = lambda c: F.round(  # noqa: E731
         F.log2(c.cast("double")) * SCALE, 0
@@ -522,40 +485,34 @@ def dsir_log_ratio(
         .crossJoin(br.agg(F.sum("cr").alias("__nr")))
         .select(
             (
-                grid(
-                    F.coalesce(F.col("__nt"), F.lit(0)) * alpha_inv
-                    + n_buckets
-                )
-                - grid(
-                    F.coalesce(F.col("__nr"), F.lit(0)) * alpha_inv
-                    + n_buckets
-                )
+                grid(F.coalesce(F.col("__nt"), F.lit(0)) * 100 + 4096)
+                - grid(F.coalesce(F.col("__nr"), F.lit(0)) * 100 + 4096)
             ).alias("__norm")
         )
     )
     exploded = docs.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.filter(
-            _t._tokens(F.coalesce(F.col(text), F.lit(""))),
+            _t._tokens(F.coalesce(F.col("text"), F.lit(""))),
             lambda t: t != "",
         ).alias("__toks"),
     ).select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.explode_outer(_bigram_structs(F.col("__toks"))).alias("p"),
     ).select(
-        doc_id,
+        "doc_id",
         F.col("p.bg").isNotNull().alias("has"),
         bucket(F.col("p.bg")).alias("bb"),
     )
     term = grid(
-        F.coalesce(F.col("ct"), F.lit(0)) * alpha_inv + 1
-    ) - grid(F.coalesce(F.col("cr"), F.lit(0)) * alpha_inv + 1)
+        F.coalesce(F.col("ct"), F.lit(0)) * 100 + 1
+    ) - grid(F.coalesce(F.col("cr"), F.lit(0)) * 100 + 1)
     per = (
         exploded.join(F.broadcast(bt), exploded["bb"] == bt["bucket"], "left")
         .drop("bucket")
         .join(F.broadcast(br), exploded["bb"] == br["bucket"], "left")
         .drop("bucket")
-        .groupBy(doc_id)
+        .groupBy("doc_id")
         .agg(
             F.sum(F.col("has").cast("long")).alias("n_feats"),
             F.sum(
@@ -566,7 +523,7 @@ def dsir_log_ratio(
     )
     logw_scaled = F.col("__s") - F.col("n_feats") * F.col("__norm")
     return per.select(
-        doc_id,
+        "doc_id",
         "n_feats",
         F.when(F.col("n_feats") > 0, logw_scaled)
         .otherwise(F.lit(0).cast("long"))
@@ -581,13 +538,6 @@ def dsir_resample(
     docs: DataFrame,
     target_docs: DataFrame | None,
     k: int,
-    raw_docs: DataFrame | None = None,
-    n_buckets: int = 4096,
-    alpha_inv: int = 100,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    salt: str = "lm",
-    gumbel_salt: str = "dsir-gumbel",
     target_pred: Column | None = None,
 ) -> DataFrame:
     """The selection half of DSIR: draw ``k`` documents ∝ their
@@ -616,18 +566,10 @@ def dsir_resample(
     from pyspark.sql import Window
 
     weights = dsir_log_ratio(
-        docs,
-        target_docs,
-        raw_docs,
-        n_buckets=n_buckets,
-        alpha_inv=alpha_inv,
-        text=text,
-        doc_id=doc_id,
-        salt=salt,
-        target_pred=target_pred,
+        docs, target_docs, target_pred=target_pred
     ).filter(F.col("n_feats") > 0)
     u = (
-        hash_bucket(F.col(doc_id).cast("string"), gumbel_salt)
+        hash_bucket(F.col("doc_id").cast("string"), "dsir-gumbel")
         .cast("double")
         + F.lit(0.5)
     ) / F.lit(float(1 << 16))
@@ -635,12 +577,12 @@ def dsir_resample(
     sel_key = F.col("logw") * F.lit(math.log(2.0)) - F.log(-F.log(u))
     top = (
         weights.withColumn("sel_key", sel_key)
-        .orderBy(F.col("sel_key").desc(), F.col(doc_id).asc())
+        .orderBy(F.col("sel_key").desc(), F.col("doc_id").asc())
         .limit(k)
     )
-    w = Window.orderBy(F.col("sel_key").desc(), F.col(doc_id).asc())
+    w = Window.orderBy(F.col("sel_key").desc(), F.col("doc_id").asc())
     return top.select(
-        doc_id,
+        "doc_id",
         F.row_number().over(w).alias("rank"),
         "logw",
         "sel_key",
@@ -757,11 +699,7 @@ def dsir_log_ratio_trained(
 
 
 def unimax_allocation(
-    docs: DataFrame,
-    budget_tokens: int,
-    max_epochs: int = 4,
-    stratum: str = "lang",
-    text: str = "text",
+    docs: DataFrame, budget_tokens: int, max_epochs: int = 4
 ) -> DataFrame:
     """UniMax budget allocation (Chung et al., ICLR 2023 — "UniMax:
     Fairer and More Effective Language Sampling for Large-Scale
@@ -801,10 +739,10 @@ def unimax_allocation(
     from pyspark.sql import Window
 
     n_tok = F.coalesce(
-        F.size(F.split(F.col(text), r"\s+")).cast("long"), F.lit(0)
+        F.size(F.split(F.col("text"), r"\s+")).cast("long"), F.lit(0)
     )
     per = (
-        docs.select(F.col(stratum).alias("stratum"), n_tok.alias("__t"))
+        docs.select(F.col("lang").alias("stratum"), n_tok.alias("__t"))
         .groupBy("stratum")
         .agg(F.sum("__t").alias("n_tokens"))
         .withColumn(

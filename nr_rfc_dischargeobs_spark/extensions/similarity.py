@@ -95,18 +95,15 @@ def cosine(dot_col: Column, na: Column, nb: Column) -> Column:
     )
 
 
-def prepare(
-    emb: DataFrame, vec_id: str = "vec_id", embedding: str = "embedding"
-) -> DataFrame:
+def prepare(emb: DataFrame) -> DataFrame:
     """(vec_id, q, n): quantized vector + squared norm, computed once."""
     return emb.select(
-        F.col(vec_id), quantized(F.col(embedding)).alias("q")
+        F.col("vec_id"), quantized(F.col("embedding")).alias("q")
     ).withColumn("n", sq_norm(F.col("q")))
 
 
 def brute_force_topk(
-    queries: DataFrame, corpus: DataFrame, k: int = 5,
-    dim: int | None = None,
+    queries: DataFrame, corpus: DataFrame, k: int = 5
 ) -> DataFrame:
     """Exact top-k cosine neighbors for a BOUNDED query batch.
 
@@ -126,7 +123,7 @@ def brute_force_topk(
     oracle, which is what keeps all three kernels each other's oracle on
     degenerate inputs.
     """
-    scored = broadcast_scored_pairs(queries, corpus, dim)
+    scored = broadcast_scored_pairs(queries, corpus)
     return _rank_topk(scored, k)
 
 
@@ -145,9 +142,7 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def broadcast_scored_pairs(
-    queries: DataFrame, corpus: DataFrame, dim: int | None = None
-) -> DataFrame:
+def broadcast_scored_pairs(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     """The shared bounded-batch scoring scaffold: zero-norm exclusion on
     both sides, queries BROADCAST, one corpus pass, every (query,
     neighbor) pair scored — (query_id, neighbor_id, cosine).  The exact
@@ -168,7 +163,7 @@ def broadcast_scored_pairs(
         "query_id",
         "neighbor_id",
         cosine(
-            dot(F.col("qv"), F.col("cv"), dim), F.col("qn"), F.col("cn")
+            dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")
         ).alias("cosine"),
     )
 
@@ -192,7 +187,6 @@ def lsh_bucketed_topk(
     k: int = 3,
     bits: int = 4,
     probe_hamming: int = 0,
-    dim: int | None = None,
 ) -> DataFrame:
     """ANN top-k: candidates restricted to the query's sign-sketch bucket.
 
@@ -240,7 +234,7 @@ def lsh_bucketed_topk(
         "query_id",
         "neighbor_id",
         cosine(
-            dot(F.col("qv"), F.col("cv"), dim), F.col("qn"), F.col("cn")
+            dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")
         ).alias("cosine"),
     )
     return _rank_topk(scored, k)
@@ -289,7 +283,6 @@ def ivf_topk(
     centroids: DataFrame,
     k: int = 3,
     nprobe: int = 2,
-    dim: int | None = None,
 ) -> DataFrame:
     """IVF ANN top-k: corpus vectors live in exactly one inverted list;
     each query probes its ``nprobe`` nearest lists and ranks only those
@@ -324,17 +317,14 @@ def ivf_topk(
         "query_id",
         "neighbor_id",
         cosine(
-            dot(F.col("qv"), F.col("cv"), dim), F.col("qn"), F.col("cn")
+            dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")
         ).alias("cosine"),
     )
     return _rank_topk(scored, k)
 
 
 def lsh_neardup_pairs(
-    prepared: DataFrame,
-    threshold: float = 0.3,
-    bits: int = 4,
-    dim: int | None = None,
+    prepared: DataFrame, threshold: float = 0.3, bits: int = 4
 ) -> DataFrame:
     """Embedding near-duplicate pairs at corpus scale: candidate pairs are
     restricted to the same sign-sketch bucket (equality self-join on the
@@ -370,7 +360,7 @@ def lsh_neardup_pairs(
             "vec_a",
             "vec_b",
             cosine(
-                dot(F.col("qa"), F.col("qb"), dim), F.col("na"), F.col("nb")
+                dot(F.col("qa"), F.col("qb")), F.col("na"), F.col("nb")
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
@@ -505,8 +495,9 @@ def farthest_first_seeds(
 
 
 def kmeans_lite(
-    prepared: DataFrame, k: int = 8, iters: int = 1,
-    dim: int | None = None,
+    prepared: DataFrame,
+    k: int = 8,
+    iters: int = 1,
     seeds: list[tuple[int, list[int]]] | None = None,
     assign: str = "window",
 ) -> DataFrame:
@@ -604,7 +595,7 @@ def kmeans_lite(
                 "q",
                 (
                     F.col("n") + F.col("cn")
-                    - 2 * dot(F.col("q"), F.col("cq"), dim)
+                    - 2 * dot(F.col("q"), F.col("cq"))
                 ).alias("d"),
                 "cid",
             )
@@ -722,7 +713,6 @@ def kmeans_parallel_seeds(
     prepared: DataFrame,
     k: int,
     rounds: int = 5,
-    oversample: int | None = None,
 ) -> list[tuple[int, list[int]]]:
     """Scalable k-means|| seeding (Bahmani et al., VLDB 2012 — the
     k-means++ initialization Spark MLlib itself ships) for LARGE ``k``:
@@ -730,11 +720,10 @@ def kmeans_parallel_seeds(
     k ≤ ~100 but a thousand sequential jobs at the production
     n_lists ≈ √n coarse tier.  k-means|| replaces the per-seed loop with
     ``rounds`` fixed passes: each round samples every point
-    independently with probability ``min(1, ℓ·d²(x,C)/Σd²)`` (ℓ =
-    ``oversample``, default 2k), the ~rounds·ℓ oversampled candidates
-    are weighted by the mass of points they serve, and a driver-side
-    weighted Lloyd (numpy — the candidate set is model-scale) reduces
-    them to exactly ``k`` seeds.
+    independently with probability ``min(1, ℓ·d²(x,C)/Σd²)`` (ℓ = 2k),
+    the ~rounds·ℓ oversampled candidates are weighted by the mass of
+    points they serve, and a driver-side weighted Lloyd (numpy — the
+    candidate set is model-scale) reduces them to exactly ``k`` seeds.
 
     Deterministic by construction, like every trainer here: the sampling
     "coin" is ``xxhash64(vec_id, round)`` mapped to [0,1) — no rand(),
@@ -755,7 +744,7 @@ def kmeans_parallel_seeds(
 
     if k < 1:
         raise ValueError(f"need k >= 1, got {k}")
-    ell = oversample if oversample is not None else 2 * k
+    ell = 2 * k
     first = (
         prepared.select("vec_id", "q")
         .orderBy(F.col("vec_id").asc())
@@ -794,7 +783,7 @@ def kmeans_parallel_seeds(
     if len(cand) < k:
         raise ValueError(
             f"k-means|| oversampled only {len(cand)} candidates < k={k}"
-            " — raise rounds/oversample (or the input has fewer than k"
+            " — raise rounds (or the input has fewer than k"
             " distinct ids)"
         )
     # weight each candidate by the points it serves (one BLAS pass)
@@ -1300,12 +1289,7 @@ def ivf_sq8_topk(
     return _sq8_score_rank(joined, scales, k)
 
 
-def gram_stats(
-    emb: DataFrame,
-    dim: int,
-    quant: int = 1024,
-    embedding: str = "embedding",
-) -> DataFrame:
+def gram_stats(emb: DataFrame, dim: int, quant: int = 1024) -> DataFrame:
     """Covariance sufficient statistics in ONE corpus pass — the
     second moments a PCA / OPQ-style decorrelating rotation in front of
     PQ is computed from (Jégou et al. §V.A; Ge et al. CVPR 2013).
@@ -1329,7 +1313,7 @@ def gram_stats(
     default on unit-norm vectors), so Σ qᵢqⱼ stays in int64 past 10¹³
     vectors.
     """
-    q = quantized(F.col(embedding), quant)
+    q = quantized(F.col("embedding"), quant)
     rows = (
         emb.select(q.alias("__q"))
         .select(F.explode(F.expr(f"sequence(0, {dim - 1})")).alias("i"), "__q")
@@ -2175,7 +2159,7 @@ def _adaptive_assign(
         "q",
         "n",
         "list_id",
-        (F.col("n") + F.col("cn") - 2 * dot(F.col("q"), F.col("cv"), None))
+        (F.col("n") + F.col("cn") - 2 * dot(F.col("q"), F.col("cv")))
         .alias("d"),
     )
     cnt_map = F.create_map(
@@ -2568,7 +2552,6 @@ def ivf_pq_topk(
     nprobe: int = 2,
     m: int = 4,
     dim: int = 64,
-    coarse_rows: list[tuple[int, list[int]]] | None = None,
 ) -> DataFrame:
     """IVF-PQ search — the full production ANN shape, composed from the
     audited pieces: each query probes its ``nprobe`` nearest inverted
@@ -2610,23 +2593,8 @@ def ivf_pq_topk(
             " indexes only"
         )
     index = _index_barrier(index, "ivf_pq_topk")
-    # probe-side assignment (r13): when the caller holds the coarse
-    # quantizer as plain data (a model parameter), the per-query top-
-    # nprobe folds into the scan as literal expressions — no broadcast
-    # join, no probe-side exchange + sort + window (guide §2.4); the
-    # frame spelling stays for callers with only a centroid frame.
-    # CAVEAT (measured, r13): pass coarse_rows ONLY when ``queries.q``
-    # is a cheap column/scan expression.  The LUT projection below
-    # references q m·k·dsub more times; without the window's exchange
-    # barrier those references re-inline q's defining expression
-    # (CollapseProject has no CSE), so a derived query frame (e.g. a
-    # rotated basis) detonates the plan — see _ivfadc_scored's note.
     q = (
-        (
-            ivf_assign_local(queries, coarse_rows, nprobe)
-            if coarse_rows is not None
-            else ivf_assign(queries, coarse_centroids, nprobe, None)
-        )
+        ivf_assign(queries, coarse_centroids, nprobe, None)
         .filter(F.col("n") > 0)
         .selectExpr(
             "vec_id AS query_id", "n AS qn", "list_id",
@@ -2755,10 +2723,7 @@ def ivf_pq_refine(
 
 
 def semantic_contamination(
-    benchmark: DataFrame,
-    corpus: DataFrame,
-    threshold: float = 0.3,
-    dim: int | None = None,
+    benchmark: DataFrame, corpus: DataFrame, threshold: float = 0.3
 ) -> DataFrame:
     """Embedding-space decontamination screen: for every benchmark (eval)
     vector, how much of the training corpus sits within ``threshold``
@@ -2789,7 +2754,7 @@ def semantic_contamination(
 
     Output: (bench_id, n_contaminated, max_cosine, nearest_id).
     """
-    scored = broadcast_scored_pairs(benchmark, corpus, dim).select(
+    scored = broadcast_scored_pairs(benchmark, corpus).select(
         F.col("query_id").alias("bench_id"), "neighbor_id", "cosine"
     )
     best = F.min(F.struct((-F.col("cosine")).alias("nc"), F.col("neighbor_id")))

@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 
 # md5-hex nibble values, shared with the DuckDB twins
 HEX = "0123456789abcdef"
+_HLL_SALT = "hll"
+_CMS_SALT = "cms"
 
 # Flajolet et al.'s bias-corrected alpha_m
 _ALPHA_SMALL = {16: 0.673, 32: 0.697, 64: 0.709}
@@ -57,7 +59,9 @@ def _check_p(p: int) -> None:
         raise ValueError("p must be one of 4, 8, 12, 16 (hex-aligned)")
 
 
-def hll_register_rho(key: Column, p: int = 8, salt: str = "hll") -> tuple[Column, Column]:
+def hll_register_rho(
+    key: Column, p: int = 8, salt: str = _HLL_SALT
+) -> tuple[Column, Column]:
     """(register, rho) of one key: register = the first p bits of
     md5(salt|key); rho = 1 + leading-zero count of the next 48 bits
     (via binary-string length — ``conv(v, 10, 2)`` has no leading
@@ -81,7 +85,7 @@ def hll_registers(
     key: str,
     facets: tuple[str, ...] = (),
     p: int = 8,
-    salt: str = "hll",
+    salt: str = _HLL_SALT,
 ) -> DataFrame:
     """The persistable sketch: (facets..., register, max_rho) — at most
     2^p rows per facet group, mergeable with any other run's registers
@@ -159,7 +163,6 @@ def hll_cardinality(
     key: str,
     facets: tuple[str, ...] = (),
     p: int = 8,
-    salt: str = "hll",
     exact_audit: bool = False,
 ) -> DataFrame:
     """Distinct-``key`` estimate per facet group in bounded state.
@@ -179,7 +182,7 @@ def hll_cardinality(
     """
     _check_p(p)
     m = 1 << p
-    regs = hll_registers(df, key, facets=facets, p=p, salt=salt)
+    regs = hll_registers(df, key, facets=facets, p=p)
     folded = regs.groupBy(*facets).agg(
         F.expr(f"sum(shiftleft(1L, {_MAX_RHO} - max_rho))").alias("__psum"),
         F.count(F.lit(1)).alias("__present"),
@@ -242,7 +245,6 @@ def hll_cardinality_sql(
     facet_sql: str,
     facet_name: str = "facet",
     p: int = 8,
-    salt: str = "hll",
 ) -> str:
     """The DuckDB twin of :func:`hll_cardinality` (exact_audit form,
     single facet) — identical md5 registers, identical integer harmonic
@@ -250,7 +252,7 @@ def hll_cardinality_sql(
     _check_p(p)
     m = 1 << p
     c = p // 4
-    h = f"md5('{salt}' || '|' || CAST({key_sql} AS VARCHAR))"
+    h = f"md5('{_HLL_SALT}' || '|' || CAST({key_sql} AS VARCHAR))"
     reg = _hexval_sql("h", 1, c)
     tail = _hexval_sql("h", c + 1, 12)
     alpha_num = _alpha(m) * m * m * float(_POW49)
@@ -345,35 +347,25 @@ def _cms_lanes(d: int, w: int) -> Column:
 
 
 def cms_table(
-    df: DataFrame,
-    key: str,
-    d: int = 4,
-    w: int = 1024,
-    facets: tuple[str, ...] = (),
-    salt: str = "cms",
+    df: DataFrame, key: str, d: int = 4, w: int = 1024, salt: str = _CMS_SALT
 ) -> DataFrame:
-    """The persistable sketch: (facets..., depth, bucket, cnt) — at most
-    d×w rows per facet group, mergeable with any other run's table by
-    ``sum`` (the CMS union).  Lane j's bucket is hex chars [8j, 8j+8) of
+    """The persistable sketch: (depth, bucket, cnt) — at most d×w rows,
+    mergeable with any other run's table by ``sum`` (the CMS union).
+    Lane j's bucket is hex chars [8j, 8j+8) of
     ``md5(salt|key)`` mod w — the md5 is staged as a named column so all
     d lanes read ONE evaluation (CollapseProject keeps a non-cheap
     multi-referenced expression staged)."""
     _check_cms(d, w)
     h = F.md5(F.concat_ws("|", F.lit(salt), F.col(key).cast("string")))
-    staged = df.select(*facets, h.alias("__h"))
-    lanes = staged.select(*facets, _cms_lanes(d, w).alias("l"))
+    staged = df.select(h.alias("__h"))
+    lanes = staged.select(_cms_lanes(d, w).alias("l"))
     return lanes.groupBy(
-        *facets, F.col("l.depth").alias("depth"), F.col("l.bucket").alias("bucket")
+        F.col("l.depth").alias("depth"), F.col("l.bucket").alias("bucket")
     ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def cms_estimate(
-    candidates: DataFrame,
-    cms: DataFrame,
-    key: str,
-    d: int = 4,
-    w: int = 1024,
-    salt: str = "cms",
+    candidates: DataFrame, cms: DataFrame, key: str, d: int = 4, w: int = 1024
 ) -> DataFrame:
     """Estimated occurrence count of every candidate key: min over the d
     lanes of its bucket counters (absent bucket → 0, so a never-seen key
@@ -381,7 +373,7 @@ def cms_estimate(
     sketch is ≤ d×w rows and BROADCASTS; candidates never shuffle.
     Output: (key, cms_estimate)."""
     _check_cms(d, w)
-    h = F.md5(F.concat_ws("|", F.lit(salt), F.col(key).cast("string")))
+    h = F.md5(F.concat_ws("|", F.lit(_CMS_SALT), F.col(key).cast("string")))
     staged = candidates.select(key, h.alias("__h"))
     cand_lanes = staged.select(key, _cms_lanes(d, w).alias("l")).select(
         key, "l.depth", "l.bucket"
@@ -398,14 +390,11 @@ def cms_estimate_sql(
     candidate_sql: str,
     d: int = 4,
     w: int = 1024,
-    salt: str = "cms",
-    exact_audit: bool = True,
-    key_name: str = "token",
 ) -> str:
     """DuckDB twin of :func:`cms_table` + :func:`cms_estimate` —
-    identical md5 lanes, identical min-of-counters arithmetic;
-    ``exact_audit`` adds the true per-candidate count and the
-    (always ≥ 0) overestimate."""
+    identical md5 lanes, identical min-of-counters arithmetic, plus
+    the true per-candidate count and the (always ≥ 0) overestimate as
+    an audit."""
     _check_cms(d, w)
     lane_rows = ", ".join(
         f"({j}, {_hexval_sql('h', 1 + 8 * j, 8)} % {w})" for j in range(d)
@@ -413,20 +402,16 @@ def cms_estimate_sql(
     audit_cols = (
         ",\n       ex.exact_count,\n"
         "       est.cms_estimate - ex.exact_count AS overestimate"
-        if exact_audit
-        else ""
     )
     audit_join = (
         "\nJOIN (SELECT k, CAST(COUNT(*) AS BIGINT) AS exact_count"
         " FROM keyed GROUP BY 1) ex USING (k)"
-        if exact_audit
-        else ""
     )
     return f"""
 WITH src AS (
   {source_sql}
 ), keyed AS (
-  SELECT {key_sql} AS k, md5('{salt}' || '|' || CAST({key_sql} AS VARCHAR)) AS h
+  SELECT {key_sql} AS k, md5('{_CMS_SALT}' || '|' || CAST({key_sql} AS VARCHAR)) AS h
   FROM src
 ), lanes AS (
   SELECT k, l.* FROM keyed,
@@ -435,7 +420,7 @@ WITH src AS (
   SELECT depth, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
   FROM lanes GROUP BY 1, 2
 ), cand AS (
-  SELECT k, md5('{salt}' || '|' || CAST(k AS VARCHAR)) AS h
+  SELECT k, md5('{_CMS_SALT}' || '|' || CAST(k AS VARCHAR)) AS h
   FROM (SELECT DISTINCT {candidate_sql} AS k FROM src) c
 ), cand_lanes AS (
   SELECT k, l.* FROM cand,
@@ -445,7 +430,7 @@ WITH src AS (
   FROM cand_lanes cl LEFT JOIN cms USING (depth, bucket)
   GROUP BY 1
 )
-SELECT est.k AS {key_name}, est.cms_estimate{audit_cols}
+SELECT est.k AS token, est.cms_estimate{audit_cols}
 FROM est{audit_join}
 """
 

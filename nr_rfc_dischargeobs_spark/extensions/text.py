@@ -53,9 +53,7 @@ def marker_hits(text: Column, markers: tuple[str, ...]) -> Column:
     return marker_hits_tokens(_tokens(text), markers)
 
 
-def lang_id(
-    docs: DataFrame, text: str = "text", doc_id: str = "doc_id"
-) -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Language-ID heuristic: stopword-hit score per language, argmax with
     deterministic alphabetical tie-break (ties → first language code).
 
@@ -69,9 +67,9 @@ def lang_id(
     before staging); CollapseProject keeps the staged shape because the
     scores are non-cheap and multiply-referenced, and the whole op runs
     3.3 s/1M warm (6.3 s cold — one-time codegen/JIT)."""
-    scored = docs.withColumn("__toks", _tokens(F.col(text))).select(
-        F.col(doc_id),
-        F.col(text),
+    scored = docs.withColumn("__toks", _tokens(F.col("text"))).select(
+        F.col("doc_id"),
+        F.col("text"),
         *[
             marker_hits_tokens(
                 F.col("__toks"), LANG_MARKERS[lang]
@@ -86,28 +84,26 @@ def lang_id(
     for lang in reversed(langs):
         pred = F.when(F.col(f"s_{lang}") == best, F.lit(lang)).otherwise(pred)
     return scored.select(
-        doc_id,
+        "doc_id",
         *[f"s_{lang}" for lang in langs],
         F.when(best > 0, pred).otherwise(F.lit("und")).alias("predicted"),
     )
 
 
-def quality_scores(
-    docs: DataFrame, text: str = "text", doc_id: str = "doc_id"
-) -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Quality features: word/char counts, uniqueness ratio, mean word
     length, punctuation count, stopword ratio — the standard pre-training
     filter signals, all exact-count based."""
-    toks = _tokens(F.col(text))
+    toks = _tokens(F.col("text"))
     n_words = F.size(toks)
     n_distinct = F.size(F.array_distinct(toks))
-    n_chars = F.length(F.col(text))
+    n_chars = F.length(F.col("text"))
     n_punct = F.length(
-        F.regexp_replace(F.col(text), r"[^.,;:!?'\"()-]", "")
+        F.regexp_replace(F.col("text"), r"[^.,;:!?'\"()-]", "")
     )
-    stop_hits = marker_hits(F.col(text), LANG_MARKERS["en"])
+    stop_hits = marker_hits(F.col("text"), LANG_MARKERS["en"])
     return docs.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         n_words.cast("long").alias("n_words"),
         n_distinct.alias("n_distinct"),
         (n_distinct.cast("double") / n_words).alias("uniq_ratio"),
@@ -119,33 +115,25 @@ def quality_scores(
     )
 
 
-def token_counts(
-    docs: DataFrame, text: str = "text", doc_id: str = "doc_id"
-) -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Token counting two ways: whitespace split and a BPE-ish regex
     (letter runs / digit runs / single other-glyphs) — the usual quick
     estimate of LLM token cost."""
-    ws = F.size(F.split(F.col(text), r"\s+"))
+    ws = F.size(F.split(F.col("text"), r"\s+"))
     bpe_ish = F.size(
         F.regexp_extract_all(
-            F.col(text), F.lit("([A-Za-z]+|[0-9]+|[^A-Za-z0-9 ])"), 0
+            F.col("text"), F.lit("([A-Za-z]+|[0-9]+|[^A-Za-z0-9 ])"), 0
         )
     )
     return docs.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         ws.alias("ws_tokens"),
         bpe_ish.alias("re_tokens"),
-        F.length(F.col(text)).alias("n_chars"),
+        F.length(F.col("text")).alias("n_chars"),
     )
 
 
-def ngram_stats(
-    docs: DataFrame,
-    n: int = 2,
-    top: int = 20,
-    text: str = "text",
-    doc_id: str = "doc_id",
-) -> DataFrame:
+def ngram_stats(docs: DataFrame, n: int = 2, top: int = 20) -> DataFrame:
     """Corpus-level top-k n-gram frequencies (all occurrences, not
     per-doc-distinct) with a deterministic (count desc, ngram asc) order.
 
@@ -154,7 +142,7 @@ def ngram_stats(
     is computed per-partition then merged on the driver — no global sort of
     the full n-gram distribution.
     """
-    toks = docs.select(_tokens(F.col(text)).alias("__toks")).filter(
+    toks = docs.select(_tokens(F.col("text")).alias("__toks")).filter(
         F.size("__toks") >= n
     )
     idx = ", ".join(f"get(__toks, i + {k})" for k in range(n))
@@ -174,31 +162,22 @@ def ngram_stats(
     )
 
 
-def facet_stats(
-    docs: DataFrame,
-    facets: tuple[str, ...] = ("lang", "source"),
-    text: str = "text",
-) -> DataFrame:
+def facet_stats(docs: DataFrame) -> DataFrame:
     """Corpus facet aggregation (language × source): doc counts, char
     totals, exact mean token count — the dataset-card rollup.  Facet
     cardinality is tiny, so map-side combine collapses the scan to a few
     rows per task before the shuffle."""
-    n_words = F.size(_tokens(F.col(text)))
-    return docs.groupBy(*[F.col(f) for f in facets]).agg(
+    n_words = F.size(_tokens(F.col("text")))
+    return docs.groupBy(F.col("lang"), F.col("source")).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.length(F.col(text))).alias("total_chars"),
+        F.sum(F.length(F.col("text"))).alias("total_chars"),
         (
             F.sum(n_words.cast("long")).cast("double") / F.count(F.lit(1))
         ).alias("avg_tokens"),
     )
 
 
-def length_profile(
-    docs: DataFrame,
-    facet: str = "source",
-    length_col: str = "n_chars",
-    quantiles: tuple[float, ...] = (0.25, 0.5, 0.9, 0.99),
-) -> DataFrame:
+def length_profile(docs: DataFrame) -> DataFrame:
     """Per-facet document-length distribution: exact interpolated
     percentiles + count — the dataset-card length histogram.
 
@@ -206,12 +185,12 @@ def length_profile(
     engine bit-for-bit) is the verification path; at fleet scale swap in
     ``percentile_approx`` per facet and keep this as the audit query.
     """
-    x = F.col(length_col).cast("double")
-    return docs.groupBy(facet).agg(
+    x = F.col("n_chars").cast("double")
+    return docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         *[
             F.percentile(x, F.lit(q)).alias(f"p{int(q * 100)}")
-            for q in quantiles
+            for q in (0.25, 0.5, 0.9, 0.99)
         ],
     )
 
@@ -246,16 +225,8 @@ def fingerprint(
 
 def gopher_rules(
     docs: DataFrame,
-    text: str = "text",
-    doc_id: str = "doc_id",
     min_words: int = 5,
     max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_ellipsis_line_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
-    min_stopword_hits: int = 2,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """Gopher-style quality gates (Rae et al. 2021, §A1.1 — the public
@@ -265,20 +236,21 @@ def gopher_rules(
     flag per rule plus the conjunction, all from generated expressions —
     scan-fused, no shuffle, no Python.
 
-    Thresholds are parameters (the paper's 50-word floor is sized for web
-    pages; the default here is lower so tiny test corpora exercise both
-    branches).  Ratios divide exact integer counts.
+    The word-count bounds are parameters (the paper's 50-word floor is
+    sized for web pages; the default here is lower so tiny test corpora
+    exercise both branches); the other thresholds are the paper's.
+    Ratios divide exact integer counts.
     """
     # materialize the token and line arrays ONCE: six flags consume them,
     # and re-splitting per flag multiplies the dominant cost (measured ~6x
     # at 1M docs — split is the expensive expression here, not the ratios)
     staged = docs.withColumns(
         {
-            "__toks": _tokens(F.col(text)),
-            "__lines": F.split(F.col(text), r"\n"),
+            "__toks": _tokens(F.col("text")),
+            "__lines": F.split(F.col("text"), r"\n"),
         }
     )
-    t = F.col(text)
+    t = F.col("text")
     words = F.col("__toks")
     # == n_words_expr(t) — staged array reused; keep the two in lockstep
     n_words = F.size(words)
@@ -300,22 +272,19 @@ def gopher_rules(
     stop_hits = marker_hits_tokens(words, LANG_MARKERS["en"])
     flags = {
         "ok_word_count": (n_words >= min_words) & (n_words <= max_words),
-        "ok_mean_word_len": (mean_wl >= min_mean_word_len)
-        & (mean_wl <= max_mean_word_len),
-        "ok_symbol_ratio": symbol_ratio < max_symbol_ratio,
+        "ok_mean_word_len": (mean_wl >= 3.0) & (mean_wl <= 10.0),
+        "ok_symbol_ratio": symbol_ratio < 0.1,
         "ok_ellipsis_lines": (
             ellipsis_lines.cast("double") / n_lines
-        )
-        < max_ellipsis_line_frac,
-        "ok_alpha_words": (alpha_words.cast("double") / n_words)
-        >= min_alpha_word_frac,
-        "ok_stopwords": stop_hits >= min_stopword_hits,
+        ) < 0.3,
+        "ok_alpha_words": (alpha_words.cast("double") / n_words) >= 0.8,
+        "ok_stopwords": stop_hits >= 2,
     }
     passed = None
     for c in flags.values():
         passed = c if passed is None else (passed & c)
     return staged.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         *[F.col(c) for c in passthrough],
         n_words.cast("long").alias("n_words"),
         *[c.alias(name) for name, c in flags.items()],
@@ -323,12 +292,7 @@ def gopher_rules(
     )
 
 
-def repetition_stats(
-    docs: DataFrame,
-    n: int = 2,
-    text: str = "text",
-    doc_id: str = "doc_id",
-) -> DataFrame:
+def repetition_stats(docs: DataFrame, n: int = 2) -> DataFrame:
     """Within-document repetition screen (the duplicate-text family of
     Gopher rules): the fraction of all word n-gram occurrences taken by the
     single most frequent n-gram, plus the duplicate-line fraction.
@@ -346,11 +310,11 @@ def repetition_stats(
     shuffle it saves.  If HOF codegen lands upstream, re-measure.
     """
     toks = docs.select(
-        F.col(doc_id), _tokens(F.col(text)).alias("__toks")
+        F.col("doc_id"), _tokens(F.col("text")).alias("__toks")
     ).filter(F.size("__toks") >= n)
     idx = ", ".join(f"get(__toks, i + {k})" for k in range(n))
     grams = toks.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.explode(
             F.expr(
                 f"transform(sequence(0, size(__toks) - {n}),"
@@ -358,23 +322,23 @@ def repetition_stats(
             )
         ).alias("gram"),
     )
-    per_gram = grams.groupBy(doc_id, "gram").agg(
+    per_gram = grams.groupBy("doc_id", "gram").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    rep = per_gram.groupBy(doc_id).agg(
+    rep = per_gram.groupBy("doc_id").agg(
         F.sum("cnt").alias("n_grams"),
         F.max("cnt").alias("top_gram_n"),
         (F.max("cnt").cast("double") / F.sum("cnt")).alias("top_gram_frac"),
     )
     lines = docs.select(
-        F.col(doc_id), F.split(F.col(text), r"\n").alias("__lines")
+        F.col("doc_id"), F.split(F.col("text"), r"\n").alias("__lines")
     ).select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.size("__lines").cast("long").alias("n_lines"),
         F.size(F.array_distinct(F.col("__lines"))).alias("n_distinct_lines"),
     )
-    return rep.join(lines, doc_id, "inner").select(
-        F.col(doc_id),
+    return rep.join(lines, "doc_id", "inner").select(
+        F.col("doc_id"),
         "n_grams",
         "top_gram_n",
         "top_gram_frac",
@@ -395,12 +359,7 @@ PII_PATTERNS: dict[str, tuple[str, str]] = {
 }
 
 
-def pii_scrub(
-    docs: DataFrame,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
+def pii_scrub(docs: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
     """PII detection + redaction (the scrub stage of every corpus release):
     per-doc match counts for each pattern class and the redacted text.
 
@@ -410,7 +369,7 @@ def pii_scrub(
     scan-fused, no shuffle, no Python; at 100 TB this runs at scan
     bandwidth like every other row-local text op.
     """
-    t = F.col(text)
+    t = F.col("text")
     counts = [
         F.regexp_count(t, F.lit(pat)).cast("long").alias(f"n_{name}")
         for name, (pat, _) in PII_PATTERNS.items()
@@ -419,7 +378,7 @@ def pii_scrub(
     for _, (pat, tag) in PII_PATTERNS.items():
         clean = F.regexp_replace(clean, pat, tag)
     return docs.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         *[F.col(c) for c in passthrough],
         *counts,
         clean.alias("clean_text"),
@@ -427,11 +386,7 @@ def pii_scrub(
 
 
 def chunk_windows(
-    docs: DataFrame,
-    chunk_tokens: int = 64,
-    stride: int = 32,
-    text: str = "text",
-    doc_id: str = "doc_id",
+    docs: DataFrame, chunk_tokens: int = 64, stride: int = 32
 ) -> DataFrame:
     """Overlapping token-window chunking — the RAG/embedding ingestion
     shape: every document becomes ceil(max(n-c,0)/s)+1 windows of
@@ -447,8 +402,8 @@ def chunk_windows(
     """
     c, s = chunk_tokens, stride
     toks = docs.select(
-        F.col(doc_id),
-        F.split(F.coalesce(F.col(text), F.lit("")), r"\s+").alias("__toks"),
+        F.col("doc_id"),
+        F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+").alias("__toks"),
     )
     n = F.size("__toks")
     # ONE definition of the last chunk index; the n_chunks output and the
@@ -464,12 +419,12 @@ def chunk_windows(
         f" concat_ws(' ', slice(__toks, i * {s} + 1, {c})) as chunk))"
     )
     return toks.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         n.cast("long").alias("n_tokens"),
         n_chunks.cast("long").alias("n_chunks"),
         F.explode(chunks).alias("__c"),
     ).select(
-        F.col(doc_id),
+        F.col("doc_id"),
         "n_tokens",
         "n_chunks",
         F.col("__c.chunk_id").cast("long").alias("chunk_id"),
@@ -478,11 +433,7 @@ def chunk_windows(
 
 
 def bm25_topk(
-    docs: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    text: str = "text",
-    doc_id: str = "doc_id",
+    docs: DataFrame, query_terms: list[str], k: int = 10
 ) -> DataFrame:
     """BM25 document retrieval for a literal query — Robertson/Spärck
     Jones Okapi weighting with the Lucene non-negative idf, at standard
@@ -524,12 +475,12 @@ def bm25_topk(
         F.log2(c.cast("double")) * SCALE, 0
     ).cast("long")
     base = docs.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.filter(
-            _tokens(F.coalesce(F.col(text), F.lit(""))), lambda t: t != ""
+            _tokens(F.coalesce(F.col("text"), F.lit(""))), lambda t: t != ""
         ).alias("__toks"),
     ).select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.size("__toks").cast("long").alias("dl"),
         *[
             F.size(
@@ -563,20 +514,15 @@ def bm25_topk(
         total = total + c
     return (
         base.crossJoin(F.broadcast(stats))
-        .select(F.col(doc_id), F.col("dl"), total.alias("score_g"))
+        .select(F.col("doc_id"), F.col("dl"), total.alias("score_g"))
         .filter(F.col("score_g") > 0)
-        .orderBy(F.col("score_g").desc(), F.col(doc_id))
+        .orderBy(F.col("score_g").desc(), F.col("doc_id"))
         .limit(k)
         .withColumn("score", F.col("score_g").cast("double") / SCALE)
     )
 
 
-def top_terms(
-    docs: DataFrame,
-    k: int = 3,
-    text: str = "text",
-    doc_id: str = "doc_id",
-) -> DataFrame:
+def top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-k characteristic terms by a tf·(N/df) score — the
     ratio form of tf-idf.  The log is deliberately dropped: ln() can differ
     in the last ulp between libm implementations, and ranking under the
@@ -591,18 +537,18 @@ def top_terms(
     both plans keep the per-doc state bounded by document length.
     """
     words = docs.select(
-        F.col(doc_id), F.explode(_tokens(F.col(text))).alias("word")
+        F.col("doc_id"), F.explode(_tokens(F.col("text"))).alias("word")
     )
-    tf = words.groupBy(doc_id, "word").agg(F.count(F.lit(1)).alias("tf"))
+    tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     # df = count(1) over tf, NOT countDistinct(doc_id) over words: tf
     # rows are unique (doc, word) by construction, so the plain count is
     # the same integer while skipping the distinct-aggregate's extra
     # partial/merge stage (r13, guide §2.3 — aggregate the narrower,
     # already-deduplicated input)
     df_tbl = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = docs.select(F.countDistinct(doc_id).alias("n_docs"))
+    n_docs = docs.select(F.countDistinct("doc_id").alias("n_docs"))
     scored = tf.join(df_tbl, "word").crossJoin(F.broadcast(n_docs)).select(
-        F.col(doc_id),
+        F.col("doc_id"),
         "word",
         "tf",
         "df",
@@ -612,23 +558,18 @@ def top_terms(
             / F.col("df")
         ).alias("score"),
     )
-    w = Window.partitionBy(doc_id).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("score").desc(), F.col("word").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(doc_id, "rank", "word", "tf", "df", "score")
+        .select("doc_id", "rank", "word", "tf", "df", "score")
     )
 
 
 def hash_classifier(
-    docs: DataFrame,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    buckets_mod: int = 21,
-    salt: str = "clf",
-    passthrough: tuple[str, ...] = (),
+    docs: DataFrame, passthrough: tuple[str, ...] = ()
 ) -> DataFrame:
     """Hashing-trick linear text classifier — the fastText-shaped quality
     gate every web-scale curation stack runs (CCNet / FineWeb-Edu style),
@@ -651,11 +592,11 @@ def hash_classifier(
     from .sampling import hash_bucket
 
     toks = F.filter(
-        _tokens(F.coalesce(F.col(text), F.lit(""))), lambda t: t != ""
+        _tokens(F.coalesce(F.col("text"), F.lit(""))), lambda t: t != ""
     )
-    weight = lambda t: (hash_bucket(t, salt) % buckets_mod).cast(  # noqa: E731
+    weight = lambda t: (hash_bucket(t, "clf") % 21).cast(  # noqa: E731
         "long"
-    ) - (buckets_mod // 2)
+    ) - 10
     wsum = F.aggregate(
         F.transform(toks, weight),
         F.lit(0).cast("long"),
@@ -666,7 +607,7 @@ def hash_classifier(
     # CodegenFallback HOFs — the repo's measured cost model), tripling
     # the classifier gate's dominant cost
     staged = docs.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         *[F.col(c) for c in passthrough],
         F.size(toks).cast("long").alias("n_tokens"),
         wsum.alias("weight_sum"),
@@ -676,7 +617,7 @@ def hash_classifier(
         F.col("weight_sum").cast("double") / F.col("n_tokens"),
     ).otherwise(F.lit(0.0))
     return staged.select(
-        doc_id,
+        "doc_id",
         *passthrough,
         "n_tokens",
         "weight_sum",
@@ -713,14 +654,7 @@ def _bigram_structs(toks: Column) -> Column:
     ).otherwise(F.array().cast("array<struct<w1:string,bg:string>>"))
 
 
-def bigram_lm_scores(
-    docs: DataFrame,
-    model_docs: DataFrame | None = None,
-    n_buckets: int = 4096,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    salt: str = "lm",
-) -> DataFrame:
+def bigram_lm_scores(docs: DataFrame, n_buckets: int = 4096) -> DataFrame:
     """Hashed bigram language-model quality score — the perplexity-style
     gate of CCNet/KenLM-based curation (Wenzek et al., LREC 2020),
     re-cut to bounded-memory engine form: instead of an external n-gram
@@ -737,10 +671,11 @@ def bigram_lm_scores(
     colliding n-grams — the standard hashing-trick tradeoff, dialed by
     ``n_buckets`` exactly like :func:`hash_classifier`'s weight buckets.
 
-    ``model_docs`` is the corpus the counts are TRAINED on — in
-    production a clean reference corpus (the CCNet recipe: score web
-    text under a Wikipedia-trained model); defaults to ``docs``
-    (self-scored perplexity, the bootstrap variant).
+    The counts are trained on ``docs`` itself (self-scored perplexity,
+    the bootstrap variant); to score under a clean reference corpus
+    (the CCNet recipe: web text under a Wikipedia-trained model), train
+    :func:`bigram_lm_counts` on it and score with
+    :func:`bigram_lm_scores_trained`.
 
     Scale shape: counts are two combine-friendly aggregations whose
     output is ≤ ``n_buckets`` rows each — broadcast back, so SCORING
@@ -758,16 +693,13 @@ def bigram_lm_scores(
 
     SCALE = 1 << 20
     _check_n_buckets(n_buckets)
-    model = model_docs if model_docs is not None else docs
 
     # ONE implementation of the count aggregations — the pre-trained
     # split trains through the same function, so count semantics can
     # never diverge between the self-trained and trained paths (the
     # bitwise-equivalence test relies on this)
-    bcounts, ucounts = bigram_lm_counts(
-        model, n_buckets=n_buckets, text=text, salt=salt
-    )
-    bucket = lambda c: (hash_bucket(c, salt) % n_buckets).cast("int")  # noqa: E731
+    bcounts, ucounts = bigram_lm_counts(docs, n_buckets=n_buckets)
+    bucket = lambda c: (hash_bucket(c, "lm") % n_buckets).cast("int")  # noqa: E731
 
     grid = lambda c: F.round(  # noqa: E731
         F.log2(c.cast("double")) * SCALE, 0
@@ -780,15 +712,15 @@ def bigram_lm_scores(
     # sf0.1).  CollapseProject leaves the staging in place because the
     # array is non-cheap and multiply-referenced.
     exploded = docs.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.filter(
-            _tokens(F.coalesce(F.col(text), F.lit(""))), lambda t: t != ""
+            _tokens(F.coalesce(F.col("text"), F.lit(""))), lambda t: t != ""
         ).alias("__toks"),
     ).select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.explode_outer(_bigram_structs(F.col("__toks"))).alias("p"),
     ).select(
-        doc_id,
+        "doc_id",
         F.col("p.bg").isNotNull().alias("has"),
         bucket(F.col("p.bg")).alias("bb"),
         bucket(F.col("p.w1")).alias("ub"),
@@ -805,7 +737,7 @@ def bigram_lm_scores(
             F.broadcast(ucounts), exploded["ub"] == ucounts["bucket"], "left"
         )
         .drop("bucket")
-        .groupBy(doc_id)
+        .groupBy("doc_id")
         .agg(
             F.sum(F.col("has").cast("long")).alias("n_bigrams"),
             F.sum(
@@ -815,7 +747,7 @@ def bigram_lm_scores(
     )
     avg = (F.col("slogp").cast("double") / SCALE) / F.col("n_bigrams")
     return per.select(
-        doc_id,
+        "doc_id",
         "n_bigrams",
         "slogp",
         F.when(F.col("n_bigrams") > 0, avg).otherwise(F.lit(0.0)).alias(
@@ -925,10 +857,7 @@ def bigram_lm_scores_trained(
 
 
 def bigram_lm_counts(
-    model_docs: DataFrame,
-    n_buckets: int = 4096,
-    text: str = "text",
-    salt: str = "lm",
+    model_docs: DataFrame, n_buckets: int = 4096
 ) -> tuple[DataFrame, DataFrame]:
     """The training half of the pre-trained split: (bigram_counts,
     unigram_counts) DataFrames of (bucket, count) over ``model_docs`` —
@@ -936,10 +865,10 @@ def bigram_lm_counts(
     each), and feed :func:`bigram_lm_scores_trained`."""
     from .sampling import hash_bucket
 
-    bucket = lambda c: (hash_bucket(c, salt) % n_buckets).cast("int")  # noqa: E731
+    bucket = lambda c: (hash_bucket(c, "lm") % n_buckets).cast("int")  # noqa: E731
     staged = model_docs.select(
         F.filter(
-            _tokens(F.coalesce(F.col(text), F.lit(""))), lambda t: t != ""
+            _tokens(F.coalesce(F.col("text"), F.lit(""))), lambda t: t != ""
         ).alias("__toks")
     )
     bcounts = (
@@ -960,7 +889,6 @@ def line_dedup(
     min_df: int = 2,
     text: str = "text",
     doc_id: str = "doc_id",
-    sep: str = "\n",
 ) -> DataFrame:
     """Cross-document line deduplication — the C4/CCNet boilerplate
     remover (Raffel et al. 2020 drop repeated ≥3-sentence spans; CCNet
@@ -992,13 +920,11 @@ def line_dedup(
     import re
 
     # F.split takes a Java REGEX while concat_ws reassembles with the
-    # LITERAL separator — escape sep so the two agree for any separator
-    # (un-escaped, sep="|" would split between every character and
-    # rebuild mangled text)
+    # LITERAL newline; the escaped newline matches only itself
     lines = docs.select(
         F.col(doc_id),
         F.posexplode(
-            F.split(F.coalesce(F.col(text), F.lit("")), re.escape(sep))
+            F.split(F.coalesce(F.col(text), F.lit("")), re.escape("\n"))
         ).alias("pos", "ln"),
     ).withColumn("h", F.md5(F.col("ln")))
     frequent = (
@@ -1015,7 +941,7 @@ def line_dedup(
         F.count(F.lit(1)).alias("n_lines"),
         F.sum(F.col("__rm").isNotNull().cast("long")).alias("n_removed"),
         F.concat_ws(
-            sep,
+            "\n",
             F.transform(
                 F.array_sort(F.collect_list(kept_struct)),
                 lambda s: s["ln"],
@@ -1297,9 +1223,7 @@ def span_dedup(
     )
 
 
-def token_entropy(
-    docs: DataFrame, text: str = "text", doc_id: str = "doc_id"
-) -> DataFrame:
+def token_entropy(docs: DataFrame) -> DataFrame:
     """Per-document unigram Shannon entropy + type/token ratio — the
     gibberish/boilerplate detector that complements :func:`gopher_rules`
     (natural prose sits in a mid-entropy band; keyboard mash scores high,
@@ -1328,11 +1252,11 @@ def token_entropy(
     """
     SCALE = 1 << 20
     toks = F.filter(
-        _tokens(F.coalesce(F.col(text), F.lit(""))), lambda t: t != ""
+        _tokens(F.coalesce(F.col("text"), F.lit(""))), lambda t: t != ""
     )
     counts = (
-        docs.select(F.col(doc_id), F.explode_outer(toks).alias("__tok"))
-        .groupBy(doc_id, "__tok")
+        docs.select(F.col("doc_id"), F.explode_outer(toks).alias("__tok"))
+        .groupBy("doc_id", "__tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
     # explode_outer keeps 0-token docs as a NULL token row: count it as
@@ -1340,7 +1264,7 @@ def token_entropy(
     c = F.when(F.col("__tok").isNull(), F.lit(0)).otherwise(F.col("c"))
     term = c * F.round(F.log2(c.cast("double")) * SCALE, 0).cast("long")
     per = (
-        counts.groupBy(doc_id)
+        counts.groupBy("doc_id")
         .agg(
             F.sum(c).alias("n_tokens"),
             F.sum((c > 0).cast("long")).alias("n_types"),
@@ -1351,7 +1275,7 @@ def token_entropy(
         F.col("slog").cast("double") / SCALE
     ) / F.col("n_tokens").cast("double")
     return per.select(
-        doc_id,
+        "doc_id",
         "n_tokens",
         "n_types",
         "slog",
@@ -1362,10 +1286,7 @@ def token_entropy(
 
 
 def collocations(
-    docs: DataFrame,
-    min_count: int = 5,
-    k: int = 30,
-    text: str = "text",
+    docs: DataFrame, min_count: int = 5, k: int = 30
 ) -> DataFrame:
     """Corpus collocations by pointwise mutual information — "which word
     pairs co-occur far more than chance?" (Church & Hanks 1990), the
@@ -1402,7 +1323,7 @@ def collocations(
     SCALE = 1 << 20
     staged = docs.select(
         F.filter(
-            _tokens(F.coalesce(F.col(text), F.lit(""))), lambda t: t != ""
+            _tokens(F.coalesce(F.col("text"), F.lit(""))), lambda t: t != ""
         ).alias("__toks")
     )
     pair = lambda toks, i: F.struct(  # noqa: E731
@@ -1531,12 +1452,7 @@ LIMIT {k}
 
 
 def winnow_fingerprints(
-    docs: DataFrame,
-    n: int = 4,
-    w: int = 4,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    _fp_sets: bool = False,
+    docs: DataFrame, n: int = 4, w: int = 4, _fp_sets: bool = False
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS algorithm): in every window of ``w``
@@ -1572,9 +1488,9 @@ def winnow_fingerprints(
     if n < 1 or w < 1:
         raise ValueError("n and w must be >= 1")
     staged = docs.select(
-        F.col(doc_id),
+        F.col("doc_id"),
         F.filter(
-            _tokens(F.coalesce(F.col(text), F.lit(""))), lambda t: t != ""
+            _tokens(F.coalesce(F.col("text"), F.lit(""))), lambda t: t != ""
         ).alias("__toks"),
     )
     gram_h = lambda toks, i: F.conv(  # noqa: E731
@@ -1592,7 +1508,7 @@ def winnow_fingerprints(
         10,
     ).cast("long")
     grams = staged.select(
-        doc_id,
+        "doc_id",
         F.when(
             F.size("__toks") >= n,
             F.transform(
@@ -1647,7 +1563,7 @@ def winnow_fingerprints(
         # corpus-wide dedup exchange deleted (the same row-local-
         # distinct argument as the (pos, fp) dedup above).
         return grams.select(
-            doc_id,
+            "doc_id",
             F.explode(
                 F.array_distinct(
                     F.transform(fps_per_doc, lambda s: s["fp"])
@@ -1655,8 +1571,10 @@ def winnow_fingerprints(
             ).alias("fp"),
         )
     return grams.select(
-        doc_id, F.explode(fps_per_doc).alias("__f")
-    ).select(doc_id, F.col("__f.pos").alias("pos"), F.col("__f.fp").alias("fp"))
+        "doc_id", F.explode(fps_per_doc).alias("__f")
+    ).select(
+        "doc_id", F.col("__f.pos").alias("pos"), F.col("__f.fp").alias("fp")
+    )
 
 
 def winnow_pairs(
@@ -1665,8 +1583,6 @@ def winnow_pairs(
     w: int = 4,
     min_shared: int = 2,
     max_df: int = 50,
-    text: str = "text",
-    doc_id: str = "doc_id",
 ) -> DataFrame:
     """Document pairs sharing winnowing fingerprints — the candidate
     local-clone report: (doc_a, doc_b, shared_fps), doc_a < doc_b,
@@ -1701,8 +1617,8 @@ def winnow_pairs(
     # deleted; the row set is identical because doc_id is part of the
     # dedup key.
     fps = winnow_fingerprints(
-        docs, n=n, w=w, text=text, doc_id=doc_id, _fp_sets=True
-    ).select(F.col(doc_id).alias("d"), "fp")
+        docs, n=n, w=w, _fp_sets=True
+    ).select(F.col("doc_id").alias("d"), "fp")
     fps = pin(fps)
     rare = (
         fps.groupBy("fp")

@@ -28,18 +28,21 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# Every helper here works on the 2-decimal grid: x * 100 is an integer.
+FACTOR = 100
 
-def scaled(col: Column, factor: int = 100) -> Column:
+
+def scaled(col: Column) -> Column:
     """Fixed-decimal double → exact scaled BIGINT.
 
     ``round(x*factor, 0)`` lands on the intended integer because the input
     has at most ``log10(factor)`` decimals (noise ~1e-10, never near .5).
     """
-    return F.round(col * factor, 0).cast("long")
+    return F.round(col * FACTOR, 0).cast("long")
 
 
-def scaled_sql(expr: str, factor: int = 100) -> str:
-    return f"CAST(ROUND(({expr}) * {factor}, 0) AS BIGINT)"
+def scaled_sql(expr: str) -> str:
+    return f"CAST(ROUND(({expr}) * {FACTOR}, 0) AS BIGINT)"
 
 
 def sum_scaled(col: str | Column, factor: int = 100) -> Column:
@@ -48,19 +51,19 @@ def sum_scaled(col: str | Column, factor: int = 100) -> Column:
     return F.sum(c).cast("double") / factor
 
 
-def sum_scaled_sql(expr: str, factor: int = 100) -> str:
-    return f"CAST(SUM({expr}) AS DOUBLE) / {factor}"
+def sum_scaled_sql(expr: str) -> str:
+    return f"CAST(SUM({expr}) AS DOUBLE) / {FACTOR}"
 
 
-def avg_scaled(col: str | Column, factor: int = 100) -> Column:
+def avg_scaled(col: str | Column) -> Column:
     """Mean of pre-scaled ints: (sum::double/factor)/count — division order
     matters for bit-equality, keep it identical to :func:`avg_scaled_sql`."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c).cast("double") / factor / F.count(c)
+    return F.sum(c).cast("double") / FACTOR / F.count(c)
 
 
-def avg_scaled_sql(expr: str, factor: int = 100) -> str:
-    return f"CAST(SUM({expr}) AS DOUBLE) / {factor} / COUNT({expr})"
+def avg_scaled_sql(expr: str) -> str:
+    return f"CAST(SUM({expr}) AS DOUBLE) / {FACTOR} / COUNT({expr})"
 
 
 def rescale_ratio(sum_col: Column, count_col: Column, factor: int) -> Column:

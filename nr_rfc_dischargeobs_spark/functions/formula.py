@@ -199,16 +199,15 @@ def references(formula: str) -> set[str]:
     return out
 
 
-def to_column(formula: str, resolver=None) -> Column:
-    """Compile to a Spark Column. ``resolver(name) -> Column`` maps station
-    refs (default ``F.col(name)``)."""
-    resolver = resolver or (lambda name: F.col(name))
+def to_column(formula: str) -> Column:
+    """Compile to a Spark Column; a station ref reads the column of that
+    name."""
 
     def build(node) -> Column:
         if isinstance(node, Num):
             return F.lit(node.value)
         if isinstance(node, Ref):
-            return resolver(node.name)
+            return F.col(node.name)
         if isinstance(node, Neg):
             return -build(node.operand)
         if isinstance(node, Clip):
@@ -249,16 +248,15 @@ def _small_int_exponent(node) -> int | None:
     return None
 
 
-def to_sql(formula: str, resolver=None) -> str:
-    """Compile to an ANSI-SQL expression string (the DuckDB oracle twin).
-    ``resolver(name) -> str`` maps station refs to SQL identifiers."""
-    resolver = resolver or (lambda name: f'"{name}"')
+def to_sql(formula: str) -> str:
+    """Compile to an ANSI-SQL expression string (the DuckDB oracle twin);
+    a station ref becomes the quoted identifier of that name."""
 
     def build(node) -> str:
         if isinstance(node, Num):
             return repr(node.value)
         if isinstance(node, Ref):
-            return resolver(node.name)
+            return f'"{node.name}"'
         if isinstance(node, Neg):
             return f"(-{build(node.operand)})"
         if isinstance(node, Clip):

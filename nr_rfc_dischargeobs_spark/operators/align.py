@@ -93,7 +93,6 @@ def suppress_repeat(
     order: str,
     label: str,
     out_col: str | None = None,
-    blank: str = "",
 ) -> DataFrame:
     """W2: blank a display label when it equals the previous row's label
     (``dt_mmdd[dt_mmdd.eq(dt_mmdd.shift())] = ''``,
@@ -104,7 +103,7 @@ def suppress_repeat(
     prev = F.lag(F.col(label)).over(w)
     return df.withColumn(
         out_col or label,
-        F.when(F.col(label).eqNullSafe(prev), F.lit(blank)).otherwise(
+        F.when(F.col(label).eqNullSafe(prev), F.lit("")).otherwise(
             F.col(label)
         ),
     )

@@ -93,7 +93,7 @@ def dedup_keep_first(
     )
 
 
-def convert_units(value: Column, divisor: float, decimals: int = 3) -> Column:
+def convert_units(value: Column, divisor: float) -> Column:
     """Unit conversion + fixed rounding (``discharge_obs_pd.py:63-65``)."""
-    return F.round(value / divisor, decimals)
+    return F.round(value / divisor, 3)
 

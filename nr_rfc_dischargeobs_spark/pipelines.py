@@ -31,7 +31,6 @@ from .sources import ObservationStore, conform_swob
 def ingest_instantaneous(
     store: ObservationStore,
     conformed: list[DataFrame],
-    existing_wins: bool = True,
 ) -> None:
     """EP1 tail (``discharge_obs_pd.py:366-412``): union the conformed
     long-form sources (J2 — axis-1 concat of disjoint station columns ≡ row
@@ -41,7 +40,7 @@ def ingest_instantaneous(
     unioned = reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True), conformed
     )
-    store.upsert(unioned, existing_wins=existing_wins)
+    store.upsert(unioned)
 
 
 def usgs_instantaneous_frame(
@@ -71,9 +70,7 @@ def update_hourly(
     store: ObservationStore,
     start: str,
     end: str,
-    datatype: str = "Q",
     ffill_until: Column | None = None,
-    decimals: int = 3,
 ) -> DataFrame:
     """EP2 hourly tier (``dischargeobs_write_xl.py:278-360``): pruned
     instantaneous read → A1 hourly mean with final-hour override → dense
@@ -86,10 +83,10 @@ def update_hourly(
     # (``inst_data.index > startdate``, dischargeobs_write_xl.py:302): a row
     # stamped exactly at ``start`` belongs to the PREVIOUS update window
     obs = store.read_range(start, end, inclusive_start=False).filter(
-        F.col("datatype") == datatype
+        F.col("datatype") == "Q"
     )
     hourly = rollup.hourly_rollup_with_final_override(
-        obs, "station_id", "obs_time", "value", decimals=decimals
+        obs, "station_id", "obs_time", "value", decimals=3
     )
     spark = obs.sparkSession
     spine = align.key_spine(
@@ -109,12 +106,12 @@ def update_hourly(
     ).select("station_id", "hour", "value", "n_obs")
 
 
-def update_daily(hourly: DataFrame, decimals: int = 3) -> DataFrame:
+def update_daily(hourly: DataFrame) -> DataFrame:
     """EP2 daily tier (``dischargeobs_write_xl.py:364-392``): A3 daily mean
     with last-valid-day override, from the hourly product (the two
     materializations are separately consumed — don't fuse)."""
     return rollup.daily_rollup_with_last_day_override(
-        hourly, "station_id", "hour", "value", decimals=decimals
+        hourly, "station_id", "hour", "value", decimals=3
     )
 
 
@@ -122,7 +119,6 @@ def model_export_frame(
     daily: DataFrame,
     stations: list[str],
     estimates: dict[str, str] | None = None,
-    decimals: int = 3,
 ) -> DataFrame:
     """EP2 export tier (``dischargeobs_write_xl.py:147-207``): pivot the
     daily long table to one column per model station (A5, explicit column
@@ -137,7 +133,7 @@ def model_export_frame(
     )
     for stn, expr_text in (estimates or {}).items():
         wide = wide.withColumn(
-            stn, F.round(formula.to_column(expr_text), decimals)
+            stn, F.round(formula.to_column(expr_text), 3)
         )
     return wide
 
@@ -175,10 +171,7 @@ def coffee_instant_frame(
 
 
 def ingest_weather(
-    parsed_swob: DataFrame,
-    station_dim: DataFrame,
-    day_start: str,
-    utc_offset_hours: int = -8,
+    parsed_swob: DataFrame, station_dim: DataFrame, day_start: str
 ) -> DataFrame:
     """EP3 (``ECCC_hourly.py:29-141``): conform parsed SWOB rows, project
     onto the (station × 24 h) scaffold (J6) so unfetched hours surface as
@@ -187,7 +180,7 @@ def ingest_weather(
     Returns the long weather table aligned to the scaffold:
     (station_id, obs_time, variable, value).
     """
-    conformed = conform_swob(parsed_swob, utc_offset_hours=utc_offset_hours)
+    conformed = conform_swob(parsed_swob)
     spark = conformed.sparkSession
     hours = align.time_spine(
         spark,
@@ -197,7 +190,7 @@ def ingest_weather(
         "obs_time",
     ).withColumn(
         "obs_time",
-        F.col("obs_time") + F.expr(f"INTERVAL {utc_offset_hours} HOURS"),
+        F.col("obs_time") + F.expr("INTERVAL -8 HOURS"),
     )
     scaffold = align.key_spine(
         station_dim.select(F.col("station_id")), hours

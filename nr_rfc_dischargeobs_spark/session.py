@@ -50,9 +50,20 @@ SQL_CONFS = {
 
 def default_cpus() -> int:
     """Cores for ``local[N]`` and the shuffle partition count:
-    ``SPARK_GRAFT_CPUS`` when set, else every core of this machine."""
+    ``SPARK_GRAFT_CPUS`` when set, else every core of this machine.
+    A set value that is not a positive integer raises ``ValueError``."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
-    return int(env) if env else os.cpu_count() or 1
+    if not env:
+        return os.cpu_count() or 1
+    try:
+        cpus = int(env)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {env!r}"
+        )
+    return cpus
 
 
 def default_driver_memory() -> str:
@@ -70,7 +81,6 @@ def default_driver_memory() -> str:
 def get_spark(
     app_name: str = "nr-rfc-dischargeobs-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults."""
@@ -78,7 +88,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         # AQE (SQL_CONFS) also splits skewed shuffle partitions.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # The janino-compile cache is keyed on generated source and holds

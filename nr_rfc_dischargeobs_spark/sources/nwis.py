@@ -67,11 +67,7 @@ def default_window(now: datetime | None = None) -> tuple[str, str]:
 
 
 def iv_url(
-    sites: list[str],
-    start_date: str,
-    end_date: str,
-    parameters: tuple[str, ...] = (PARAM_DISCHARGE_CFS, PARAM_STAGE_FT),
-    base: str = IV_BASE,
+    sites: list[str], start_date: str, end_date: str, base: str = IV_BASE
 ) -> str:
     """WaterServices IV request URL — sites, parameters, and the date range
     all in the query string, so the service filters server-side."""
@@ -79,7 +75,7 @@ def iv_url(
         {
             "format": "json",
             "sites": ",".join(sites),
-            "parameterCd": ",".join(parameters),
+            "parameterCd": ",".join((PARAM_DISCHARGE_CFS, PARAM_STAGE_FT)),
             "startDT": start_date,
             "endDT": end_date,
         }

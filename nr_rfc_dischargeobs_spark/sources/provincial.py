@@ -24,12 +24,11 @@ def conform_provincial(
     datatype: str,
     window_start: Column | None = None,
     window_end: Column | None = None,
-    tz: str = "America/Vancouver",
 ) -> DataFrame:
     """F2 → F7 for one file (datatype 'Q' for Discharge.csv, 'H' for
     Stage.csv).  ``station_dim`` is F5 (ID provincial, ID2 RFC alias)."""
     ts = F.from_utc_timestamp(
-        F.to_timestamp(F.trim(F.col("datetime_utc"))), tz
+        F.to_timestamp(F.trim(F.col("datetime_utc"))), "America/Vancouver"
     )
     conformed = (
         raw.join(

@@ -178,10 +178,10 @@ class ObservationStore:
 
     # ------------------------------------------------------------ upsert
 
-    def upsert(self, incoming: DataFrame, existing_wins: bool = True) -> None:
+    def upsert(self, incoming: DataFrame) -> None:
         """J3 coalescing merge: for keys present in both, the existing value
-        wins (reference ``combine_first`` semantics — set
-        ``existing_wins=False`` for the corrected late-data behavior).
+        wins (reference ``combine_first`` semantics,
+        ``discharge_obs_pd.py:176,182-187``).
 
         Only partitions overlapping the incoming months are read, merged,
         and dynamically overwritten; untouched months never move.  A fresh
@@ -190,11 +190,9 @@ class ObservationStore:
         is the cron-batch MERGE; the streaming tier reuses it per
         micro-batch (``streaming/ingest.py``).
         """
-        self._commit(self.merged_frame(with_year_month(incoming), existing_wins))
+        self._commit(self.merged_frame(with_year_month(incoming)))
 
-    def merged_frame(
-        self, incoming: DataFrame, existing_wins: bool = True
-    ) -> DataFrame:
+    def merged_frame(self, incoming: DataFrame) -> DataFrame:
         """The upsert's merge plan (exposed for plan-shape tests): incoming
         must already carry ``year_month``.
 
@@ -224,10 +222,10 @@ class ObservationStore:
         existing = with_year_month(
             self.read().filter(month_pred).drop("year_month")
         )
-        pri_e, pri_i = (0, 1) if existing_wins else (1, 0)
-        unioned = existing.withColumn(
-            "__prio", F.lit(pri_e)
-        ).unionByName(incoming.withColumn("__prio", F.lit(pri_i)))
+        # existing rows sort first, so the existing value wins a key
+        unioned = existing.withColumn("__prio", F.lit(0)).unionByName(
+            incoming.withColumn("__prio", F.lit(1))
+        )
         arranged = unioned.withColumn("__salt", _station_salt()).repartition(
             F.col("year_month"), F.col("datatype"), F.col("__salt")
         )

@@ -19,12 +19,7 @@ from pyspark.sql import functions as F
 SWOB_VARS = ("air_temp", "avg_air_temp_pst1hr", "pcpn_amt_pst1hr")
 
 
-def parse_swob_xml(
-    payloads: DataFrame,
-    xml_col: str = "xml",
-    station_col: str = "station",
-    hour_col: str = "obs_hour",
-) -> DataFrame:
+def parse_swob_xml(payloads: DataFrame) -> DataFrame:
     """(station, obs_hour, xml) → F4 rows (values still dirty strings).
 
     One :func:`xpath_string` call re-parses the XML document per
@@ -50,10 +45,10 @@ def parse_swob_xml(
     is an error, not a miss).
     """
     staged = payloads.select(
-        F.col(station_col).alias("station"),
-        F.col(hour_col).alias("obs_hour"),
-        F.xpath(F.col(xml_col), F.lit("//element/@name")).alias("__names"),
-        F.xpath(F.col(xml_col), F.lit("//element/@value")).alias("__vals"),
+        F.col("station").alias("station"),
+        F.col("obs_hour").alias("obs_hour"),
+        F.xpath(F.col("xml"), F.lit("//element/@name")).alias("__names"),
+        F.xpath(F.col("xml"), F.lit("//element/@value")).alias("__vals"),
     )
 
     def pick(var: str):
@@ -78,11 +73,7 @@ def parse_swob_xml(
     )
 
 
-def conform_swob(
-    raw: DataFrame,
-    utc_offset_hours: int = -8,
-    strip_prefix: str = "C",
-) -> DataFrame:
+def conform_swob(raw: DataFrame) -> DataFrame:
     """F4 → long weather table (station_id, obs_time, variable, value).
 
     Non-numeric payloads (e.g. ``MSNG``) become null — the engine-side
@@ -96,13 +87,13 @@ def conform_swob(
     )
     return long_.select(
         F.when(
-            F.col("station").startswith(strip_prefix),
-            F.expr(f"substr(station, {len(strip_prefix) + 1})"),
+            F.col("station").startswith("C"),
+            F.expr("substr(station, 2)"),
         )
         .otherwise(F.col("station"))
         .alias("station_id"),
         (
-            F.col("obs_hour") + F.expr(f"INTERVAL {utc_offset_hours} HOURS")
+            F.col("obs_hour") + F.expr("INTERVAL -8 HOURS")
         ).alias("obs_time"),
         F.col("variable"),
         F.col("raw_value").try_cast("double").alias("value"),

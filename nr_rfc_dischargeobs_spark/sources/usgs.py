@@ -20,14 +20,14 @@ from ..operators import conform
 
 
 def conform_usgs(
-    raw: DataFrame,
-    station_dim: DataFrame | None = None,
-    tz: str = "US/Pacific",
+    raw: DataFrame, station_dim: DataFrame | None = None
 ) -> DataFrame:
     """F3 → F7 (two long rows per input row: datatype 'Q' and 'H')."""
     base = raw.select(
         F.col("site_no"),
-        F.from_utc_timestamp(F.col("datetime"), tz).alias("obs_time"),
+        F.from_utc_timestamp(F.col("datetime"), "US/Pacific").alias(
+            "obs_time"
+        ),
         conform.convert_units(
             F.col("discharge_cfs"), conform.CFS_TO_CMS
         ).alias("Q"),

@@ -25,21 +25,17 @@ from ..operators import conform
 WSC_TZ = "America/Vancouver"
 
 
-def conform_wsc(
-    raw: DataFrame,
-    tz: str = WSC_TZ,
-    grid_seconds: int = 300,
-) -> DataFrame:
+def conform_wsc(raw: DataFrame) -> DataFrame:
     """F1 → F7.  Keep-first dedup orders by the ``Date`` string itself
     (stable for identical inputs), ties broken by value."""
     # offset timestamps parse to UTC instants under the engine's UTC
     # session tz; from_utc_timestamp renders local wall-clock, tz dropped
     ts = F.from_utc_timestamp(
-        F.to_timestamp(F.col("Date"), "yyyy-MM-dd'T'HH:mm:ssXXX"), tz
+        F.to_timestamp(F.col("Date"), "yyyy-MM-dd'T'HH:mm:ssXXX"), WSC_TZ
     )
     slotted = raw.select(
         F.col("ID").alias("station_id"),
-        conform.round_to_grid(ts, grid_seconds).alias("obs_time"),
+        conform.round_to_grid(ts, 300).alias("obs_time"),
         F.col("water_level_m").alias("H"),
         F.col("discharge_cms").alias("Q"),
         F.col("Date").alias("__order"),

@@ -137,19 +137,14 @@ def stream_upsert_into_store(
     store,
     checkpoint_dir: str,
     available_now: bool = True,
-    existing_wins: bool = True,
 ):
     """Continuous (or drain-and-exit) upsert into the partitioned store via
     ``foreachBatch`` — each micro-batch runs the identical J3 coalescing
     merge as the cron path, with the checkpoint providing exactly-once
-    file-source progress (the engine's ``f_read``).  ``existing_wins``
-    plumbs through to :meth:`ObservationStore.upsert` so the corrected
-    late-data mode the batch driver exposes is reachable from the
-    streaming path too (a corrected re-sent observation in a later
-    micro-batch is otherwise silently discarded)."""
+    file-source progress (the engine's ``f_read``)."""
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        store.upsert(batch_df, existing_wins=existing_wins)
+        store.upsert(batch_df)
 
     writer = (
         conformed.writeStream.foreachBatch(merge_batch)

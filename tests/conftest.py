@@ -18,7 +18,9 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("tests", shuffle_partitions=8)
+    spark = get_spark(
+        "tests", extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
     yield spark
 
 
@@ -59,8 +61,7 @@ _SLOW_TESTS = {
     "test_full_lifecycle_stream_admit_segment_search",
     "test_merge_segments_carry_matches_search_segments",
     "test_merge_segments_in_place_swap_and_dest_guard",
-    "test_merge_segments_reencode_from_raw",
-    "test_merge_segments_requantize_and_refusals",
+    "test_merge_segments_refusals",
     "test_range_search_equals_thresholded_full_slate",
     "test_range_search_segments_matches_thresholded_merge",
     "test_readmission_after_delete_via_fresh_segment",
@@ -109,7 +110,6 @@ _SLOW_TESTS = {
     "test_shard_plan_partition_of_input",
     "test_span_dedup_matches_python_reference",
     # test_round4_ops.py
-    "test_curate_corpus_optional_gates",
     "test_decontam_bloom_oracle_parity_on_degenerate_docs",
     "test_ivf_pq_refine_arrow_native_bit_parity",
     "test_ivf_pq_refine_full_slate_equals_brute_force",

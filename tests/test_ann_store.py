@@ -721,7 +721,6 @@ def test_merge_segments_carry_matches_search_segments(spark, tmp_path):
     n_corpus = corpus.count()
     assert rep["merged"] is True and rep["segments"] == 2
     assert rep["rows"] == n_corpus  # every id exactly once
-    assert rep["reencoded"] == rep["requantized"] == 0
     assert rep["carried"] == n_corpus
     assert rep["dropped_deleted"] == 1  # the base's stale victim copy
     assert rep["superseded"] == 1  # the base's overlap copy
@@ -735,85 +734,11 @@ def test_merge_segments_carry_matches_search_segments(spark, tmp_path):
     assert got == want and got
 
 
-def test_merge_segments_reencode_from_raw(spark, tmp_path):
-    """Mixed-basis merge: a Hadamard-rotated fresh segment with its own
-    model folds into a raw-basis base via raw_emb re-encoding — the
-    merged store is bit-identical to building ONE store over the raw
-    union with the base's model (re-encode ≡ fresh admission), and a
-    raw_emb that misses a live id refuses loudly."""
-    coarse, queries, corpus, coarse_rows, cb = _trained_parts(spark)
-    emb_raw = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    )
-    even = corpus.filter(F.col("vec_id") % 2 == 0)
-    base = str(tmp_path / "base")
-    ann_store.save_ivfadc(
-        similarity.ivf_pq_index(even, coarse, cb, m=4, dim=64,
-                                residual=True),
-        base, coarse_rows, cb, m=4, dim=64,
-    )
-    # rotated fresh segment, own coarse + own codebook (different
-    # model AND different basis)
-    had = similarity.hadamard_rows(64)
-    rot = similarity.rotate_quantized(
-        similarity.prepare(emb_raw), had
-    )
-    rcoarse = rot.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 12))
-    rodd = rot.filter((F.col("vec_id") >= 28) & (F.col("vec_id") % 2 == 1))
-    rcoarse_rows = [
-        (int(r["vec_id"]), [int(v) for v in r["q"]])
-        for r in rcoarse.select("vec_id", "q").collect()
-    ]
-    rcb = similarity.pq_train_codebooks(
-        similarity.residualize(
-            similarity.ivf_assign(rodd, rcoarse, 1, None), rcoarse_rows
-        ),
-        k=8, m=4, dim=64, iters=1,
-    )
-    fresh = str(tmp_path / "fresh")
-    ann_store.save_ivfadc(
-        similarity.ivf_pq_index(rodd, rcoarse, rcb, m=4, dim=64,
-                                residual=True),
-        fresh, rcoarse_rows, rcb, m=4, dim=64,
-        rotation={"mode": "post_int", "components": had},
-    )
-
-    dest = str(tmp_path / "merged")
-    rep = ann_store.merge_segments(
-        spark, [base, fresh], dest, raw_emb=emb_raw
-    )
-    n_odd = rodd.count()
-    assert rep["reencoded"] == n_odd and rep["rows"] == corpus.count()
-
-    # bit-identity with the direct single-store build over the union
-    direct = str(tmp_path / "direct")
-    ann_store.save_ivfadc(
-        similarity.ivf_pq_index(corpus, coarse, cb, m=4, dim=64,
-                                residual=True),
-        direct, coarse_rows, cb, m=4, dim=64,
-    )
-    cols = ["vec_id", "code_0", "code_1", "code_2", "code_3", "rn",
-            "list_id"]
-    got_rows = sorted(map(tuple, spark.read.parquet(dest)
-                          .select(*cols).collect()))
-    want_rows = sorted(map(tuple, spark.read.parquet(direct)
-                           .select(*cols).collect()))
-    assert got_rows == want_rows
-
-    with pytest.raises(ValueError, match="live ids"):
-        ann_store.merge_segments(
-            spark, [base, fresh], str(tmp_path / "m2"),
-            raw_emb=emb_raw.filter(F.col("vec_id") % 4 != 1),
-        )
-
-
-def test_merge_segments_requantize_and_refusals(spark, tmp_path):
-    """Different-model same-basis segments refuse a plain merge (the
-    compounding-quantization-error rationale), fold under
-    allow_requantize=True as encode(decode(codes)) against the base
-    model (pinned against the explicit decode→encode chain), and a
-    different-BASIS segment refuses even requantize (grid inversion is
-    not exact); mixed (m, dim) geometry refuses outright."""
+def test_merge_segments_refusals(spark, tmp_path):
+    """A segment with its own model refuses to merge (carrying its codes
+    into the base's model would be wrong), a different-BASIS segment
+    says so in the refusal, and mixed (m, dim) geometry refuses
+    outright."""
     coarse, queries, corpus, coarse_rows, cb = _trained_parts(spark)
     even = corpus.filter(F.col("vec_id") % 2 == 0)
     odd = corpus.filter(F.col("vec_id") % 2 == 1)
@@ -845,34 +770,12 @@ def test_merge_segments_requantize_and_refusals(spark, tmp_path):
         fresh, ocoarse_rows, ocb, m=4, dim=64,
     )
 
-    with pytest.raises(ValueError, match="pass raw_emb"):
+    with pytest.raises(ValueError, match="different model"):
         ann_store.merge_segments(spark, [base, fresh],
                                  str(tmp_path / "m0"))
 
-    dest = str(tmp_path / "merged")
-    rep = ann_store.merge_segments(
-        spark, [base, fresh], dest, allow_requantize=True
-    )
-    assert rep["requantized"] == odd.count()
-    # the requantized rows ARE encode(decode(codes)) against base model
-    recon = similarity.ivfadc_decode(
-        spark.read.parquet(fresh), ocoarse_rows, ocb, m=4, dim=64
-    )
-    want_part = similarity.ivf_pq_index(
-        recon, None, cb, m=4, dim=64, assign="local", residual=True,
-        coarse_rows=coarse_rows,
-    )
-    cols = ["vec_id", "code_0", "code_1", "code_2", "code_3", "rn",
-            "list_id"]
-    got_odd = sorted(map(tuple, spark.read.parquet(dest)
-                         .filter(F.col("vec_id") % 2 == 1)
-                         .select(*cols).collect()))
-    want_odd = sorted(map(tuple, want_part.select(*cols).collect()))
-    assert got_odd == want_odd and got_odd
-
-    # cross-basis requantize refused (the guard reads only the sidecar
-    # rotation specs, so the same codes with a rotation spec attached
-    # exercise it)
+    # cross-basis refused (the guard reads only the sidecar rotation
+    # specs, so the same codes with a rotation spec attached exercise it)
     had = similarity.hadamard_rows(64)
     rfresh = str(tmp_path / "rfresh")
     ann_store.save_ivfadc(
@@ -883,8 +786,7 @@ def test_merge_segments_requantize_and_refusals(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="different basis"):
         ann_store.merge_segments(
-            spark, [base, rfresh], str(tmp_path / "m3"),
-            allow_requantize=True,
+            spark, [base, rfresh], str(tmp_path / "m3")
         )
 
     # geometry mismatch refused

@@ -182,91 +182,6 @@ def test_incremental_admission_screens_and_evidence(spark):
     assert got[102] == (None, None, True)
 
 
-def test_incremental_admission_stored_artifact_form(spark):
-    """The production form: precomputed corpus fingerprints + signature
-    table instead of the raw corpus — identical output (the artifacts
-    only ever append, so ingest never rescans landed text), and the
-    half-specified call refuses loudly."""
-    corpus = spark.createDataFrame(
-        [
-            (10, "the quick brown fox jumps over the lazy dog"),
-            (12, "completely different content about spark engines"),
-        ],
-        ["doc_id", "text"],
-    )
-    incoming = spark.createDataFrame(
-        [
-            (100, "the quick brown fox jumps over the lazy dog"),
-            (102, "entirely novel words never seen before anywhere"),
-        ],
-        ["doc_id", "text"],
-    )
-    fps = corpus.select(F.md5("text").alias("fingerprint"), "doc_id")
-    sigs = dedup.minhash_signatures(
-        dedup.shingle_rows(corpus, n=3), bands=4, rows_per_band=1
-    )
-    want = sorted(
-        map(
-            tuple,
-            dedup.incremental_admission(
-                incoming, corpus, bands=4, rows_per_band=1, n=3
-            ).collect(),
-        )
-    )
-    got = sorted(
-        map(
-            tuple,
-            dedup.incremental_admission(
-                incoming,
-                bands=4,
-                rows_per_band=1,
-                n=3,
-                corpus_fingerprints=fps,
-                corpus_signatures=sigs,
-            ).collect(),
-        )
-    )
-    assert got == want
-    with pytest.raises(ValueError, match="BOTH"):
-        dedup.incremental_admission(incoming, corpus_fingerprints=fps)
-
-
-def test_incremental_admission_hot_bucket_gate(spark):
-    """max_bucket gates CORPUS-side boilerplate buckets: an incoming doc
-    whose only collisions are with a 30-doc viral bucket is admitted
-    once the gate drops that bucket, while a true near-dup of a normal
-    landed doc is still rejected."""
-    boiler = [(i, "subscribe to our newsletter for updates") for i in range(30)]
-    corpus = spark.createDataFrame(
-        boiler + [(50, "rare unique analytical content about rivers flowing north")],
-        ["doc_id", "text"],
-    )
-    incoming = spark.createDataFrame(
-        [
-            (100, "subscribe to our newsletter for updates"),
-            (101, "rare unique analytical content about rivers flowing south"),
-        ],
-        ["doc_id", "text"],
-    )
-    gated = {
-        r["doc_id"]: (r["exact_dup_of"], r["near_dup_of"], r["admit"])
-        for r in dedup.incremental_admission(
-            incoming, corpus, bands=4, rows_per_band=1, n=1, max_bucket=10
-        ).collect()
-    }
-    # the exact screen still catches the boilerplate copy (fingerprints
-    # are never gated) but its near evidence is gone with the bucket
-    assert gated[100] == (0, None, False)
-    assert gated[101][1] == 50 and not gated[101][2]
-    ungated = {
-        r["doc_id"]: r["near_dup_of"]
-        for r in dedup.incremental_admission(
-            incoming, corpus, bands=4, rows_per_band=1, n=1
-        ).collect()
-    }
-    assert ungated[100] == 0  # gate off: boilerplate bucket collides again
-
-
 def test_jaccard_scores_ordering(corpus):
     pairs = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
@@ -359,12 +274,6 @@ def test_deterministic_split_is_stable_under_appends(spark):
     assert all(s2[k] == v for k, v in s1.items())  # appends never reassign
     frac = sum(1 for v in s2.values() if v == "train") / len(s2)
     assert 0.8 < frac < 1.0  # roughly the requested 0.9
-    # a different salt gives an independent assignment
-    s3 = {
-        r["doc_id"]: r["split"]
-        for r in sampling.deterministic_split(big, "doc_id", salt="v2").collect()
-    }
-    assert s3 != s2
 
 
 def test_stratified_sample_rates_and_stability(spark):
@@ -1063,10 +972,9 @@ def test_png_pixels_gray_and_palette_profiles():
 
     g = (np.arange(7 * 5, dtype=np.int64) * 53 % 256).astype(
         np.uint8).reshape(7, 5, 1)
-    for f in ("cycle", "none"):
-        out = png_pixels(encode_png(g, filters=f))
-        assert out is not None and out.shape == (7, 5, 1)
-        assert (out == g).all()
+    out = png_pixels(encode_png(g))
+    assert out is not None and out.shape == (7, 5, 1)
+    assert (out == g).all()
 
     def chunk(t, d):
         return (struct.pack(">I", len(d)) + t + d
@@ -1120,10 +1028,9 @@ def test_png_pixels_16bit_profiles():
     rng = np.random.default_rng(7)
     for c in (1, 2, 3, 4):
         arr = rng.integers(0, 65536, size=(5, 4, c), dtype=np.uint16)
-        for f in ("cycle", "none"):
-            out = png_pixels(encode_png(arr, filters=f))
-            assert out is not None and out.dtype == np.uint16
-            assert out.shape == (5, 4, c) and (out == arr).all()
+        out = png_pixels(encode_png(arr))
+        assert out is not None and out.dtype == np.uint16
+        assert out.shape == (5, 4, c) and (out == arr).all()
 
     def chunk(t, d):
         return (struct.pack(">I", len(d)) + t + d

@@ -21,7 +21,7 @@ def test_parse_reference_style_formula():
 
 
 def test_to_sql_reference_style():
-    sql = formula.to_sql(REFERENCE_STYLE, resolver=lambda n: f'"{n}"')
+    sql = formula.to_sql(REFERENCE_STYLE)
     assert "GREATEST" in sql
     assert '"08KG001" * "08KG001"' in sql  # ^2 unrolled, no POW
 
@@ -58,10 +58,10 @@ def test_clip_preserves_null(spark):
     nulls = sum(1 for r in df.select("v").collect() if r.v is None)
     assert nulls == 1 and got == [0.001]
     # DuckDB oracle SQL
-    sql = formula.to_sql(f_str, resolver=lambda n: "a")
+    sql = formula.to_sql(f_str)
     con = duckdb.connect()
     rows = con.execute(
-        f"SELECT {sql} FROM (VALUES (CAST(NULL AS DOUBLE)), (-5.0)) t(a)"
+        f'SELECT {sql} FROM (VALUES (CAST(NULL AS DOUBLE)), (-5.0)) t("A")'
     ).fetchall()
     vals = sorted(v for (v,) in rows if v is not None)
     assert sum(1 for (v,) in rows if v is None) == 1 and vals == [0.001]
@@ -116,15 +116,17 @@ def test_sql_matches_python_via_duckdb():
 
     rng = random.Random(7)
     env = {"A": 2.5, "B": 0.9, "C": 7.0}
+    cols = ", ".join(f'{v!r} AS "{k}"' for k, v in env.items())
+    row = f"(SELECT {cols})"
     con = duckdb.connect()
     for _ in range(30):
         f_str = _random_formula(rng)
         py = formula.evaluate(f_str, env)
         if py is None or not math.isfinite(py) or abs(py) > 1e12:
             continue
-        sql = formula.to_sql(f_str, resolver=lambda n: repr(env[n]))
-        # literal-only expressions come back as DECIMAL from DuckDB
-        got = float(con.execute(f"SELECT {sql}").fetchone()[0])
+        sql = formula.to_sql(f_str)
+        # literal columns come back as DECIMAL from DuckDB
+        got = float(con.execute(f"SELECT {sql} FROM {row}").fetchone()[0])
         assert got == pytest.approx(py, rel=1e-9), f_str
 
 

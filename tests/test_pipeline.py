@@ -229,16 +229,6 @@ def test_store_upsert_safe_on_static_overwrite_session(spark, tmp_path):
     assert len(vals) == 3
 
 
-def test_store_incoming_wins_mode(spark, tmp_path):
-    store = ObservationStore(spark, str(tmp_path / "obs2"))
-    store.upsert(_mk_obs(spark, [("S1", "2024-06-15 10:00:00", "Q", 1.0, "wsc")]))
-    store.upsert(
-        _mk_obs(spark, [("S1", "2024-06-15 10:00:00", "Q", 99.0, "wsc")]),
-        existing_wins=False,
-    )
-    assert store.read().collect()[0]["value"] == 99.0
-
-
 # ------------------------------------------------------------- end-to-end
 
 

@@ -314,14 +314,12 @@ def test_span_dedup_matches_python_reference(spark, data):
     c=st.sampled_from([1, 2, 3, 4]),
     depth=st.sampled_from([8, 16]),
     seed=st.integers(0, 2**31 - 1),
-    filters=st.sampled_from(["cycle", "none"]),
     interlace=st.booleans(),
 )
-def test_png_encode_decode_round_trip(h, w, c, depth, seed, filters,
-                                      interlace):
+def test_png_encode_decode_round_trip(h, w, c, depth, seed, interlace):
     """encode_png → png_pixels is the identity for every (h, w,
-    gray/gray+alpha/RGB/RGBA) shape at both bit depths, both filter
-    modes, and both layouts (sequential + Adam7-interlaced — shapes
+    gray/gray+alpha/RGB/RGBA) shape at both bit depths and both
+    layouts (sequential + Adam7-interlaced — shapes
     under 8 px exercise empty passes) — the property that pins the
     five filter-reversal arms and the pass scatter against their
     forward twins over arbitrary pixel content (the hand-built-byte
@@ -339,6 +337,6 @@ def test_png_encode_decode_round_trip(h, w, c, depth, seed, filters,
         arr = rng.integers(0, 256, size=(h, w, c), dtype=np.uint8)
     else:
         arr = rng.integers(0, 65536, size=(h, w, c), dtype=np.uint16)
-    out = png_pixels(encode_png(arr, filters=filters, interlace=interlace))
+    out = png_pixels(encode_png(arr, interlace=interlace))
     assert out is not None and out.shape == (h, w, c)
     assert out.dtype == arr.dtype and (out == arr).all()

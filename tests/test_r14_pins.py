@@ -2,10 +2,10 @@
 
 Each r13 optimization added an opt-in spelling that must be EXACTLY the
 historical plan's output when enabled (``with_count``/``carry``,
-``_fp_sets``, ``ivf_assign_local(nprobe>1)``) or when left at its
-default (``min_count=1``).  The oracle rows exercise the registered
-configurations only; these pins assert on ≡ off for each knob directly,
-so a silent divergence in an unregistered configuration cannot hide.
+``_fp_sets``, ``ivf_assign_local(nprobe>1)``).  The oracle rows
+exercise the registered configurations only; these pins assert on ≡ off
+for each knob directly, so a silent divergence in an unregistered
+configuration cannot hide.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from nr_rfc_dischargeobs_spark.extensions import bpe, dedup, similarity
+from nr_rfc_dischargeobs_spark.extensions import dedup, similarity
 from nr_rfc_dischargeobs_spark.extensions import text as textops
 
 
@@ -118,72 +118,6 @@ def test_ivf_assign_local_nprobe_parity(spark):
             for r in similarity.ivf_assign_local(vecs, rows, nprobe).collect()
         }
         assert local == window
-
-
-@pytest.fixture(scope="module")
-def bpe_docs(spark):
-    return spark.createDataFrame(
-        [
-            (0, "low lower lowest low low"),
-            (1, "new newer newest new"),
-            (2, "rare"),  # the only occurrence of every 'rare' symbol run
-        ],
-        ["doc_id", "text"],
-    )
-
-
-def test_bpe_min_count_default_identity(bpe_docs):
-    """min_count=1 (the default) keeps the historical trainer output
-    bit-for-bit — merges AND segmentations."""
-    base_m = [tuple(r) for r in bpe.bpe_merges(bpe_docs, 5).collect()]
-    floor_m = [
-        tuple(r) for r in bpe.bpe_merges(bpe_docs, 5, min_count=1).collect()
-    ]
-    assert base_m == floor_m
-    base_s = sorted(
-        map(tuple, bpe.bpe_segment_vocab(bpe_docs, 5).collect())
-    )
-    floor_s = sorted(
-        map(tuple, bpe.bpe_segment_vocab(bpe_docs, 5, min_count=1).collect())
-    )
-    assert base_s == floor_s
-
-
-def test_bpe_min_count_floor_drops_rare_tokens(bpe_docs):
-    """min_count=2 trains exactly as if the singleton tokens were absent
-    (the driver-memory bound is a vocabulary filter, nothing else), and
-    the returned segmentation audit excludes the dropped tokens."""
-    floored = bpe.bpe_merges(bpe_docs, 5, min_count=2)
-    common = bpe_docs.filter(F.col("doc_id") < 2)  # 'rare' appears once
-    # every doc-0/1 token appears >= 1x but 'rare' only once; tokens
-    # like 'lower' are singletons too — build the reference by filtering
-    # the vocab the same way the trainer does
-    from collections import Counter
-
-    texts = [r["text"] for r in bpe_docs.collect() if r["text"]]
-    counts = Counter(
-        tok for t in texts for tok in t.lower().split() if tok
-    )
-    kept = [tok for t in texts for tok in t.lower().split() if counts[tok] >= 2]
-    ref_docs = common.sparkSession.createDataFrame(
-        [(0, " ".join(kept))], ["doc_id", "text"]
-    )
-    # identical merge table: training on the floored vocab == training
-    # on a corpus holding only the kept occurrences
-    assert [tuple(r) for r in floored.collect()] == [
-        tuple(r) for r in bpe.bpe_merges(ref_docs, 5).collect()
-    ]
-    seg_tokens = {
-        r["token"]
-        for r in bpe.bpe_segment_vocab(bpe_docs, 5, min_count=2).collect()
-    }
-    assert "rare" not in seg_tokens
-    assert all(counts[t] >= 2 for t in seg_tokens)
-
-
-def test_bpe_min_count_validation(bpe_docs):
-    with pytest.raises(ValueError, match="min_count"):
-        bpe.bpe_merges(bpe_docs, 5, min_count=0)
 
 
 def test_dsir_target_pred_parity(corpus):

@@ -484,7 +484,7 @@ def test_pq_adc_equals_exact_when_reconstruction_is_lossless(spark):
     }
     exact = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in brute_force_topk(queries, corpus, k=4, dim=4).collect()
+        for r in brute_force_topk(queries, corpus, k=4).collect()
     }
     assert set(adc) == set(exact)
     for key, (nbr, score) in exact.items():
@@ -696,62 +696,6 @@ def test_ivf_pq_stored_index_round_trip_prunes_partitions(spark, tmp_path):
     )
 
 
-# ------------------------------------------------------- curate v2 gates
-
-
-def test_curate_corpus_optional_gates(spark):
-    """The classifier / entropy gates compose into the batch pipeline:
-    off by default (output unchanged), and each drops exactly the docs
-    its operator scores outside the policy."""
-    from nr_rfc_dischargeobs_spark.extensions.curate import curate_corpus
-
-    texts = {
-        0: "the quick brown fox jumps over one lazy dog near the old river bank",
-        1: "a completely different sentence with many various distinct useful words here",
-        2: "spam spam spam spam spam spam spam spam spam spam ham ham",
-    }
-    docs = spark.createDataFrame(
-        list(texts.items()), ["doc_id", "text"]
-    )
-    base = {
-        r["doc_id"]
-        for r in curate_corpus(docs, min_words=5, min_uniq=0.1).collect()
-    }
-    assert base == {0, 1, 2}
-
-    ent = {
-        r["doc_id"]: r["entropy"]
-        for r in __import__(
-            "nr_rfc_dischargeobs_spark.extensions.text", fromlist=["x"]
-        ).token_entropy(docs).collect()
-    }
-    # doc 2 is the low-entropy outlier by construction
-    assert ent[2] < min(ent[0], ent[1])
-    cut = (ent[2] + min(ent[0], ent[1])) / 2
-    banded = {
-        r["doc_id"]
-        for r in curate_corpus(
-            docs, min_words=5, min_uniq=0.1, entropy_band=(cut, 100.0)
-        ).collect()
-    }
-    assert banded == {0, 1}
-
-    scores = {
-        r["doc_id"]: r["score"]
-        for r in __import__(
-            "nr_rfc_dischargeobs_spark.extensions.text", fromlist=["x"]
-        ).hash_classifier(docs).collect()
-    }
-    mid = sorted(scores.values())[1]
-    gated = {
-        r["doc_id"]
-        for r in curate_corpus(
-            docs, min_words=5, min_uniq=0.1, classifier_min_score=mid
-        ).collect()
-    }
-    assert gated == {d for d, sc in scores.items() if sc >= mid}
-
-
 # ------------------------------------------------- semantic contamination
 
 
@@ -854,11 +798,10 @@ def test_bigram_lm_reference_model_corpus(spark):
         ],
         ["doc_id", "text"],
     )
+    bc, uc = textops.bigram_lm_counts(reference)
     out = {
         r["doc_id"]: r["avg_logp2"]
-        for r in textops.bigram_lm_scores(
-            docs, model_docs=reference
-        ).collect()
+        for r in textops.bigram_lm_scores_trained(docs, bc, uc).collect()
     }
     assert out[0] > out[1]
 
@@ -1025,25 +968,6 @@ def test_line_dedup_hollows_exact_duplicates_and_min_df_dial(spark):
         for r in textops.line_dedup(docs, min_df=4).collect()
     }
     assert all(r["n_removed"] == 0 for r in out4.values())
-
-
-def test_line_dedup_regex_metachar_separator(spark):
-    """sep is a LITERAL separator, not a regex: '|' must split on pipes
-    only (un-escaped it would split between every character)."""
-    docs = spark.createDataFrame(
-        [
-            (0, "shared footer|alpha unique"),
-            (1, "shared footer|beta unique"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {
-        r["doc_id"]: r
-        for r in textops.line_dedup(docs, sep="|").collect()
-    }
-    assert out[0]["n_lines"] == 2 and out[0]["n_removed"] == 1
-    assert out[0]["clean_text"] == "alpha unique"
-    assert out[1]["clean_text"] == "beta unique"
 
 
 def test_document_stream_lm_gate_fails_closed_on_unscorable(spark):

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from nr_rfc_dischargeobs_spark.session import (
     default_cpus,
     default_driver_memory,
@@ -14,6 +16,12 @@ from nr_rfc_dischargeobs_spark.session import (
 def test_default_cpus_env_wins_else_machine(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert default_cpus() == 3
+    # anything but a positive integer names the variable: "0" would
+    # otherwise reach local[0] and spark.sql.shuffle.partitions
+    for bad in ("0", "-2", "x", "2.5"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            default_cpus()
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert default_cpus() == os.cpu_count()
 
