@@ -23,6 +23,11 @@ HEX = "0123456789abcdef"
 BUCKETS = 1 << 16
 _STRATIFIED_SALT = "stratified"
 _SHARD_SALT = "shard"
+# the hashed-bigram language models' bucket salt: the Spark scorers in
+# this module and text.py and the DuckDB twins in plans/extensions.py
+# must bucket every bigram alike, or a model trained by one scores
+# garbage under the other
+LM_SALT = "lm"
 
 
 def hash_bucket(key: Column, salt: str = "split") -> Column:
@@ -438,7 +443,7 @@ def dsir_log_ratio(
     SCALE = 1 << 20
     if (target_docs is None) == (target_pred is None):
         raise ValueError("pass exactly one of target_docs and target_pred")
-    bucket = lambda c: (hash_bucket(c, "lm") % 4096).cast("int")  # noqa: E731
+    bucket = lambda c: (hash_bucket(c, LM_SALT) % 4096).cast("int")  # noqa: E731
     if target_pred is not None:
         # one corpus pass for both models: same tokenize/explode staging
         # and bucket expression as bigram_lm_counts, with the target
@@ -597,7 +602,6 @@ def dsir_log_ratio_trained(
     alpha_inv: int = 100,
     text: str = "text",
     doc_id: str = "doc_id",
-    salt: str = "lm",
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """:func:`dsir_log_ratio` under PRE-TRAINED models — the production
@@ -655,7 +659,7 @@ def dsir_log_ratio_trained(
     )
     tarr = F.expr("array(" + ",".join(f"{v}L" for v in terms) + ")")
     bucket1 = (
-        lambda c: (hash_bucket(c, salt) % n_buckets).cast("int") + 1
+        lambda c: (hash_bucket(c, LM_SALT) % n_buckets).cast("int") + 1
     )  # noqa: E731
     staged = docs.select(
         F.col(doc_id),

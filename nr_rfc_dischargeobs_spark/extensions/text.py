@@ -689,7 +689,7 @@ def bigram_lm_scores(docs: DataFrame, n_buckets: int = 4096) -> DataFrame:
 
     Output: (doc_id, n_bigrams, slogp, avg_logp2).
     """
-    from .sampling import hash_bucket
+    from .sampling import LM_SALT, hash_bucket
 
     SCALE = 1 << 20
     _check_n_buckets(n_buckets)
@@ -699,7 +699,7 @@ def bigram_lm_scores(docs: DataFrame, n_buckets: int = 4096) -> DataFrame:
     # never diverge between the self-trained and trained paths (the
     # bitwise-equivalence test relies on this)
     bcounts, ucounts = bigram_lm_counts(docs, n_buckets=n_buckets)
-    bucket = lambda c: (hash_bucket(c, "lm") % n_buckets).cast("int")  # noqa: E731
+    bucket = lambda c: (hash_bucket(c, LM_SALT) % n_buckets).cast("int")  # noqa: E731
 
     grid = lambda c: F.round(  # noqa: E731
         F.log2(c.cast("double")) * SCALE, 0
@@ -763,7 +763,6 @@ def bigram_lm_scores_trained(
     n_buckets: int = 4096,
     text: str = "text",
     doc_id: str = "doc_id",
-    salt: str = "lm",
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """:func:`bigram_lm_scores` under a PRE-TRAINED model — the
@@ -785,7 +784,7 @@ def bigram_lm_scores_trained(
     """
     import math
 
-    from .sampling import hash_bucket
+    from .sampling import LM_SALT, hash_bucket
 
     SCALE = 1 << 20
     _check_n_buckets(n_buckets)
@@ -813,7 +812,7 @@ def bigram_lm_scores_trained(
         + ",".join(f"{v}L" for v in dense(unigram_counts, n_buckets))
         + ")"
     )
-    bucket1 = lambda c: (hash_bucket(c, salt) % n_buckets).cast("int") + 1  # noqa: E731
+    bucket1 = lambda c: (hash_bucket(c, LM_SALT) % n_buckets).cast("int") + 1  # noqa: E731
     term = lambda p: F.element_at(tb, bucket1(p["bg"])) - F.element_at(  # noqa: E731
         tu, bucket1(p["w1"])
     )
@@ -863,9 +862,9 @@ def bigram_lm_counts(
     unigram_counts) DataFrames of (bucket, count) over ``model_docs`` —
     run once on the reference corpus, collect (≤ ``n_buckets`` rows
     each), and feed :func:`bigram_lm_scores_trained`."""
-    from .sampling import hash_bucket
+    from .sampling import LM_SALT, hash_bucket
 
-    bucket = lambda c: (hash_bucket(c, "lm") % n_buckets).cast("int")  # noqa: E731
+    bucket = lambda c: (hash_bucket(c, LM_SALT) % n_buckets).cast("int")  # noqa: E731
     staged = model_docs.select(
         F.filter(
             _tokens(F.coalesce(F.col("text"), F.lit(""))), lambda t: t != ""

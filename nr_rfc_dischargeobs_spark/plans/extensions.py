@@ -2363,11 +2363,11 @@ WITH toks AS (
                  AS p
         FROM toks)
 ), bt AS (
-  SELECT ({sampling.hash_bucket_sql("bg", "lm")} % {_LM_B}) AS bucket,
+  SELECT ({sampling.hash_bucket_sql("bg", sampling.LM_SALT)} % {_LM_B}) AS bucket,
          COUNT(*) AS ct
   FROM exf WHERE doc_id % 10 = 0 GROUP BY 1
 ), br AS (
-  SELECT ({sampling.hash_bucket_sql("bg", "lm")} % {_LM_B}) AS bucket,
+  SELECT ({sampling.hash_bucket_sql("bg", sampling.LM_SALT)} % {_LM_B}) AS bucket,
          COUNT(*) AS cr
   FROM exf GROUP BY 1
 ), tot AS (
@@ -2383,9 +2383,9 @@ WITH toks AS (
            AS term
   FROM exf
   LEFT JOIN bt
-    ON ({sampling.hash_bucket_sql("exf.bg", "lm")} % {_LM_B}) = bt.bucket
+    ON ({sampling.hash_bucket_sql("exf.bg", sampling.LM_SALT)} % {_LM_B}) = bt.bucket
   LEFT JOIN br
-    ON ({sampling.hash_bucket_sql("exf.bg", "lm")} % {_LM_B}) = br.bucket
+    ON ({sampling.hash_bucket_sql("exf.bg", sampling.LM_SALT)} % {_LM_B}) = br.bucket
 ), per AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
          CAST(SUM(term) AS BIGINT) AS s
@@ -2607,11 +2607,11 @@ WITH toks AS (
   SELECT doc_id, p.w1 AS w1, p.bg AS bg
   FROM (SELECT doc_id, unnest(ps) AS p FROM pairs)
 ), bc AS (
-  SELECT ({sampling.hash_bucket_sql("bg", "lm")} % {_LM_B}) AS bucket,
+  SELECT ({sampling.hash_bucket_sql("bg", sampling.LM_SALT)} % {_LM_B}) AS bucket,
          COUNT(*) AS cb
   FROM exf GROUP BY 1
 ), uc AS (
-  SELECT ({sampling.hash_bucket_sql("w", "lm")} % {_LM_B}) AS bucket,
+  SELECT ({sampling.hash_bucket_sql("w", sampling.LM_SALT)} % {_LM_B}) AS bucket,
          COUNT(*) AS cu
   FROM (SELECT unnest(toks) AS w FROM toks) GROUP BY 1
 ), scored AS (
@@ -2622,9 +2622,9 @@ WITH toks AS (
                       * 1048576, 0) AS BIGINT) AS term
   FROM exf
   LEFT JOIN bc
-    ON ({sampling.hash_bucket_sql("exf.bg", "lm")} % {_LM_B}) = bc.bucket
+    ON ({sampling.hash_bucket_sql("exf.bg", sampling.LM_SALT)} % {_LM_B}) = bc.bucket
   LEFT JOIN uc
-    ON ({sampling.hash_bucket_sql("exf.w1", "lm")} % {_LM_B}) = uc.bucket
+    ON ({sampling.hash_bucket_sql("exf.w1", sampling.LM_SALT)} % {_LM_B}) = uc.bucket
 ), per AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
          CAST(SUM(term) AS BIGINT) AS slogp

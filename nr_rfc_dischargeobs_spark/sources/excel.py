@@ -3,9 +3,9 @@
 Excel is a driver-side edge: model-input workbooks are a few thousand rows
 (``dischargeobs_write_xl.py:75-77,212-250``), so the pattern is
 Spark-computes → ``toPandas`` → writer (and, for S7 reads, pandas →
-``createDataFrame``).  Everything distributed (scaffold, decorations,
-NaN→blank) happens in Spark *before* the edge; the pandas hop moves only
-the final small frame.
+``createDataFrame``).  Everything distributed (scaffold, decorations)
+happens in Spark *before* the edge; the pandas hop moves only the final
+small frame, which the driver sorts and blanks.
 
 The xlsx/xls codepaths are gated on their libraries (openpyxl / xlwt may
 be absent, as in this container): every adapter is complete and tested
@@ -60,9 +60,19 @@ def read_excel(
 def export_frame(wide: DataFrame, order_by: list[str]) -> "pandas.DataFrame":  # noqa: F821
     """Deterministically ordered driver-side frame for a workbook sheet,
     with the reference's NaN→blank convention
-    (``dischargeobs_write_xl.py:229-232``) applied to float columns."""
-    pdf = wide.orderBy(*order_by).toPandas()
-    return pdf.fillna("")
+    (``dischargeobs_write_xl.py:229-232``) applied to float columns.
+
+    The driver sorts the small collected frame: a Spark ``orderBy``
+    would add a range-partition sampling job and a shuffle for a sheet
+    of a few thousand rows.  A stable ascending sort with missing keys
+    first is Spark's ascending NULLS FIRST on the pivot-index keys every
+    caller passes (timestamps, dates, strings)."""
+    return (
+        wide.toPandas()
+        .sort_values(order_by, kind="mergesort", na_position="first")
+        .reset_index(drop=True)
+        .fillna("")
+    )
 
 
 def write_sheet(

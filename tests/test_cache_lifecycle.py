@@ -1,6 +1,8 @@
 """One cache lifecycle: operators ``pin`` the intermediates they read more
 than once, and ``release_plan_caches()`` frees every pinned frame, leaving
-the CacheManager empty — no operator may persist outside the registry."""
+the CacheManager empty.  Outside the registry a frame is persisted only
+by a local persist/unpersist pair with one owner
+(``similarity.farthest_first_seeds``, ``ObservationStore.upsert``)."""
 
 from __future__ import annotations
 

@@ -25,6 +25,36 @@ def test_export_frame_nan_to_blank(wide):
     assert pdf.iloc[1]["S1"] == ""
 
 
+def test_export_frame_matches_spark_order(spark):
+    """The driver-side sort gives a multi-partition frame Spark's
+    ascending NULLS FIRST order on timestamp and string keys (string
+    order is by code point: "S10" < "S2" < "s1"), indexed 0..n-1."""
+    import datetime as dt
+
+    import pandas as pd
+
+    def at(h):
+        return None if h is None else dt.datetime(2024, 6, 1, h)
+
+    rows = [
+        (at(h), s, v)
+        for h, s, v in [
+            (3, "S2", 1.0), (None, "S1", 2.0), (1, None, None),
+            (1, "S10", 4.0), (3, None, 5.0), (None, None, 6.0),
+            (2, "S1", None), (1, "S2", 8.0), (2, "s1", 9.0),
+            (3, "S1", 10.0), (None, "S2", 11.0), (2, "S10", 12.0),
+        ]
+    ]
+    wide = spark.createDataFrame(
+        rows, "obs_time timestamp, station string, v double"
+    ).repartition(4)
+    keys = ["obs_time", "station"]
+    got = excel.export_frame(wide, keys)
+    want = wide.orderBy(*keys).toPandas().fillna("")
+    pd.testing.assert_frame_equal(got, want)
+    assert list(got.index) == list(range(len(rows)))
+
+
 def test_write_sheet_falls_back_to_csv_without_openpyxl(
     wide, tmp_path, monkeypatch
 ):

@@ -336,6 +336,54 @@ def test_upsert_commit_writes_single_exchange_frame(spark, tmp_path):
     assert store.read().count() == 1
 
 
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_upsert_evaluates_the_batch_once_and_releases_it(spark, tmp_path):
+    """The month collect and the write share one evaluation of the
+    incoming batch, so the caller's plan runs once per upsert, not once
+    per job.  The batch's cache is gone when upsert returns and when its
+    commit raises, and a frame the caller persisted stays cached."""
+    spark.catalog.clearCache()
+    evals = spark.sparkContext.accumulator(0)
+
+    def counted(t):
+        evals.add(1)
+        return t
+
+    # obs_time feeds year_month, so both the month collect and the
+    # write need this column: without the persist each evaluates it
+    stamp = F.udf(counted, "timestamp").asNondeterministic()
+    rows = [
+        ("S1", dt.datetime(2024, 6, 1, h), "Q", float(h), "raw", "wsc")
+        for h in range(6)
+    ]
+    batch = _obs(spark, rows).withColumn("obs_time", stamp("obs_time"))
+    store = ObservationStore(spark, str(tmp_path / "obs"))
+    store.upsert(batch)
+    assert evals.value == len(rows)
+    assert _cache_is_empty(spark)
+    assert store.read().count() == len(rows)
+
+    def failing_commit(frame):
+        raise RuntimeError("commit failed")
+
+    store._commit = failing_commit
+    with pytest.raises(RuntimeError, match="commit failed"):
+        store.upsert(batch)
+    assert _cache_is_empty(spark)
+    del store._commit
+
+    pinned = _obs(spark, rows).persist()
+    try:
+        store.upsert(pinned)
+        assert pinned.storageLevel.useMemory
+    finally:
+        pinned.unpersist()
+    assert _cache_is_empty(spark)
+
+
 def test_is_missing_path_token_fallback_without_accessors():
     """ADVICE fix pin: an exception that escaped PySpark's error
     framework (no getCondition/getErrorClass — e.g. a raw Py4JJavaError)
