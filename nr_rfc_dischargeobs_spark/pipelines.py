@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -36,11 +37,26 @@ def ingest_instantaneous(
     long-form sources (J2 — axis-1 concat of disjoint station columns ≡ row
     union after melt) and coalescing-upsert into the partitioned store (J3 +
     S9/S10).  Sources come from ``sources.conform_*`` applied to landed
-    files."""
+    files.
+
+    The union is evaluated once: it is persisted here, the upsert's month
+    collect materializes it, and the partitioned write reads it back
+    instead of re-running the conform plans.  The cache is bounded by the
+    batch, not the store, and released when the upsert returns or raises.
+    A union the caller already cached (one pinned source) stays theirs:
+    persisting it again would be a no-op, and the unpersist would drop
+    the caller's cache."""
     unioned = reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True), conformed
     )
-    store.upsert(unioned)
+    owned = unioned.storageLevel == StorageLevel.NONE
+    if owned:
+        unioned.persist()
+    try:
+        store.upsert(unioned)
+    finally:
+        if owned:
+            unioned.unpersist()
 
 
 def usgs_instantaneous_frame(

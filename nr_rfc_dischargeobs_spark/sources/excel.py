@@ -66,7 +66,11 @@ def export_frame(wide: DataFrame, order_by: list[str]) -> "pandas.DataFrame":  #
     would add a range-partition sampling job and a shuffle for a sheet
     of a few thousand rows.  A stable ascending sort with missing keys
     first is Spark's ascending NULLS FIRST on the pivot-index keys every
-    caller passes (timestamps, dates, strings)."""
+    caller passes (timestamps, dates, strings).  ``toPandas`` renders
+    timestamps as naive wall-clock times in the session time zone, so
+    the orders match under the UTC zone that ``session.get_spark`` sets;
+    in a zone with DST the repeated fall-back hour could sort
+    differently."""
     return (
         wide.toPandas()
         .sort_values(order_by, kind="mergesort", na_position="first")

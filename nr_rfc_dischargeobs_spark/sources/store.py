@@ -17,8 +17,6 @@ the hive layout:
 - upsert: union-based coalescing merge in long form (J3 semantics:
   existing wins — ``discharge_obs_pd.py:176,182-187``) over only the
   overlapping partitions, the same merge on a fresh store as on a full one;
-  the incoming batch is evaluated once: the month collect materializes it
-  and the write reads it back from the cache;
 - commit: ``write``, ``compact`` and ``upsert`` all end in one
   ``partitionBy('year_month','datatype')`` write with dynamic partition
   overwrite — only the touched months are rewritten (the reference's
@@ -191,18 +189,8 @@ class ObservationStore:
         the one that collapses duplicate keys within ``incoming``.  This
         is the cron-batch MERGE; the streaming tier reuses it per
         micro-batch (``streaming/ingest.py``).
-
-        The batch is evaluated once: it is persisted here, the month
-        collect in :meth:`merged_frame` materializes it, and the write
-        reads it back instead of re-running the caller's conform plans.
-        The cache is bounded by the batch, not the store, and released
-        when the commit returns or raises.
         """
-        batch = with_year_month(incoming).persist()
-        try:
-            self._commit(self.merged_frame(batch))
-        finally:
-            batch.unpersist()
+        self._commit(self.merged_frame(with_year_month(incoming)))
 
     def merged_frame(self, incoming: DataFrame) -> DataFrame:
         """The upsert's merge plan (exposed for plan-shape tests): incoming

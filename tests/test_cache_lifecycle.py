@@ -2,7 +2,8 @@
 than once, and ``release_plan_caches()`` frees every pinned frame, leaving
 the CacheManager empty.  Outside the registry a frame is persisted only
 by a local persist/unpersist pair with one owner
-(``similarity.farthest_first_seeds``, ``ObservationStore.upsert``)."""
+(``similarity.farthest_first_seeds``, ``pipelines.ingest_instantaneous``,
+``streaming/documents.py``'s compaction sweep)."""
 
 from __future__ import annotations
 

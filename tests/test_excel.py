@@ -28,7 +28,9 @@ def test_export_frame_nan_to_blank(wide):
 def test_export_frame_matches_spark_order(spark):
     """The driver-side sort gives a multi-partition frame Spark's
     ascending NULLS FIRST order on timestamp and string keys (string
-    order is by code point: "S10" < "S2" < "s1"), indexed 0..n-1."""
+    order is by code point: "S10" < "S2" < "s1"), indexed 0..n-1.
+    The fixture's session runs in UTC, as ``get_spark`` sets it: the
+    driver sorts the wall-clock times ``toPandas`` renders in that zone."""
     import datetime as dt
 
     import pandas as pd
@@ -45,6 +47,7 @@ def test_export_frame_matches_spark_order(spark):
             (3, "S1", 10.0), (None, "S2", 11.0), (2, "S10", 12.0),
         ]
     ]
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     wide = spark.createDataFrame(
         rows, "obs_time timestamp, station string, v double"
     ).repartition(4)

@@ -9,6 +9,7 @@ from pathlib import Path
 import duckdb
 from pyspark.sql import functions as F
 
+from nr_rfc_dischargeobs_spark import pipelines
 from nr_rfc_dischargeobs_spark.sources import ObservationStore
 from nr_rfc_dischargeobs_spark.sources.store import with_year_month
 
@@ -340,11 +341,12 @@ def _cache_is_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_upsert_evaluates_the_batch_once_and_releases_it(spark, tmp_path):
-    """The month collect and the write share one evaluation of the
-    incoming batch, so the caller's plan runs once per upsert, not once
-    per job.  The batch's cache is gone when upsert returns and when its
-    commit raises, and a frame the caller persisted stays cached."""
+def test_ingest_evaluates_the_union_once_and_releases_it(spark, tmp_path):
+    """EP1's month collect and partitioned write share one evaluation of
+    the conformed union, so each source's plan runs once per tick, not
+    once per job.  The union's cache is gone when the ingest returns and
+    when its commit raises, and a frame the caller persisted stays
+    cached, also when it is the only source."""
     spark.catalog.clearCache()
     evals = spark.sparkContext.accumulator(0)
 
@@ -359,25 +361,29 @@ def test_upsert_evaluates_the_batch_once_and_releases_it(spark, tmp_path):
         ("S1", dt.datetime(2024, 6, 1, h), "Q", float(h), "raw", "wsc")
         for h in range(6)
     ]
-    batch = _obs(spark, rows).withColumn("obs_time", stamp("obs_time"))
+    other = [("S2", dt.datetime(2024, 7, 1, 0), "Q", 1.0, "raw", "prov")]
+    counted_src = _obs(spark, rows).withColumn("obs_time", stamp("obs_time"))
+    sources = [counted_src, _obs(spark, other)]
     store = ObservationStore(spark, str(tmp_path / "obs"))
-    store.upsert(batch)
+    pipelines.ingest_instantaneous(store, sources)
     assert evals.value == len(rows)
     assert _cache_is_empty(spark)
-    assert store.read().count() == len(rows)
+    assert store.read().count() == len(rows) + len(other)
 
     def failing_commit(frame):
         raise RuntimeError("commit failed")
 
     store._commit = failing_commit
     with pytest.raises(RuntimeError, match="commit failed"):
-        store.upsert(batch)
+        pipelines.ingest_instantaneous(store, sources)
     assert _cache_is_empty(spark)
     del store._commit
 
     pinned = _obs(spark, rows).persist()
     try:
-        store.upsert(pinned)
+        pipelines.ingest_instantaneous(store, [pinned, _obs(spark, other)])
+        assert pinned.storageLevel.useMemory
+        pipelines.ingest_instantaneous(store, [pinned])
         assert pinned.storageLevel.useMemory
     finally:
         pinned.unpersist()
